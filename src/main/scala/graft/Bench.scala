@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and emits machine-readable JSON.
@@ -223,56 +222,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The SQL/status listeners retain per-execution plan graphs even
-      // with the UI off; cap retention so a 70-query run doesn't hoard
-      // plan strings on the driver.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      // collect_list/collect_set and other object-buffer aggregations
-      // (q137's per-doc vocab lists, sketch buffers) fall back to
-      // sort-based object aggregation after only 128 in-memory groups
-      // by default — millions of tiny groups then pay a sort (and at
-      // x1000, gigabytes of sorter spill) for no memory benefit.
-      // Measured A/B at 4096 vs the 128-group default at sf0.1: q137
-      // 2.94→2.47 s, q103 2.41→2.03, q36 1.59→1.16, q63 1.75→1.36.
-      // 65536 — NOT higher — is deliberate: when a partition's key
-      // count approaches its row count, a big object map only churns
-      // allocations before emitting one state per row anyway; falling
-      // back to the sorter early IS the right behavior there (measured
-      // on the r11 x1000 changelog: 14.6 s / 8 s GC at 65536 vs
-      // 24-27 s / 140+ s GC at 1M). The truly hot high-cardinality
-      // aggregates (cdc_apply's argmax, the exact percentiles) don't
-      // ride this knob at all anymore — they are declarative/primitive
-      // and plan as plain HashAggregate (see ArgMaxPackedAgg).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      // Let AQE re-plan partitioning UNDER cached plans (off by
-      // default upstream because a cache consumer that relied on the
-      // cached partitioning may see an extra exchange). The iterative
-      // graph operators persist/localCheckpoint node- and edge-sized
-      // frames every round, and with this off each cached frame FREEZES
-      // the pre-AQE 32-partition shuffle layout — every subsequent
-      // round then fans 32+ tiny tasks per job over a 5 MB frame and
-      // pays scheduler/launch overhead as wall time. With AQE sizing
-      // cached output by bytes (the same advisory-size policy as
-      // everywhere else), measured at sf0.1: q171 3.5→1.4 s (summed
-      // task time 37 s→0.7 s), q158 4.9→3.7 s, q175 2.1→1.2 s; no
-      // query regressed in the full-suite A/B. At 100 TB the advisory
-      // size keeps partition counts proportional to data, which is the
-      // scale-correct layout for cached intermediates too.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("GRAFT_CACHE_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.start(Session.engine(cpus))
     // Phase recording is opt-in (a non-draining JVM must not
     // accumulate entries); this harness drains per query.
     util.PhaseProf.enable()
@@ -888,7 +839,7 @@ object Bench {
         // attempt is kept (lower child os_load), and the verdict field
         // spliced below says whether even that one met the premise.
         val contaminated = first._1.values.exists { case (_, _, _, l) =>
-          isolationVerdict(l, cpus.toInt) == "load-contaminated" }
+          isolationVerdict(l, cpus) == "load-contaminated" }
         if (!contaminated) first
         else {
           progress(s"""{"isolate":"retry","reason":"load-contaminated"}""")
@@ -915,7 +866,7 @@ object Bench {
     isolated.foreach { case (name, (sec, taskMs, cpuMs, osLoad)) =>
       details.get(name).foreach { d =>
         details(name) =
-          d + s""","isolated_sec":$sec,"isolated_task_ms":$taskMs,"isolated_task_cpu_ms":$cpuMs,"isolated_os_load":$osLoad,"isolated_verdict":"${isolationVerdict(osLoad, cpus.toInt)}""""
+          d + s""","isolated_sec":$sec,"isolated_task_ms":$taskMs,"isolated_task_cpu_ms":$cpuMs,"isolated_os_load":$osLoad,"isolated_verdict":"${isolationVerdict(osLoad, cpus)}""""
       }
     }
     // A child-side FAILURE is an annotation, never a time: recording a
@@ -929,7 +880,7 @@ object Bench {
     // ...and as a top-level map for the compact tail.
     val isoJson = (isolated
       .map { case (k, (sec, t, c, l)) =>
-        "\"" + k + s"""\":{"sec":$sec,"task_ms":$t,"task_cpu_ms":$c,"os_load":$l,"verdict":"${isolationVerdict(l, cpus.toInt)}"}""" } ++
+        "\"" + k + s"""\":{"sec":$sec,"task_ms":$t,"task_cpu_ms":$c,"os_load":$l,"verdict":"${isolationVerdict(l, cpus)}"}""" } ++
       isolatedErrs.map { case (k, e) =>
         "\"" + k + s"""\":{"err":"${esc(e)}"}""" })
       .mkString("{", ",", "}")

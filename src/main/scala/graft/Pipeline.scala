@@ -42,16 +42,7 @@ object Pipeline {
       }
     }
     val cfg = cfgPath.map(PipelineConfig.fromYaml).getOrElse(PipelineConfig.default)
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(Session.pipeline())
     try {
       val result = run(spark,
         raw.getOrElse(cfg.paths.dataRaw),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up evidence for the graph/dedup flagships: replicate the
@@ -34,71 +34,8 @@ object ScaleBench {
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val work = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
     val outFile = args.headOption.getOrElse("SCALE_BENCH.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Partition-count headroom for the deep scale points: a fixed 32
-      // shuffle partitions is right at sf0.1 but caps post-shuffle
-      // parallelism AND balloons per-task state at x100 (triangles'
-      // 90M-edge adjacency build: 213 MB sorter spill + 11 s GC in 32
-      // tasks). Planning shuffles WIDE and letting AQE coalesce by its
-      // 64 MB advisory target is the standard Spark sizing discipline —
-      // small shapes still collapse to a handful of partitions, big
-      // shapes keep per-task state bounded. This is exactly the knob a
-      // 1000-executor deployment sets (initialPartitionNum ~= 2-3x
-      // total cores); the sf0.1 Bench keeps plain 32 because its data
-      // never outgrows it.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_INIT_PARTS", "256"))
-      // Shuffle/spill scratch on tmpfs when the host has one: the x100
-      // graph shapes move ~7 GB of shuffle per run, and on this box's
-      // single virtio disk that IO is both the wall-clock floor and the
-      // dominant run-to-run variance (shared-host IO weather measured
-      // the same plan at 43 s and 107 s). A real cluster provisions
-      // node-local disks for exactly this traffic; tmpfs is this
-      // harness's equivalent. Falls back to the default temp dir when
-      // /dev/shm is absent.
-      .config("spark.local.dir", {
-        // user-qualified for the same reason as Bucketed.storageRoot:
-        // /dev/shm is shared across OS users, and a second user's run
-        // could not write blockmgr subdirs into the first user's dir.
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        if (java.nio.file.Files.isDirectory(shm) &&
-            java.nio.file.Files.isWritable(shm))
-          java.nio.file.Files.createDirectories(shm.resolve(
-            s"graft-scale-local-${System.getProperty("user.name", "anon")}"))
-            .toString
-        else System.getProperty("java.io.tmpdir")
-      })
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      // Same object-hash-aggregate headroom as Bench/Verify for the
-      // object-buffer aggregates (collect_list shapes, sketches): a
-      // multi-replica input partition holds one key-set per replica
-      // file, so partial aggregates see thousands of local groups and
-      // the default 128-group fallback demotes them to the sorter far
-      // too early. The hot high-cardinality shapes (cdc_apply argmax,
-      // exact percentiles) no longer ride this knob — they are
-      // declarative/primitive HashAggregates (see ArgMaxPackedAgg).
-      // Env-overridable for measured A/Bs. r15 ran 65536 vs 8388608 on
-      // triangles x100 (the hypothesis: the partial adjacency
-      // aggregate's ~350k distinct src per task demotes to the sorter
-      // and that sort is the GC driver) — NULL RESULT: min-run task
-      // time 911 s vs 910 s, task_cpu 875 s vs 879 s, identical 3.3 GB
-      // spill (which therefore belongs to the edge-build distinct, not
-      // the OHA partial). The triangles x100 spread (41-84 s draws) is
-      // GC/contention weather, adjudicated by task_cpu_ms; 65536 stays.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_OHA_THRESHOLD", "65536"))
-      // Same cached-plan AQE policy as Bench (see the comment there).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("GRAFT_CACHE_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.start(Session.scale(cpus))
     // Self-report the JVM sizing into the artifact: an intermittent
     // 6-15x slowdown of the heavy shapes (cdc x1000 8.3 s vs 63-96 s,
     // GC 0.8 s vs 121 s, identical code and data) was observed when a
@@ -131,7 +68,7 @@ object ScaleBench {
         // runs near-single-threaded and the "xN" time measures file
         // layout, not plan scaling. A real N-times-larger feed lands
         // as N times more files — replicate that.
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dest/lineitem.parquet")
       // Per-copy FULL alphabet permutation (the replicateDocsPerm
       // construction): copies of a document share no letter mapping,
@@ -155,7 +92,7 @@ object ScaleBench {
         .withColumn("p", element_at(perms26, col("cp").cast("int") + 1))
         .select((col("doc_id") + col("cp") * docOff).as("doc_id"),
           expr(s"translate(text, '$alpha', p)").as("text"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dest/documents.parquet")
     }
     // Events-based shapes get a deeper replication (default 100x =
@@ -176,7 +113,7 @@ object ScaleBench {
         .select((col("event_id") + col("cp") * 10000000L).as("event_id"),
           col("ts"), (col("user_id") + col("cp") * 10000L).as("user_id"),
           col("event_type"), col("value"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dest/events.parquet")
     }
     // Documents replicate 10x deeper than the pair shapes (docs are
@@ -207,7 +144,7 @@ object ScaleBench {
         .withColumn("p", element_at(perms, col("cp").cast("int") + 1))
         .select((col("doc_id") + col("cp") * docOff).as("doc_id"),
           expr(s"translate(text, '$alpha', p)").as("text"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dest/documents.parquet")
     }
     // Span-DENSE documents (r18): remove_spans' reassembly filter is
@@ -245,7 +182,7 @@ object ScaleBench {
         .withColumn("p", element_at(perms, col("cp").cast("int") + 1))
         .select((col("gid") + col("cp") * docOff).as("doc_id"),
           expr(s"translate(text, '$alpha', p)").as("text"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dest/documents.parquet")
     }
 
@@ -263,7 +200,7 @@ object ScaleBench {
         .select(col("vec_id"), col("embedding")).select(cp, col("*"))
         .select((col("vec_id") + col("cp") * embOff).as("vec_id"),
           col("embedding"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dest/embeddings.parquet")
     }
     val dir1 = s"$work/x1"
@@ -429,7 +366,7 @@ object ScaleBench {
       "bucketed_join" -> (dir => {
         import graft.operators.Bucketed
         val b = Bucketed.ensure(spark, dir, "lineitem",
-          Seq("l_orderkey"), cpus.toInt)(li(dir))
+          Seq("l_orderkey"), cpus)(li(dir))
         val l = b.select(col("l_orderkey"), col("l_partkey").as("pa"))
         val r = b.select(col("l_orderkey").as("ok_b"), col("l_partkey").as("pb"))
         Bucketed.colocatedJoin(l, r, l("l_orderkey") === r("ok_b"))
@@ -1118,7 +1055,7 @@ object ScaleBench {
               "transform(array_sort(collect_list(struct(doc_id, text)))," +
                 " s -> s.text)")).as("text"))
             .select(col("gid").as("doc_id"), col("text"))
-            .repartition(cpus.toInt)
+            .repartition(cpus)
             .write.mode("overwrite").parquet(s"$dirLong/documents.parquet")
         }
         val docsL = docsD(dirLong)

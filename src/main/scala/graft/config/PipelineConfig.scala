@@ -1,10 +1,6 @@
 package graft.config
 
 import java.nio.file.{Files, Paths}
-import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ObjectNode
-
-import scala.jdk.CollectionConverters._
 
 /** Inclusive validity range for a reading type.
   * Reference: config/default.yaml:29-38, src/config/models.py:59-62. */
@@ -173,73 +169,6 @@ object PipelineConfig {
       if (sign == "-") -v else v
     case other =>
       throw new IllegalArgumentException(s"unsupported timezone '$other'")
-  }
-
-  /** Load overrides from a JSON file (Jackson ships with Spark). Any
-    * omitted section keeps its default — same spirit as the reference's
-    * Pydantic defaults (src/config/models.py:112-141). */
-  def fromJson(path: String): PipelineConfig = {
-    val mapper = new ObjectMapper()
-      .configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
-    val root = mapper.readTree(Files.readString(Paths.get(path)))
-    var cfg = default
-
-    Option(root.get("timezone")).foreach(n => cfg = cfg.copy(timezone = n.asText))
-    Option(root.get("pipeline_version")).foreach(n => cfg = cfg.copy(pipelineVersion = n.asText))
-    Option(root.get("ranges")).foreach { n =>
-      val m = n.asInstanceOf[ObjectNode].properties.asScala.map { e =>
-        e.getKey -> ValueRange(e.getValue.get("min").asDouble, e.getValue.get("max").asDouble)
-      }.toMap
-      cfg = cfg.copy(ranges = m)
-    }
-    Option(root.get("calibration")).foreach { n =>
-      val m = n.asInstanceOf[ObjectNode].properties.asScala.map { e =>
-        e.getKey -> Calibration(
-          e.getValue.get("multiplier").asDouble, e.getValue.get("offset").asDouble)
-      }.toMap
-      cfg = cfg.copy(calibration = m)
-    }
-    Option(root.get("write")).foreach { n =>
-      var w = cfg.write
-      Option(n.get("compression")).foreach(x => w = w.copy(compression = x.asText))
-      Option(n.get("partition_by")).foreach(x =>
-        w = w.copy(partitionBy = x.elements.asScala.map(_.asText).toSeq))
-      Option(n.get("mode")).foreach(x => w = w.copy(mode = x.asText))
-      Option(n.get("sort_within")).foreach(x =>
-        w = w.copy(sortWithin = x.elements.asScala.map(_.asText).toSeq))
-      Option(n.get("zorder_by")).foreach(x =>
-        w = w.copy(zorderBy = x.elements.asScala.map(_.asText).toSeq))
-      Option(n.get("bucket_by")).foreach(x =>
-        w = w.copy(bucketBy = x.elements.asScala.map(_.asText).toSeq))
-      Option(n.get("bucket_count")).foreach(x =>
-        w = w.copy(bucketCount = x.asInt))
-      cfg = cfg.copy(write = w)
-    }
-    Option(root.get("transformation")).foreach { n =>
-      var t = cfg.transformation
-      Option(n.get("z_score_threshold")).foreach(x => t = t.copy(zScoreThreshold = x.asDouble))
-      Option(n.get("rolling_window_days")).foreach(x => t = t.copy(rollingWindowDays = x.asInt))
-      Option(n.get("outlier_handling")).foreach(x => t = t.copy(outlierHandling = x.asText))
-      Option(n.get("exact_global_median")).foreach(x => t = t.copy(exactGlobalMedian = x.asBoolean))
-      Option(n.get("exact_global_median_max_bytes")).foreach(x => t = t.copy(exactGlobalMedianMaxBytes = x.asLong))
-      Option(n.get("rolling_bucket_seconds")).foreach(x => t = t.copy(rollingBucketSeconds = x.asLong))
-      cfg = cfg.copy(transformation = t)
-    }
-    Option(root.get("validation")).foreach { n =>
-      var v = cfg.validation
-      Option(n.get("max_missing_percentage")).foreach(x => v = v.copy(maxMissingPercentage = x.asDouble))
-      Option(n.get("max_anomaly_percentage")).foreach(x => v = v.copy(maxAnomalyPercentage = x.asDouble))
-      Option(n.get("expected_frequency_hours")).foreach(x => v = v.copy(expectedFrequencyHours = x.asInt))
-      Option(n.get("max_gap_hours")).foreach(x => v = v.copy(maxGapHours = x.asDouble))
-      cfg = cfg.copy(validation = v)
-    }
-    Option(root.get("ingestion")).foreach { n =>
-      var i = cfg.ingestion
-      Option(n.get("incremental_mode")).foreach(x => i = i.copy(incrementalMode = x.asBoolean))
-      Option(n.get("checkpoint_file")).foreach(x => i = i.copy(checkpointFile = x.asText))
-      cfg = cfg.copy(ingestion = i)
-    }
-    cfg
   }
 
   /** Load a reference-layout YAML config (config/default.yaml shape,

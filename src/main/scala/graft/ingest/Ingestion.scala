@@ -12,6 +12,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 
 import scala.jdk.CollectionConverters._
 
+import graft.Session
 import graft.model.IngestionStats
 
 /** Schema compatibility lattice (reference ingestion.py:268-292):
@@ -189,10 +190,7 @@ object ParquetIngestor {
     // spark.read resolves each schema, so later lazy execution of the
     // returned DataFrame does not need the flag (verified empirically),
     // and unrelated reads in the same session keep default behavior.
-    val nanosConfKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val nanosConfOld = spark.conf.getOption(nanosConfKey)
-    spark.conf.set(nanosConfKey, "true")
-    try {
+    Session.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
     val probed = {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
@@ -294,11 +292,6 @@ object ParquetIngestor {
         filesSkipped = skipped.size,
         filesFailed = failed.size),
       save)
-    } finally {
-      nanosConfOld match {
-        case Some(v) => spark.conf.set(nanosConfKey, v)
-        case None => spark.conf.unset(nanosConfKey)
-      }
     }
   }
 }

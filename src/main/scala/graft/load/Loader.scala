@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, IntegerType, StringType}
 
+import graft.Session
 import graft.config.PipelineConfig
 import graft.model.{StorageStats, ValidationResult}
 
@@ -12,6 +13,11 @@ import graft.model.{StorageStats, ValidationResult}
   * per-batch validation metadata (reference src/components/loading.py).
   */
 object Loader {
+
+  /** Scoped around each overwrite that must replace only the
+    * partitions it writes. */
+  private val dynamicOverwrite =
+    "spark.sql.sources.partitionOverwriteMode" -> "dynamic"
 
   /** P10 — storage type optimization (reference loading.py:139-175):
     * measurement doubles -> float32, counters -> int32. Parquet
@@ -87,13 +93,8 @@ object Loader {
       case "overwrite" => "overwrite"
       case _ => "append"
     }
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try writer.mode(mode).parquet(outPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    Session.withConf(df.sparkSession, dynamicOverwrite) {
+      writer.mode(mode).parquet(outPath)
     }
   }
 
@@ -358,14 +359,8 @@ object Loader {
       require(missing.isEmpty,
         s"batch is missing columns ${missing.mkString(",")} of curated table $name")
       val aligned = prepared.select(tableCols.map(col): _*)
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try aligned.write.mode("overwrite").insertInto(name)
-      finally prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      Session.withConf(spark, dynamicOverwrite) {
+        aligned.write.mode("overwrite").insertInto(name)
       }
     }
     } finally releaseBucketLease(spark, outPath)
@@ -432,19 +427,14 @@ object Loader {
       partitionCols: Seq[String],
       compression: String = "zstd"): Unit = {
     val df = spark.read.parquet(path)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df
-      .repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions(partitionCols.map(col): _*)
-      .write
-      .partitionBy(partitionCols: _*)
-      .option("compression", compression)
-      .mode("overwrite")
-      .parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    Session.withConf(spark, dynamicOverwrite) {
+      df.repartition(partitionCols.map(col): _*)
+        .sortWithinPartitions(partitionCols.map(col): _*)
+        .write
+        .partitionBy(partitionCols: _*)
+        .option("compression", compression)
+        .mode("overwrite")
+        .parquet(path)
     }
   }
 

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Session
+
 /** Structured Streaming surface. The reference is batch-only (its
   * "incremental" is file-name checkpointing, SURVEY §2.7); this module
   * subsumes that contract with a FileStreamSource + windowed event-time
@@ -397,11 +399,8 @@ object Streaming {
     // state on the watermark-advance no-data batch — a full state scan
     // plus session re-sort that produces exactly the rows the data batch
     // already produced. Complete-mode output never depends on watermark
-    // advancement, so skip it; restored after the run because append
-    // paths elsewhere (sensorIngest consumers) do need no-data batches.
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.getOption(noDataKey)
-    spark.conf.set(noDataKey, "false")
+    // advancement, so skip it for this run only: append paths elsewhere
+    // (sensorIngest consumers) do need no-data batches.
     // STATE partitions sized by source volume, not core count. Every
     // stateful task pays a fixed per-store cost (provider registration
     // is a coarse JVM-wide lock; load + commit serialize behind it), so
@@ -413,8 +412,8 @@ object Streaming {
     // per-trigger source, floor 8 so skew has room, ceiling at the
     // session setting so a genuinely large replay (the x1000 scale
     // harness: multi-GB) keeps full parallelism. The conf is set for
-    // the duration of this run only (restored below) and affects only
-    // this query's fresh checkpoint — production streams (sensorIngest,
+    // the duration of this run only and affects only this query's
+    // fresh checkpoint — production streams (sensorIngest,
     // caller-managed checkpoints) are untouched.
     // Scratch-state I/O without checksum siblings: Hadoop's default
     // LocalFileSystem writes a .crc beside every file and verifies on
@@ -426,25 +425,16 @@ object Streaming {
     // state). RawLocalFileSystem skips the checksum layer; the cache
     // bypass makes the setting take effect for THIS query's hadoopConf
     // snapshot without disturbing the session's cached FileSystem.
-    // Restored in the outer finally with the other session confs.
     // Durable production checkpoints (sensorIngest, caller-managed
     // paths) take the session defaults untouched.
-    val fsImplKey = "spark.hadoop.fs.file.impl"
-    val fsCacheKey = "spark.hadoop.fs.file.impl.disable.cache"
-    val prevFsImpl = spark.conf.getOption(fsImplKey)
-    val prevFsCache = spark.conf.getOption(fsCacheKey)
-    spark.conf.set(fsImplKey, "org.apache.hadoop.fs.RawLocalFileSystem")
-    spark.conf.set(fsCacheKey, "true")
     val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.getOption(shufKey)
     val sessionShuf =
-      prevShuf.flatMap(_.toIntOption).getOrElse(200)
+      spark.conf.getOption(shufKey).flatMap(_.toIntOption).getOrElse(200)
     val srcB = pendingSourceBytes.getAndSet(0L)
     val statePartitions =
       if (srcB <= 0) sessionShuf
       else math.max(1, math.min(sessionShuf,
         math.max(8, (srcB / (32L << 20)).toInt)))
-    spark.conf.set(shufKey, statePartitions.toString)
     // State store provider: deliberately the default HDFS-backed one.
     // The obvious "scale" move — RocksDBStateStoreProvider — was
     // measured WORSE on this harness's drain-everything replay shape
@@ -460,15 +450,18 @@ object Streaming {
     // production deployments choose it per-checkpoint via
     // spark.sql.streaming.stateStore.providerClass on their own
     // streams (sensorIngest takes the session's setting untouched).
-    // Conf restore and scratch/sink cleanup live in the OUTER finally:
-    // if start/processAllAvailable/stop throws, the session-wide conf
-    // must still come back (append-mode consumers elsewhere NEED
-    // no-data batches — leaving it off silently suppresses their
-    // watermark-close emissions) and the tmpfs checkpoint + memory-sink
-    // view must not accumulate across failed runs.
+    // If start/processAllAvailable/stop throws, withConf still puts the
+    // session confs back (append-mode consumers elsewhere NEED no-data
+    // batches — leaving it off silently suppresses their watermark-close
+    // emissions) and the OUTER finally still removes the tmpfs
+    // checkpoint + memory-sink view, so failed runs do not accumulate.
     val outDir = scratchDir(s"graft-stream-out-$name")
     resultDirs.add(outDir)
-    try {
+    try Session.withConf(spark,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+        shufKey -> statePartitions.toString,
+        "spark.hadoop.fs.file.impl" -> "org.apache.hadoop.fs.RawLocalFileSystem",
+        "spark.hadoop.fs.file.impl.disable.cache" -> "true") {
       val q = agg.writeStream
         .outputMode(outputMode)
         .option("checkpointLocation", checkpoint.toString)
@@ -534,22 +527,6 @@ object Streaming {
           agg.schema), new ResultHandle(outDir))
       }
     } finally {
-      prevNoData match {
-        case Some(v) => spark.conf.set(noDataKey, v)
-        case None => spark.conf.unset(noDataKey)
-      }
-      prevShuf match {
-        case Some(v) => spark.conf.set(shufKey, v)
-        case None => spark.conf.unset(shufKey)
-      }
-      prevFsImpl match {
-        case Some(v) => spark.conf.set(fsImplKey, v)
-        case None => spark.conf.unset(fsImplKey)
-      }
-      prevFsCache match {
-        case Some(v) => spark.conf.set(fsCacheKey, v)
-        case None => spark.conf.unset(fsCacheKey)
-      }
       deleteRecursively(checkpoint)
       // Unload this run's state-store providers. A stopped query's
       // providers otherwise stay registered (each holding its operator's

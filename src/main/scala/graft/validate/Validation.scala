@@ -15,40 +15,6 @@ import graft.model._
   */
 object Validation {
 
-  /** A4 — type/sanity violation counts (reference validation.py:136-167).
-    * On an already-typed DataFrame the TRY_CAST probes reduce to null
-    * checks, kept separate for stats parity. */
-  def typeViolations(cols: ReadingCols)(df: DataFrame): DataFrame =
-    df.agg(
-      count(when(col(cols.ts).isNull, 1)).as("null_timestamps"),
-      count(when(col(cols.value).isNull, 1)).as("invalid_values"),
-      count(when(col(cols.battery).isNull, 1)).as("invalid_batteries"))
-
-  /** A5 — per-type range violation counts (reference validation.py:186-210). */
-  def rangeViolations(
-      ranges: Map[String, ValueRange],
-      cols: ReadingCols)(df: DataFrame): DataFrame = {
-    val counts = ranges.toSeq.sortBy(_._1).map { case (typ, r) =>
-      count(when(col(cols.typ) === typ &&
-        (col(cols.value) < r.min || col(cols.value) > r.max), 1)).as(typ)
-    }
-    df.agg(counts.head, counts.tail: _*)
-  }
-
-  /** P8-style battery range violation count (reference validation.py:186-210
-    * battery branch; log-only in transform, counted here). */
-  def batteryViolations(range: ValueRange, cols: ReadingCols)(df: DataFrame): DataFrame =
-    df.agg(count(when(
-      col(cols.battery) < range.min || col(cols.battery) > range.max,
-      1)).as("battery_violations"))
-
-  /** A6 — global time range + distinct sensors (reference validation.py:229-239). */
-  def timeRangeStats(cols: ReadingCols)(df: DataFrame): DataFrame =
-    df.agg(
-      min(col(cols.ts)).as("min_ts"),
-      max(col(cols.ts)).as("max_ts"),
-      countDistinct(col(cols.id)).as("distinct_sensors"))
-
   /** W2+J2+J3 — per-pair maximal MISSING-hour ranges against the
     * reference's expected grid (validation.py:247-285): logically,
     * DISTINCT (sensor, type) x generate_series(min_ts, max_ts, f hours)
@@ -196,15 +162,6 @@ object Validation {
         round(avg(col(cols.battery)), 1).as("avg_battery"))
       .orderBy(desc("total_readings"), col(cols.id))
 
-  /** A11 — overall stats (reference validation.py:422-438). */
-  def overallStats(cols: ReadingCols)(df: DataFrame): DataFrame =
-    df.agg(
-      count(lit(1)).as("total_records"),
-      countDistinct(col(cols.id)).as("unique_sensors"),
-      countDistinct(col(cols.typ)).as("unique_types"),
-      round(avg(col(cols.value)), 2).as("avg_value"),
-      round(avg(col(cols.battery)), 1).as("avg_battery"))
-
   /** A12 — quality score: 100 minus capped penalties
     * (reference validation.py:616-644, duplicated loading.py:305-336). */
   def qualityScore(
@@ -244,13 +201,13 @@ object Validation {
     val c = cfg.cols
     // Single-pass scalar stats (SURVEY §7.4 item 8, the reference's
     // observe()-style consolidation): the five GLOBAL aggregates —
-    // type/range/battery violation counts, time range, overall stats —
-    // collapse into ONE df.agg(...), so one job and one scan produce
-    // every scalar instead of five. At 100 TB on an uncached frame that
+    // type/range/battery violation counts (A4/A5/P8, reference
+    // validation.py:136-210), time range (A6, :229-239), overall stats
+    // (A11, :422-438) — collapse into ONE df.agg(...), so one job and
+    // one scan produce every scalar instead of five. At 100 TB on an uncached frame that
     // is the difference between one and five full passes. The per-type /
     // per-sensor profiles below keep their own jobs (different grouping
-    // keys); the suite runs 5 actions total, not 9. The standalone
-    // builders (typeViolations &c.) remain the public per-metric API.
+    // keys); the suite runs 5 actions total, not 9.
     val br = cfg.batteryRange
     val rangeTypes = cfg.ranges.keys.toSeq.sorted
     val rangeCounts = cfg.ranges.toSeq.sortBy(_._1).map { case (typ, r) =>

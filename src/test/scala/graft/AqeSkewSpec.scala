@@ -18,7 +18,7 @@ class AqeSkewSpec extends SparkSpec {
 
   test("AQE splits a skewed sort-merge join partition (skew=true)") {
     import spark.implicits._
-    val confs = Seq(
+    Session.withConf(spark,
       // force SMJ (a broadcast join has no shuffle to split)
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       // test-scale thresholds: a partition is "skewed" past 64 KB and
@@ -27,11 +27,7 @@ class AqeSkewSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16384",
       // coalescing would merge the small partitions and mask the split
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = confs.map { case (k, _) =>
-      k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       // 90% of the left side lands on key 0; pad makes the hot
       // partition's bytes cross the lowered threshold.
       val left = spark.range(0, 100000L)
@@ -56,9 +52,6 @@ class AqeSkewSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum(col("lv")).as("s"))
         .collect().map(_.toString).sorted.toSeq
       assert(got === exp)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

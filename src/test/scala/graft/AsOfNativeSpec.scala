@@ -167,11 +167,10 @@ class AsOfNativeSpec extends SparkSpec {
     // EnsureRequirements must still emit co-partitioned exchanges and
     // AQE must coalesce both sides of the stage as ONE group — if it
     // ever didn't, the doExecute require fires and this test fails.
-    val prev = spark.conf.getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
-    try {
+    Session.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB") {
       val left = spark.range(20000L).selectExpr(
         "CASE WHEN id % 10 < 9 THEN 7L ELSE id % 50 END AS k",
         "timestamp_micros(1700000000000000 + id * 1000000) AS t",
@@ -189,13 +188,6 @@ class AsOfNativeSpec extends SparkSpec {
       // never negative (right ts <= left ts always).
       val bad = out.filter($"rt".isNotNull && $"rt" > $"t").count()
       assert(bad === 0L)
-    } finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", v)
-        case None =>
-          spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      }
     }
   }
 

@@ -100,13 +100,7 @@ class PartitionedSpec extends SparkSpec {
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
       .collect().map(_.toString).sorted.toSeq
 
-    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-    val reuseKey =
-      "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly"
-    val prevBc = spark.conf.getOption(bcKey)
-    val prevReuse = spark.conf.getOption(reuseKey)
-    try {
-      spark.conf.set(bcKey, "-1")
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // Default (reuseBroadcastOnly=true): the optimizer plants the DPP
       // filter, but with no broadcast to reuse PlanDynamicPruningFilters
       // rewrites it to literal true — an honest full scan, never a
@@ -125,23 +119,17 @@ class PartitionedSpec extends SparkSpec {
       // reuseBroadcastOnly=false: the dim side runs as its own pruning
       // subquery (one extra evaluation of the dim aggregate), and the
       // fact scan prunes partitions even under SMJ.
-      spark.conf.set(reuseKey, "false")
-      val d2 = q
-      val got2 = d2.collect().map(_.toString).sorted.toSeq
-      val fin2 = d2.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(fin2.contains("SortMergeJoin"), fin2)
-      assert(fin2.contains("IN dynamicpruning"),
-        s"subquery-based prune did not fire:\n$fin2")
-      assert(got2 === expected)
-    } finally {
-      prevBc match {
-        case Some(v) => spark.conf.set(bcKey, v)
-        case None => spark.conf.unset(bcKey)
-      }
-      prevReuse match {
-        case Some(v) => spark.conf.set(reuseKey, v)
-        case None => spark.conf.unset(reuseKey)
+      Session.withConf(spark,
+          "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly" ->
+            "false") {
+        val d2 = q
+        val got2 = d2.collect().map(_.toString).sorted.toSeq
+        val fin2 = d2.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==").head
+        assert(fin2.contains("SortMergeJoin"), fin2)
+        assert(fin2.contains("IN dynamicpruning"),
+          s"subquery-based prune did not fire:\n$fin2")
+        assert(got2 === expected)
       }
     }
   }

@@ -1,25 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end drive of the full pipeline over a raw sensor directory:
   * `Test/runMain graft.PipelineDemo <rawDir> <outDir> [reportDir]`.
   * Exercises ingest (schema rejection, corrupt-file isolation,
   * checkpoint), transform, validation, partitioned load, and the
-  * pruned read-back. */
+  * pruned read-back, on `Pipeline.main`'s session settings. */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val rawDir = args(0)
     val outDir = args(1)
     val reportDir = if (args.length > 2) Some(args(2)) else None
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start(Session.pipeline(), logLevel = "ERROR")
 
     val r1 = Pipeline.run(spark, rawDir, outDir, reportDir)
     println(s"RUN1: success=${r1.success} ingested=${r1.recordsIngested} " +

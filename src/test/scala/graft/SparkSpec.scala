@@ -5,25 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session, matching
   * the guide's one-session-per-suite advice but cheaper: getOrCreate
-  * returns the same session across suites in the forked test JVM). */
+  * returns the same session across suites in the forked test JVM). It
+  * runs on Bench's engine settings — the deploy-path extension
+  * registration included, so the injection path itself is continuously
+  * tested — and a spec that needs another setting scopes it with
+  * [[Session.withConf]]. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // The deploy-path extension registration (functions + fuse rule +
-      // native as-of strategy) — every suite runs with the extensions
-      // active, so the injection path itself is continuously tested.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = Session.start(
+    Session.engine() ++ Map(
+      "spark.app.name" -> "graft-test",
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString),
+    logLevel = "ERROR")
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -11,6 +11,7 @@ Usage: python3 tools/check.py [sfdir] [outdir] [--skip-verify] [query ...]
 """
 import sys, os, json, math, subprocess
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 args = sys.argv[3:]
@@ -20,7 +21,7 @@ only = [a for a in args if not a.startswith("--")]
 if not skip:
     r = subprocess.run(
         ["sbt", f'runMain graft.Verify {SF} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=ROOT, capture_output=True, text=True)
     sys.stdout.write(r.stdout[-3000:])
     sys.stderr.write(r.stderr[-3000:])
     if r.returncode != 0:
