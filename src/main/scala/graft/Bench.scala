@@ -42,14 +42,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * via a SparkListener, so a slow sample is attributable to spill/GC
   * pressure rather than guessed at.
   *
-  * Between queries the harness releases everything a query can leave
-  * behind in a shared JVM — cached blocks, persistent RDDs, memory-sink
-  * temp views, orphaned streams — and triggers a GC so the
-  * ContextCleaner actually reclaims accumulated broadcast blocks and
-  * shuffle state. Without this, broadcast hash relations from ~70
-  * queries pile up in the block manager and the tail of the run
-  * measures GC pressure instead of plan cost (r2: q61 111 s in-suite
-  * vs 3.1 s isolated).
+  * Between queries the harness frees everything a query can leave
+  * behind in a shared JVM with [[Session.release]] and counts what
+  * survives its barrier in `leak_checks`.
   *
   * Quiet-box adjudication (r17): after a full run, every machine-
   * flagged regression re-runs in a FRESH forked JVM (same options and
@@ -224,9 +219,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Session.cpus
     val spark = Session.start(Session.engine(cpus))
-    // Phase recording is opt-in (a non-draining JVM must not
-    // accumulate entries); this harness drains per query.
-    util.PhaseProf.enable()
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
 
@@ -302,15 +294,10 @@ object Bench {
             "pmod(xxhash64(id * 2 + 1), 2000) AS v")
           .filter(col("u") < col("v")).distinct(),
         k = 8, rounds = 2).collect()
-      // Drain the phase timings so the first MEASURED query doesn't
-      // splice the warmup's setup/stream split into its metrics.
-      streaming.Streaming.lastPhaseTimings()
-      graft.util.PhaseProf.drainJson()
       streaming.Streaming.deleteRecursively(wdir)
-      // Warmup frames were counted and none escape this block — the
-      // blanket sweep is safe here and frees their tmpfs output.
-      streaming.Streaming.releaseHarnessResults()
     }
+    // Every warm-up frame was counted and none escapes the block above.
+    Session.release(spark)
     // JIT settle: after the targeted warmups, re-run a cheap
     // representative mix until the JVM's compile-time delta per pass
     // drops below threshold (bounded passes). The first measured
@@ -335,70 +322,24 @@ object Bench {
       }
       progress(s"""{"warmup":"jit_settle","passes":$pass,"last_delta_ms":$delta}""")
     }
+    // Phase recording starts with the first measurement; each one
+    // drains it once.
+    util.Trace.enabled = true
 
-    // Drop everything a query left behind so no measurement pays for a
-    // predecessor's storage: orphaned streams, memory-sink temp views,
-    // cached/persistent blocks. The explicit GC is what lets Spark's
-    // ContextCleaner release broadcast variables and shuffle state —
-    // they are reference-tracked, so on a 128 GiB heap they otherwise
-    // survive the whole run.
-    // Leak accounting across the whole run: releaseAll() BLOCKS (bounded)
-    // until the block manager reports zero broadcast blocks, then counts
-    // what survived. r9's later-runs-slower smell (q143) pointed at
-    // inter-query state surviving the old fixed 50 ms cleanup gap — the
-    // ContextCleaner drains asynchronously, so a heavy query's broadcast
-    // debris could still be mid-removal while the next query measured.
-    // With the barrier, a nonzero leak is a counted artifact in the
-    // summary instead of ambient slowdown attributed to the wrong query.
+    // Leak accounting across the whole run: every measurement ends in
+    // Session.release, and whatever survives its bounded barrier is a
+    // counted artifact in the summary (plus one stderr line naming the
+    // surviving broadcast blocks) instead of ambient slowdown
+    // attributed to the next query.
     var leakNonzero, leakMaxBroadcast, leakCacheNonEmpty, leakRdds = 0L
-    def broadcastBlocks(): Int =
-      org.apache.spark.SparkEnv.get.blockManager
-        .getMatchingBlockIds(_.isBroadcast).size
-    def releaseAll(): Unit = {
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-      // Terminated StreamExecutions stay registered for
-      // awaitAnyTermination and pin their final micro-batch's executed
-      // plan — broadcasts included (observed as the 2 surviving
-      // broadcast blocks after every streaming query).
-      spark.streams.resetTerminated()
-      // Streaming result dirs are freed per-frame (releaseResult right
-      // after each noop force) — a blanket delete here would invalidate
-      // any OTHER outstanding lazy frame; the shutdown hook backstops
-      // anything unconsumed.
-      spark.catalog.listTables().collect()
-        .filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // The GC enqueues the dropped blocks'/broadcasts' weak references;
-      // the async ContextCleaner then actually removes them. Poll the
-      // block manager (bounded) until the removal has HAPPENED — a fixed
-      // sleep raced the cleaner — then GC once more to reclaim what the
-      // removal freed.
-      System.gc()
-      var waitedMs = 0
-      while (broadcastBlocks() > 0 && waitedMs < 2000) {
-        Thread.sleep(25)
-        waitedMs += 25
-        if (waitedMs % 500 == 0) System.gc() // re-enqueue stragglers
-      }
-      System.gc()
-      val bc = broadcastBlocks()
-      if (bc > 0 && sys.env.contains("GRAFT_BENCH_DEBUG")) {
-        System.err.println("LEAK-DEBUG blocks=" +
-          org.apache.spark.SparkEnv.get.blockManager
-            .getMatchingBlockIds(_.isBroadcast).mkString(","))
-        Thread.dumpStack()
-      }
-      val rdds = spark.sparkContext.getPersistentRDDs.size
-      val cacheDirty =
-        if (org.apache.spark.sql.GraftColumnBridge.cacheIsEmpty(spark)) 0 else 1
-      if (bc > 0 || rdds > 0 || cacheDirty > 0) {
+    def release(after: String): Unit = {
+      val r = Session.release(spark)
+      if (!r.isEmpty) {
         leakNonzero += 1
-        leakMaxBroadcast = math.max(leakMaxBroadcast, bc.toLong)
-        leakCacheNonEmpty += cacheDirty
-        leakRdds += rdds
+        leakMaxBroadcast = math.max(leakMaxBroadcast, r.broadcastBlocks.size.toLong)
+        if (r.cacheNonEmpty) leakCacheNonEmpty += 1
+        leakRdds += r.persistentRdds
+        progress(s"""{"leak":{"after":"$after","broadcast_blocks":${r.broadcastBlocks.map("\"" + _ + "\"").mkString("[", ",", "]")},"persistent_rdds":${r.persistentRdds},"cache_nonempty":${r.cacheNonEmpty}}}""")
       }
     }
 
@@ -501,7 +442,7 @@ object Bench {
             // The result frame is deliberately a nulled-out var: its
             // QueryExecution pins the executed plan's broadcast
             // variables, and a stack-reachable reference during
-            // releaseAll() keeps the ContextCleaner from collecting
+            // Session.release keeps the ContextCleaner from collecting
             // them (observed: 2 broadcast blocks surviving the
             // barrier on exactly the queries measured last).
             //
@@ -530,36 +471,23 @@ object Bench {
             df.queryExecution.executedPlan
             lastPlanMs = (System.nanoTime() - t0) / 1000000
             df.write.mode("overwrite").format("noop").save()
-            // This frame is fully consumed: free its streaming result
-            // dirs (tmpfs) without touching any other frame's.
-            streaming.Streaming.releaseResult(df)
             df = null
             None
           }
           catch {
             case e: Throwable =>
-              // The failed query's frame never escaped (and every prior
-              // query's dirs were already freed per-frame), so the
-              // blanket sweep is safe here — without it a streaming
-              // query that landed its result and then failed in the
-              // noop force would park that tmpfs output for the rest of
-              // the run.
-              try streaming.Streaming.releaseHarnessResults()
-              catch { case _: Throwable => () }
               Some(e.getClass.getSimpleName + ": " +
                 Option(e.getMessage).getOrElse("").take(200))
           }
         val sec = r4((System.nanoTime() - t0) / 1e9)
         // Streaming queries report driver-side setup separately from
         // micro-batch execution plus per-trigger batch accounting;
-        // iterative operators report per-round phase wall times
-        // (PhaseProf). Both splice into this run's metrics object so
-        // they travel with whichever sample becomes the median.
-        val phase = streaming.Streaming.lastPhaseTimings()
-          .map("," + _).getOrElse("")
-        val phases = util.PhaseProf.drainJson() match {
+        // iterative operators report per-round phase wall times. Both
+        // splice into this run's metrics object so they travel with
+        // whichever sample becomes the median.
+        val traced = util.Trace.drainJson() match {
           case "" => ""
-          case p => "," + p
+          case t => "," + t
         }
         val m = metrics.json()
         val (ccUsed, ccMax, metaUsed) = codeHeapMb()
@@ -575,12 +503,10 @@ object Bench {
           if (osLoadRaw < 0) "null"
           else (math.rint(osLoadRaw * 10) / 10).toString
         val ccJson = s""","code_cache_mb":$ccUsed,"code_cache_max_mb":$ccMax,"metaspace_mb":$metaUsed,"os_load":$osLoad"""
-        val extra = phase + phases + ccJson
-        val merged =
-          if (extra.isEmpty) m else m.dropRight(1) + extra + "}"
+        val merged = m.dropRight(1) + traced + ccJson + "}"
         val taskMs = metrics.taskTimeMs()
         val jitMs = jitBean.map(_.getTotalCompilationTime).getOrElse(0L) - jit0
-        releaseAll()
+        release(name)
         (sec, merged, taskMs, jitMs, lastPlanMs)
       }
       val (first, firstM, firstT, firstJ, firstP) = once()
@@ -668,7 +594,7 @@ object Bench {
       input.transform(transform.Transforms.pipeline(cfg))
         .write.mode("overwrite").format("noop").save()
       val sec = r4((System.nanoTime() - t0) / 1e9)
-      releaseAll()
+      release("pipeline_e2e")
       sec
     }
     // Best-of-3 for the two headline throughput numbers: they are
@@ -730,7 +656,7 @@ object Bench {
       val sec = r4((System.nanoTime() - t1) / 1e9)
       streamRecords = streamAcc.value
       streaming.Streaming.deleteRecursively(ckpt)
-      releaseAll()
+      release("pipeline_stream")
       sec
     }
     val streamSec =
@@ -801,11 +727,10 @@ object Bench {
             Map[String, String]) = {
           // Shed the parent's weight BEFORE forking: the child competes
           // with this JVM's resident set on a memory-constrained host, so
-          // drop caches/broadcasts and hint a GC first (the local[*]
-          // session itself stays up — stopping it would kill the summary
-          // emission below, and its executors are idle while we wait).
-          try releaseAll() catch { case _: Throwable => () }
-          System.gc()
+          // release first (the local[*] session itself stays up —
+          // stopping it would kill the summary emission below, and its
+          // executors are idle while we wait).
+          try release("isolate") catch { case _: Throwable => () }
           val javaBin = java.nio.file.Paths
             .get(System.getProperty("java.home"), "bin", "java").toString
           val jvmArgs = java.lang.management.ManagementFactory
@@ -889,7 +814,7 @@ object Bench {
       .mkString("{", ",", "}")
     val prevTotal = r4(all.flatMap(x => prevTimes.get(x._1)).sum)
     // Inter-query hygiene over the whole run: n_nonzero counts
-    // releaseAll() calls that still saw residue AFTER the bounded
+    // releases that still saw residue AFTER the bounded
     // cleanup barrier. All-zero = every measurement started from a
     // clean block manager / cache manager.
     val leakJson =

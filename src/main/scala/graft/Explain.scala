@@ -10,7 +10,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * formatted physical plan, then forces the query through the `noop`
   * sink — Bench's forcing basis — and prints the final adaptive plan
   * with its ReusedExchange count. A query that fails is reported and
-  * skipped; whatever a query cached is released before the next.
+  * skipped; whatever a query left behind is freed by
+  * [[Session.release]] before the next.
   *
   * Usage: runMain graft.Explain [sfDir] [query ...] */
 object Explain {
@@ -50,9 +51,7 @@ object Explain {
           } catch { case e: Throwable =>
             System.err.println(s"[explain] $name failed: ${e.getMessage}")
           }
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          Session.release(spark)
       }
     }
     spark.stop()

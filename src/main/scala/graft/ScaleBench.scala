@@ -29,6 +29,11 @@ import org.apache.spark.sql.functions._
   *   sbt "runMain graft.ScaleBench"   # writes SCALE_BENCH.json
   */
 object ScaleBench {
+  /** A run's micro-batch seconds, read from its metrics JSON. */
+  private[graft] def streamSec(met: String): Option[Double] =
+    """"stream_sec":([0-9.eE+-]+)""".r.findFirstMatchIn(met)
+      .map(_.group(1).toDouble)
+
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
@@ -45,8 +50,6 @@ object ScaleBench {
     val heapGb = math.rint(
       Runtime.getRuntime.maxMemory / 1073741824.0 * 10) / 10
     System.err.println(s"""{"scale_env":{"heap_gb":$heapGb,"processors":${Runtime.getRuntime.availableProcessors}}}""")
-    // Opt in to phase recording (drained per measured run below).
-    util.PhaseProf.enable()
     val metrics = new Bench.MetricsListener
     spark.sparkContext.addSparkListener(metrics)
 
@@ -694,99 +697,53 @@ object ScaleBench {
         .groupBy(col("centroid_id"), col("dropped"))
         .agg(count(lit(1)).as("n"))))
 
-    // Bench-grade inter-measurement barrier (r11): the old clearCache +
-    // one GC left broadcast blocks, terminated-stream plans and
-    // state-store providers draining ASYNC while the next shape
-    // measured — on a 16-shape run one heavy predecessor (cdc's 10 GB
-    // external sort, the ANN broadcast) bled multi-second GC into its
-    // successor and single shapes spiked 3-6x run-to-run
-    // (time_weighted 8.7 s vs 53.5 s across otherwise-identical runs).
-    // Block (bounded) until the block manager reports zero broadcast
-    // blocks, then GC again so the reclaim actually lands.
-    def broadcastBlocks(): Int =
-      org.apache.spark.SparkEnv.get.blockManager
-        .getMatchingBlockIds(_.isBroadcast).size
-    def releaseAll(): Unit = {
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-      spark.streams.resetTerminated()
-      // Streaming result dirs are freed per-frame (releaseResult in
-      // onceMeasure once the count has consumed the frame); the failure
-      // path sweeps unconsumed ones explicitly.
-      spark.catalog.listTables().collect()
-        .filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      org.apache.spark.sql.GraftColumnBridge.unloadStateStores()
-      System.gc()
-      var waitedMs = 0
-      while (broadcastBlocks() > 0 && waitedMs < 2000) {
-        Thread.sleep(25)
-        waitedMs += 25
-        if (waitedMs % 500 == 0) System.gc()
-      }
-      System.gc()
-    }
     def r4(sec: Double): Double = math.rint(sec * 10000) / 10000
     // One timed execution: wall, spliced metrics, rows. A FAILED run
-    // must still drain the phase refs and release shared state — a
-    // skipped drain would splice the failed shape's setup/stream/phase
-    // entries into the NEXT shape's metrics, and skipped cleanup would
-    // bleed its caches/broadcasts into the next measurement (worse
-    // under interleaving, where the contaminated successor differs per
-    // round).
+    // must still drain the trace and release shared state — a skipped
+    // drain would splice the failed shape's setup/stream/phase entries
+    // into the NEXT shape's metrics, and skipped cleanup would bleed
+    // its caches/broadcasts into the next measurement (worse under
+    // interleaving, where the contaminated successor differs per
+    // round). The release is Bench's full barrier (r11): a clearCache
+    // plus one GC left broadcast blocks, terminated-stream plans and
+    // state-store providers draining ASYNC while the next shape
+    // measured — one heavy predecessor (cdc's 10 GB external sort, the
+    // ANN broadcast) bled multi-second GC into its successor and single
+    // shapes spiked 3-6x run-to-run (time_weighted 8.7 s vs 53.5 s
+    // across otherwise-identical runs).
     def onceMeasure(fn: String => DataFrame, dir: String): (Double, String, Long) = {
       metrics.reset()
       val t0 = System.nanoTime()
-      var ok = false
-      try {
-        // var + null-out, same discipline as Bench: a stack-reachable
-        // frame pins its executed plan (broadcasts included) through
-        // releaseAll's collection barrier, so the debris would survive
-        // into the NEXT shape's measurement (observed: cdc/time_weighted
-        // x1000 task time 4-8x with the reference retained).
-        var df = fn(dir)
-        val rows = df.count()
-        val sec = r4((System.nanoTime() - t0) / 1e9)
-        // The count fully consumed this frame: free its streaming
-        // result dirs (tmpfs) without touching any other frame's.
-        streaming.Streaming.releaseResult(df)
-        df = null
-        // Streaming shapes: splice the setup/micro-batch split into the
-        // run's metrics (same contract as Bench) — the x1 vs xN compare
-        // is only meaningful on stream_sec, since setup is fixed cost.
-        val phase = streaming.Streaming.lastPhaseTimings()
-          .map("," + _).getOrElse("")
-        val phases = util.PhaseProf.drainJson() match {
-          case "" => ""
-          case p => "," + p
+      var traced = ""
+      val (sec, m0, rows) =
+        try {
+          // var + null-out, same discipline as Bench: a stack-reachable
+          // frame pins its executed plan (broadcasts included) through
+          // the release barrier, so the debris would survive into the
+          // NEXT shape's measurement (observed: cdc/time_weighted x1000
+          // task time 4-8x with the reference retained).
+          var df = fn(dir)
+          val rows = df.count()
+          val sec = r4((System.nanoTime() - t0) / 1e9)
+          df = null
+          (sec, metrics.json(), rows)
+        } finally {
+          traced = util.Trace.drainJson()
+          // A successful measurement must survive a cleanup hiccup: an
+          // uncaught exception here would discard the already-computed
+          // sample AND mark the shape failed for every remaining round
+          // (the run loop skips failed shapes). Log and continue — a
+          // missed release shows up in the next run's leak-visible
+          // metrics rather than silently zeroing this shape's artifact.
+          try Session.release(spark) catch { case e: Throwable =>
+            System.err.println(s"[scale] post-measure release failed: $e")
+          }
         }
-        val m0 = metrics.json()
-        val extra = phase + phases
-        val m = if (extra.isEmpty) m0 else m0.dropRight(1) + extra + "}"
-        ok = true
-        // A successful measurement must survive a cleanup hiccup: an
-        // uncaught exception here would discard the already-computed
-        // sample AND mark the shape failed for every remaining round
-        // (the run loop skips failed shapes). Log and continue — a
-        // missed release shows up in the next run's leak-visible
-        // metrics rather than silently zeroing this shape's artifact.
-        try releaseAll() catch { case e: Throwable =>
-          System.err.println(s"[scale] post-measure release failed: $e")
-        }
-        (sec, m, rows)
-      } finally {
-        if (!ok) {
-          streaming.Streaming.lastPhaseTimings()
-          util.PhaseProf.drainJson()
-          // A failed run's frame never reached the caller — the blanket
-          // sweep of its (unconsumed) result dirs is safe here.
-          try streaming.Streaming.releaseHarnessResults()
-          catch { case _: Throwable => () }
-          try releaseAll() catch { case _: Throwable => () }
-        }
-      }
+      // Streaming shapes: the setup/micro-batch split lands in the run's
+      // metrics (same contract as Bench) — the x1 vs xN compare is only
+      // meaningful on stream_sec, since setup is fixed cost.
+      val m = if (traced.isEmpty) m0 else m0.dropRight(1) + "," + traced + "}"
+      (sec, m, rows)
     }
 
     // warmup: reader + codegen init off the clock, and the streaming
@@ -797,13 +754,10 @@ object ScaleBench {
     // stream_hourly x1 12.6 s cold vs 2.0 s at x100 warm).
     li(dir1).count(); docs(dir1).count()
     SparkEntry.queries("q44_stream_hourly")(spark, dirE1).count()
-    // Drain the warmup's streaming phase timings — lastPhaseTimings is
-    // a read-clears ref, and an undrained warmup entry would splice
-    // setup_sec/stream_sec into the FIRST measured (non-streaming)
-    // shape's metrics (same leak Bench drains after its warmup).
-    streaming.Streaming.lastPhaseTimings()
-    // The warmup frame was counted and does not escape — sweep its dir.
-    streaming.Streaming.releaseHarnessResults()
+    Session.release(spark)
+    // Phase recording starts with the first measurement; each
+    // onceMeasure drains it once.
+    util.Trace.enabled = true
 
     // Targeted iteration: SPARK_GRAFT_SCALE_SHAPES=cdc_apply,stream_dedup
     // runs only the named shapes (full artifact runs leave it unset —
@@ -942,7 +896,7 @@ object ScaleBench {
             docsD(dirDN), "doc_id", "text", maxHamming = 3, blocks = b)
             .head()
           val sec = r4((System.nanoTime() - t0) / 1e9)
-          try releaseAll() catch { case _: Throwable => () }
+          try Session.release(spark) catch { case _: Throwable => () }
           val j = s"""{"blocks":$b,"k":${b - 3},"n_tables":${r.getAs[Int]("n_tables")},"key_bits":${r.getAs[Int]("key_bits")},"n_docs":${r.getAs[Long]("n_docs")},"raw_candidates":${r.getAs[Long]("raw_candidates")},"distinct_pairs":${r.getAs[Long]("distinct_pairs")},"sec":$sec}"""
           System.err.println(s"""{"simhash_knob":$j}""")
           j
@@ -967,7 +921,7 @@ object ScaleBench {
             thresholdBp = 6000, shingle = 3, positional = positional)
             .head()
           val sec = r4((System.nanoTime() - t0) / 1e9)
-          try releaseAll() catch { case _: Throwable => () }
+          try Session.release(spark) catch { case _: Throwable => () }
           val j = s"""{"positional":$positional,"n_docs":${r.getAs[Long]("n_docs")},"raw_candidates":${r.getAs[Long]("raw_candidates")},"distinct_pairs":${r.getAs[Long]("distinct_pairs")},"sec":$sec}"""
           System.err.println(s"""{"ppjoin_knob":$j}""")
           j
@@ -992,7 +946,7 @@ object ScaleBench {
               docsD(dir), "doc_id", "text", k = 16, bands = 4, shingleN = 3)
               .head()
             val sec = r4((System.nanoTime() - t0) / 1e9)
-            try releaseAll() catch { case _: Throwable => () }
+            try Session.release(spark) catch { case _: Throwable => () }
             val j = s"""{"scale":"$lbl","n_docs":${r.getAs[Long]("n_docs")},"raw_candidates":${r.getAs[Long]("raw_candidates")},"distinct_pairs":${r.getAs[Long]("distinct_pairs")},"max_bucket":${r.getAs[Long]("max_bucket")},"sec":$sec}"""
             System.err.println(s"""{"lsh_knob":$j}""")
             j
@@ -1065,7 +1019,7 @@ object ScaleBench {
         val profJson =
           s"""{"n_docs":${pr.getAs[Long]("n_docs")},"n_features":${pr.getAs[Long]("n_features")},"distinct_pairs":${pr.getAs[Long]("distinct_pairs")},"compaction_x1000":${pr.getAs[Long]("compaction_x1000")}}"""
         System.err.println(s"""{"dsir_longdoc_profile":$profJson}""")
-        try releaseAll() catch { case _: Throwable => () }
+        try Session.release(spark) catch { case _: Throwable => () }
         val pts = for {
           fast <- Seq(false, true)
           reuse <- Seq(false, true)
@@ -1102,7 +1056,7 @@ object ScaleBench {
           val r = Dedup.containmentCoMass(
             docsD(dir), "doc_id", "text", shingle = sh).head()
           val sec = r4((System.nanoTime() - t0) / 1e9)
-          try releaseAll() catch { case _: Throwable => () }
+          try Session.release(spark) catch { case _: Throwable => () }
           val j = s"""{"scale":"$lbl","shingle":$sh,"n_docs":${r.getAs[Long]("n_docs")},"n_terms":${r.getAs[Long]("n_terms")},"max_df":${r.getAs[Long]("max_df")},"co_mass":${r.getAs[Long]("co_mass")},"sec":$sec}"""
           System.err.println(s"""{"containment_knob":$j}""")
           j
@@ -1138,9 +1092,6 @@ object ScaleBench {
           // Streaming shapes additionally report the exponent over
           // stream_sec (micro-batch execution only; setup_sec is the
           // fixed driver-side cost, recorded separately).
-          def streamSec(met: String): Option[Double] =
-            """"stream_sec":([0-9.eE+-]+)""".r.findFirstMatchIn(met)
-              .map(_.group(1).toDouble)
           // task_exponent: the same growth exponent over SUMMED task
           // time. The wall exponent conflates two things once a shape
           // saturates all local cores — work growth AND the loss of

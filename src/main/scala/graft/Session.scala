@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place a SparkSession is built, and the one way to scope a
-  * session setting.
+/** The one place a SparkSession is built, the one way to scope a
+  * session setting, and the one release of what a finished query left
+  * behind ([[release]]).
   *
   * Profiles are plain key/value maps so an entry's settings can be
   * compared, printed and extended without a session:
@@ -154,5 +155,64 @@ object Session {
         case None => spark.conf.unset(k)
       }
     }
+  }
+
+  /** What [[release]] could not free: the surviving broadcast block
+    * ids, the persistent RDD count, and whether the cache still holds
+    * a plan. */
+  final case class Residue(
+      broadcastBlocks: Seq[String],
+      persistentRdds: Int,
+      cacheNonEmpty: Boolean) {
+    def isEmpty: Boolean =
+      broadcastBlocks.isEmpty && persistentRdds == 0 && !cacheNonEmpty
+  }
+
+  /** Frees everything a finished query left behind in this JVM — the
+    * query harnesses' one release step between queries. Every
+    * `Streaming.runToCompletion` result dir is deleted, so call it only
+    * once no returned frame is still in use.
+    *
+    * Without it, broadcast hash relations from ~70 queries pile up in
+    * the block manager and the tail of a bench run measures GC pressure
+    * instead of plan cost (r2: q61 111 s in-suite vs 3.1 s isolated).
+    * Broadcasts and shuffle state are reference-tracked: only a GC lets
+    * Spark's ContextCleaner find them, and it removes them
+    * asynchronously. So the barrier polls the block manager (bounded)
+    * until the removal has happened — a fixed sleep raced the cleaner
+    * and let a heavy query's debris bleed into the next measurement
+    * (r9's q143) — then GCs once more to reclaim what the removal
+    * freed. A caller that still holds a query's frame pins that plan's
+    * broadcasts, which then survive as residue. */
+  def release(spark: SparkSession): Residue = {
+    spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
+    // Terminated StreamExecutions stay registered for
+    // awaitAnyTermination and pin their final micro-batch's executed
+    // plan — broadcasts included.
+    spark.streams.resetTerminated()
+    spark.catalog.listTables().collect()
+      .filter(_.isTemporary)
+      .foreach(t => spark.catalog.dropTempView(t.name))
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    // A stopped query's state-store providers otherwise stay loaded,
+    // each holding its operator's keyed state, until the maintenance
+    // task gets to them.
+    org.apache.spark.sql.GraftColumnBridge.unloadStateStores()
+    streaming.Streaming.releaseResults()
+    def liveBroadcasts() = org.apache.spark.SparkEnv.get.blockManager
+      .getMatchingBlockIds(_.isBroadcast)
+    System.gc()
+    var waitedMs = 0
+    while (liveBroadcasts().nonEmpty && waitedMs < 2000) {
+      Thread.sleep(25)
+      waitedMs += 25
+      if (waitedMs % 500 == 0) System.gc() // re-enqueue stragglers
+    }
+    System.gc()
+    Residue(liveBroadcasts().map(_.name).toSeq,
+      spark.sparkContext.getPersistentRDDs.size,
+      !org.apache.spark.sql.GraftColumnBridge.cacheIsEmpty(spark))
   }
 }

@@ -93,18 +93,7 @@ final case class IngestionConfig(
 final case class PathsConfig(
     dataRaw: String = "data/raw",
     dataProcessed: String = "data/processed",
-    reportsDir: String = "reports",
     dqReportCsv: String = "reports/data_quality_report.csv")
-
-/** Expected raw schema declaration. Reference: config/default.yaml:15-27,
-  * src/config/models.py SchemaDefinition (YAML key "schema"). */
-final case class SchemaConfig(
-    expectedColumns: Seq[String] = Seq(
-      "sensor_id", "timestamp", "reading_type", "value", "battery_level"),
-    types: Map[String, String] = Map(
-      "sensor_id" -> "VARCHAR", "timestamp" -> "TIMESTAMP",
-      "reading_type" -> "VARCHAR", "value" -> "DOUBLE",
-      "battery_level" -> "DOUBLE"))
 
 /** Column-name binding so every stage works over any table shaped like
   * (id, timestamp, type, value[, battery]) — the reference hard-codes
@@ -138,7 +127,6 @@ final case class PipelineConfig(
     validation: ValidationConfig = ValidationConfig(),
     ingestion: IngestionConfig = IngestionConfig(),
     paths: PathsConfig = PathsConfig(),
-    schema: SchemaConfig = SchemaConfig(),
     cols: ReadingCols = ReadingCols.sensor) {
 
   /** "UTC+05:30" -> signed minutes east of UTC (330). Mirrors the
@@ -175,7 +163,11 @@ object PipelineConfig {
     * src/config/models.py:131-141 from_yaml). Parsed with the built-in
     * indentation-subset parser below — no external YAML dependency.
     * Any omitted section keeps its default; `ranges.battery_level`
-    * feeds `batteryRange` like the reference's battery branch. */
+    * feeds `batteryRange` like the reference's battery branch. The
+    * reference's `schema` section and `paths.reports_dir` parse but are
+    * not read: ingest validates against the fixed
+    * `graft.model.Schemas.raw`, and the report goes to
+    * `paths.dq_report_csv`. */
   def fromYaml(path: String): PipelineConfig = {
     val root = MiniYaml.parse(Files.readString(Paths.get(path)))
     var cfg = default
@@ -201,19 +193,8 @@ object PipelineConfig {
       var ps = cfg.paths
       str(p, "data_raw").foreach(v => ps = ps.copy(dataRaw = v))
       str(p, "data_processed").foreach(v => ps = ps.copy(dataProcessed = v))
-      str(p, "reports_dir").foreach(v => ps = ps.copy(reportsDir = v))
       str(p, "dq_report_csv").foreach(v => ps = ps.copy(dqReportCsv = v))
       cfg = cfg.copy(paths = ps)
-    }
-    objOf("schema").foreach { sc =>
-      var s = cfg.schema
-      list(sc, "expected_columns").foreach(v => s = s.copy(expectedColumns = v))
-      sc.get("types").collect { case o: MiniYaml.Obj =>
-        s = s.copy(types = o.entries.collect {
-          case (k, MiniYaml.Scalar(Some(v))) => k -> v
-        }.toMap)
-      }
-      cfg = cfg.copy(schema = s)
     }
     objOf("ranges").foreach { r =>
       val all = r.entries.collect { case (k, o: MiniYaml.Obj) =>

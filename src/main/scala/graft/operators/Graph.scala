@@ -110,7 +110,7 @@ object Graph {
     // self-join + distinct) from the orientation pass proper; r10 could
     // not tell which of the two a slow sample paid for.
     val edges = edgesIn.persist(lvl)
-    val nEdgesRaw = graft.util.PhaseProf.timed("edges")(edges.count())
+    val nEdgesRaw = graft.util.Trace.timed("edges")(edges.count())
     // The degree table is built over the persisted edges and consumed
     // twice (du/dv) INSIDE the one orientation execution, where its
     // groupBy exchange dedups at runtime — so it needs neither its own
@@ -148,7 +148,7 @@ object Graph {
         when(fwd, col("v")).otherwise(col("u")).as("dst"),
         when(fwd, col("dv")).otherwise(col("du")).as("dd"))
       .persist(lvl)
-    val nEdges = graft.util.PhaseProf.timed("orient")(oriented.count())
+    val nEdges = graft.util.Trace.timed("orient")(oriented.count())
     edges.unpersist(blocking = false)
     // Close triangles by ADJACENCY INTERSECTION, not wedge
     // materialization: per oriented source, collect the sorted
@@ -279,15 +279,15 @@ object Graph {
       owned.release(e)
       (nxt, edgeN, coreN)
     }
-    // Per-round wall times feed the bench details (PhaseProf): an
+    // Per-round wall times feed the bench details (util.Trace): an
     // iterative operator's regression must arrive attributed to the
     // round (or the edge build) that moved, not as one opaque number.
     val e0 = edgesIn.persist(lvl)
-    val nEdges = graft.util.PhaseProf.timed("edge_build")(e0.count())
+    val nEdges = graft.util.Trace.timed("edge_build")(e0.count())
     val (eLast, neLast, cores) =
       (1 to rounds).foldLeft((e0, 0L, Vector.empty[Long])) {
         case ((e, _, cs), i) =>
-          val (nxt, ne, c) = graft.util.PhaseProf.timed(s"peel_r$i")(round(e))
+          val (nxt, ne, c) = graft.util.Trace.timed(s"peel_r$i")(round(e))
           (nxt, ne, cs :+ c)
       }
     owned.release(eLast)
@@ -326,7 +326,7 @@ object Graph {
       .persist(lvl)
     val r0 = owned.checkpoint(
       sym.filter(seedPred).select(col("sn").as("n")).distinct())
-    val c0 = graft.util.PhaseProf.timed("seed")(r0.count())
+    val c0 = graft.util.Trace.timed("seed")(r0.count())
     // The reached set is a checkpointed LogicalRDD, whose size ESTIMATE
     // is the catalog default (effectively infinite) — it never
     // auto-broadcasts, and every hop was silently planning a full
@@ -350,7 +350,7 @@ object Graph {
     val (rLast, counts) = (1 to hops).foldLeft((r0, Vector(c0))) {
       case ((r, cs), h) =>
         val (nxt, c) =
-          graft.util.PhaseProf.timed(s"hop_$h")(expand(r, cs.last))
+          graft.util.Trace.timed(s"hop_$h")(expand(r, cs.last))
         (nxt, cs :+ c)
     }
     sym.unpersist(blocking = false)

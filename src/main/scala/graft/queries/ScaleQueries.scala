@@ -194,14 +194,14 @@ object ScaleQueries {
       // with many iterations, re-introduce a checkpoint every k
       // iterations to bound lineage depth; the two base checkpoints
       // are the ones that matter (the graph is re-read 7 times).
-      val e = graft.util.PhaseProf.timed("graph_build")(
+      val e = graft.util.Trace.timed("graph_build")(
         t(s, dir, "lineitem")
           .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
           .select((col("l_suppkey").cast(LongType) * 2).as("src"),
             (col("o_custkey").cast(LongType) * 2 + 1).as("dst"))
           .distinct()
           .localCheckpoint())
-      val nodes = graft.util.PhaseProf.timed("nodes_build")(
+      val nodes = graft.util.Trace.timed("nodes_build")(
         e.select(col("src").as("node"))
           .union(e.select(col("dst").as("node"))).distinct()
           .localCheckpoint())

@@ -76,22 +76,6 @@ object Streaming {
     * runToCompletion — drained into that run's setup_sec so the bench
     * can report setup separately from micro-batch execution. */
   private val pendingSetupNs = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val lastPhaseRef =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  /** JSON fragment describing the most recent runToCompletion's phases
-    * — read once, the read clears it, so a non-streaming query never
-    * inherits stale timings. Carries `setup_sec` (source resolution +
-    * checkpoint dir + query start: planning, state-store init) vs
-    * `stream_sec` (micro-batch execution), plus per-batch accounting:
-    * `n_batches` (triggers that ran, no-data ticks included),
-    * `n_data_batches` (triggers that consumed rows) and `batch_ms`
-    * (per-trigger wall, execution order). A slow streaming sample then
-    * self-identifies as "more batches" vs "slower batches" instead of
-    * needing a re-run to adjudicate (r10: q185's 76 s of task time for
-    * 0.58 MB of shuffle was unattributable without this). */
-  def lastPhaseTimings(): Option[String] =
-    Option(lastPhaseRef.getAndSet(null))
 
   /** Streaming DataFrame over an events path (directory, or a single
     * parquet file — FileStreamSource requires a directory, so a file
@@ -348,46 +332,19 @@ object Streaming {
     * stream_dedup, 7.5M output rows: 16.5 s wall / 17.2 s GC via the
     * memory sink vs 8.2 s / 2.4 s via this sink — the distributed
     * parquet write IS the production-shaped landing path). Result
-    * files live until JVM exit (a shutdown hook sweeps them; outputs
-    * are bounded by the harness corpora); the scratch checkpoint is
-    * torn down before returning, so repeated runs in one JVM — the
-    * bench harness runs 150+ queries back-to-back — leave no sink or
-    * state-store residue behind. */
+    * files live until `graft.Session.release` (the harnesses call it
+    * once each query's frame is consumed) or, as a backstop, JVM exit;
+    * the scratch checkpoint is torn down before returning, so repeated
+    * runs in one JVM — the bench harness runs 150+ queries
+    * back-to-back — leave no sink or state-store residue behind.
+    * Setup vs micro-batch time and per-trigger accounting go to
+    * [[graft.util.Trace]]. */
   def runToCompletion(
       spark: SparkSession,
       agg: DataFrame,
       name: String,
       outputMode: String = "complete",
-      requireSingleBatch: Boolean = false): DataFrame =
-    runToCompletionWithHandle(
-      spark, agg, name, outputMode, requireSingleBatch)._1
-
-  /** Opaque handle to the scratch dir backing a [[runToCompletion]]
-    * result — releasable via [[release]] regardless of what the caller
-    * did to the frame's plan (the plan-matching [[releaseResult]]
-    * cannot see through a localCheckpoint/cache). Idempotent: the
-    * backing dir is deleted at most once, by whichever of release /
-    * releaseResult / the JVM-exit sweep gets there first. */
-  final class ResultHandle private[streaming] (
-      private[streaming] val dir: java.nio.file.Path)
-
-  /** Eagerly free a result by its handle. Works even when the returned
-    * frame was routed through localCheckpoint/cache (which strips the
-    * file-source relation releaseResult matches on) — the caller holds
-    * the dir identity directly, so no plan inspection is involved.
-    * Safe no-op if the result was already released by any path. */
-  def release(handle: ResultHandle): Unit =
-    if (resultDirs.remove(handle.dir)) deleteRecursively(handle.dir)
-
-  /** [[runToCompletion]], additionally returning the [[ResultHandle]]
-    * for the result's backing dir — take this form whenever the frame
-    * may be checkpointed/cached before release time. */
-  def runToCompletionWithHandle(
-      spark: SparkSession,
-      agg: DataFrame,
-      name: String,
-      outputMode: String = "complete",
-      requireSingleBatch: Boolean = false): (DataFrame, ResultHandle) = {
+      requireSingleBatch: Boolean = false): DataFrame = {
     val setup0 = System.nanoTime()
     // Scratch state off the disk: every state-store commit writes delta
     // files under the checkpoint, and on a harness running stateful
@@ -488,12 +445,8 @@ object Streaming {
       val batchMs = progs.map(p =>
         Option(p.durationMs.get("triggerExecution"))
           .map(_.longValue).getOrElse(0L))
-      lastPhaseRef.set(
-        s""""setup_sec":${math.rint(setupNs / 1e5) / 1e4}""" +
-          s""","stream_sec":${math.rint((System.nanoTime() - stream0) / 1e5) / 1e4}""" +
-          s""","n_batches":${progs.size},"n_data_batches":$nData""" +
-          s""","batch_ms":${batchMs.mkString("[", ",", "]")}""" +
-          s""","state_partitions":$statePartitions""")
+      graft.util.Trace.stream(setupNs, System.nanoTime() - stream0,
+        batchMs, nData, statePartitions)
       // Oracle shapes whose batch answer only equals the streaming one
       // when the whole static replay drains in ONE micro-batch (e.g.
       // stream dedup == DISTINCT: a key recurring beyond the watermark
@@ -512,19 +465,15 @@ object Streaming {
       // empty frame with the query's schema instead of a scan error.
       val hasFiles = scala.util.Using.resource(Files.list(outDir))(
         _.anyMatch(p => p.getFileName.toString.endsWith(".parquet")))
-      if (hasFiles)
-        (spark.read.parquet(outDir.toString), new ResultHandle(outDir))
+      if (hasFiles) spark.read.parquet(outDir.toString)
       else {
         // No files -> the returned frame is a LocalRelation that
-        // references no path, so releaseResult could never match the
-        // registered dir; free it now instead of parking an empty
-        // entry until shutdown. The handle stays valid (release is a
-        // no-op once the dir left the registry).
+        // references no path; free the dir now.
         resultDirs.remove(outDir)
         deleteRecursively(outDir)
-        (spark.createDataFrame(
+        spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          agg.schema), new ResultHandle(outDir))
+          agg.schema)
       }
     } finally {
       deleteRecursively(checkpoint)
@@ -540,63 +489,21 @@ object Streaming {
 
   /** Result dirs handed out by [[runToCompletion]] — they must outlive
     * the call (the returned frame scans them lazily), so they are
-    * swept at JVM exit (backstop), or eagerly via
-    * [[releaseHarnessResults]] once a harness has consumed the frame.
-    * Bounded by queries-per-JVM x output size; all on tmpfs. */
+    * deleted by [[releaseResults]]: from `graft.Session.release` once a
+    * harness has consumed its query's frame, and at JVM exit as a
+    * backstop. Bounded by queries-per-JVM x output size; all on tmpfs. */
   private val resultDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      releaseHarnessResults()
+      releaseResults()
     }, "graft-stream-result-sweep"))
   }
 
-  /** Consumption-tracked release: delete exactly the result dirs that
-    * back THIS frame (matched through the analyzed plan's file-source
-    * relations against the registry), leaving every other outstanding
-    * frame readable. The benches call this on each query's frame right
-    * after forcing it — the per-frame contract the blanket
-    * [[releaseHarnessResults]] could not honor (it deleted the dirs
-    * behind every previously returned lazy frame, enforcing its
-    * "already consumed" precondition by comment alone). No-op for
-    * frames with no registered dirs (all non-streaming queries).
-    *
-    * MATCHING CONTRACT: the frame must still read its result dir
-    * through a file-source relation — i.e. callers force and release
-    * the frame runToCompletion RETURNED (or a narrow transformation of
-    * it). A harness query fn that routes the result through
-    * `localCheckpoint`/`cache` first replaces the plan's
-    * LogicalRelation with a LogicalRDD/InMemoryRelation that carries
-    * no path, so this matches nothing. THAT caller should take
-    * [[runToCompletionWithHandle]] and free via [[release]] — the
-    * handle carries the dir identity, so plan surgery can't hide it
-    * (closed in r16; previously such dirs parked until the JVM-exit
-    * sweep). */
-  def releaseResult(df: DataFrame): Unit = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val roots: Set[String] = df.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.rootPaths.map(_.toUri.getPath).toSeq
-        case _ => Seq.empty[String]
-      }
-    }.flatten.toSet
-    import scala.jdk.CollectionConverters._
-    resultDirs.iterator().asScala.toSeq
-      .filter(d => roots.contains(d.toAbsolutePath.toString))
-      .foreach { d =>
-        resultDirs.remove(d)
-        deleteRecursively(d)
-      }
-  }
-
-  /** Delete every accumulated runToCompletion result dir NOW. Two
-    * callers only: the JVM shutdown backstop, and harness paths where
-    * NO returned frame can be outstanding (a failed measurement whose
-    * frame never escaped; the post-warmup sweep). Per-query cleanup
-    * uses [[releaseResult]], which frees only the finished frame's
-    * dirs. */
-  def releaseHarnessResults(): Unit = {
+  /** Delete every outstanding runToCompletion result dir now. Any frame
+    * still scanning one can no longer be read, so callers release only
+    * once no returned frame is in use. */
+  private[graft] def releaseResults(): Unit = {
     var d = resultDirs.poll()
     while (d != null) { deleteRecursively(d); d = resultDirs.poll() }
   }

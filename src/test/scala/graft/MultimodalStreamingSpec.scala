@@ -204,38 +204,30 @@ class MultimodalStreamingSpec extends SparkSpec {
     assert(partial.map(_.getInt(1)).toSeq === Seq(0, 1))
   }
 
-  test("streaming: release-by-handle frees a checkpoint-routed result " +
-    "that releaseResult cannot see") {
+  test("streaming: a runToCompletion result stays readable until " +
+    "Session.release deletes its backing dir") {
     val stream = Streaming.eventsStream(
       spark, "/root/testdata/sf0.001/events.parquet")
-    val (frame, handle) = Streaming.runToCompletionWithHandle(
-      spark, Streaming.hourlyAgg(stream), "spec_handle_release")
-    // route the result through localCheckpoint: the plan's file-source
-    // relation is replaced by a LogicalRDD carrying no path
-    val routed = frame.localCheckpoint()
-    val n = routed.count()
+    val frame = Streaming.runToCompletion(
+      spark, Streaming.hourlyAgg(stream), "spec_release")
+    val n = frame.count()
     assert(n > 0)
-    // find the backing dir through the ORIGINAL frame's plan (the spec
-    // needs the path to observe deletion; callers don't)
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val dirs = frame.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.rootPaths.map(_.toUri.getPath).toSeq
-        case _ => Seq.empty
-      }
-    }.flatten
-    assert(dirs.nonEmpty)
-    val dir = java.nio.file.Paths.get(dirs.head)
-    // the documented limitation: plan-matching release sees nothing
-    Streaming.releaseResult(routed)
-    assert(java.nio.file.Files.exists(dir),
-      "releaseResult must not match a checkpoint-routed frame")
-    // the handle sees through it
-    Streaming.release(handle)
-    assert(!java.nio.file.Files.exists(dir), "handle release left the dir")
-    Streaming.release(handle) // idempotent
-    assert(routed.count() === n) // checkpointed result outlives the dir
+    // routing through localCheckpoint leaves the result dir in place
+    val routed = frame.localCheckpoint()
+    assert(routed.count() === n)
+    assert(frame.count() === n)
+    val dirs = frame.inputFiles
+      .map(f => java.nio.file.Paths.get(new java.net.URI(f)).getParent)
+      .distinct
+    assert(dirs.length === 1)
+    assert(java.nio.file.Files.isDirectory(dirs.head))
+    val first = Session.release(spark)
+    assert(!java.nio.file.Files.exists(dirs.head),
+      "Session.release left the result dir")
+    assert(first.persistentRdds === 0 && !first.cacheNonEmpty)
+    // a second release is a no-op: nothing left to free, nothing fails
+    val second = Session.release(spark)
+    assert(second.persistentRdds === 0 && !second.cacheNonEmpty)
   }
 
   test("streaming: hourly windowed agg equals batch group-by") {

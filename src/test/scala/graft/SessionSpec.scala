@@ -45,6 +45,23 @@ class SessionSpec extends SparkSpec {
     } finally spark.conf.unset("graft.test.prior")
   }
 
+  test("release: a cached frame and a broadcast join side leave nothing " +
+    "behind") {
+    import org.apache.spark.sql.functions.broadcast
+    var cached = spark.range(1000).selectExpr("id", "id % 7 AS k").cache()
+    val side = spark.range(7).selectExpr("id AS k", "id * 2 AS v")
+    assert(cached.join(broadcast(side), "k").count() === 1000)
+    assert(!org.apache.spark.sql.GraftColumnBridge.cacheIsEmpty(spark))
+    assert(org.apache.spark.SparkEnv.get.blockManager
+      .getMatchingBlockIds(_.isBroadcast).nonEmpty)
+    cached = null
+    val r = Session.release(spark)
+    assert(r.broadcastBlocks === Nil)
+    assert(r.persistentRdds === 0)
+    assert(!r.cacheNonEmpty)
+    assert(r.isEmpty)
+  }
+
   test("Pipeline.main and CurationPipeline.main settings match the " +
     "benchmark's mirror in perfbench/engine.py") {
     val engine = new java.io.File("perfbench/engine.py")
