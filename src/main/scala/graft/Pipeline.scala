@@ -15,7 +15,8 @@ import graft.validate.Validation
   * six pandas copies, this composes ONE lazy Catalyst plan with exactly
   * three action groups: validation metric collection, the report write,
   * and the partitioned data write — with the transformed frame persisted
-  * because validation (many small aggregates) and loading both consume it.
+  * because validation (two actions: a per-(sensor, type) aggregate and
+  * the gap pass) and loading both consume it.
   */
 object Pipeline {
 

@@ -1,8 +1,13 @@
 package graft.validate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.sql.Timestamp
+
+import scala.math.BigDecimal.RoundingMode
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.{PipelineConfig, ReadingCols, ValueRange}
 import graft.model._
@@ -10,7 +15,8 @@ import graft.model._
 /** Data-quality validation suite: every DuckDB SQL query from the
   * reference's ValidationComponent (src/components/validation.py)
   * re-expressed as a lazy DataFrame aggregate. Each builder returns a
-  * small DataFrame; `collectMetrics` triggers them and assembles the
+  * small DataFrame; `collectMetrics` computes the same answers in two
+  * actions (one per-pair aggregate, one gap pass) and assembles the
   * driver-side QualityMetrics/ValidationResult.
   */
 object Validation {
@@ -21,7 +27,9 @@ object Validation {
     * anti-joined with the observed hours. The grid instants are
     * min_ts + k*f hours — they carry min_ts's sub-hour offset, and a
     * grid row is missing when no observation shares its hour-truncated
-    * slot.
+    * slot. `withBounds` attaches the grid bounds to a frame as the
+    * columns min_ts and max_ts; with no non-null timestamp there is no
+    * grid, so there are no ranges.
     *
     * Physically the grid is NEVER materialized — at 100 TB, pairs x
     * hours is trillions of rows. Instead one lead() window over the
@@ -33,26 +41,25 @@ object Validation {
     * the sub-hour grid offset carried for reconstruction. */
   private def missingRanges(
       frequencyHours: Int,
-      cols: ReadingCols)(df: DataFrame): DataFrame = {
+      cols: ReadingCols,
+      withBounds: DataFrame => DataFrame)(df: DataFrame): DataFrame = {
     val stepUs = frequencyHours * 3600000000L
     val step = expr(s"INTERVAL $frequencyHours HOUR")
     // Grid anchor = hour-truncated min_ts; offset = min_ts's sub-hour
     // part; top_h = anchor of the LAST grid instant <= max_ts.
-    val bounds = df
-      .agg(min(col(cols.ts)).as("min_ts"), max(col(cols.ts)).as("max_ts"))
-      .select(
-        date_trunc("hour", col("min_ts")).as("min_h"),
-        (unix_micros(col("min_ts")) -
-          unix_micros(date_trunc("hour", col("min_ts")))).as("offset_us"),
-        timestamp_micros(
-          unix_micros(date_trunc("hour", col("min_ts"))) +
-            floor((unix_micros(col("max_ts")) - unix_micros(col("min_ts")))
-              / stepUs).cast("long") * stepUs).as("top_h"))
-    val observed = df
+    def withGrid(f: DataFrame): DataFrame = withBounds(f)
+      .withColumn("min_h", date_trunc("hour", col("min_ts")))
+      .withColumn("offset_us",
+        unix_micros(col("min_ts")) - unix_micros(col("min_h")))
+      .withColumn("top_h", timestamp_micros(
+        unix_micros(col("min_h")) +
+          floor((unix_micros(col("max_ts")) - unix_micros(col("min_ts")))
+            / stepUs).cast("long") * stepUs))
+      .drop("min_ts", "max_ts")
+    val observed = withGrid(df
       .select(col(cols.id), col(cols.typ),
         date_trunc("hour", col(cols.ts)).as("h"))
-      .distinct()
-      .crossJoin(broadcast(bounds))
+      .distinct())
     // Observed hours that land on a grid slot (off-grid hours exist only
     // when min_ts is not step-aligned with the observation's hour).
     val onGrid = observed.filter(
@@ -82,16 +89,23 @@ object Validation {
       .select(col(cols.id), col(cols.typ),
         col("r.start_h").as("start_h"), col("r.end_h").as("end_h"),
         col("offset_us"))
-    // Pairs whose every observed hour falls off-grid (reachable only
-    // with non-aligned bounds): the whole grid is missing for them.
-    val emptyPairs = observed.select(col(cols.id), col(cols.typ)).distinct()
+    // Pairs with no observed hour on the grid (every hour off-grid or
+    // every timestamp null): the whole grid is missing for them.
+    val emptyPairs = withGrid(observed.select(col(cols.id), col(cols.typ)).distinct()
       .join(onGrid.select(col(cols.id), col(cols.typ)).distinct(),
-        Seq(cols.id, cols.typ), "left_anti")
-      .crossJoin(broadcast(bounds))
+        Seq(cols.id, cols.typ), "left_anti"))
+      .filter(col("top_h").isNotNull)
       .select(col(cols.id), col(cols.typ),
         col("min_h").as("start_h"), col("top_h").as("end_h"),
         col("offset_us"))
     ranges.union(emptyPairs)
+  }
+
+  /** The bounds of [[gapReport]] and [[missingReadings]]: `df`'s own
+    * min/max timestamp, one aggregate broadcast to every row. */
+  private def ownBounds(cols: ReadingCols, df: DataFrame): DataFrame => DataFrame = {
+    val bounds = df.agg(min(col(cols.ts)).as("min_ts"), max(col(cols.ts)).as("max_ts"))
+    _.crossJoin(broadcast(bounds))
   }
 
   /** J3 — missing readings, one row per missing grid instant (reference
@@ -100,7 +114,7 @@ object Validation {
   def missingReadings(
       frequencyHours: Int,
       cols: ReadingCols)(df: DataFrame): DataFrame =
-    missingRanges(frequencyHours, cols)(df)
+    missingRanges(frequencyHours, cols, ownBounds(cols, df))(df)
       .select(col(cols.id), col(cols.typ), col("offset_us"),
         explode(expr(
           s"sequence(start_h, end_h, interval $frequencyHours hour)"))
@@ -109,15 +123,15 @@ object Validation {
         timestamp_micros(unix_micros(col("expected_hour")) + col("offset_us")))
       .drop("offset_us")
 
-  /** A7 — gap aggregation: per (sensor, type) count + first/last missing
-    * grid instant, descending (reference validation.py:286-316).
-    * Aggregates the gap ranges directly — per-pair arithmetic only, no
+  /** Per (sensor, type) count + first/last missing grid instant,
+    * aggregated from the gap ranges — per-pair arithmetic only, no
     * per-missing-hour rows anywhere in the plan. */
-  def gapReport(
+  private def gapTotals(
       frequencyHours: Int,
-      cols: ReadingCols)(df: DataFrame): DataFrame = {
+      cols: ReadingCols,
+      withBounds: DataFrame => DataFrame)(df: DataFrame): DataFrame = {
     val stepUs = frequencyHours * 3600000000L
-    missingRanges(frequencyHours, cols)(df)
+    missingRanges(frequencyHours, cols, withBounds)(df)
       .groupBy(col(cols.id), col(cols.typ))
       .agg(
         sum(((unix_micros(col("end_h")) - unix_micros(col("start_h")))
@@ -126,8 +140,15 @@ object Validation {
           first(col("offset_us"))).as("first_missing"),
         timestamp_micros(max(unix_micros(col("end_h"))) +
           first(col("offset_us"))).as("last_missing"))
-      .orderBy(desc("missing_hours"), col(cols.id), col(cols.typ))
   }
+
+  /** A7 — gap aggregation: per (sensor, type) count + first/last missing
+    * grid instant, descending (reference validation.py:286-316). */
+  def gapReport(
+      frequencyHours: Int,
+      cols: ReadingCols)(df: DataFrame): DataFrame =
+    gapTotals(frequencyHours, cols, ownBounds(cols, df))(df)
+      .orderBy(desc("missing_hours"), col(cols.id), col(cols.typ))
 
   /** A8 — missing-value profile per reading type (reference
     * validation.py:343-366). */
@@ -193,86 +214,172 @@ object Validation {
     issues.result()
   }
 
-  /** Run the full suite: triggers the small aggregates (each collapses to
-    * a handful of rows — the only driver-side materialization), then the
-    * driver-side score + assessment. `df` should be cached by the caller
-    * when loading follows (both stages consume it). */
+  /** One (sensor, type) pair's share of every count, bound and partial
+    * sum the suite reports: a row of [[collectMetrics]]'s first action. */
+  private final case class PairStats(
+      id: Any,
+      typ: String,
+      rows: Long,
+      nullTimestamps: Long,
+      nullValues: Long,
+      nullBatteries: Long,
+      batteryViolations: Long,
+      rangeViolations: Long,
+      minTs: Timestamp,
+      maxTs: Timestamp,
+      valueSum: Double,
+      values: Long,
+      batterySum: Double,
+      batteries: Long,
+      flagged: Long,
+      anomalous: Long)
+
+  /** Spark's ascending order on a grouping key: nulls first, strings by
+    * their UTF-8 bytes (Java's String order is UTF-16's). */
+  private val keyOrder: Ordering[Any] = new Ordering[Any] {
+    def compare(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: String, y: String) =>
+        UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    }
+  }
+
+  /** The profiles' order: percentage descending, then type. */
+  private val profileOrder: Ordering[TypeProfile] =
+    Ordering.by[TypeProfile, Double](_.percentage)(Ordering.Double.TotalOrdering).reverse
+      .orElseBy(_.readingType: Any)(keyOrder)
+
+  /** Spark's `round(x, scale)` on a double: HALF_UP on its decimal form. */
+  private def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(scale, RoundingMode.HALF_UP).toDouble
+
+  /** `round(100.0 * affected / total, 2)` with Spark's double arithmetic. */
+  private def percentage(affected: Long, total: Long): Double =
+    roundHalfUp(100.0 * affected / total, 2)
+
+  /** Earliest/latest of the non-null timestamps, None when all are null. */
+  private def earliest(ts: Seq[Timestamp]): Option[Timestamp] =
+    ts.filter(_ != null).reduceOption((a, b) => if (b.before(a)) b else a)
+  private def latest(ts: Seq[Timestamp]): Option[Timestamp] =
+    ts.filter(_ != null).reduceOption((a, b) => if (b.after(a)) b else a)
+
+  /** Run the full suite in two Spark actions over `df` (persist it when
+    * loading follows: both stages consume it).
+    *
+    * Action 1 is one aggregate per (sensor, type) pair (row, null and
+    * violation counts, timestamp bounds, value/battery partial sums,
+    * anomaly-flag counts), collected as one row per pair. The driver
+    * rolls those rows up into the scalars (P8, A4-A6, A11), the
+    * missing/anomaly profiles (A8, A9), the coverage (A10) and the grid
+    * bounds; it adds the partial sums in (sensor, type) order and rounds
+    * like Spark's `round`, so the result equals the builders'.
+    * Action 2 is the gap pass (A7) over those bounds as literals; it is
+    * skipped when no timestamp is non-null (no grid, no gaps). Score and
+    * assessment (A12, A13) are driver-side. */
   def collectMetrics(cfg: PipelineConfig)(df: DataFrame): ValidationResult = {
     val c = cfg.cols
-    // Single-pass scalar stats (SURVEY §7.4 item 8, the reference's
-    // observe()-style consolidation): the five GLOBAL aggregates —
-    // type/range/battery violation counts (A4/A5/P8, reference
-    // validation.py:136-210), time range (A6, :229-239), overall stats
-    // (A11, :422-438) — collapse into ONE df.agg(...), so one job and
-    // one scan produce every scalar instead of five. At 100 TB on an uncached frame that
-    // is the difference between one and five full passes. The per-type /
-    // per-sensor profiles below keep their own jobs (different grouping
-    // keys); the suite runs 5 actions total, not 9.
     val br = cfg.batteryRange
-    val rangeTypes = cfg.ranges.keys.toSeq.sorted
-    val rangeCounts = cfg.ranges.toSeq.sortBy(_._1).map { case (typ, r) =>
-      count(when(col(c.typ) === typ &&
-        (col(c.value) < r.min || col(c.value) > r.max), 1)).as(s"rv_$typ")
+    val hasFlag = df.columns.contains("anomalous_reading")
+    val flag = col("anomalous_reading")
+    // The pair's own type picks its range; unranged types never violate.
+    val outOfRange = cfg.ranges.foldLeft(lit(false)) { case (other, (typ, r)) =>
+      when(col(c.typ) === typ, col(c.value) < r.min || col(c.value) > r.max)
+        .otherwise(other)
     }
-    val scalarExprs = Seq(
-      count(when(col(c.ts).isNull, 1)).as("null_timestamps"),
-      count(when(col(c.value).isNull, 1)).as("invalid_values"),
-      count(when(col(c.battery).isNull, 1)).as("invalid_batteries"),
-      count(when(
-        col(c.battery) < br.min || col(c.battery) > br.max,
-        1)).as("battery_violations"),
-      min(col(c.ts)).as("min_ts"),
-      max(col(c.ts)).as("max_ts"),
-      count(lit(1)).as("total_records"),
-      countDistinct(col(c.id)).as("unique_sensors"),
-      round(avg(col(c.value)), 2).as("avg_value"),
-      round(avg(col(c.battery)), 1).as("avg_battery")) ++ rangeCounts
-    val sc = df.agg(scalarExprs.head, scalarExprs.tail: _*).head()
-    def scL(n: String): Long = sc.getLong(sc.fieldIndex(n))
-    def scD(n: String): Double = {
-      val i = sc.fieldIndex(n)
-      if (sc.isNullAt(i)) Double.NaN else sc.getDouble(i)
-    }
+    val pairs = df.groupBy(col(c.id), col(c.typ))
+      .agg(
+        count(lit(1)),
+        count(when(col(c.ts).isNull, 1)),
+        count(when(col(c.value).isNull, 1)),
+        count(when(col(c.battery).isNull, 1)),
+        count(when(col(c.battery) < br.min || col(c.battery) > br.max, 1)),
+        count(when(outOfRange, 1)),
+        min(col(c.ts)),
+        max(col(c.ts)),
+        sum(col(c.value).cast("double")),
+        count(col(c.value)),
+        sum(col(c.battery).cast("double")),
+        count(col(c.battery)),
+        if (hasFlag) count(flag) else lit(0L),
+        if (hasFlag) count(when(flag, 1)) else lit(0L))
+      .collect().toSeq
+      .map { r =>
+        def partial(i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+        PairStats(r.get(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7),
+          r.getTimestamp(8), r.getTimestamp(9), partial(10), r.getLong(11),
+          partial(12), r.getLong(13), r.getLong(14), r.getLong(15))
+      }
+      .sorted(Ordering.by[PairStats, Any](_.id)(keyOrder)
+        .orElseBy(_.typ: Any)(keyOrder))
 
-    val missing = missingProfile(c)(df).collect().toSeq.map(r => TypeProfile(
-      r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val anomalies =
-      (if (df.columns.contains("anomalous_reading"))
-        anomalyProfile(c)(df).collect().toSeq else Nil).map(r => TypeProfile(
-        r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val gaps = gapReport(cfg.validation.expectedFrequencyHours, c)(df)
-      .collect().toSeq.map(r => SensorGap(
-        r.get(0).toString, r.getString(1), r.getLong(2),
-        r.getTimestamp(3), r.getTimestamp(4)))
-    val coverage = sensorCoverage(c)(df).collect().toSeq.map(r => SensorCoverage(
-      r.get(0).toString, r.getLong(1), r.getLong(2),
-      r.getTimestamp(3), r.getTimestamp(4),
-      Option(r.get(5)).map(_.toString.toDouble)))
+    val byType = pairs.groupBy(_.typ).toSeq
+    val missing = byType.map { case (typ, ps) =>
+      val total = ps.map(_.rows).sum
+      val affected = ps.map(_.nullValues).sum
+      TypeProfile(typ, total, affected, percentage(affected, total))
+    }.sorted(profileOrder)
+    // Types with no non-null flag (every type without the column) drop out.
+    val anomalies = byType.flatMap { case (typ, ps) =>
+      val total = ps.map(_.flagged).sum
+      val affected = ps.map(_.anomalous).sum
+      if (total == 0) None
+      else Some(TypeProfile(typ, total, affected, percentage(affected, total)))
+    }.sorted(profileOrder)
+    val coverage = pairs.groupBy(_.id).toSeq
+      .map { case (id, ps) =>
+        val batteries = ps.map(_.batteries).sum
+        (id, SensorCoverage(String.valueOf(id), ps.count(_.typ != null),
+          ps.map(_.rows).sum,
+          earliest(ps.map(_.minTs)).orNull, latest(ps.map(_.maxTs)).orNull,
+          if (batteries == 0) None
+          else Some(roundHalfUp(ps.map(_.batterySum).sum / batteries, 1))))
+      }
+      .sorted(Ordering.by[(Any, SensorCoverage), Long](_._2.totalReadings).reverse
+        .orElseBy(_._1)(keyOrder))
+      .map(_._2)
+
+    val minTs = earliest(pairs.map(_.minTs))
+    val maxTs = latest(pairs.map(_.maxTs))
+    // No non-null timestamp: no grid, so no gap pass.
+    val gaps = (for (lo <- minTs; hi <- maxTs) yield
+      gapTotals(cfg.validation.expectedFrequencyHours, c,
+        _.withColumn("min_ts", lit(lo)).withColumn("max_ts", lit(hi)))(df)
+        .collect().toSeq
+        .sorted(Ordering.by[Row, Long](_.getLong(2)).reverse
+          .orElseBy(_.get(0))(keyOrder).orElseBy(_.getString(1): Any)(keyOrder))
+        .map(r => SensorGap(r.get(0).toString, r.getString(1), r.getLong(2),
+          r.getTimestamp(3), r.getTimestamp(4)))).getOrElse(Nil)
 
     val totalGapHours = gaps.map(_.missingHours).sum
     val score = qualityScore(missing, anomalies, totalGapHours, cfg)
     val issues = assess(missing, anomalies, gaps, cfg)
-
-    val rangeViolationMap = rangeTypes.map(t => t -> scL(s"rv_$t")).toMap
+    val values = pairs.map(_.values).sum
+    val batteries = pairs.map(_.batteries).sum
 
     val metrics = QualityMetrics(
-      totalRecords = scL("total_records"),
-      nullTimestamps = scL("null_timestamps"),
-      invalidValues = scL("invalid_values"),
-      invalidBatteries = scL("invalid_batteries"),
-      rangeViolations = rangeViolationMap,
-      batteryViolations = scL("battery_violations"),
-      distinctSensors = scL("unique_sensors"),
-      timeRange = (
-        sc.getTimestamp(sc.fieldIndex("min_ts")),
-        sc.getTimestamp(sc.fieldIndex("max_ts"))),
+      totalRecords = pairs.map(_.rows).sum,
+      nullTimestamps = pairs.map(_.nullTimestamps).sum,
+      invalidValues = pairs.map(_.nullValues).sum,
+      invalidBatteries = pairs.map(_.nullBatteries).sum,
+      rangeViolations = cfg.ranges.keys.map(typ =>
+        typ -> pairs.filter(_.typ == typ).map(_.rangeViolations).sum).toMap,
+      batteryViolations = pairs.map(_.batteryViolations).sum,
+      distinctSensors = pairs.map(_.id).filter(_ != null).distinct.size.toLong,
+      timeRange = (minTs.orNull, maxTs.orNull),
       missingProfile = missing,
       anomalyProfile = anomalies,
       coverage = coverage,
       gaps = gaps,
       totalMissingHours = totalGapHours,
-      avgValue = scD("avg_value"),
-      avgBattery = scD("avg_battery"))
+      avgValue = if (values == 0) Double.NaN
+        else roundHalfUp(pairs.map(_.valueSum).sum / values, 2),
+      avgBattery = if (batteries == 0) Double.NaN
+        else roundHalfUp(pairs.map(_.batterySum).sum / batteries, 1))
 
     ValidationResult(
       passed = issues.isEmpty,

@@ -1,9 +1,15 @@
 package graft
 
 import java.sql.Timestamp
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.config.{PipelineConfig, ReadingCols}
-import graft.model.{SensorGap, TypeProfile}
+import graft.model.{QualityMetrics, SensorCoverage, SensorGap, TypeProfile, ValidationResult}
 import graft.validate.Validation
 
 class ValidationSpec extends SparkSpec {
@@ -17,6 +23,89 @@ class ValidationSpec extends SparkSpec {
   private def readings(rows: (String, String, String, Double)*) =
     rows.toSeq.map { case (id, t, typ, v) => (id, ts(t), typ, v, 90.0) }
       .toDF("sensor_id", "timestamp", "reading_type", "value", "battery_level")
+
+  private type Reading =
+    (String, Option[Timestamp], String, Option[Double], Option[Double], Option[Boolean])
+
+  /** One reading; a null `t` is a null timestamp. */
+  private def row(
+      id: String, t: String, typ: String,
+      value: Option[Double] = Some(20.0),
+      battery: Option[Double] = Some(90.0),
+      flag: Option[Boolean] = Some(false)): Reading =
+    (id, Option(t).map(ts), typ, value, battery, flag)
+
+  private def frame(rows: Reading*): DataFrame =
+    rows.toSeq.toDF("sensor_id", "timestamp", "reading_type", "value",
+      "battery_level", "anomalous_reading")
+
+  /** The suite as separate queries — the kept builders plus one plain
+    * df.agg of the scalars — which collectMetrics must equal. */
+  private def reference(cfg: PipelineConfig)(df: DataFrame): ValidationResult = {
+    val br = cfg.batteryRange
+    val ranged = cfg.ranges.toSeq.sortBy(_._1)
+    val scalars = Seq(
+      count(lit(1)),
+      count(when(col("timestamp").isNull, 1)),
+      count(when(col("value").isNull, 1)),
+      count(when(col("battery_level").isNull, 1)),
+      count(when(col("battery_level") < br.min || col("battery_level") > br.max, 1)),
+      countDistinct(col("sensor_id")),
+      min(col("timestamp")),
+      max(col("timestamp")),
+      round(avg(col("value")), 2),
+      round(avg(col("battery_level")), 1)) ++
+      ranged.map { case (typ, r) =>
+        count(when(col("reading_type") === typ &&
+          (col("value") < r.min || col("value") > r.max), 1))
+      }
+    val sc = df.agg(scalars.head, scalars.tail: _*).head()
+    def avgOf(i: Int) = if (sc.isNullAt(i)) Double.NaN else sc.getDouble(i)
+    def profile(p: DataFrame) = p.collect().toSeq.map(r =>
+      TypeProfile(r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    val missing = profile(Validation.missingProfile(c)(df))
+    val anomalies =
+      if (df.columns.contains("anomalous_reading"))
+        profile(Validation.anomalyProfile(c)(df))
+      else Nil
+    val gaps = Validation.gapReport(cfg.validation.expectedFrequencyHours, c)(df)
+      .collect().toSeq.map(r => SensorGap(r.getString(0), r.getString(1),
+        r.getLong(2), r.getTimestamp(3), r.getTimestamp(4)))
+    val coverage = Validation.sensorCoverage(c)(df).collect().toSeq.map(r =>
+      SensorCoverage(r.getString(0), r.getLong(1), r.getLong(2),
+        r.getTimestamp(3), r.getTimestamp(4),
+        if (r.isNullAt(5)) None else Some(r.getDouble(5))))
+    val totalGapHours = gaps.map(_.missingHours).sum
+    val issues = Validation.assess(missing, anomalies, gaps, cfg)
+    ValidationResult(
+      passed = issues.isEmpty,
+      totalRecords = sc.getLong(0),
+      issuesFound = issues,
+      qualityScore = Validation.qualityScore(missing, anomalies, totalGapHours, cfg),
+      metrics = Some(QualityMetrics(
+        totalRecords = sc.getLong(0),
+        nullTimestamps = sc.getLong(1),
+        invalidValues = sc.getLong(2),
+        invalidBatteries = sc.getLong(3),
+        rangeViolations = ranged.zipWithIndex.map { case ((typ, _), i) =>
+          typ -> sc.getLong(10 + i) }.toMap,
+        batteryViolations = sc.getLong(4),
+        distinctSensors = sc.getLong(5),
+        timeRange = (sc.getTimestamp(6), sc.getTimestamp(7)),
+        missingProfile = missing,
+        anomalyProfile = anomalies,
+        coverage = coverage,
+        gaps = gaps,
+        totalMissingHours = totalGapHours,
+        avgValue = avgOf(8),
+        avgBattery = avgOf(9))))
+  }
+
+  /** Result equality with the two averages compared as the report
+    * prints them: an empty frame's NaN is not == itself. */
+  private def comparable(r: ValidationResult) =
+    (r.copy(metrics = r.metrics.map(_.copy(avgValue = 0, avgBattery = 0))),
+      r.metrics.map(m => (m.avgValue.toString, m.avgBattery.toString)))
 
   test("gap detection: hourly grid anti-join counts missing hours") {
     // s1/temperature present at 10:00, 12:00 over a 10:00-14:00 span
@@ -87,7 +176,7 @@ class ValidationSpec extends SparkSpec {
       ("s1", "2023-06-01 10:00:00", "temperature", 25.0),
       ("s1", "2023-06-01 11:00:00", "temperature", 26.0),
       ("s2", "2023-06-01 10:00:00", "humidity", 60.0))
-      .withColumn("anomalous_reading", org.apache.spark.sql.functions.lit(false))
+      .withColumn("anomalous_reading", lit(false))
     val res = Validation.collectMetrics(cfg)(df)
     assert(res.totalRecords === 3)
     val m = res.metrics.get
@@ -99,9 +188,121 @@ class ValidationSpec extends SparkSpec {
     assert(res.qualityScore === 100.0 - 2.0) // one gap hour -> penalty 2
   }
 
+  test("collectMetrics runs at most two Spark actions") {
+    val df = readings(
+      ("s1", "2023-06-01 10:00:00", "temperature", 25.0),
+      ("s1", "2023-06-01 12:00:00", "temperature", 26.0),
+      ("s2", "2023-06-01 10:00:00", "humidity", 60.0))
+      .withColumn("anomalous_reading", lit(false))
+    // Listener events arrive asynchronously but in order: a marker
+    // action fences each side of the measured call.
+    val actions = new LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        actions.put(qe.analyzed.output.map(_.name).mkString(","))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        actions.put(s"failed $f")
+    }
+    def fence(marker: String): Seq[String] = {
+      spark.range(1).toDF(marker).collect()
+      Iterator.continually(actions.poll(60, TimeUnit.SECONDS))
+        .map(a => { assert(a != null, s"no event for $marker"); a })
+        .takeWhile(_ != marker).toSeq
+    }
+    spark.listenerManager.register(listener)
+    try {
+      fence("validation_actions_before")
+      Validation.collectMetrics(cfg)(df)
+      val ran = fence("validation_actions_after")
+      assert(ran.size <= 2, ran)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("collectMetrics: no non-null timestamp means no grid and no gaps") {
+    val allNull = frame(
+      row("s1", null, "temperature"),
+      row("s2", null, "humidity"))
+    val m = Validation.collectMetrics(cfg)(allNull).metrics.get
+    assert(m.totalRecords === 2 && m.nullTimestamps === 2)
+    assert(m.timeRange === ((null, null)))
+    assert(m.gaps.isEmpty && m.totalMissingHours === 0)
+    assert(Validation.gapReport(1, c)(allNull).count() === 0)
+    // A pair whose own timestamps are all null, beside pairs that have
+    // some, still misses its whole grid (10:00-12:00).
+    val mixed = frame(
+      row("s1", "2023-06-01 10:00:00", "temperature"),
+      row("s1", "2023-06-01 12:00:00", "temperature"),
+      row("s2", null, "humidity"))
+    val gaps = Validation.collectMetrics(cfg)(mixed).metrics.get.gaps
+    assert(gaps.map(g => (g.sensorId, g.readingType, g.missingHours)) ===
+      Seq(("s2", "humidity", 3L), ("s1", "temperature", 1L)))
+  }
+
+  test("collectMetrics equals the builders plus a plain scalar aggregate") {
+    val twoHourly = cfg.copy(validation = cfg.validation.copy(expectedFrequencyHours = 2))
+    val mixed = frame(
+      row("s1", "2023-06-01 10:00:00", "temperature", Some(25.0)),
+      row("s1", "2023-06-01 11:00:00", "temperature", Some(70.0), flag = Some(true)),
+      row("s1", "2023-06-01 14:00:00", "temperature", Some(26.5)),
+      row("s1", "2023-06-01 12:00:00", "humidity", Some(-5.0),
+        battery = Some(120.0), flag = Some(true)),
+      row("s2", "2023-06-01 10:00:00", "humidity", Some(60.0), battery = Some(-1.0)),
+      row("s2", "2023-06-01 13:00:00", "humidity", Some(61.25)),
+      row("s3", "2023-06-01 11:00:00", "temperature", Some(30.0), battery = Some(55.5)))
+    val cases = Seq(
+      ("hourly", cfg, mixed),
+      ("two-hourly", twoHourly, mixed),
+      // min_ts at 10:30: s2's hours are all off the 2-hour grid, s3 is
+      // at 12:15
+      ("min_ts at 10:30", twoHourly, frame(
+        row("s1", "2023-06-01 10:30:00", "temperature"),
+        row("s1", "2023-06-01 12:00:00", "temperature"),
+        row("s1", "2023-06-01 16:00:00", "temperature"),
+        row("s2", "2023-06-01 11:00:00", "humidity"),
+        row("s2", "2023-06-01 13:00:00", "humidity"),
+        row("s3", "2023-06-01 12:15:00", "temperature"))),
+      ("null-timestamp pair", cfg, frame(
+        row("s1", "2023-06-01 10:00:00", "temperature"),
+        row("s1", "2023-06-01 12:00:00", "temperature"),
+        row("s2", null, "humidity"),
+        row("s2", null, "humidity"))),
+      ("no timestamps", cfg, frame(
+        row("s1", null, "temperature"),
+        row("s2", null, "humidity"))),
+      ("null values", cfg, frame(
+        row("s1", "2023-06-01 10:00:00", "temperature", None),
+        row("s1", "2023-06-01 11:00:00", "temperature", Some(21.5)),
+        row("s2", "2023-06-01 10:00:00", "humidity", None),
+        row("s2", "2023-06-01 11:00:00", "humidity", None))),
+      ("a sensor without batteries", cfg, frame(
+        row("s1", "2023-06-01 10:00:00", "temperature", battery = Some(80.25)),
+        row("s2", "2023-06-01 10:00:00", "humidity", battery = None),
+        row("s2", "2023-06-01 11:00:00", "temperature", battery = None))),
+      ("no batteries at all", cfg, frame(
+        row("s1", "2023-06-01 10:00:00", "temperature", battery = None))),
+      ("null anomaly flags", cfg, frame(
+        row("s1", "2023-06-01 10:00:00", "temperature", flag = None),
+        row("s1", "2023-06-01 11:00:00", "temperature", flag = Some(true)),
+        row("s1", "2023-06-01 12:00:00", "temperature", flag = Some(false)),
+        row("s2", "2023-06-01 10:00:00", "humidity", flag = None))),
+      ("no anomaly column", cfg, mixed.drop("anomalous_reading")),
+      ("unranged type", cfg, frame(
+        row("s1", "2023-06-01 10:00:00", "pressure", Some(1013.0)),
+        row("s1", "2023-06-01 11:00:00", "pressure", Some(-5.0)),
+        row("s1", "2023-06-01 10:00:00", "temperature", Some(99.0)))),
+      ("empty", cfg, frame()))
+    for (tz <- Seq("UTC", "Asia/Kolkata"); (name, conf, df) <- cases)
+      Session.withConf(spark, "spark.sql.session.timeZone" -> tz) {
+        withClue(s"$name under $tz: ") {
+          assert(comparable(Validation.collectMetrics(conf)(df)) ===
+            comparable(reference(conf)(df)))
+        }
+      }
+  }
+
   test("report rows cover all categories") {
     val df = readings(("s1", "2023-06-01 10:00:00", "temperature", 25.0))
-      .withColumn("anomalous_reading", org.apache.spark.sql.functions.lit(false))
+      .withColumn("anomalous_reading", lit(false))
     val res = Validation.collectMetrics(cfg)(df)
     val cats = Validation.reportRows(res)(spark)
       .select("category").distinct().as[String].collect().toSet
