@@ -14,28 +14,24 @@ final case class ValueRange(min: Double, max: Double) {
 final case class Calibration(multiplier: Double, offset: Double)
 
 /** Parquet sink settings. Reference: config/default.yaml:49-54.
+  * `mode` is `overwrite` (dynamic: only the partitions a batch touches
+  * are replaced) or `append`; the sink rejects any other value.
   * `sortWithin` (extension, default off) clusters rows inside each
   * output file by the given columns — tight parquet row-group min/max
   * stats make time-range scans skip whole row groups at 100 TB.
-  * `zorderBy` (extension, default off, exactly two columns) clusters by
-  * the Morton interleave of the pair instead — tight row-group stats in
-  * BOTH dimensions for two-sided predicates (see q161/q162); it
-  * composes after `sortWithin`'s leading partition columns.
   * `bucketBy`/`bucketCount` (extension, default off) additionally
   * bucket the curated output by the given key — the pipeline's own
   * output then inherits the co-located-join property (every downstream
   * join/aggregation keyed on the bucket columns reads matching buckets
   * with no exchange, see graft.operators.Bucketed). Bucketed output is
   * catalog-backed (Loader registers a table over the same path);
-  * `sortWithin` becomes the in-bucket sort tail, `zorderBy` is
-  * incompatible (bucket sort keys are plain columns), and overwrite
-  * mode replaces touched partitions dynamically via insertInto. */
+  * `sortWithin` becomes the in-bucket sort tail, and overwrite mode
+  * replaces touched partitions dynamically via insertInto. */
 final case class WriteConfig(
     compression: String = "zstd",
     partitionBy: Seq[String] = Seq("date", "sensor_id"),
     mode: String = "overwrite",
     sortWithin: Seq[String] = Nil,
-    zorderBy: Seq[String] = Nil,
     bucketBy: Seq[String] = Nil,
     bucketCount: Int = 0)
 
@@ -44,36 +40,10 @@ final case class TransformConfig(
     zScoreThreshold: Double = 3.0,
     rollingWindowDays: Int = 7,
     readingsPerDay: Int = 24,
-    outlierHandling: String = "flag",
-    /** Exact global-median fallback for battery imputation (pandas
-      * parity). Set false at scale: the exact global percentile buffers
-      * the whole table in one aggregation buffer; the approx sketch is
-      * bounded and mergeable. Per-sensor medians stay exact either way. */
-    exactGlobalMedian: Boolean = true,
-    /** Guardrail on the exact path: even with `exactGlobalMedian=true`,
-      * inputs whose plan-estimated size exceeds this many bytes take
-      * the approx sketch — BY DEFAULT the pipeline never builds an
-      * aggregation buffer holding a whole 100 TB table just because
-      * nobody flipped a flag. The default (4 GiB of plan-estimated
-      * input, i.e. the battery column's share is far smaller) is
-      * orders of magnitude below where the exact buffer would hurt and
-      * orders above any parity-checked SF. Raise to Long.MaxValue to
-      * force exactness regardless of size. */
-    exactGlobalMedianMaxBytes: Long = TransformConfig.DefaultExactGlobalMedianMaxBytes,
-    /** When > 0, the rolling average runs in the bucketed two-pass form
-      * (Transforms.rollingAvgBucketed) with this coarse bucket width:
-      * no task ever sorts a key's full history, at the cost of one
-      * extra aggregate pass. 0 = plain single-window form. The answer
-      * is bit-identical either way. */
-    rollingBucketSeconds: Long = 0L) {
+    outlierHandling: String = "flag") {
   /** Trailing row-count frame: 7 days x 24 obs/day = 168 rows
     * (reference transformation.py:262-264 — row-count, not time-range). */
   def rollingWindowRows: Int = rollingWindowDays * readingsPerDay
-}
-
-object TransformConfig {
-  /** See [[TransformConfig.exactGlobalMedianMaxBytes]]. */
-  val DefaultExactGlobalMedianMaxBytes: Long = 4L << 30
 }
 
 /** Validation thresholds. Reference: config/default.yaml:62-66. */
@@ -167,7 +137,10 @@ object PipelineConfig {
     * reference's `schema` section and `paths.reports_dir` parse but are
     * not read: ingest validates against the fixed
     * `graft.model.Schemas.raw`, and the report goes to
-    * `paths.dq_report_csv`. */
+    * `paths.dq_report_csv`. A key in the `write` or `transformation`
+    * section that this parser does not read fails the load with an
+    * IllegalArgumentException naming it, so a misspelt or retired
+    * setting cannot parse and silently change nothing. */
   def fromYaml(path: String): PipelineConfig = {
     val root = MiniYaml.parse(Files.readString(Paths.get(path)))
     var cfg = default
@@ -184,6 +157,10 @@ object PipelineConfig {
         case MiniYaml.Scalar(Some(v)) => v
       }
     }
+    def onlyKnownKeys(o: MiniYaml.Obj, section: String, known: String*): Unit =
+      o.entries.map(_._1).find(k => !known.contains(k)).foreach(k =>
+        throw new IllegalArgumentException(
+          s"unknown key '$section.$k' in $path"))
 
     objOf("pipeline").foreach(p =>
       str(p, "version").foreach(v => cfg = cfg.copy(pipelineVersion = v)))
@@ -211,24 +188,25 @@ object PipelineConfig {
       }.toMap)
     }
     objOf("write").foreach { w =>
+      onlyKnownKeys(w, "write",
+        "compression", "partition_by", "mode", "sort_within", "bucket_by",
+        "bucket_count")
       var wc = cfg.write
       str(w, "compression").foreach(v => wc = wc.copy(compression = v))
       list(w, "partition_by").foreach(v => wc = wc.copy(partitionBy = v))
       str(w, "mode").foreach(v => wc = wc.copy(mode = v))
       list(w, "sort_within").foreach(v => wc = wc.copy(sortWithin = v))
-      list(w, "zorder_by").foreach(v => wc = wc.copy(zorderBy = v))
       list(w, "bucket_by").foreach(v => wc = wc.copy(bucketBy = v))
       str(w, "bucket_count").foreach(v => wc = wc.copy(bucketCount = v.toInt))
       cfg = cfg.copy(write = wc)
     }
     objOf("transformation").foreach { t =>
+      onlyKnownKeys(t, "transformation",
+        "z_score_threshold", "rolling_window_days", "outlier_handling")
       var tc = cfg.transformation
       num(t, "z_score_threshold").foreach(v => tc = tc.copy(zScoreThreshold = v))
       num(t, "rolling_window_days").foreach(v => tc = tc.copy(rollingWindowDays = v.toInt))
       str(t, "outlier_handling").foreach(v => tc = tc.copy(outlierHandling = v))
-      str(t, "exact_global_median").foreach(v => tc = tc.copy(exactGlobalMedian = v.toBoolean))
-      str(t, "exact_global_median_max_bytes").foreach(v => tc = tc.copy(exactGlobalMedianMaxBytes = v.toLong))
-      num(t, "rolling_bucket_seconds").foreach(v => tc = tc.copy(rollingBucketSeconds = v.toLong))
       cfg = cfg.copy(transformation = tc)
     }
     objOf("validation").foreach { v =>

@@ -1,7 +1,7 @@
 package graft.load
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, IntegerType, StringType}
 
@@ -44,11 +44,15 @@ object Loader {
   /** S8 — partitioned write. `overwrite` maps to DYNAMIC partition
     * overwrite = PyArrow's delete_matching (replace only touched
     * partitions, reference loading.py:196-224); `append` maps to
-    * SaveMode.Append. A repartition on the partition keys bounds the
+    * SaveMode.Append; any other mode fails before anything is written,
+    * in both sinks. A repartition on the partition keys bounds the
     * files-per-partition (the reference wrote 24 files for 72 rows;
     * at 100 TB unrepartitioned writes explode into task-count x
     * partition-count small files). */
   def write(cfg: PipelineConfig, outPath: String)(df: DataFrame): Unit = {
+    val mode = cfg.write.mode
+    require(mode == "overwrite" || mode == "append",
+      s"write.mode must be 'overwrite' or 'append', got: '$mode'")
     if (cfg.write.bucketBy.nonEmpty) return writeBucketed(cfg, outPath)(df)
     val parts = cfg.write.partitionBy
     val partCols = parts.map(col)
@@ -66,33 +70,14 @@ object Loader {
     // requires tasks sorted by partition columns and would insert its
     // own sort (destroying the clustering) if the ordering didn't
     // already satisfy that requirement.
-    // zorderBy (exactly two columns) appends the Morton interleave of
-    // the pair as the trailing sort key — row groups become tight in
-    // BOTH dimensions, so two-sided range predicates skip row groups
-    // that a single-column sort cannot (measured by q162: 9x fewer
-    // rows scanned on the synthetic fact table). Same narrow
-    // sortWithinPartitions — no extra shuffle.
-    val sortKeys: Seq[Column] = {
-      val z = cfg.write.zorderBy match {
-        case Seq(a, b) => Seq(graft.plans.ZOrder16.zorder16(col(a), col(b)))
-        case Nil => Nil
-        case other => sys.error(
-          s"write.zorder_by needs exactly 2 columns, got: $other")
-      }
-      (parts ++ cfg.write.sortWithin).map(col) ++ z
-    }
     val prepared =
-      if (cfg.write.sortWithin.isEmpty && cfg.write.zorderBy.isEmpty)
-        repartitioned
-      else repartitioned.sortWithinPartitions(sortKeys: _*)
+      if (cfg.write.sortWithin.isEmpty) repartitioned
+      else repartitioned.sortWithinPartitions(
+        (parts ++ cfg.write.sortWithin).map(col): _*)
     val writer = prepared.write
       .partitionBy(parts: _*)
       .option("compression", cfg.write.compression)
       .option("parquet.enable.dictionary", "true")
-    val mode = cfg.write.mode match {
-      case "overwrite" => "overwrite"
-      case _ => "append"
-    }
     Session.withConf(df.sparkSession, dynamicOverwrite) {
       writer.mode(mode).parquet(outPath)
     }
@@ -271,9 +256,6 @@ object Loader {
     require(n > 0, s"write.bucket_count must be > 0 with write.bucket_by set")
     require(bucketCols.intersect(parts).isEmpty,
       s"bucket columns $bucketCols must be disjoint from partition columns $parts")
-    require(cfg.write.zorderBy.isEmpty,
-      "write.zorder_by is incompatible with write.bucket_by (bucket sort " +
-        "keys are plain columns); use sort_within for the in-bucket tail")
     val spark = df.sparkSession
     // Single-writer lease around the whole probe→register→write→marker
     // sequence — see [[acquireBucketLease]] for the contract.
@@ -342,7 +324,7 @@ object Loader {
         .mode("overwrite")
         .saveAsTable(name)
       writeBucketSpec(spark, outPath, specNow)
-    } else if (cfg.write.mode != "overwrite") {
+    } else if (cfg.write.mode == "append") {
       prepared.write
         .partitionBy(parts: _*)
         .bucketBy(n, bucketCols.head, bucketCols.tail: _*)
@@ -414,28 +396,6 @@ object Loader {
     val out = fs.create(p, true)
     try out.write(mapper.writerWithDefaultPrettyPrinter.writeValueAsBytes(root))
     finally out.close()
-  }
-
-  /** Small-file compaction: rewrite a partitioned dataset with one file
-    * per partition directory (or a byte-targeted count). Incremental
-    * loads accumulate a file per batch per partition; at 100 TB the
-    * periodic compactor keeps scan task counts bounded. Uses dynamic
-    * partition overwrite so only rewritten partitions change. */
-  def compact(
-      spark: SparkSession,
-      path: String,
-      partitionCols: Seq[String],
-      compression: String = "zstd"): Unit = {
-    val df = spark.read.parquet(path)
-    Session.withConf(spark, dynamicOverwrite) {
-      df.repartition(partitionCols.map(col): _*)
-        .sortWithinPartitions(partitionCols.map(col): _*)
-        .write
-        .partitionBy(partitionCols: _*)
-        .option("compression", compression)
-        .mode("overwrite")
-        .parquet(path)
-    }
   }
 
   /** S11 — read-back with real partition pruning (the reference reads

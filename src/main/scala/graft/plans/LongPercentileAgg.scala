@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * — and serializes as plain (value, count) pairs. Memory is
   * ~16 B x distinct values per group either way; the 100 TB guidance
   * is unchanged (per-group exact percentile buffers the group's
-  * distinct values — swap in percentile_approx past that, same knob
-  * as imputeBattery.exactGlobalMedian).
+  * distinct values — swap in percentile_approx past that, as
+  * imputeBattery's size guard does).
   *
   * Interpolation replicates Percentile.getPercentile exactly:
   * rank = p * (n - 1) over the 0-indexed sorted multiset;

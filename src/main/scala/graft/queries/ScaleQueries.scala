@@ -704,8 +704,7 @@ object ScaleQueries {
     // pure-integer 2*dev2x > 3*mad4x. Two grouped exact percentiles
     // (one event_type shuffle each) with broadcast 5-row merge-backs;
     // at 100 TB per-group exact percentile buffers the group — swap in
-    // percentile_approx exactly like imputeBattery's
-    // exactGlobalMedian knob.
+    // percentile_approx past that, as imputeBattery's size guard does.
     "q178_mad_outliers" -> ((s, dir) => {
       val ev = t(s, dir, "events").select(col("event_type"),
         expr("CAST(CAST(value AS DECIMAL(20,6)) * 1000000 AS BIGINT)")

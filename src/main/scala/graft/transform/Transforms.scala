@@ -36,31 +36,23 @@ object Transforms {
     * Scale note: Spark's exact percentile buffers every value of its
     * group. Per sensor that is bounded by one sensor's history, but the
     * GLOBAL fallback is one group holding the whole table — at 100 TB
-    * that single aggregation buffer is the job's OOM. Two ways off the
-    * exact path, both switching ONLY the global fallback to
-    * `percentile_approx` (mergeable bounded sketch, accuracy 1e-5
-    * relative rank; per-sensor medians stay exact either way):
-    *  - `exactGlobalMedian=false` — explicit opt-out;
-    *  - the `exactGlobalMaxBytes` guardrail — ON BY DEFAULT: when the
-    *    input's plan-estimated size (Catalyst `LogicalPlan.stats`,
-    *    derived from file sizes — no job runs) exceeds the threshold,
-    *    the exact buffer is refused automatically. Parity-checked SFs
-    *    sit far below the default 4 GiB, so the oracle surface stays on
-    *    the exact path without configuration. */
+    * that single aggregation buffer is the job's OOM. The
+    * `exactGlobalMaxBytes` guardrail therefore switches ONLY the global
+    * fallback to `percentile_approx` (mergeable bounded sketch,
+    * accuracy 1e-5 relative rank; per-sensor medians stay exact either
+    * way) when the input's plan-estimated size (Catalyst
+    * `LogicalPlan.stats`, derived from file sizes — no job runs)
+    * exceeds the threshold. Parity-checked SFs sit far below the
+    * default 4 GiB of plan-estimated input, so the oracle surface stays
+    * on the exact path; pass Long.MaxValue to force exactness
+    * regardless of size. */
   def imputeBattery(
       cols: ReadingCols = ReadingCols.sensor,
-      exactGlobalMedian: Boolean = true,
-      exactGlobalMaxBytes: Long =
-        graft.config.TransformConfig.DefaultExactGlobalMedianMaxBytes)(
+      exactGlobalMaxBytes: Long = 4L << 30)(
       df: DataFrame): DataFrame = {
     val bySensor = Window.partitionBy(col(cols.id))
-    // Stats only when the exact path is even a candidate: the lookup is
-    // a driver-side analyze+optimize of the upstream plan, and on the
-    // streaming foreachBatch path it would be paid per micro-batch for
-    // a value the opted-out branch never reads.
-    val exact = exactGlobalMedian &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(exactGlobalMaxBytes)
+    val exact = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(exactGlobalMaxBytes)
     // Exact medians run through the native DoublePercentileAgg —
     // bit-identical to the built-in `percentile` (DoublePercentileSpec
     // pins it on adversarial doubles AND this exact operator), but the
@@ -324,17 +316,12 @@ object Transforms {
     val c = cfg.cols
     df.transform(dedupExact)
       .transform(dropNullCritical(Seq(c.id, c.ts, c.typ, c.value)))
-      .transform(imputeBattery(c, cfg.transformation.exactGlobalMedian,
-        cfg.transformation.exactGlobalMedianMaxBytes))
+      .transform(imputeBattery(c))
       .transform(calibrate(cfg.calibration, c))
       .transform(shiftToLocal(cfg.timezoneOffsetMinutes, c))
       .transform(deriveDate(c))
       .transform(dailyAvg(c))
-      .transform(
-        if (cfg.transformation.rollingBucketSeconds > 0)
-          rollingAvgBucketed(cfg.transformation.rollingWindowRows,
-            cfg.transformation.rollingBucketSeconds, c)
-        else rollingAvg(cfg.transformation.rollingWindowRows, c))
+      .transform(rollingAvg(cfg.transformation.rollingWindowRows, c))
       .transform(anomalyFlag(cfg.transformation.zScoreThreshold, cfg.ranges, c))
       .transform(applyOutlierMode(cfg.transformation.outlierHandling))
   }

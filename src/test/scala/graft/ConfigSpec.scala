@@ -125,7 +125,7 @@ class ConfigSpec extends AnyFunSuite {
         |transformation:
         |  z_score_threshold: 2.5
         |  outlier_handling: remove
-        |  exact_global_median_max_bytes: 1048576
+        |  rolling_window_days: 14
         |ranges:
         |  temperature:
         |    min: 5
@@ -134,10 +134,29 @@ class ConfigSpec extends AnyFunSuite {
     assert(cfg.timezoneOffsetMinutes === -180)
     assert(cfg.transformation.zScoreThreshold === 2.5)
     assert(cfg.transformation.outlierHandling === "remove")
-    assert(cfg.transformation.rollingWindowDays === 7) // untouched
-    assert(cfg.transformation.exactGlobalMedianMaxBytes === 1048576L)
+    assert(cfg.transformation.rollingWindowDays === 14)
+    assert(cfg.transformation.readingsPerDay === 24) // untouched
     assert(cfg.ranges === Map("temperature" -> ValueRange(5.0, 45.0)))
     assert(cfg.write === WriteConfig()) // whole section omitted
     assert(cfg.validation === ValidationConfig())
+  }
+
+  test("a key the write or transformation section does not read fails " +
+    "the load, named") {
+    val f = write(
+      """write:
+        |  mode: overwrite
+        |  zorder_by:
+        |    - value
+        |    - battery_level
+        |""".stripMargin).toString
+    val e = intercept[IllegalArgumentException](PipelineConfig.fromYaml(f))
+    assert(e.getMessage.contains("write.zorder_by"))
+    val t = write(
+      """transformation:
+        |  outlier_handeling: remove
+        |""".stripMargin).toString
+    val te = intercept[IllegalArgumentException](PipelineConfig.fromYaml(t))
+    assert(te.getMessage.contains("transformation.outlier_handeling"))
   }
 }

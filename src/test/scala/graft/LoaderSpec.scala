@@ -75,20 +75,20 @@ class LoaderSpec extends SparkSpec {
     assert(s1 === 99.0)
   }
 
-  test("compact rewrites multi-file partitions into single files, same data") {
-    val out = Files.createTempDirectory("graft-compact").toString + "/out"
-    val cfg = PipelineConfig.default.copy(
-      write = PipelineConfig.default.write.copy(mode = "append"))
-    // three appends -> multiple files per partition
-    (1 to 3).foreach(_ => Loader.write(cfg, out)(transformed()))
-    val before = Loader.storageStats(spark, out)
-    assert(before.totalFiles > before.partitions)
-    val data = spark.read.parquet(out).collect().toSet
-
-    Loader.compact(spark, out, Seq("date", "sensor_id"))
-    val after = Loader.storageStats(spark, out)
-    assert(after.totalFiles === after.partitions) // one file per leaf
-    assert(spark.read.parquet(out).collect().toSet === data)
+  test("write.mode other than overwrite/append fails in both sinks, " +
+    "before anything is written") {
+    val bucketed = PipelineConfig.default.write.copy(
+      partitionBy = Seq("date"), bucketBy = Seq("sensor_id"), bucketCount = 4)
+    for (sink <- Seq(PipelineConfig.default.write, bucketed);
+         bad <- Seq("Overwrite", "appendd", "")) {
+      val out = Files.createTempDirectory("graft-badmode").toString + "/out"
+      val cfg = PipelineConfig.default.copy(write = sink.copy(mode = bad))
+      val e = intercept[IllegalArgumentException] {
+        Loader.write(cfg, out)(transformed())
+      }
+      assert(e.getMessage.contains(s"'$bad'"))
+      assert(!new java.io.File(out).exists())
+    }
   }
 
   test("sortWithin clusters rows inside each output file") {
@@ -114,38 +114,6 @@ class LoaderSpec extends SparkSpec {
     byFile.values.foreach { rs =>
       val ts = rs.map(_.getTimestamp(1).getTime).toSeq
       assert(ts === ts.sorted, "file not internally sorted")
-    }
-  }
-
-  test("zorderBy clusters rows by the Morton interleave inside files") {
-    val out = Files.createTempDirectory("graft-zorder").toString
-    // two interleaved dimensions: value and battery_level, shuffled
-    val rows = (0 until 200).map(i =>
-      ("s1", java.sql.Timestamp.valueOf("2023-06-01 00:00:00"),
-        "temperature", ((i * 37) % 200).toDouble, ((i * 53) % 100).toDouble,
-        java.sql.Date.valueOf("2023-06-01"), 0.0, 0.0, false))
-    val df = rows.toDF("sensor_id", "timestamp", "reading_type", "value",
-      "battery_level", "date", "daily_avg_value", "rolling_avg_value",
-      "anomalous_reading")
-    val cfg = PipelineConfig.default.copy(write =
-      PipelineConfig.default.write.copy(
-        zorderBy = Seq("value", "battery_level")))
-    Loader.write(cfg, out)(df)
-    val byFile = spark.read.parquet(out)
-      .select(input_file_name().as("f"),
-        graft.plans.ZOrder16.zorder16(col("value"), col("battery_level"))
-          .as("z"))
-      .collect().groupBy(_.getString(0))
-    assert(byFile.nonEmpty)
-    byFile.values.foreach { rs =>
-      val zs = rs.map(_.getLong(1)).toSeq
-      assert(zs === zs.sorted, "file not z-ordered internally")
-    }
-    // a malformed config (1 column) must fail loudly, not silently skip
-    val bad = PipelineConfig.default.copy(write =
-      PipelineConfig.default.write.copy(zorderBy = Seq("value")))
-    intercept[RuntimeException] {
-      Loader.write(bad, Files.createTempDirectory("graft-zbad").toString)(df)
     }
   }
 
@@ -207,12 +175,7 @@ class LoaderSpec extends SparkSpec {
     assert(!plan3.contains("Exchange"),
       s"bucket property lost after re-registration:\n$plan3")
 
-    // zorder + buckets is rejected loudly (bucket sort keys are plain
-    // columns), and bucket_by without a count too
-    intercept[IllegalArgumentException] {
-      Loader.write(cfg.copy(write = cfg.write.copy(
-        zorderBy = Seq("value", "battery_level"))), out)(transformed())
-    }
+    // bucket_by without a count is rejected loudly
     intercept[IllegalArgumentException] {
       Loader.write(cfg.copy(write = cfg.write.copy(bucketCount = 0)),
         out)(transformed())

@@ -57,21 +57,6 @@ class TransformsSpec extends SparkSpec {
     assert(out.toSeq === Seq(10.0, 20.0, 15.0, 15.0))
   }
 
-  test("P3 battery imputation: bounded approx global fallback at scale") {
-    val df = readings(
-      ("s1", "2023-06-01 10:00:00", "temperature", 1.0, 10.0),
-      ("s1", "2023-06-01 11:00:00", "temperature", 1.0, 20.0),
-      ("s1", "2023-06-01 12:00:00", "temperature", 1.0, 30.0),
-      ("s2", "2023-06-01 10:00:00", "temperature", 1.0, null))
-    val out = Transforms.imputeBattery(c, exactGlobalMedian = false)(df)
-      .orderBy("sensor_id", "timestamp")
-      .select("battery_level").as[Double].collect()
-    // s2 all-null -> approx global median; with 3 values the sketch is
-    // exact: 20. s1 rows keep their observed values (per-sensor path
-    // stays exact regardless of the global-median mode).
-    assert(out.toSeq === Seq(10.0, 20.0, 30.0, 20.0))
-  }
-
   test("P3 size guardrail: oversized input auto-switches the global fallback to approx") {
     val df = readings(
       ("s1", "2023-06-01 10:00:00", "temperature", 1.0, 10.0),
@@ -81,8 +66,7 @@ class TransformsSpec extends SparkSpec {
     // Any real input's plan-estimated size exceeds 1 byte, so a 1-byte
     // threshold simulates "table bigger than the exact buffer may hold"
     // without materializing a big table.
-    val guarded = Transforms.imputeBattery(c,
-      exactGlobalMedian = true, exactGlobalMaxBytes = 1L)(df)
+    val guarded = Transforms.imputeBattery(c, exactGlobalMaxBytes = 1L)(df)
     val plan = guarded.queryExecution.optimizedPlan.toString
     assert(plan.contains("percentile_approx"))
     val out = guarded.orderBy("sensor_id", "timestamp")
@@ -182,22 +166,6 @@ class TransformsSpec extends SparkSpec {
     assert(q166.queryExecution.executedPlan.toString
       .contains("WindowGroupLimit"),
       "carried tails must be pruned before the carry shuffle")
-  }
-
-  test("W1 pipeline config selects the bucketed rolling executor (same answer)") {
-    val df = readings(
-      ("s1", "2023-06-01 10:00:00", "temperature", 25.5, 95.0),
-      ("s1", "2023-06-01 11:00:00", "temperature", 24.8, 94.0),
-      ("s1", "2023-06-02 10:00:00", "temperature", 26.0, 93.0),
-      ("s2", "2023-06-01 10:00:00", "humidity", 65.2, 88.0))
-    val base = PipelineConfig.default
-    val bucketedCfg = base.copy(transformation =
-      base.transformation.copy(rollingBucketSeconds = 21600L))
-    val a = Transforms.pipeline(base)(df)
-      .orderBy("sensor_id", "timestamp", "reading_type").collect()
-    val b = Transforms.pipeline(bucketedCfg)(df)
-      .orderBy("sensor_id", "timestamp", "reading_type").collect()
-    assert(a.toSeq === b.toSeq)
   }
 
   test("A1 daily average is per (sensor, type, date)") {
