@@ -136,6 +136,35 @@ object Bench {
       case Some(_) => "load-contaminated"
     }
 
+  /** The previous summary at `path` as this run's regression baseline,
+    * or why it cannot be one: a summary from another SF, core count or
+    * forcing basis does not compare like with like (the r9→r10
+    * count()→noop re-basing once flagged every honest median as a
+    * regression). An absent `basis` reads as "noop" (r10's own noop-era
+    * summary predates the tag); an absent `cpus` cannot match. */
+  private[graft] def baseline(path: java.nio.file.Path, sf: String,
+      basis: String, cpus: Int): Either[String, Map[String, Double]] = {
+    import scala.jdk.CollectionConverters._
+    if (!java.nio.file.Files.isRegularFile(path)) Left(s"no $path")
+    else scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(path.toFile)).toOption.filter(_.isObject)
+      .toRight(s"$path does not parse as a JSON object").flatMap { root =>
+      def field(k: String) = root.path(k).asText()
+      if (field("sf") != sf) Left(s"sf ${field("sf")} != $sf")
+      else if (!root.path("basis").isMissingNode && field("basis") != basis)
+        Left(s"basis ${field("basis")} != $basis")
+      else if (!root.path("cpus").isInt) Left("no cpus field")
+      else if (root.path("cpus").asInt != cpus)
+        Left(s"cpus ${root.path("cpus").asInt} != $cpus")
+      else {
+        val q = root.path("queries")
+        Right(q.fieldNames.asScala.collect {
+          case k if q.get(k).isNumber => k -> q.get(k).asDouble
+        }.toMap)
+      }
+    }
+  }
+
   /** JVM JIT compiler bean (None when compile-time monitoring is
     * unsupported). Cumulative ms spent in compiler threads — per-run
     * deltas are recorded in details as runs_jit_ms. */
@@ -345,40 +374,15 @@ object Bench {
 
     def r4(sec: Double): Double = math.rint(sec * 10000) / 10000
 
-    // Previous run's per-query times (the committed bench_summary.json,
-    // read BEFORE this run overwrites it) parsed with a real JSON
-    // reader — the old regex scraper silently yielded an empty baseline
-    // on any format drift, disabling the regression gate. Only compare
-    // like with like: a summary from a different SF (e.g. a local
-    // sf0.001 iteration run) is not a baseline for this run's times,
-    // and neither is a summary from a different FORCING BASIS — the
-    // r9→r10 count()→noop re-basing made every prior median measure
-    // strictly less work, and the gate flagged the honest re-basing as
-    // regressions (r10 verdict item 1). Artifacts now carry `basis`;
-    // an absent field reads as "noop" because the only committed
-    // baseline predating the tag is r10's own noop-era run (count-era
-    // summaries were never committed after the re-basing).
+    // Previous run's per-query times: the committed bench_summary.json,
+    // read BEFORE this run overwrites it.
     val basis = "noop"
-    val prevTimes: Map[String, Double] =
-      try {
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = mapper.readTree(
-          java.nio.file.Paths.get("bench_summary.json").toFile)
-        if (root.path("sf").asText() != sfDir) Map.empty
-        else if (!root.path("basis").isMissingNode &&
-          root.path("basis").asText() != basis) Map.empty
-        else {
-          val q = root.path("queries")
-          val it = q.fieldNames()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) {
-            val k = it.next()
-            val v = q.get(k)
-            if (v.isNumber) b += k -> v.asDouble()
-          }
-          b.result()
-        }
-      } catch { case _: Throwable => Map.empty }
+    val (prevTimes, gate) =
+      baseline(java.nio.file.Paths.get("bench_summary.json"), sfDir, basis, cpus) match {
+        case Right(b) => (b, s"armed (${b.size} queries)")
+        case Left(why) => (Map.empty[String, Double], s"disarmed ($why)")
+      }
+    progress(s"gate: $gate")
     def prevTag(name: String): String =
       prevTimes.get(name).map(p => s""","prev":$p""").getOrElse("")
 
@@ -820,7 +824,7 @@ object Bench {
     val leakJson =
       s"""{"n_nonzero":$leakNonzero,"max_broadcast_blocks":$leakMaxBroadcast,"cache_nonempty":$leakCacheNonEmpty,"persistent_rdds":$leakRdds}"""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","basis":"$basis","queries":$qs,"sf":"$sfDir","pipeline_records":$nRecords,"pipeline_records_per_sec":$recPerSec,"pipeline_stream_records_per_sec":$streamRecPerSec,"errors":$errJson,"prev_total":$prevTotal,"regressions":$regJson,"isolated":$isoJson,"leak_checks":$leakJson,"details":$detJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","basis":"$basis","queries":$qs,"sf":"$sfDir","cpus":$cpus,"gate":"${esc(gate)}","pipeline_records":$nRecords,"pipeline_records_per_sec":$recPerSec,"pipeline_stream_records_per_sec":$streamRecPerSec,"errors":$errJson,"prev_total":$prevTotal,"regressions":$regJson,"isolated":$isoJson,"leak_checks":$leakJson,"details":$detJson}"""
     // stdout line 1: the full summary (progress went to stderr, so this
     // is literally the first stdout line — parse it directly).
     println(fullLine)
@@ -841,7 +845,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val fastN = all.count(_._2 < 0.5)
     val fastSum = r4(all.filter(v => v._2 < 0.5 && v._2 >= 0).map(_._2).sum)
-    println(s"""{"metric":"summary","total_sec":$total,"basis":"$basis","n_queries":${all.size},"sf":"$sfDir","pipeline_records_per_sec":$recPerSec,"pipeline_stream_records_per_sec":$streamRecPerSec,"n_errors":${errors.size},"error_queries":${errors.keys.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")},"slow_queries_sec":$slow,"slow_omitted":${math.max(0, slowAll.size - 15)},"fast_queries":{"n":$fastN,"sum_sec":$fastSum},"n_regressions_vs_prev":${regressions.size},"regressions_vs_prev":$regJson,"isolated":$isoJson,"leak_checks":$leakJson,"full_summary_file":"bench_summary.json"}""")
+    println(s"""{"metric":"summary","total_sec":$total,"basis":"$basis","n_queries":${all.size},"sf":"$sfDir","gate":"${esc(gate)}","pipeline_records_per_sec":$recPerSec,"pipeline_stream_records_per_sec":$streamRecPerSec,"n_errors":${errors.size},"error_queries":${errors.keys.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")},"slow_queries_sec":$slow,"slow_omitted":${math.max(0, slowAll.size - 15)},"fast_queries":{"n":$fastN,"sum_sec":$fastSum},"n_regressions_vs_prev":${regressions.size},"regressions_vs_prev":$regJson,"isolated":$isoJson,"leak_checks":$leakJson,"full_summary_file":"bench_summary.json"}""")
     System.out.flush()
     spark.stop()
     // Exit-status contract (object doc): the artifact above already

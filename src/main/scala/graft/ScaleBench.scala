@@ -107,9 +107,8 @@ object ScaleBench {
       sys.env.getOrElse("SPARK_GRAFT_SCALE_EVENTS_COPIES", "100").toInt
     def replicateEvents(n: Int, dest: String): Unit = {
       val cp = explode(sequence(lit(0), lit(n - 1))).as("cp")
-      // events.ts is TIMESTAMP(NANOS) — read through CoreQueries.t
-      // (nanosAsLong + micros conversion); the replica carries a plain
-      // micros TIMESTAMP, which t() passes through untouched.
+      // CoreQueries.t's reader turns events.ts into TimestampType; the
+      // replica carries that plain micros TIMESTAMP, read back as is.
       queries.CoreQueries.t(spark, base, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value")).select(cp, col("*"))

@@ -4,7 +4,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -12,7 +12,6 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 
 import scala.jdk.CollectionConverters._
 
-import graft.Session
 import graft.model.IngestionStats
 
 /** Schema compatibility lattice (reference ingestion.py:268-292):
@@ -94,41 +93,12 @@ object Checkpoint {
   }
 }
 
-/** Detects TIMESTAMP(NANOS) parquet columns, which Spark's reader
-  * refuses outright (pandas-written raw files — like the reference's
-  * raw parquet inputs — are timestamp[ns]). With
-  * `spark.sql.legacy.parquet.nanosAsLong` they surface as LongType; the
-  * footer's logical-type annotation tells us which longs are really
-  * nanosecond timestamps so we can convert (truncate) them to
-  * microsecond TimestampType on read. */
-object NanosProbe {
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
-  import org.apache.parquet.schema.LogicalTypeAnnotation
-  import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-
-  def nanosCols(spark: SparkSession, path: Path): Set[String] = {
-    val in = HadoopInputFile.fromPath(
-      path, spark.sparkContext.hadoopConfiguration)
-    val reader = ParquetFileReader.open(in)
-    try {
-      reader.getFileMetaData.getSchema.getFields.asScala.collect {
-        case f if f.isPrimitive &&
-          (f.getLogicalTypeAnnotation match {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              t.getUnit == TimeUnit.NANOS
-            case _ => false
-          }) => f.getName
-      }.toSet
-    } finally reader.close()
-  }
-}
-
 /** S1, S3, S5-S7 — schema-validated incremental multi-file Parquet
-  * ingestion (reference ingestion.py:44-108). Per-file footer probe (no
-  * data scan) with error isolation, then ONE multi-path vectorized read
-  * of all accepted files — at 100 TB the footer probes are driver-side
-  * metadata calls while the data read stays fully distributed. */
+  * ingestion (reference ingestion.py:44-108). Per-file footer probe
+  * ([[RawParquet.footer]]) with error isolation, then one multi-path
+  * vectorized read of the accepted files per set of TIMESTAMP(NANOS)
+  * columns — at 100 TB the footer probes are driver-side metadata calls
+  * while the data read stays fully distributed. */
 object ParquetIngestor {
 
   final case class Result(
@@ -176,21 +146,12 @@ object ParquetIngestor {
     val fresh =
       if (incremental) all.filterNot(p => cp.processedFiles(p.getName)) else all
 
-    // S5+S7 — footer-only schema probe with per-file error isolation.
-    // Nanosecond-timestamp columns (pandas default) read as LongType
-    // under nanosAsLong; the footer annotation marks them for conversion.
-    // Probes run on a bounded driver thread pool: each is an independent
-    // footer-metadata read (an HTTP-range fetch on object storage), so at
-    // 100k files the wall-clock is files/poolSize round-trips, not
+    // S5+S7 — footer-only schema probe with per-file error isolation,
+    // on a bounded driver thread pool: each probe is one footer read (an
+    // HTTP-range fetch on object storage) and launches no Spark job, so
+    // at 100k files the wall-clock is files/poolSize round-trips, not
     // files. Futures keep the input order, so results — and therefore
-    // accepted-file order and the multi-path read — stay deterministic.
-    // Set for the duration of the probe + read CONSTRUCTION only, then
-    // restored (like Loader.write restores partitionOverwriteMode): the
-    // LongType mapping for TIMESTAMP(NANOS) columns is captured when
-    // spark.read resolves each schema, so later lazy execution of the
-    // returned DataFrame does not need the flag (verified empirically),
-    // and unrelated reads in the same session keep default behavior.
-    Session.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+    // accepted-file order and the reads — stay deterministic.
     val probed = {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
@@ -198,69 +159,33 @@ object ParquetIngestor {
         math.max(1, math.min(16, fresh.size)))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       try Await.result(
-        Future.sequence(fresh.map { p =>
-          Future {
-            p -> Try {
-              val s = spark.read.parquet(p.toString).schema
-              val ns = NanosProbe.nanosCols(spark, p)
-              val effective = StructType(s.fields.map { f =>
-                if (ns(f.name) && f.dataType == LongType)
-                  f.copy(dataType = TimestampType)
-                else f
-              })
-              (effective, ns)
-            }
-          }
-        }), Duration.Inf)
+        Future.sequence(fresh.map(p =>
+          Future(p -> Try(RawParquet.footer(spark, p))))), Duration.Inf)
       finally pool.shutdown()
     }
     val failed = probed.collect { case (p, Failure(e)) =>
       p.getName -> s"unreadable: ${e.getMessage}"
     }
-    val checked = probed.collect { case (p, Success((s, ns))) =>
-      (p, SchemaCompat.diff(s, expected), ns)
+    val checked = probed.collect { case (p, Success(f)) =>
+      (p, SchemaCompat.diff(f.schema, expected), f.nanos)
     }
     val skipped = checked.collect { case (p, problems, _) if problems.nonEmpty =>
       p.getName -> problems.mkString("; ")
     }
-    val acceptedPlain = checked.collect {
-      case (p, Nil, ns) if ns.isEmpty => p
-    }
-    val acceptedNs = checked.collect {
-      case (p, Nil, ns) if ns.nonEmpty => (p, ns)
-    }
-    val accepted = acceptedPlain ++ acceptedNs.map(_._1)
+    val ok = checked.collect { case (p, Nil, nanos) => (p, nanos) }
+    val accepted = ok.map(_._1)
 
-    // S6 — one multi-path read per file shape (not N reads + union): a
-    // single FileSourceScanExec over all plain files, schema pinned so
-    // FLOAT widens to DOUBLE and timestamp units collapse; ns files get
-    // their nanosecond longs truncated to microsecond timestamps
-    // (matching DuckDB's read behavior) then align by name.
-    def conform(df: DataFrame): DataFrame =
+    // S6 — one multi-path read per set of nanos columns (not N reads +
+    // union): each is a single FileSourceScanExec with the expected
+    // schema pinned, so FLOAT widens to DOUBLE and timestamp units
+    // collapse in every file of the group; the groups align by name.
+    val pinned = StructType(expected.fields.map(_.copy(nullable = true)))
+    val data = ok.map(_._2).distinct.map { nanos =>
+      val df = RawParquet.read(spark, pinned, nanos,
+        ok.collect { case (p, `nanos`) => p.toString }: _*)
       df.select(expected.fields.map(f =>
         col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-
-    val plainDf =
-      if (acceptedPlain.isEmpty) None
-      else Some(conform(
-        spark.read.schema(
-          StructType(expected.fields.map(_.copy(nullable = true))))
-          .parquet(acceptedPlain.map(_.toString): _*)))
-
-    val nsDf =
-      if (acceptedNs.isEmpty) None
-      else {
-        val nsCols = acceptedNs.flatMap(_._2).toSet
-        val raw = spark.read.parquet(acceptedNs.map(_._1.toString): _*)
-        val converted = nsCols.foldLeft(raw)((d, c) =>
-          d.withColumn(c, timestamp_micros(expr(s"`$c` div 1000"))))
-        Some(conform(converted))
-      }
-
-    val data = (plainDf, nsDf) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
+    }.reduceOption(_ unionByName _)
 
     // S4 — checkpoint update, DEFERRED to Result.commit: the reference
     // saves only in incremental mode and only after the (eager) read
@@ -292,6 +217,5 @@ object ParquetIngestor {
         filesSkipped = skipped.size,
         filesFailed = failed.size),
       save)
-    }
   }
 }

@@ -3,10 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 import graft.config.{Calibration, ReadingCols, ValueRange}
 import graft.functions.exact
+import graft.ingest.RawParquet
 import graft.transform.Transforms
 import graft.validate.Validation
 
@@ -39,28 +40,17 @@ object CoreQueries {
 
   private val ec = ReadingCols.events
 
-  /** Table loader, normalizing timestamp physical types at the boundary.
-    * The synthetic data has shipped as parquet TIMESTAMP(NANOS) — which
-    * Spark's vectorized reader refuses, so it's read as nanosecond longs
-    * and truncated to microseconds — and as TIMESTAMP(MICROS) tz-naive,
-    * which Spark 4 surfaces as TIMESTAMP_NTZ. Both are normalized to
-    * TimestampType here: under the engine-wide pinned UTC session the
-    * NTZ→TIMESTAMP cast maps the wall-clock to the same instant DuckDB
-    * sees reading the same file, so every downstream `unix_micros` /
-    * window / date function works and oracle comparisons stay exact.
-    * Normalizing once at the read keeps 180+ query call sites free of
-    * per-site type dispatch (and immune to the next data regeneration). */
-  def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df0 = s.read.parquet(s"$dir/$name.parquet")
-    val df =
-      if (name == "events" && df0.schema("ts").dataType == LongType)
-        df0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else df0
-    df.schema.fields.collect {
-      case f if f.dataType == TimestampNTZType => f.name
-    }.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast(TimestampType)))
-  }
+  /** Table loader: `$dir/$name.parquet` (a file, or a directory of part
+    * files) through the one raw-parquet reader, [[RawParquet]]. The
+    * synthetic data has shipped its timestamps as TIMESTAMP(NANOS) and
+    * as tz-naive TIMESTAMP(MICROS); both arrive as TimestampType, the
+    * instants DuckDB sees reading the same file, so every downstream
+    * `unix_micros` / window / date function works and oracle
+    * comparisons stay exact. Normalizing once at the read keeps 180+
+    * query call sites free of per-site type dispatch (and immune to the
+    * next data regeneration). */
+  def t(s: SparkSession, dir: String, name: String): DataFrame =
+    RawParquet.table(s, s"$dir/$name.parquet")
 
   /** Decouple per-row compute parallelism from source layout. A corpus
     * that lands as a few large row groups scans as a few tasks — and a

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Session
+import graft.ingest.RawParquet
 
 /** Structured Streaming surface. The reference is batch-only (its
   * "incremental" is file-name checkpointing, SURVEY §2.7); this module
@@ -19,12 +20,10 @@ object Streaming {
 
   /** Events schema as the stream source sees it, with `ts` declared as
     * whatever the parquet footers actually hold — the data has shipped
-    * both as TIMESTAMP(NANOS) (surfaces as LongType nanos under
-    * nanosAsLong; converted after read) and TIMESTAMP(MICROS) tz-naive
-    * (surfaces as TIMESTAMP_NTZ in Spark 4; cast to TimestampType under
-    * the pinned UTC session). A FileStreamSource needs the schema up
-    * front, so the type is probed with one driver-side batch read of
-    * the same directory (footer metadata only — no data scan). */
+    * both as TIMESTAMP(NANOS) and TIMESTAMP(MICROS) tz-naive. A
+    * FileStreamSource needs the schema up front, so the type comes from
+    * one driver-side footer read ([[RawParquet.footer]]), and the same
+    * reader's pin/normalize steps turn it into a TimestampType. */
   private def eventsRawSchema(tsType: DataType) = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", tsType),
@@ -33,20 +32,26 @@ object Streaming {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Per-path cache of the resolved (source dir, ts physical type).
-    * The footer probe and the scratch symlink dir are driver-side FIXED
-    * costs paid per eventsStream call — they never amortize over batch
+  /** A resolved stream source: the directory the stream reads, its
+    * declared schema, that schema's TIMESTAMP(NANOS) columns, and its
+    * byte size. */
+  private final case class Source(
+      dir: String, schema: StructType, nanos: Set[String], bytes: Long)
+
+  /** Per-path cache of the resolved [[Source]].
+    * The footer read and the scratch symlink dir are driver-side FIXED
+    * costs paid per stream call — they never amortize over batch
     * size, so on a harness running dozens of streaming queries over the
     * same path they dominate measured latency (r9: q141's 2x driver-run
     * medians tracked exactly this setup, not micro-batch throughput).
-    * One probe per path per JVM; the scratch dir is reused until exit.
-    * Known limit of the per-JVM cache: rewriting a probed path IN PLACE
-    * with a different ts physical encoding is not picked up (the stale
-    * type would mis-convert event times). Testdata paths are immutable
-    * within a round; anything that rewrites encodings mid-JVM must use
-    * a fresh path or a fresh session. */
+    * One footer read per path per JVM; the scratch dir is reused until
+    * exit. Known limit of the per-JVM cache: rewriting a read path IN
+    * PLACE with a different ts physical encoding is not picked up (the
+    * stale type would mis-convert event times). Testdata paths are
+    * immutable within a round; anything that rewrites encodings mid-JVM
+    * must use a fresh path or a fresh session. */
   private val sourceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataType, Long)]()
+    new java.util.concurrent.ConcurrentHashMap[String, Source]()
 
   /** Total source bytes of the streams built since the last
     * runToCompletion (max across sources — a join's two legs read the
@@ -77,22 +82,14 @@ object Streaming {
     * can report setup separately from micro-batch execution. */
   private val pendingSetupNs = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Streaming DataFrame over an events path (directory, or a single
-    * parquet file — FileStreamSource requires a directory, so a file
-    * path gets symlinked into a scratch dir) with proper event-time
-    * column and a watermark. */
-  def eventsStream(
-      spark: SparkSession,
-      path: String,
-      watermark: String = "2 hours"): DataFrame = {
-    val t0 = System.nanoTime()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (dir, tsType, srcBytes) = sourceCache.computeIfAbsent(path, { p =>
-      // A ".parquet" path can be a single FILE (testdata ships tables
-      // that way; FileStreamSource needs a directory, so symlink it
-      // into a scratch dir) or a DIRECTORY of part files (any
-      // Spark-written table, e.g. the scale replicas) — dispatch on
-      // what is actually on disk, not on the suffix.
+  /** Resolve `path` once per JVM. A ".parquet" path can be a single
+    * FILE (testdata ships tables that way; FileStreamSource needs a
+    * directory, so symlink it into a scratch dir) or a DIRECTORY of part
+    * files (any Spark-written table, e.g. the scale replicas) — dispatch
+    * on what is actually on disk, not on the suffix. */
+  private def source(path: String)(
+      schemaOf: String => (StructType, Set[String])): Source =
+    sourceCache.computeIfAbsent(path, { p =>
       val d =
         if (p.endsWith(".parquet") &&
             !Files.isDirectory(java.nio.file.Paths.get(p))) {
@@ -101,20 +98,32 @@ object Streaming {
             sd.resolve("part-0.parquet"), java.nio.file.Paths.get(p))
           sd.toString
         } else p
-      (d, spark.read.parquet(d).schema("ts").dataType, dirBytes(d))
+      val (schema, nanos) = schemaOf(d)
+      Source(d, schema, nanos, dirBytes(d))
     })
-    pendingSourceBytes.updateAndGet(b => math.max(b, srcBytes))
-    val raw = spark.readStream
-      .schema(eventsRawSchema(tsType))
-      .parquet(dir)
-    val withTs = tsType match {
-      case LongType => // legacy TIMESTAMP(NANOS) read as nanos-longs
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => // TIMESTAMP or TIMESTAMP_NTZ: same instant under UTC
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
+
+  private def stream(spark: SparkSession, src: Source, t0: Long): DataFrame = {
+    pendingSourceBytes.updateAndGet(b => math.max(b, src.bytes))
+    val df = RawParquet.normalize(spark.readStream
+      .schema(RawParquet.pin(src.schema, src.nanos))
+      .parquet(src.dir), src.nanos)
     pendingSetupNs.addAndGet(System.nanoTime() - t0)
-    withTs.withWatermark("ts", watermark)
+    df
+  }
+
+  /** Streaming DataFrame over an events path (directory, or a single
+    * parquet file) with a TimestampType event-time column and a
+    * watermark. */
+  def eventsStream(
+      spark: SparkSession,
+      path: String,
+      watermark: String = "2 hours"): DataFrame = {
+    val t0 = System.nanoTime()
+    val src = source(path) { d =>
+      val f = RawParquet.footer(spark, new org.apache.hadoop.fs.Path(d))
+      (eventsRawSchema(f.schema("ts").dataType), f.nanos.intersect(Set("ts")))
+    }
+    stream(spark, src, t0).withWatermark("ts", watermark)
   }
 
   /** Documents schema for the streaming quality-scoring feed. */
@@ -126,26 +135,12 @@ object Streaming {
     StructField("n_chars", LongType)))
 
   /** Streaming DataFrame over a documents path (directory or single
-    * parquet file — same symlink dispatch as [[eventsStream]]). No
-    * event-time column and no watermark: the scoring consumers are
-    * STATELESS projections, so nothing needs time-based eviction. */
+    * parquet file — same dispatch as [[eventsStream]]). No event-time
+    * column and no watermark: the scoring consumers are STATELESS
+    * projections, so nothing needs time-based eviction. */
   def docsStream(spark: SparkSession, path: String): DataFrame = {
     val t0 = System.nanoTime()
-    val (dir, _, srcBytes) = sourceCache.computeIfAbsent(path, { p =>
-      val d =
-        if (p.endsWith(".parquet") &&
-            !Files.isDirectory(java.nio.file.Paths.get(p))) {
-          val sd = scratchDir("graft-stream-src")
-          Files.createSymbolicLink(
-            sd.resolve("part-0.parquet"), java.nio.file.Paths.get(p))
-          sd.toString
-        } else p
-      (d, StringType, dirBytes(d))
-    })
-    pendingSourceBytes.updateAndGet(b => math.max(b, srcBytes))
-    val df = spark.readStream.schema(docsSchema).parquet(dir)
-    pendingSetupNs.addAndGet(System.nanoTime() - t0)
-    df
+    stream(spark, source(path)(_ => (docsSchema, Set.empty)), t0)
   }
 
   /** STREAMING-side classifier inference — semantically identical to

@@ -69,4 +69,38 @@ class BenchParseSpec extends AnyFunSuite {
     assert(Bench.isolationVerdict("", 32) === "unknown")
     assert(Bench.isolationVerdict("1.5", 4) === "load-contaminated")
   }
+
+  private def summaryFile(body: String): java.nio.file.Path = {
+    val f = java.nio.file.Files.createTempFile("bench_summary", ".json")
+    java.nio.file.Files.writeString(f, body)
+    f
+  }
+  private def prev(sf: String = "/sf", basis: String = "\"basis\":\"noop\",",
+      cpus: String = "\"cpus\":4,") = summaryFile(
+    s"""{"metric":"total",$basis$cpus"sf":"$sf","queries":{"q1":1.5,"q2":0.07}}""")
+
+  test("baseline: a summary taken like this run arms the gate") {
+    assert(Bench.baseline(prev(), "/sf", "noop", 4) ===
+      Right(Map("q1" -> 1.5, "q2" -> 0.07)))
+    // an absent basis reads as noop
+    assert(Bench.baseline(prev(basis = ""), "/sf", "noop", 4).isRight)
+  }
+
+  test("baseline: sf, basis and cpus mismatches disarm it with a reason") {
+    assert(Bench.baseline(prev(sf = "/other"), "/sf", "noop", 4) ===
+      Left("sf /other != /sf"))
+    assert(Bench.baseline(prev(basis = "\"basis\":\"count\","), "/sf", "noop", 4) ===
+      Left("basis count != noop"))
+    assert(Bench.baseline(prev(), "/sf", "noop", 8) === Left("cpus 4 != 8"))
+    assert(Bench.baseline(prev(cpus = ""), "/sf", "noop", 4) ===
+      Left("no cpus field"))
+  }
+
+  test("baseline: a missing or unparseable file disarms it with a reason") {
+    val missing = java.nio.file.Paths.get("/nonexistent/bench_summary.json")
+    assert(Bench.baseline(missing, "/sf", "noop", 4) === Left(s"no $missing"))
+    val junk = summaryFile("{not json")
+    assert(Bench.baseline(junk, "/sf", "noop", 4) ===
+      Left(s"$junk does not parse as a JSON object"))
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.sql.types._
 
 import graft.ingest.{Checkpoint, ParquetIngestor, SchemaCompat}
@@ -86,6 +87,61 @@ class IngestionSpec extends SparkSpec {
     assert(res.failed.map(_._1) === Seq("2023-06-04.parquet"))
     assert(res.data.get.count() === 10)
     assert(res.data.get.schema.fieldNames.toSeq === Schemas.raw.fieldNames.toSeq)
+  }
+
+  test("ingest launches no Spark job: every probe is a driver-side footer read") {
+    val dir = tmpDir()
+    addFile(dir, "2023-06-01.parquet")
+    addFile(dir, "2023-06-02.parquet")
+    Seq(("s1", "x")).toDF("sensor_id", "value")
+      .coalesce(1).write.parquet(s"$dir/stage_2023-06-03.parquet")
+    promote(dir, "2023-06-03.parquet")
+    Files.writeString(java.nio.file.Paths.get(s"$dir/2023-06-04.parquet"), "garbage")
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val res =
+      try {
+        val r = ParquetIngestor.ingest(spark, dir, Schemas.raw)
+        ListenerDrain(spark.sparkContext)
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0)
+    assert(res.accepted === Seq("2023-06-01.parquet", "2023-06-02.parquet"))
+    assert(res.skipped === Seq("2023-06-03.parquet"))
+    assert(res.failed.map(_._1) === Seq("2023-06-04.parquet"))
+  }
+
+  test("ingest: TIMESTAMP(NANOS) files mixing FLOAT and DOUBLE value read " +
+    "as one batch, truncated to microseconds") {
+    import NanosParquet._
+    val dir = tmpDir()
+    // 2023-06-01T00:00:00.123456789Z in nanoseconds
+    val ns = 1685577600L * 1000000000L + 123456789L
+    def cols(value: org.apache.parquet.schema.PrimitiveType) = Seq(
+      string("sensor_id"), nanos("timestamp"), string("reading_type"),
+      value, double("battery_level"))
+    NanosParquet.write(s"$dir/2023-06-01.parquet", cols(float("value")),
+      Seq(Seq("s1", ns, "temperature", 21.5f, 90.0)))
+    NanosParquet.write(s"$dir/2023-06-02.parquet", cols(double("value")),
+      Seq(Seq("s2", ns + 86400L * 1000000000L, "humidity", 55.25, 80.0)))
+
+    val res = ParquetIngestor.ingest(spark, dir, Schemas.raw)
+    assert(res.accepted === Seq("2023-06-01.parquet", "2023-06-02.parquet"))
+    val df = res.data.get
+    assert(df.schema("timestamp").dataType === TimestampType)
+    assert(df.schema("value").dataType === DoubleType)
+    val rows = df.orderBy("sensor_id")
+      .selectExpr("sensor_id", "unix_micros(timestamp)", "value").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    val us = 1685577600L * 1000000L + 123456L
+    assert(rows === Seq(("s1", us, 21.5), ("s2", us + 86400L * 1000000L, 55.25)))
   }
 
   test("ingest: incremental mode skips files only after commit()") {

@@ -305,19 +305,19 @@ class MultimodalStreamingSpec extends SparkSpec {
     // Sentinel event far in the future: pushes the watermark past every
     // real hourly window so append mode finalizes and emits all of
     // them. Its own (still-open) window is never emitted. The sentinel
-    // file must carry the SAME parquet ts type as the real events file
-    // (the stream source reads both under one schema), so match the
-    // probed type: raw nanos-longs for legacy data, timestamp otherwise.
+    // file must carry a ts the stream source reads under the real events
+    // file's schema, so match that file's footer: nanosecond INT64 for
+    // TIMESTAMP(NANOS) data (the stream pins ts to LongType), the same
+    // timestamp type otherwise.
     val sentinelUs = 1893456000L * 1000000L // 2030-01-01 in micros
     val sentDir = Files.createTempDirectory("graft-fsent")
-    val eventsTsType = spark.read
-      .parquet("/root/testdata/sf0.001/events.parquet").schema("ts").dataType
+    val events = graft.ingest.RawParquet.footer(spark,
+      new org.apache.hadoop.fs.Path(src.toString)) // part-0: the events file
     Seq((999999L, sentinelUs, 0L, "__sentinel__", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .withColumn("ts", eventsTsType match {
-        case org.apache.spark.sql.types.LongType => $"ts" * 1000L
-        case t => timestamp_micros($"ts").cast(t)
-      })
+      .withColumn("ts",
+        if (events.nanos("ts")) $"ts" * 1000L
+        else timestamp_micros($"ts").cast(events.schema("ts").dataType))
       .coalesce(1).write.mode("overwrite").parquet(sentDir.toString)
     locally {
       import scala.jdk.CollectionConverters._

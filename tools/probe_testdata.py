@@ -11,10 +11,10 @@ drift is visible BEFORE any engine run burns a round on it.
 Usage:  python3 tools/probe_testdata.py [/root/testdata/sf0.01]
 
 Exit code 1 if any KNOWN-ASSUMPTION column deviates from the types the
-engine's readers normalize (see graft.queries.CoreQueries.t and
-graft.streaming.Streaming.eventsStream):
-  - timestamp columns must be INT64 TIMESTAMP (any unit, any tz-ness)
-    or plain INT64 (the legacy nanos-as-long surface)
+engine's one raw-parquet reader (graft.ingest.RawParquet, behind
+CoreQueries.t and Streaming.eventsStream) turns into timestamps:
+  - timestamp columns must be INT64 TIMESTAMP (any unit, any tz-ness);
+    a plain INT64 stays a long and is flagged
   - embeddings.embedding must be list<float>
 """
 import sys
@@ -50,10 +50,10 @@ def main() -> int:
         print(f"{t}: {cols}")
         for c in TS_COLS.get(t, []):
             typ = str(schema.field(c).type)
-            ok = typ.startswith("timestamp[") or typ == "int64"
-            if not ok:
+            if not typ.startswith("timestamp["):
                 print(f"  !! {t}.{c} has unexpected physical type {typ} — "
-                      "check CoreQueries.t / Streaming.eventsStream handle it")
+                      "graft.ingest.RawParquet reads only parquet "
+                      "TIMESTAMP columns as timestamps")
                 rc = 1
         if t == "embeddings":
             typ = str(schema.field("embedding").type)
