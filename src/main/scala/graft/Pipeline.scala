@@ -13,10 +13,11 @@ import graft.validate.Validation
 /** End-to-end orchestrator (reference src/main.py:61-130): ingest ->
   * transform -> validate -> load. Where the reference fully materializes
   * six pandas copies, this composes ONE lazy Catalyst plan with exactly
-  * three action groups: validation metric collection, the report write,
-  * and the partitioned data write — with the transformed frame persisted
-  * because validation (two actions: a per-(sensor, type) aggregate and
-  * the gap pass) and loading both consume it.
+  * two action groups: validation metric collection and the partitioned
+  * data write (the report is written on the driver) — with the
+  * transformed frame persisted because validation (two actions: a
+  * per-(sensor, type) aggregate and the gap pass) and loading both
+  * consume it.
   */
 object Pipeline {
 

@@ -633,8 +633,8 @@ object ScaleBench {
       // spill before the rewrite; zero after, te 1.06 → 0.91 at
       // x1000), min≠max df test for minDf=2, shuffle_hash dup probe,
       // run-merge window per DOCUMENT only. fastHash (xxhash64 LONG
-      // keys) is the scale configuration — the md5-string default
-      // measured 2.8 GB of 32-char-key shuffle at 50M windows. Runs at
+      // keys) is the scale configuration — the md5 default carries a
+      // 16-byte (h1, h2) struct key per window. Runs at
       // the x100 cap for the ppjoin reason: the shape is measured
       // linear and x1000 only adds ~15 suite-minutes of the same
       // signal (the one-off x1000 point is recorded in SCALE.md).
@@ -882,8 +882,8 @@ object ScaleBench {
     // grows, paying more tables for candidates that stay output-sized";
     // this measures the movement instead of arguing it — the SAME
     // signature pass and join keys as simhashDupBlocked, counting in
-    // place of verification, for the default 30-bit key (b=6) vs the
-    // widened ~37-bit key (b=8) the simhash_deep shape runs. Skipped
+    // place of verification, for the default 30-bit key (b=6) the
+    // simhash_deep shape runs vs the widened ~37-bit key (b=8). Skipped
     // under a shape filter unless named (never in the artifact of
     // record from a partial run).
     val knobFrag =
@@ -902,34 +902,9 @@ object ScaleBench {
         }
         s""","simhash_knob":{"corpus":"doc_x$docsCopies","max_hamming":3,"points":[${pts.mkString(",")}]}"""
       }
-    // ---- PPJoin positional-filter probe: candidate volume with the
-    // positional filter off vs on at the deep documents corpus. Wall
-    // A/B at the deep points is GC-weather-noisy (r15: three same-code
-    // draws spread 42.6-134.4 s); candidate counts are exact and
-    // deterministic — the adjudicator for what the filter buys (r15
-    // x100: raw 20.4M -> 7.26M, 2.81x). Same tokenize/prefix/join code
-    // as prefixFilterPairs (shared ppjoinCandidates). Skipped unless
-    // named in the shape filter, like simhash_knob.
-    val ppjoinKnobFrag =
-      if (!shapeFilter.forall(_.contains("ppjoin_knob"))) ""
-      else {
-        val pts = Seq(false, true).map { positional =>
-          val t0 = System.nanoTime()
-          val r = Dedup.prefixFilterCandidateProfile(
-            docsD(dirDN), "doc_id", "text",
-            thresholdBp = 6000, shingle = 3, positional = positional)
-            .head()
-          val sec = r4((System.nanoTime() - t0) / 1e9)
-          try Session.release(spark) catch { case _: Throwable => () }
-          val j = s"""{"positional":$positional,"n_docs":${r.getAs[Long]("n_docs")},"raw_candidates":${r.getAs[Long]("raw_candidates")},"distinct_pairs":${r.getAs[Long]("distinct_pairs")},"sec":$sec}"""
-          System.err.println(s"""{"ppjoin_knob":$j}""")
-          j
-        }
-        s""","ppjoin_knob":{"corpus":"doc_x$docsCopies","threshold_bp":6000,"shingle":3,"points":[${pts.mkString(",")}]}"""
-      }
     // ---- LSH banding probe: minhashLsh's candidate volume and largest
     // band bucket at x1 vs the deep corpus — the same honesty contract
-    // the simhash/ppjoin knobs established (exact counts from the
+    // the simhash knob established (exact counts from the
     // operator's own banding keys, counting in place of verification).
     // raw_candidates growing faster than docs = band buckets going
     // quadratic (collapse exact dups first / re-band); max_bucket is
@@ -951,92 +926,6 @@ object ScaleBench {
             j
         }
         s""","lsh_knob":{"k":16,"bands":4,"shingle_n":3,"points":[${pts.mkString(",")}]}"""
-      }
-    // ---- DSIR exchange-reuse probe: the raw corpus is tokenized +
-    // bucket-hashed TWICE in the default importanceWeights plan (count
-    // pass + scoring pass — PLANS.md documented the trade as "stay
-    // lazy"); reuseBucketExchange compacts it once into a shared
-    // (id, bucket, f) aggregate both passes consume (ReuseExchange).
-    // This measures the trade at the deep corpus for BOTH hash paths:
-    // the hypothesis is that reuse pays on md5 (a 32-char-string hash
-    // per token deleted) and may lose on fastHash (xxhash64 re-hashing
-    // is cheaper than shuffling the compacted pairs). Two draws per
-    // configuration, min + the min draw's executor metrics (the
-    // shuffle_write delta IS the trade). Skipped unless named, like
-    // the other knobs.
-    val dsirKnobFrag =
-      if (!shapeFilter.forall(_.contains("dsir_knob"))) ""
-      else {
-        val pts = for {
-          fast <- Seq(false, true)
-          reuse <- Seq(false, true)
-        } yield {
-          def run() = onceMeasure(dir =>
-            graft.operators.Curation.importanceTopK(
-              graft.operators.Curation.importanceWeights(docsD(dir),
-                docsD(dir).filter(col("doc_id") % 19 === 0),
-                "doc_id", "text", nBuckets = 1024, seed = 7,
-                fastHash = fast, reuseBucketExchange = reuse),
-              "doc_id", 50), dirDN)
-          val draws = Seq(run(), run())
-          val (sec, met, _) = draws.minBy(_._1)
-          val j = s"""{"fast_hash":$fast,"reuse":$reuse,"runs":[${draws.map(_._1).mkString(",")}],"min":$sec,"metrics":$met}"""
-          System.err.println(s"""{"dsir_knob":$j}""")
-          j
-        }
-        s""","dsir_knob":{"corpus":"doc_x$docsCopies","n_buckets":1024,"points":[${pts.mkString(",")}]}"""
-      }
-    // ---- DSIR long-doc knob (r18): the r17 dsir_knob measured
-    // exchange-reuse as a NET LOSS on ~100-token docs (compaction
-    // factor F/D ~ 1: the shared (id, bucket, f) exchange shuffles as
-    // many pairs as there were features, for no saved work). The
-    // documented inversion condition is doclen >> nBuckets — this
-    // probe measures THAT side: 50 base docs concatenate to ~5000
-    // tokens against 256 buckets (F/D ~ 19 predicted), and
-    // dsirCompactionProfile's measured factor is recorded NEXT TO the
-    // A/B so the profile's decision rule ("enable reuse when
-    // compaction_x1000 >> 2000") is validated against the outcome it
-    // predicts, on both hash paths. Skipped unless named.
-    val dsirLongKnobFrag =
-      if (!shapeFilter.forall(_.contains("dsir_longdoc_knob"))) ""
-      else {
-        val dirLong = s"$work/doc_long"
-        build(dirLong, Seq("documents"), ppjoinCopies) {
-          docsD(dirDP)
-            .groupBy(expr("doc_id div 50").as("gid"))
-            .agg(concat_ws(" ", expr(
-              "transform(array_sort(collect_list(struct(doc_id, text)))," +
-                " s -> s.text)")).as("text"))
-            .select(col("gid").as("doc_id"), col("text"))
-            .repartition(cpus)
-            .write.mode("overwrite").parquet(s"$dirLong/documents.parquet")
-        }
-        val docsL = docsD(dirLong)
-        val pr = graft.operators.Curation.dsirCompactionProfile(
-          docsL, "doc_id", "text", nBuckets = 256, seed = 7,
-          fastHash = true).head()
-        val profJson =
-          s"""{"n_docs":${pr.getAs[Long]("n_docs")},"n_features":${pr.getAs[Long]("n_features")},"distinct_pairs":${pr.getAs[Long]("distinct_pairs")},"compaction_x1000":${pr.getAs[Long]("compaction_x1000")}}"""
-        System.err.println(s"""{"dsir_longdoc_profile":$profJson}""")
-        try Session.release(spark) catch { case _: Throwable => () }
-        val pts = for {
-          fast <- Seq(false, true)
-          reuse <- Seq(false, true)
-        } yield {
-          def run() = onceMeasure(dir =>
-            graft.operators.Curation.importanceTopK(
-              graft.operators.Curation.importanceWeights(docsD(dir),
-                docsD(dir).filter(col("doc_id") % 19 === 0),
-                "doc_id", "text", nBuckets = 256, seed = 7,
-                fastHash = fast, reuseBucketExchange = reuse),
-              "doc_id", 50), dirLong)
-          val draws = Seq(run(), run())
-          val (sec, met, _) = draws.minBy(_._1)
-          val j = s"""{"fast_hash":$fast,"reuse":$reuse,"runs":[${draws.map(_._1).mkString(",")}],"min":$sec,"metrics":$met}"""
-          System.err.println(s"""{"dsir_longdoc_knob":$j}""")
-          j
-        }
-        s""","dsir_longdoc_knob":{"corpus":"doc_x$ppjoinCopies div 50","n_buckets":256,"profile":$profJson,"points":[${pts.mkString(",")}]}"""
       }
     // ---- containment co-mass guard: measure the word-level (shingle=1)
     // degenerate regime against the shingled form at both scales with
@@ -1247,7 +1136,7 @@ object ScaleBench {
       }
     }
     val out =
-      s"""{"metric":"scale_bench","sf":"$base","copies":$copies,"events_copies":$eventsCopies,"emb_copies":$embCopies,"docs_copies":$docsCopies,"cpus":$cpus,"heap_gb":$heapGb,"shapes":{${entries.mkString(",")}}$knobFrag$ppjoinKnobFrag$lshKnobFrag$dsirKnobFrag$dsirLongKnobFrag$containKnobFrag,"note":"disjoint replication: work scales ~linearly with copies by construction; 3 samples per scale point taken in INTERLEAVED rounds (shape order stride-permuted per round — distinct coprime stride each round, so every shape gets a DIFFERENT predecessor per sample and one heavy neighbor cannot inflate all of a shape's samples identically), each sample preceded by a DISCARDED x1 warmup execution of the same shape (the interleaving runs other shapes between samples, whose traffic deopts the shared generated iterators — the warmup re-heats the shape's code path so samples catch the steady state, not a JIT slow mode), min AND median recorded, ratio/exponent computed on MEDIANS (exponent=ln(medN/med1)/ln(N), ~1.0 = runtime tracks work, no superlinear cliff); task_exponent is the same exponent over SUMMED task time — the work-growth signal that stays meaningful once a shape saturates all local cores (wall must then grow ~linearly with work on fixed hardware; ~1.0 = N x data costs N x CPU, the property that transfers to a 1000-executor cluster; >1.1 = a genuine algorithmic wall); since r18 task_exponent is computed between the two LARGEST points (mid = n/10 -> hi, see task_exponent_basis) on MEDIAN summed task CPU time (task_cpu_ms — per-task run time counts stall time, which OS timesharing and GC inflate 2x with weather; CPU cycles repeat across same-code artifacts) — the pre-r18 x1->hi basis divided by a 1-2 s x1 wall that swings 2x with shared-box weather and made same-code artifacts disagree (ppjoin te 0.99-1.11 across five identical-code runs); the legacy value stays as task_exponent_x1 and every point carries runs_task_ms/runs_cpu_ms arrays so the exponent is recomputable (or re-basable) from the artifact alone; streaming shapes also carry stream_exponent over micro-batch execution only, from the min runs' metrics (setup_sec is fixed driver-side cost, recorded separately); mid_regime (r19) tags whether the mid point left the fixed-cost regime (med(mid work) >= 0.3 * m * med(x1 work)) — an 'overhead' tag means mid->hi is the marginal exponent taken at fixed-cost exit and reads high even for linear shapes, so read task_exponent next to task_exponent_x1 there"}"""
+      s"""{"metric":"scale_bench","sf":"$base","copies":$copies,"events_copies":$eventsCopies,"emb_copies":$embCopies,"docs_copies":$docsCopies,"cpus":$cpus,"heap_gb":$heapGb,"shapes":{${entries.mkString(",")}}$knobFrag$lshKnobFrag$containKnobFrag,"note":"disjoint replication: work scales ~linearly with copies by construction; 3 samples per scale point taken in INTERLEAVED rounds (shape order stride-permuted per round — distinct coprime stride each round, so every shape gets a DIFFERENT predecessor per sample and one heavy neighbor cannot inflate all of a shape's samples identically), each sample preceded by a DISCARDED x1 warmup execution of the same shape (the interleaving runs other shapes between samples, whose traffic deopts the shared generated iterators — the warmup re-heats the shape's code path so samples catch the steady state, not a JIT slow mode), min AND median recorded, ratio/exponent computed on MEDIANS (exponent=ln(medN/med1)/ln(N), ~1.0 = runtime tracks work, no superlinear cliff); task_exponent is the same exponent over SUMMED task time — the work-growth signal that stays meaningful once a shape saturates all local cores (wall must then grow ~linearly with work on fixed hardware; ~1.0 = N x data costs N x CPU, the property that transfers to a 1000-executor cluster; >1.1 = a genuine algorithmic wall); since r18 task_exponent is computed between the two LARGEST points (mid = n/10 -> hi, see task_exponent_basis) on MEDIAN summed task CPU time (task_cpu_ms — per-task run time counts stall time, which OS timesharing and GC inflate 2x with weather; CPU cycles repeat across same-code artifacts) — the pre-r18 x1->hi basis divided by a 1-2 s x1 wall that swings 2x with shared-box weather and made same-code artifacts disagree (ppjoin te 0.99-1.11 across five identical-code runs); the legacy value stays as task_exponent_x1 and every point carries runs_task_ms/runs_cpu_ms arrays so the exponent is recomputable (or re-basable) from the artifact alone; streaming shapes also carry stream_exponent over micro-batch execution only, from the min runs' metrics (setup_sec is fixed driver-side cost, recorded separately); mid_regime (r19) tags whether the mid point left the fixed-cost regime (med(mid work) >= 0.3 * m * med(x1 work)) — an 'overhead' tag means mid->hi is the marginal exponent taken at fixed-cost exit and reads high even for linear shapes, so read task_exponent next to task_exponent_x1 there"}"""
     println(out)
     // A shape-filtered run covers a subset — never let it replace the
     // artifact of record.

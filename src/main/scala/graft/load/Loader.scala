@@ -41,6 +41,23 @@ object Loader {
       .withColumn("quality_score", lit(result.qualityScore))
       .withColumn("total_issues", lit(result.issuesFound.size))
 
+  /** The hive partition value of `date` is its yyyy-MM-dd string. */
+  private def dateAsString(parts: Seq[String])(df: DataFrame): DataFrame =
+    if (parts.contains("date")) df.withColumn("date", col("date").cast(StringType))
+    else df
+
+  /** The one in-file row order of both sinks: `lead` (the partition or
+    * bucket columns), then the reading key (`cfg.cols` id, type,
+    * timestamp), then every other column in schema order, each only
+    * where present and not in `skip`. A total order, so a file's bytes
+    * depend on its rows alone, never on shuffle arrival order; the
+    * key-first order also tightens row-group min/max for scans that
+    * filter on sensor, type or time. */
+  private def inFileOrder(cfg: PipelineConfig, df: DataFrame,
+      lead: Seq[String], skip: Seq[String] = Nil): Seq[String] =
+    (lead ++ Seq(cfg.cols.id, cfg.cols.typ, cfg.cols.ts) ++ df.columns)
+      .distinct.filter(c => df.columns.contains(c) && !skip.contains(c))
+
   /** S8 — partitioned write. `overwrite` maps to DYNAMIC partition
     * overwrite = PyArrow's delete_matching (replace only touched
     * partitions, reference loading.py:196-224); `append` maps to
@@ -48,36 +65,22 @@ object Loader {
     * in both sinks. A repartition on the partition keys bounds the
     * files-per-partition (the reference wrote 24 files for 72 rows;
     * at 100 TB unrepartitioned writes explode into task-count x
-    * partition-count small files). */
+    * partition-count small files). Each task's rows are sorted by
+    * [[inFileOrder]] led by the partition columns: that order already
+    * satisfies the writer's partition-column sort, so it replaces that
+    * sort instead of adding one, and no exchange. */
   def write(cfg: PipelineConfig, outPath: String)(df: DataFrame): Unit = {
     val mode = cfg.write.mode
     require(mode == "overwrite" || mode == "append",
       s"write.mode must be 'overwrite' or 'append', got: '$mode'")
     if (cfg.write.bucketBy.nonEmpty) return writeBucketed(cfg, outPath)(df)
     val parts = cfg.write.partitionBy
-    val partCols = parts.map(col)
-    val repartitioned = parts
-      .foldLeft(df) { (d, p) =>
-        if (p == "date") d.withColumn("date", col("date").cast(StringType)) else d
-      }
-      .repartition(partCols: _*)
-    // Optional in-file clustering: sorting rows within each output task
-    // tightens parquet row-group min/max statistics on the sort keys,
-    // so time-range scans skip whole row groups at read time — a data-
-    // skipping win that costs one in-memory sort per write task, no
-    // extra shuffle (sortWithinPartitions is a narrow transformation).
-    // The partition columns lead the sort order: FileFormatWriter
-    // requires tasks sorted by partition columns and would insert its
-    // own sort (destroying the clustering) if the ordering didn't
-    // already satisfy that requirement.
-    val prepared =
-      if (cfg.write.sortWithin.isEmpty) repartitioned
-      else repartitioned.sortWithinPartitions(
-        (parts ++ cfg.write.sortWithin).map(col): _*)
-    val writer = prepared.write
+    val repartitioned = dateAsString(parts)(df).repartition(parts.map(col): _*)
+    val writer = repartitioned
+      .sortWithinPartitions(inFileOrder(cfg, repartitioned, parts).map(col): _*)
+      .write
       .partitionBy(parts: _*)
       .option("compression", cfg.write.compression)
-      .option("parquet.enable.dictionary", "true")
     Session.withConf(df.sparkSession, dynamicOverwrite) {
       writer.mode(mode).parquet(outPath)
     }
@@ -239,11 +242,10 @@ object Loader {
     * co-located buckets with no exchange (the q193/q197 property, now
     * on the pipeline's own output). Routed through `repartition(n,
     * bucketCols)` so each task owns one bucket and each partition
-    * directory gets exactly one file per bucket. `sortWithin` becomes
-    * the in-bucket sort tail (the bucketed writer owns the task sort
-    * order — partition cols, bucket id, sortBy — so the plain sink's
-    * sortWithinPartitions clustering would be destroyed; sortBy is the
-    * supported way to cluster inside bucketed files). Mode semantics
+    * directory gets exactly one file per bucket. The bucketed writer
+    * owns the task sort order (partition cols, bucket id, sortBy), so
+    * [[inFileOrder]] led by the bucket columns, partition columns left
+    * out, is the sortBy. Mode semantics
     * match the plain sink: `append` accumulates batches (one more file
     * per bucket each — compact via graft.operators.Bucketed's policy),
     * `overwrite` replaces only touched partitions (dynamic overwrite
@@ -261,12 +263,8 @@ object Loader {
     // sequence — see [[acquireBucketLease]] for the contract.
     acquireBucketLease(spark, outPath)
     try {
-    val prepared = parts
-      .foldLeft(df) { (d, p) =>
-        if (p == "date") d.withColumn("date", col("date").cast(StringType)) else d
-      }
-      .repartition(n, bucketCols.map(col): _*)
-    val sortCols = (bucketCols ++ cfg.write.sortWithin).distinct
+    val prepared = dateAsString(parts)(df).repartition(n, bucketCols.map(col): _*)
+    val sortCols = inFileOrder(cfg, prepared, bucketCols, skip = parts)
     val name = curatedTableName(outPath)
     // The catalog is session-scoped but the OUTPUT is not: a fresh JVM
     // whose catalog lacks the table must NOT treat existing curated
@@ -319,7 +317,6 @@ object Loader {
         .bucketBy(n, bucketCols.head, bucketCols.tail: _*)
         .sortBy(sortCols.head, sortCols.tail: _*)
         .option("compression", cfg.write.compression)
-        .option("parquet.enable.dictionary", "true")
         .option("path", outPath)
         .mode("overwrite")
         .saveAsTable(name)

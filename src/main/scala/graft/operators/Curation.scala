@@ -746,37 +746,7 @@ object Curation {
     * the bucket assignment only needs uniformity, and the md5 path
     * allocates a 32-char string per token (measured: ~60% of the deep
     * point's GC at 500M tokens). md5 stays the default because it is
-    * the cross-engine-mirrorable form the oracle replays.
-    *
-    * `reuseBucketExchange = true` compacts the raw corpus ONCE into a
-    * shared (id, bucket, f) frequency aggregate that BOTH the
-    * bucket-count pass and the scoring pass consume — the two branches
-    * then contain the identical exchange subtree, which Spark's
-    * ReuseExchange computes once, so tokenize+hash runs a single time
-    * (a naive shared repartition does NOT get this: column pruning
-    * strips the id from the count branch and the subtrees stop
-    * matching). MEASURED NET LOSS on this corpus class (SCALE.md r17
-    * dsir_knob, 5M docs x 1024 buckets): md5 48.0 -> 79.3 s, fastHash
-    * 23.0 -> 57.8 s — with ~100-token docs the (id, bucket) pairs
-    * barely repeat (compaction factor ~1), so the shared exchange
-    * shuffles 4.35 GB where the default's scoring exchange carries
-    * only per-doc partial aggregates (82 MB). Kept, default OFF,
-    * because the trade inverts with document length: at doclen >>
-    * nBuckets the pairs compact by ~doclen/nBuckets and the saved
-    * second tokenize+hash can win. MEASURED at the inversion point
-    * (r18 dsir_longdoc_knob, ~2700 features/doc vs 256 buckets, F/D =
-    * 93.6): reuse WINS on the md5 path in BOTH measurements (isolated
-    * 14.1 -> 7.3 s / task 333 -> 169 s; in-suite 6.2 -> 3.7 s — the
-    * deleted second tokenize+md5 pass dominates), while the fastHash
-    * direction did not reproduce across runs (isolated 2.6 -> 3.8 s,
-    * in-suite 1.5 -> 1.2 s): at 1-4 s walls the trade is a WASH inside
-    * weather — the native hash is cheap enough that neither side
-    * dominates. Decision rule: enable reuse when md5 buckets are
-    * required (oracle-mirrorable runs) AND [[dsirCompactionProfile]]
-    * reports compaction_x1000 well above ~2000; on fastHash the knob
-    * does not matter at measured scales — prefer the simpler default
-    * (off). At F/D ~ 1 (short docs) reuse loses clearly on BOTH paths
-    * (the r17 measurement). */
+    * the cross-engine-mirrorable form the oracle replays. */
   def importanceWeights(
       raw: DataFrame,
       target: DataFrame,
@@ -785,23 +755,13 @@ object Curation {
       nBuckets: Int = 1024,
       seed: Int = 7,
       fastHash: Boolean = false,
-      n: Int = 1,
-      reuseBucketExchange: Boolean = false): DataFrame = {
+      n: Int = 1): DataFrame = {
     require(nBuckets > 0 && nBuckets <= (1 << 20),
       s"nBuckets must be in [1, 2^20], got $nBuckets")
     require(n > 0, s"n must be positive, got $n")
     def buckets(df: DataFrame, keep: Seq[Column]): DataFrame =
       featureBuckets(df, keep, textCol, nBuckets, seed, fastHash, n)
     val rawB = buckets(raw, Seq(col(idCol)))
-    // Shared (id, bucket) frequency compaction for the reuse path: the
-    // grouping keys include the id, so neither consumer can prune the
-    // subtree apart — the canonical exchange matches and is computed
-    // once.
-    val rawIB =
-      if (reuseBucketExchange)
-        Some(rawB.groupBy(col(idCol), col("__b"))
-          .agg(count(lit(1)).as("__f")))
-      else None
     // The bucket-count tables are BOUNDED (<= nBuckets <= 2^20 rows) but
     // EXPENSIVE to produce (a full tokenize+hash pass over the corpus) —
     // and each is consumed twice (the ratio join AND its own totals
@@ -813,18 +773,8 @@ object Curation {
     // tables once (guide: materialize an intermediate to truncate the
     // plan), cutting the corpus passes to the structural floor of two
     // (count pass + scoring pass). Inside the timed query; KB-sized.
-    // (The reuseBucketExchange path deliberately SKIPS the checkpoint:
-    // its whole design is in-execution sharing of the compacted
-    // (id, b, f) exchange between the count and scoring branches —
-    // materializing rawCnt separately would split those into two
-    // executions and re-tokenize; CurationSpec pins the ReusedExchange
-    // in its executed plan.)
-    val rawCnt = rawIB match {
-      case Some(ib) => ib.groupBy(col("__b")).agg(sum(col("__f")).as("__c_r"))
-      case None =>
-        rawB.groupBy(col("__b")).agg(count(lit(1)).as("__c_r"))
-          .localCheckpoint()
-    }
+    val rawCnt = rawB.groupBy(col("__b")).agg(count(lit(1)).as("__c_r"))
+      .localCheckpoint()
     val tgtCnt = buckets(target, Seq.empty)
       .groupBy(col("__b")).agg(count(lit(1)).as("__c_t"))
       .localCheckpoint()
@@ -844,18 +794,10 @@ object Curation {
     // mirror), BIGINT only at the very end — a 64-bit running sum would
     // wrap silently under non-ANSI on ratio-heavy docs.
     val delta = (col("__ratio_micro") - 1000000L).cast(DecimalType(38, 0))
-    rawIB match {
-      case Some(ib) =>
-        ib.join(broadcast(ratios), Seq("__b"))
-          .groupBy(col(idCol))
-          .agg(sum(col("__f")).cast(LongType).as("n_tokens"),
-            sum(delta * col("__f")).cast(LongType).as("imp_micro"))
-      case None =>
-        rawB.join(broadcast(ratios), Seq("__b"))
-          .groupBy(col(idCol))
-          .agg(count(lit(1)).cast(LongType).as("n_tokens"),
-            sum(delta).cast(LongType).as("imp_micro"))
-    }
+    rawB.join(broadcast(ratios), Seq("__b"))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).cast(LongType).as("n_tokens"),
+        sum(delta).cast(LongType).as("imp_micro"))
   }
 
   /** Deterministic importance resampling over [[importanceWeights]]
@@ -1038,40 +980,4 @@ object Curation {
           s" div (CAST(__c_n + 1 AS DECIMAL(38,0)) * (__p_tot + $nBuckets))" +
           s" AS BIGINT) - 1000000").as("weight_micro"))
   }
-
-  /** DSIR exchange-reuse decision probe (the lshCandidateProfile
-    * precedent): measures the COMPACTION FACTOR `reuseBucketExchange`
-    * would achieve on this corpus — total features F vs distinct
-    * (id, bucket) pairs D — without running either variant end to end.
-    * The reuse knob shuffles the compacted (id, bucket, f) aggregate
-    * where the default shuffles nothing feature-sized twice but pays a
-    * second tokenize+hash; the trade follows F/D AND the hash cost
-    * (SCALE.md dsir_knob: F/D ~ 1 on ~100-token docs lost 48 → 79 s on
-    * both paths; r18 dsir_longdoc_knob at F/D = 93.6 WON ~1.9x on md5
-    * in both measurements, and was a weather-level WASH on fastHash).
-    * Rule: enable reuse only where md5 buckets are required
-    * (oracle-mirrorable runs) AND this profile reports compaction_x1000
-    * well above ~2000; on the fastHash path keep the simpler lazy
-    * default — the knob does not matter there at measured scales.
-    *
-    * One aggregation pass over the same featureBuckets stream the real
-    * operator consumes — exact counts, no sampling. Output (1 row):
-    * (n_docs, n_features, distinct_pairs, compaction_x1000). */
-  def dsirCompactionProfile(
-      raw: DataFrame,
-      idCol: String,
-      textCol: String,
-      nBuckets: Int = 1024,
-      seed: Int = 7,
-      fastHash: Boolean = false,
-      n: Int = 1): DataFrame =
-    featureBuckets(raw, Seq(col(idCol)), textCol, nBuckets, seed, fastHash, n)
-      .groupBy(col(idCol), col("__b"))
-      .agg(count(lit(1)).as("__f"))
-      .agg(
-        countDistinct(col(idCol)).as("n_docs"),
-        sum(col("__f")).cast(LongType).as("n_features"),
-        count(lit(1)).cast(LongType).as("distinct_pairs"))
-      .withColumn("compaction_x1000",
-        expr("n_features * 1000 div distinct_pairs").cast(LongType))
 }

@@ -507,9 +507,6 @@ object Dedup {
     * verify joins. */
   val maxBroadcastBytes = 48L << 20
 
-  /** The shared candidate machinery of [[prefixFilterPairs]] and its
-    * probe: returns (persisted token-set table, raw candidate rows
-    * BEFORE pair dedup). Caller owns the persist lifecycle. */
   /** The PERSISTED per-doc sorted distinct token/shingle-set table
     * (id, ts, sz) shared by the prefix-filter and containment
     * families. Caller owns the lifecycle (unpersist in a finally). */
@@ -530,13 +527,15 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
+  /** The shared candidate machinery of [[prefixFilterPairs]] and its
+    * probe: returns (persisted token-set table, raw candidate rows
+    * BEFORE pair dedup). Caller owns the persist lifecycle. */
   private def ppjoinCandidates(
       df: DataFrame,
       idCol: String,
       contentCol: String,
       thresholdBp: Int,
-      shingle: Int,
-      positional: Boolean): (DataFrame, DataFrame) = {
+      shingle: Int): (DataFrame, DataFrame) = {
     // The tokenized set table feeds SIX subplans (df-count, the
     // exploded token stream, both prefix sides, both verify sides);
     // exchange reuse dedups only the identical self-join exchanges, so
@@ -574,46 +573,42 @@ object Dedup {
     // pair. (Later common tokens may fail the filter; only one
     // surviving row per pair is needed.) Integer-exact:
     // bound·(10000+t) >= t·(sz_a+sz_b), all longs. Pruning measured
-    // by [[prefixFilterCandidateProfile]] (PLANS.md §ppjoin r15).
+    // in PLANS.md §ppjoin r15.
     val posBound = lit(1L) +
       least(col("a.sz") - col("a.rnk"), col("b.sz") - col("b.rnk"))
-    val baseCond =
+    val cond =
       col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
         col("a.sz") * lit(10000L) >= lit(thresholdBp.toLong) * col("b.sz") &&
-        col("b.sz") * lit(10000L) >= lit(thresholdBp.toLong) * col("a.sz")
-    val cond =
-      if (positional)
-        baseCond && posBound * lit(10000L + thresholdBp) >=
+        col("b.sz") * lit(10000L) >= lit(thresholdBp.toLong) * col("a.sz") &&
+        posBound * lit(10000L + thresholdBp) >=
           lit(thresholdBp.toLong) * (col("a.sz") + col("b.sz"))
-      else baseCond
     val raw = prefix.as("a").join(prefix.as("b"), cond)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
     (lists, raw)
   }
 
   /** Candidate-volume probe for [[prefixFilterPairs]]' filter ladder:
-    * ONE row (n_docs, positional, raw_candidates = prefix-join output
-    * rows BEFORE pair dedup — what the shuffle and dedup actually
-    * carry, distinct_pairs = after pair dedup). Toggling `positional`
-    * measures exactly what the PPJoin positional filter buys on a
-    * given corpus — same tokenize/prefix/join code as the operator
-    * (shared [[ppjoinCandidates]]); counting replaces verification. */
+    * ONE row (n_docs, raw_candidates = prefix-join output rows BEFORE
+    * pair dedup — what the shuffle and dedup actually carry,
+    * distinct_pairs = after pair dedup) — same tokenize/prefix/join
+    * code as the operator (shared [[ppjoinCandidates]]), positional
+    * filter always on; counting replaces verification. The constant
+    * `positional` column keeps the row's schema stable. */
   def prefixFilterCandidateProfile(
       df: DataFrame,
       idCol: String,
       contentCol: String,
       thresholdBp: Int = 6000,
-      shingle: Int = 1,
-      positional: Boolean = true): DataFrame = {
+      shingle: Int = 1): DataFrame = {
     val (lists, raw) = ppjoinCandidates(
-      df, idCol, contentCol, thresholdBp, shingle, positional)
+      df, idCol, contentCol, thresholdBp, shingle)
     try {
       val n = lists.count()
       raw.agg(
         count(lit(1)).as("raw_candidates"),
         count_distinct(struct(col("id_a"), col("id_b"))).as("distinct_pairs"))
         .select(lit(n).as("n_docs"), lit(thresholdBp).as("threshold_bp"),
-          lit(shingle).as("shingle"), lit(positional).as("positional"),
+          lit(shingle).as("shingle"), lit(true).as("positional"),
           col("raw_candidates"), col("distinct_pairs"))
         .localCheckpoint()
     } finally lists.unpersist()
@@ -626,7 +621,7 @@ object Dedup {
       thresholdBp: Int = 6000,
       shingle: Int = 1): DataFrame = {
     val (lists, raw) = ppjoinCandidates(
-      df, idCol, contentCol, thresholdBp, shingle, positional = true)
+      df, idCol, contentCol, thresholdBp, shingle)
     try {
     val cand = raw.distinct()
     // Verify joins: candidates outnumber docs ~60:1 here and each

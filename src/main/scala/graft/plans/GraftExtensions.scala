@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -8,12 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 /** SQL registration for the engine's native expressions, making them
   * callable from `spark.sql` text as well as the Column API.
   *
-  * Two entry points:
-  *  - `GraftFunctions.register(spark)` — register on a live session
-  *    (used by Verify/Bench/tests);
-  *  - `class GraftExtensions` — `spark.sql.extensions` injection point
-  *    for cluster deployments where the session is built by the
-  *    platform (spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions).
+  * One entry point: `class GraftExtensions`, the `spark.sql.extensions`
+  * injection point. `graft.Session`'s engine and curation profiles set
+  * it, and so can a platform-built session
+  * (spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions).
   */
 object GraftFunctions {
 
@@ -59,16 +57,6 @@ object GraftFunctions {
       }
       MisraGriesAgg(exprs.head, k)
     })
-
-  def register(spark: SparkSession): Unit = {
-    fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
-    if (!spark.experimental.extraOptimizations.contains(FuseFloatVecDot))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FuseFloatVecDot
-  }
 
   private[plans] def injections
       : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =

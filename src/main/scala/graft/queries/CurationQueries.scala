@@ -17,17 +17,7 @@ import graft.operators.Curation
 object CurationQueries {
 
   import CoreQueries.t
-
-  /** DuckDB fragments (mirroring TextQueries). */
-  private val dTok = raw"string_split_regex(trim(text), '\s+')"
-  private def dShingles(n: Int, tl: String = "t"): String =
-    s"CASE WHEN len($tl) < $n THEN [array_to_string($tl, ' ')] " +
-      s"ELSE list_transform(generate_series(0, len($tl) - $n), " +
-      s"i -> array_to_string($tl[i+1:i+$n], ' ')) END"
-  private def dHash32u(e: String): String =
-    s"('0x' || substr(md5($e), 1, 8))::BIGINT"
-  private def dHash32(seed: Int, e: String): String =
-    s"('0x' || substr(md5('$seed:' || $e), 1, 8))::BIGINT"
+  import DuckSql.{dHash32, dHash32u, dShingles, dTok}
 
   /** Distinct 5-gram shingle-hash pairs (doc_id, h) as a DuckDB CTE. */
   private def dShingleHashes(where: String = ""): String =

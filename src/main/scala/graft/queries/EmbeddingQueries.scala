@@ -14,14 +14,7 @@ import graft.operators.{Dedup, Similarity}
 object EmbeddingQueries {
 
   import CoreQueries.t
-
-  /** DuckDB fragments. */
-  private val dVec = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-
-  private def dBucket(bits: Int): String =
-    (0 until bits).map(i =>
-      s"(CASE WHEN e[${i + 1}] > 0 THEN ${1L << i} ELSE 0 END)")
-      .mkString(" + ")
+  import DuckSql.{dBucket, dVec}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

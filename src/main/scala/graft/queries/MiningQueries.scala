@@ -18,25 +18,13 @@ import graft.operators.{Mining, Similarity}
 object MiningQueries {
 
   import CoreQueries.t
+  import DuckSql.{dBucket, dHash32u, dShingles, dTok, dVec}
 
-  /** DuckDB fragments (mirroring TextQueries / CurationQueries). */
-  private val dTok = raw"string_split_regex(trim(text), '\s+')"
-  private def dHash32u(e: String): String =
-    s"('0x' || substr(md5($e), 1, 8))::BIGINT"
-  private def dShingles(n: Int, tl: String = "t"): String =
-    s"CASE WHEN len($tl) < $n THEN [array_to_string($tl, ' ')] " +
-      s"ELSE list_transform(generate_series(0, len($tl) - $n), " +
-      s"i -> array_to_string($tl[i+1:i+$n], ' ')) END"
   /** Distinct 5-gram shingle hashes per (keyCol) row, as a CTE body. */
   private def dShingleHashes(key: String): String =
     s"""SELECT $key, unnest(list_distinct(
        |    list_transform(${dShingles(5)}, s -> ${dHash32u("s")}))) AS h
        |  FROM (SELECT $key, $dTok AS t FROM documents)""".stripMargin
-  private val dVec = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-  private def dBucket(bits: Int): String =
-    (0 until bits).map(i =>
-      s"(CASE WHEN e[${i + 1}] > 0 THEN ${1L << i} ELSE 0 END)")
-      .mkString(" + ")
   private def sqlList(ws: Seq[String]): String =
     ws.map(w => s"'$w'").mkString(", ")
 

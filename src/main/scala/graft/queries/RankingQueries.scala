@@ -14,8 +14,7 @@ import graft.plans.ZOrder16
 object RankingQueries {
 
   import CoreQueries.t
-
-  private val dTok = raw"string_split_regex(trim(text), '\s+')"
+  import DuckSql.dTok
 
   /** Fixed query-term set for the BM25 oracle (mixed document
     * frequencies: common stopword-ish through mid-frequency content

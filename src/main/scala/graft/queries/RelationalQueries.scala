@@ -672,8 +672,7 @@ object RelationalQueries {
         cols = ec,
         write = PipelineConfig.default.write.copy(
           partitionBy = Seq("date"),
-          bucketBy = Seq("user_id"), bucketCount = nb,
-          sortWithin = Seq("ts")))
+          bucketBy = Seq("user_id"), bucketCount = nb))
       val curated = Transforms.deriveDate(ec)(
         Transforms.shiftToLocal(330, ec)(t(s, dir, "events")))
         .select(col("event_id"), col("ts"), col("user_id"),

@@ -11,6 +11,8 @@ import graft.streaming.Streaming
   * GROUP BY over the same data (exactly-once, complete mode). */
 object StreamingQueries {
 
+  import DuckSql.{dHash32, dTok}
+
   private val runId = new AtomicLong()
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -200,9 +202,9 @@ object StreamingQueries {
            |  FROM (SELECT unnest(generate_series(0, 1023)) AS b)),
            |tk AS (
            |  SELECT doc_id,
-           |    ('0x' || substr(md5('7:' || w), 1, 8))::BIGINT % 1024 AS b
+           |    ${dHash32(7, "w")} % 1024 AS b
            |  FROM (SELECT doc_id,
-           |          unnest(string_split_regex(trim(text), '\s+')) AS w
+           |          unnest($dTok) AS w
            |        FROM documents))
            |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_features,
            |  CAST(sum(CAST(coalesce(wm, 0) AS HUGEINT)) AS BIGINT)
@@ -213,7 +215,7 @@ object StreamingQueries {
 
     "q220_stream_perplexity" ->
       raw"""WITH tk AS (
-           |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
+           |  SELECT doc_id, $dTok AS t
            |  FROM documents),
            |pairs AS (
            |  SELECT doc_id, p['w1'] AS w1, p['w2'] AS w2 FROM (

@@ -15,23 +15,7 @@ import graft.operators.Dedup
 object TextQueries {
 
   import CoreQueries.t
-
-  /** DuckDB fragment: whitespace tokens of trimmed text. */
-  private val dTok = raw"string_split_regex(trim(text), '\s+')"
-
-  /** DuckDB fragment: word n-gram shingles of a token list column `t`. */
-  private def dShingles(n: Int, tl: String = "t"): String =
-    s"CASE WHEN len($tl) < $n THEN [array_to_string($tl, ' ')] " +
-      s"ELSE list_transform(generate_series(0, len($tl) - $n), " +
-      s"i -> array_to_string($tl[i+1:i+$n], ' ')) END"
-
-  /** DuckDB fragment: 32-bit md5 hash with integer seed. */
-  private def dHash32(seed: Int, e: String): String =
-    s"('0x' || substr(md5('$seed:' || $e), 1, 8))::BIGINT"
-
-  /** DuckDB fragment: unseeded 32-bit md5 base hash (minhash). */
-  private def dHash32u(e: String): String =
-    s"('0x' || substr(md5($e), 1, 8))::BIGINT"
+  import DuckSql.{dHash32, dHash32u, dShingles, dTok}
 
   /** DuckDB fragment: i-th minhash permutation of base-hash expr `h` —
     * the same (a*h+b) mod p constants as text.minhashPerm. */
@@ -422,8 +406,7 @@ object TextQueries {
     "q203_ppjoin_candidates" -> ((s, dir) =>
       Dedup.prefixFilterCandidateProfile(
         t(s, dir, "documents").filter(col("doc_id") < 500),
-        "doc_id", "text", thresholdBp = 6000, shingle = 1,
-        positional = true)),
+        "doc_id", "text", thresholdBp = 6000, shingle = 1)),
 
     // SHINGLED directed containment — the scale form of q163 (r15):
     // set elements are hashed 3-word shingles, so containment means

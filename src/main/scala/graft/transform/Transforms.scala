@@ -166,15 +166,13 @@ object Transforms {
     * broadcasts them; the only large shuffle is the per-(key, bucket)
     * window itself.
     *
-    * `avgFn` lets callers swap the frame aggregate (e.g.
-    * `exact.avgExactOver` for cross-engine decimal determinism). */
+    * `exactRolling` swaps the frame average for the decimal-exact
+    * cum-diff form (cross-engine determinism). */
   def rollingAvgBucketed(
       windowRows: Int,
       bucketSeconds: Long,
       cols: ReadingCols = ReadingCols.sensor,
       tieBreak: Seq[Column] = Nil,
-      avgFn: (Column, org.apache.spark.sql.expressions.WindowSpec) => Column =
-        (c, w) => avg(c).over(w),
       exactRolling: Boolean = false)(df: DataFrame): DataFrame = {
     require(windowRows >= 1, "windowRows must be >= 1")
     require(bucketSeconds >= 1, "bucketSeconds must be >= 1")
@@ -250,7 +248,7 @@ object Transforms {
           .partitionBy(keyCols.map(col) :+ col("__bkt"): _*)
           .orderBy(col(cols.ts) +: tieBreak: _*)
           .rowsBetween(-(windowRows - 1L), 0L)
-        unioned.withColumn("rolling_avg_value", avgFn(col(cols.value), wRoll))
+        unioned.withColumn("rolling_avg_value", avg(col(cols.value)).over(wRoll))
       }
     rolled
       .filter(!col("__ctx"))

@@ -1,9 +1,11 @@
 package graft.validate
 
+import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
 
 import scala.math.BigDecimal.RoundingMode
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -390,10 +392,8 @@ object Validation {
   }
 
   /** S10 — long-format data-quality report (reference validation.py:487-595):
-    * one row per (category, metric, value). Built as a DataFrame so it can
-    * be written with the CSV sink. */
-  def reportRows(result: ValidationResult)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
+    * one row per (category, metric, value). */
+  private def reportLines(result: ValidationResult): Seq[(String, String, String)] = {
     val m = result.metrics.get
     val rows = Seq.newBuilder[(String, String, String)]
     rows += (("overall", "total_records", m.totalRecords.toString))
@@ -412,12 +412,37 @@ object Validation {
     m.coverage.foreach(cv =>
       rows += (("sensor_coverage", cv.sensorId, cv.totalReadings.toString)))
     result.issuesFound.foreach(i => rows += (("issues", "issue", i)))
-    rows.result().toDF("category", "metric", "value")
+    rows.result()
   }
 
-  /** S10 sink — single stable CSV file (reference reports/data_quality_report.csv). */
+  /** The S10 report as a DataFrame (category, metric, value). */
+  def reportRows(result: ValidationResult)(implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    reportLines(result).toDF("category", "metric", "value")
+  }
+
+  /** S10 sink — one stable CSV file at `path` (reference
+    * reports/data_quality_report.csv), written on the driver through
+    * the path's Hadoop FileSystem, no Spark job. Header, then one line
+    * per report row, quoted as pandas writes RFC 4180: a field holding
+    * a comma, quote or line break is quoted with inner quotes doubled;
+    * null is empty. A directory left at `path` by an older run is
+    * replaced. */
   def writeReport(result: ValidationResult, path: String)(
-      implicit spark: SparkSession): Unit =
-    reportRows(result).coalesce(1)
-      .write.mode("overwrite").option("header", "true").csv(path)
+      implicit spark: SparkSession): Unit = {
+    def field(v: String): String =
+      if (v == null) ""
+      else if (v.exists(ch => ch == ',' || ch == '"' || ch == '\n' || ch == '\r'))
+        "\"" + v.replace("\"", "\"\"") + "\""
+      else v
+    val csv = (("category", "metric", "value") +: reportLines(result))
+      .map { case (c, m, v) => Seq(c, m, v).map(field).mkString("", ",", "\n") }
+      .mkString
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.delete(p, true)
+    val out = fs.create(p, true)
+    try out.write(csv.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
 }

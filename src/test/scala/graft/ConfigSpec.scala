@@ -159,4 +159,16 @@ class ConfigSpec extends AnyFunSuite {
     val te = intercept[IllegalArgumentException](PipelineConfig.fromYaml(t))
     assert(te.getMessage.contains("transformation.outlier_handeling"))
   }
+
+  test("write.sort_within is an unknown key: the sink derives its " +
+    "in-file order") {
+    val f = write(
+      """write:
+        |  mode: overwrite
+        |  sort_within:
+        |    - timestamp
+        |""".stripMargin).toString
+    val e = intercept[IllegalArgumentException](PipelineConfig.fromYaml(f))
+    assert(e.getMessage.contains("unknown key 'write.sort_within'"))
+  }
 }

@@ -339,29 +339,6 @@ class CurationSpec extends SparkSpec {
     assert(byId(1L) === 3L && byId(5L) === 1L)
   }
 
-  test("importanceWeights reuseBucketExchange: identical results, one " +
-      "reused exchange in the plan") {
-    val raw = Seq((1L, "a b c a"), (2L, "b c d"), (3L, "x y z"))
-      .toDF("doc_id", "text")
-    val target = raw.filter($"doc_id" === 1L)
-    val plain = Curation.importanceWeights(
-      raw, target, "doc_id", "text", 64, 7)
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val reused = Curation.importanceWeights(
-      raw, target, "doc_id", "text", 64, 7, reuseBucketExchange = true)
-    assert(reused.collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-      === plain)
-    // the shared (id, bucket) frequency aggregate is consumed by both
-    // the count pass and the scoring pass — the EXECUTED adaptive plan
-    // (same QueryExecution as the collect above) must show the later
-    // consumers reading the first one's exchange, i.e. the raw corpus
-    // is tokenized+hashed once
-    val plan = reused.queryExecution.executedPlan.toString
-    assert(plan.contains("ReusedExchange") || plan.contains("ReusedQueryStage"),
-      s"expected a reused exchange in the executed plan:\n$plan")
-  }
-
   test("importanceWeights: matches a driver brute force; deterministic " +
       "under partitioning; topK orders by (weight desc, id)") {
     val docsMap = Map(
@@ -500,22 +477,6 @@ class CurationSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"),
       s"weights must broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin"), s"no SMJ here:\n$plan")
-  }
-
-  test("dsirCompactionProfile: exact feature/pair counts and factor") {
-    // 2 docs x heavy repetition into few buckets -> compaction > 1
-    val docs = Seq(
-      (1L, ("w " * 64).trim),                  // 64 identical tokens
-      (2L, (1 to 8).map(i => s"t$i").mkString(" ")))
-      .toDF("doc_id", "text")
-    val r = Curation.dsirCompactionProfile(
-      docs, "doc_id", "text", nBuckets = 4, seed = 7).head()
-    assert(r.getAs[Long]("n_docs") === 2L)
-    assert(r.getAs[Long]("n_features") === 72L)
-    // doc1: one bucket (identical tokens); doc2: <= 4 buckets
-    val pairs = r.getAs[Long]("distinct_pairs")
-    assert(pairs >= 2L && pairs <= 5L)
-    assert(r.getAs[Long]("compaction_x1000") === 72000L / pairs)
   }
 
   test("removeDuplicatedSpans: null text reads as zero tokens, " +

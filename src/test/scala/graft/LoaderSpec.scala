@@ -91,29 +91,66 @@ class LoaderSpec extends SparkSpec {
     }
   }
 
-  test("sortWithin clusters rows inside each output file") {
-    val out = Files.createTempDirectory("graft-sortwithin").toString
-    // many rows for one (date, sensor) partition, shuffled timestamps
-    val rows = (0 until 200).map(i =>
-      ("s1", java.sql.Timestamp.valueOf(
-        f"2023-06-01 ${(i * 7) % 24}%02d:${(i * 13) % 60}%02d:00"),
-        "temperature", i.toDouble, 90.0,
-        java.sql.Date.valueOf("2023-06-01"), 0.0, 0.0, false))
-    val df = rows.toDF("sensor_id", "timestamp", "reading_type", "value",
-      "battery_level", "date", "daily_avg_value", "rolling_avg_value",
-      "anomalous_reading")
-    val cfg = PipelineConfig.default.copy(write =
-      PipelineConfig.default.write.copy(sortWithin = Seq("timestamp")))
-    Loader.write(cfg, out)(df)
-    // each physical file must be internally timestamp-sorted (this is
-    // what tightens the parquet row-group min/max stats for skipping)
+  /** `n` rows over 2 dates x 2 sensors x 2 reading types, timestamps
+    * out of order, and pairs of rows that agree on (sensor, type,
+    * timestamp) and differ only in value — so only a total in-file
+    * order fixes where each row lands. */
+  private def shuffledReadings(n: Int) = (0 until n).map { i =>
+    val day = 1 + i % 2
+    (s"s${1 + (i / 2) % 2}", java.sql.Timestamp.valueOf(
+      f"2023-06-0$day ${(i * 7) % 24}%02d:${(i * 13) % 60}%02d:00"),
+      if ((i / 4) % 2 == 0) "temperature" else "humidity",
+      (i % 7).toDouble, 90.0 - i % 3, java.sql.Date.valueOf(s"2023-06-0$day"),
+      0.0, 0.0, false)
+  }
+
+  private val readingCols = Seq("sensor_id", "timestamp", "reading_type",
+    "value", "battery_level", "date", "daily_avg_value", "rolling_avg_value",
+    "anomalous_reading")
+
+  test("default sink sorts each file by (date, sensor_id, reading_type, " +
+    "timestamp)") {
+    val out = Files.createTempDirectory("graft-infile-order").toString
+    val df = shuffledReadings(400).toDF(readingCols: _*).repartition(3)
+    Loader.write(PipelineConfig.default, out)(df)
+    // each physical file must be internally sorted (this is also what
+    // tightens the parquet row-group min/max stats for skipping)
     val byFile = spark.read.parquet(out)
-      .select(input_file_name().as("f"), col("timestamp"))
+      .select(input_file_name().as("f"), col("date"), col("sensor_id"),
+        col("reading_type"), col("timestamp"))
       .collect().groupBy(_.getString(0))
-    assert(byFile.nonEmpty)
+    assert(byFile.size === 4) // one file per (date, sensor) partition
     byFile.values.foreach { rs =>
-      val ts = rs.map(_.getTimestamp(1).getTime).toSeq
-      assert(ts === ts.sorted, "file not internally sorted")
+      val keys = rs.map(r => (r.get(1).toString, r.getString(2),
+        r.getString(3), r.getTimestamp(4).getTime)).toSeq
+      assert(keys === keys.sorted, "file not internally sorted")
+    }
+  }
+
+  test("two loads of the same rows in different partitionings write " +
+    "byte-identical files") {
+    val rows = shuffledReadings(400)
+    def load(df: org.apache.spark.sql.DataFrame): Map[String, Array[Byte]] = {
+      val out = Files.createTempDirectory("graft-bytes").toString + "/out"
+      Loader.write(PipelineConfig.default, out)(Loader.optimizeTypes(
+        Loader.addMetadata(vr, "1.0.0", "2023-06-03T00:00:00Z")(df)))
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(out)
+      scala.util.Using.resource(Files.walk(root))(_.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
+        .groupBy(p => root.relativize(p.getParent).toString)
+        .map { case (dir, files) =>
+          assert(files.size === 1, s"$dir holds ${files.size} files")
+          dir -> Files.readAllBytes(files.head)
+        }
+    }
+    val spread = load(rows.toDF(readingCols: _*).repartition(4))
+    val reversed = load(rows.reverse.toDF(readingCols: _*).coalesce(1))
+    assert(spread.size === 4)
+    assert(spread.keySet === reversed.keySet)
+    spread.foreach { case (dir, bytes) =>
+      assert(java.util.Arrays.equals(bytes, reversed(dir)),
+        s"$dir differs between the loads")
     }
   }
 
@@ -125,8 +162,7 @@ class LoaderSpec extends SparkSpec {
     val cfg = PipelineConfig.default.copy(write =
       PipelineConfig.default.write.copy(
         partitionBy = Seq("date"),
-        bucketBy = Seq("sensor_id"), bucketCount = 4,
-        sortWithin = Seq("timestamp")))
+        bucketBy = Seq("sensor_id"), bucketCount = 4))
     Loader.write(cfg, out)(transformed())
 
     val back = Loader.readBackBucketed(spark, out)
@@ -188,8 +224,7 @@ class LoaderSpec extends SparkSpec {
     val cfg = PipelineConfig.default.copy(write =
       PipelineConfig.default.write.copy(
         partitionBy = Seq("date"),
-        bucketBy = Seq("sensor_id"), bucketCount = 4,
-        sortWithin = Seq("timestamp")))
+        bucketBy = Seq("sensor_id"), bucketCount = 4))
     // simulate a concurrent writer: its lease marker is present
     val lock = new org.apache.hadoop.fs.Path(out, "_graft_bucket_lock")
     val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -223,8 +258,7 @@ class LoaderSpec extends SparkSpec {
     val cfg = PipelineConfig.default.copy(write =
       PipelineConfig.default.write.copy(
         partitionBy = Seq("date"),
-        bucketBy = Seq("sensor_id"), bucketCount = 4,
-        sortWithin = Seq("timestamp")))
+        bucketBy = Seq("sensor_id"), bucketCount = 4))
     Loader.write(cfg, out)(transformed())
     // the written layout is recorded beside the data
     assert(Files.exists(java.nio.file.Paths.get(out, "_graft_bucket_spec.json")))

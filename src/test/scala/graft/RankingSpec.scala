@@ -37,7 +37,6 @@ class RankingSpec extends SparkSpec {
   }
 
   test("zorder16 SQL registration and interpreted path agree with codegen") {
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     val df = (0 until 100).map(i => (i.toLong * 37 % 65536, i.toLong * 101 % 65536))
       .toDF("x", "y").createOrReplaceTempView("zpts")

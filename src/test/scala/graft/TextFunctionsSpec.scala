@@ -140,7 +140,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("FuseFloatVecDot rule rewrites the composable pattern to the native expression") {
-    graft.plans.GraftFunctions.register(spark)
     val emb = graft.queries.CoreQueries.t(spark, "/root/testdata/sf0.001", "embeddings")
     val q = emb.select($"vec_id",
       embeddings.dotComposed($"embedding", $"embedding").as("d"))
@@ -153,7 +152,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("graft_float_dot is callable from SQL after registration") {
-    graft.plans.GraftFunctions.register(spark)
     Seq((Array(3.0f, 4.0f), Array(4.0f, 3.0f))).toDF("a", "b")
       .createOrReplaceTempView("vecs")
     val r = spark.sql("SELECT graft_float_dot(a, b) AS d FROM vecs").head
@@ -161,7 +159,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("graft_float_cosine and graft_bottom_k callable from SQL") {
-    graft.plans.GraftFunctions.register(spark)
     Seq((Array(1.0f, 0.0f), Array(1.0f, 0.0f))).toDF("a", "b")
       .createOrReplaceTempView("vecs2")
     val cos = spark.sql("SELECT graft_float_cosine(a, b) AS c FROM vecs2").head

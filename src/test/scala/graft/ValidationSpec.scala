@@ -309,4 +309,29 @@ class ValidationSpec extends SparkSpec {
     assert(Set("overall", "missing_values", "anomalies",
       "sensor_coverage").subsetOf(cats))
   }
+
+  test("report is one CSV file with RFC 4180 quoting, replacing a " +
+    "directory an older run left at its path") {
+    val odd = "s\"1,x"
+    val df = readings((odd, "2023-06-01 10:00:00", "temperature", 25.0))
+      .withColumn("anomalous_reading", lit(false))
+    val res = Validation.collectMetrics(cfg)(df)
+    val path = java.nio.file.Files.createTempDirectory("graft-report")
+      .resolve("dq_report.csv")
+    java.nio.file.Files.createDirectories(path.resolve("old"))
+    java.nio.file.Files.write(path.resolve("old/part-0.csv"), "stale".getBytes)
+    Validation.writeReport(res, path.toString)(spark)
+    assert(java.nio.file.Files.isRegularFile(path))
+    val lines = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+      .split("\n", -1).toSeq
+    assert(lines.head === "category,metric,value")
+    assert(lines.last === "") // every line ends in \n
+    assert(lines.contains("sensor_coverage,\"s\"\"1,x\",1"))
+    assert(lines.contains("overall,total_records,1"))
+    // the same rows as reportRows, read back by a CSV parser
+    val back = spark.read.option("header", "true").option("escape", "\"")
+      .csv(path.toString)
+    assert(back.collect().map(_.toSeq).toSet ===
+      Validation.reportRows(res)(spark).collect().map(_.toSeq).toSet)
+  }
 }
