@@ -50,12 +50,9 @@ object CurationPipeline {
   def curate(
       docs: DataFrame,
       embeddings: Option[DataFrame],
-      idCol: String = "doc_id",
-      textCol: String = "text",
       lshThreshold: Double = 0.9,
-      semanticThreshold: Double = 0.97,
-      binTokens: Int = 2048,
-      shards: Int = 64): Result = {
+      semanticThreshold: Double = 0.97): Result = {
+    val (idCol, textCol) = ("doc_id", "text")
     val nInput = docs.count()
 
     // 1. Normalized exact dedup: survivors are the min id per content
@@ -110,12 +107,13 @@ object CurationPipeline {
       case None => (afterNear, nAfterNear)
     }
 
-    // 4. Packing manifest: shard by id hash so the running token sum
-    // parallelizes (a global ordered cumsum would be one task).
+    // 4. Packing manifest into 2048-token bins: shard by id hash (64
+    // shards) so the running token sum parallelizes (a global ordered
+    // cumsum would be one task).
     val sharded = afterSem.withColumn("shard",
-      pmod(xxhash64(col(idCol)), lit(shards)))
+      pmod(xxhash64(col(idCol)), lit(64)))
     val manifest = Curation.packingManifest(
-      sharded, "shard", idCol, textCol, capacity = binTokens)
+      sharded, "shard", idCol, textCol, capacity = 2048)
 
     Result(afterSem, manifest, nInput, nAfterExact, nAfterNear, nAfterSem)
   }

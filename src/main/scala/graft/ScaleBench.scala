@@ -120,7 +120,7 @@ object ScaleBench {
     }
     // Documents replicate 10x deeper than the pair shapes (docs are
     // tiny — 5k rows at sf0.1 — so the x100 point is only 500k docs;
-    // the banding-knob claim needs a corpus where the default key
+    // the banding key's width claim needs a corpus where the key
     // width actually starts to matter). The x100 rotation cipher
     // cannot go this deep: 26 rotations repeat every 26 copies, so at
     // 1000 copies each doc would have ~38 IDENTICAL versions and the
@@ -341,8 +341,9 @@ object ScaleBench {
         Graph.coOccurrenceEdges(li(dir).filter(col("l_orderkey") % 10 === 0),
           "l_orderkey", "l_partkey", broadcastBuild = true),
         seedPred = col("sn") % pkOff < 100, hops = 3)),
-      // The BLOCKED banding (q199): the legacy 15-bit chunk join
-      // (q39's shape) was measured quadratic at this scale point —
+      // The BLOCKED banding (q199): the 15-bit chunk join (q39's
+      // shape — the same banding core at 4 blocks, one block per key)
+      // was measured quadratic at this scale point —
       // random chunk collisions grow n²/2^15, and at 500k docs that
       // was 3.5 GB of sorter spill, ~42 s GC and 608 s of task time
       // for a shape whose x1 task time is ~1 s. The multi-block
@@ -352,7 +353,7 @@ object ScaleBench {
       // same retrieval contract on the layout that survives scale.
       "simhash_dup" -> (dir =>
         Dedup.simhashDupBlocked(docs(dir), "doc_id", "text",
-          maxHamming = 3, blocks = 6)),
+          maxHamming = 3)),
       // Storage-layout pair: the SAME orderkey self-join (≈4 partners
       // per key, keys disjoint per copy → pairs linear in N) over
       // bucketed vs plain storage. The bucketed side pays its one-time
@@ -456,10 +457,10 @@ object ScaleBench {
           lshPairs(dir).select(col("id_a"), col("id_b")),
           driverEdgeThreshold = 0L)
           .groupBy(col("label")).agg(count(lit(1)).as("n_members"))),
-      // The DEFAULT key (b=6, 30-bit tables) — a choice the knob probe
-      // below justifies with measured counts instead of the n²/2^k
-      // model alone: at 5M docs the widened b=8 key does cut distinct
-      // candidates 2.8x (36.1M -> 13.0M), but its C(8,5)=56-table
+      // The 6-block key (30-bit tables), measured against b=8
+      // (SCALE.md, "The banding knob, measured"): at 5M docs the
+      // widened b=8 key does cut distinct candidates 2.8x
+      // (36.1M -> 13.0M), but its C(8,5)=56-table
       // explode carries 2.8x the rows through the banding join and
       // costs ~3x the wall (the r14 first cut ran b=8 here: 205-297 s
       // vs b=6, with the exchange of 280M keyed rows dominating —
@@ -471,7 +472,7 @@ object ScaleBench {
       // probe points).
       "simhash_deep" -> (dir =>
         Dedup.simhashDupBlocked(docsD(dir), "doc_id", "text",
-          maxHamming = 3, blocks = 6)),
+          maxHamming = 3)),
       // DSIR importance weights (q210's operator) at depth: three
       // token passes (raw bucket counts, target bucket counts, score
       // join against the broadcast 1024-row ratio table), all
@@ -877,35 +878,9 @@ object ScaleBench {
         }
       }
     }
-    // ---- banding-knob probe: candidates vs key width at the deep
-    // documents corpus. The 100 TB simhash story is "widen k*60/b as n
-    // grows, paying more tables for candidates that stay output-sized";
-    // this measures the movement instead of arguing it — the SAME
-    // signature pass and join keys as simhashDupBlocked, counting in
-    // place of verification, for the default 30-bit key (b=6) the
-    // simhash_deep shape runs vs the widened ~37-bit key (b=8). Skipped
-    // under a shape filter unless named (never in the artifact of
-    // record from a partial run).
-    val knobFrag =
-      if (!shapeFilter.forall(_.contains("simhash_knob"))) ""
-      else {
-        val pts = Seq(6, 8).map { b =>
-          val t0 = System.nanoTime()
-          val r = Dedup.simhashBlockedCandidateProfile(
-            docsD(dirDN), "doc_id", "text", maxHamming = 3, blocks = b)
-            .head()
-          val sec = r4((System.nanoTime() - t0) / 1e9)
-          try Session.release(spark) catch { case _: Throwable => () }
-          val j = s"""{"blocks":$b,"k":${b - 3},"n_tables":${r.getAs[Int]("n_tables")},"key_bits":${r.getAs[Int]("key_bits")},"n_docs":${r.getAs[Long]("n_docs")},"raw_candidates":${r.getAs[Long]("raw_candidates")},"distinct_pairs":${r.getAs[Long]("distinct_pairs")},"sec":$sec}"""
-          System.err.println(s"""{"simhash_knob":$j}""")
-          j
-        }
-        s""","simhash_knob":{"corpus":"doc_x$docsCopies","max_hamming":3,"points":[${pts.mkString(",")}]}"""
-      }
     // ---- LSH banding probe: minhashLsh's candidate volume and largest
-    // band bucket at x1 vs the deep corpus — the same honesty contract
-    // the simhash knob established (exact counts from the
-    // operator's own banding keys, counting in place of verification).
+    // band bucket at x1 vs the deep corpus — exact counts from the
+    // operator's own banding keys, counting in place of verification.
     // raw_candidates growing faster than docs = band buckets going
     // quadratic (collapse exact dups first / re-band); max_bucket is
     // the skew signal a total can hide. Skipped unless named, like the
@@ -1136,7 +1111,7 @@ object ScaleBench {
       }
     }
     val out =
-      s"""{"metric":"scale_bench","sf":"$base","copies":$copies,"events_copies":$eventsCopies,"emb_copies":$embCopies,"docs_copies":$docsCopies,"cpus":$cpus,"heap_gb":$heapGb,"shapes":{${entries.mkString(",")}}$knobFrag$lshKnobFrag$containKnobFrag,"note":"disjoint replication: work scales ~linearly with copies by construction; 3 samples per scale point taken in INTERLEAVED rounds (shape order stride-permuted per round — distinct coprime stride each round, so every shape gets a DIFFERENT predecessor per sample and one heavy neighbor cannot inflate all of a shape's samples identically), each sample preceded by a DISCARDED x1 warmup execution of the same shape (the interleaving runs other shapes between samples, whose traffic deopts the shared generated iterators — the warmup re-heats the shape's code path so samples catch the steady state, not a JIT slow mode), min AND median recorded, ratio/exponent computed on MEDIANS (exponent=ln(medN/med1)/ln(N), ~1.0 = runtime tracks work, no superlinear cliff); task_exponent is the same exponent over SUMMED task time — the work-growth signal that stays meaningful once a shape saturates all local cores (wall must then grow ~linearly with work on fixed hardware; ~1.0 = N x data costs N x CPU, the property that transfers to a 1000-executor cluster; >1.1 = a genuine algorithmic wall); since r18 task_exponent is computed between the two LARGEST points (mid = n/10 -> hi, see task_exponent_basis) on MEDIAN summed task CPU time (task_cpu_ms — per-task run time counts stall time, which OS timesharing and GC inflate 2x with weather; CPU cycles repeat across same-code artifacts) — the pre-r18 x1->hi basis divided by a 1-2 s x1 wall that swings 2x with shared-box weather and made same-code artifacts disagree (ppjoin te 0.99-1.11 across five identical-code runs); the legacy value stays as task_exponent_x1 and every point carries runs_task_ms/runs_cpu_ms arrays so the exponent is recomputable (or re-basable) from the artifact alone; streaming shapes also carry stream_exponent over micro-batch execution only, from the min runs' metrics (setup_sec is fixed driver-side cost, recorded separately); mid_regime (r19) tags whether the mid point left the fixed-cost regime (med(mid work) >= 0.3 * m * med(x1 work)) — an 'overhead' tag means mid->hi is the marginal exponent taken at fixed-cost exit and reads high even for linear shapes, so read task_exponent next to task_exponent_x1 there"}"""
+      s"""{"metric":"scale_bench","sf":"$base","copies":$copies,"events_copies":$eventsCopies,"emb_copies":$embCopies,"docs_copies":$docsCopies,"cpus":$cpus,"heap_gb":$heapGb,"shapes":{${entries.mkString(",")}}$lshKnobFrag$containKnobFrag,"note":"disjoint replication: work scales ~linearly with copies by construction; 3 samples per scale point taken in INTERLEAVED rounds (shape order stride-permuted per round — distinct coprime stride each round, so every shape gets a DIFFERENT predecessor per sample and one heavy neighbor cannot inflate all of a shape's samples identically), each sample preceded by a DISCARDED x1 warmup execution of the same shape (the interleaving runs other shapes between samples, whose traffic deopts the shared generated iterators — the warmup re-heats the shape's code path so samples catch the steady state, not a JIT slow mode), min AND median recorded, ratio/exponent computed on MEDIANS (exponent=ln(medN/med1)/ln(N), ~1.0 = runtime tracks work, no superlinear cliff); task_exponent is the same exponent over SUMMED task time — the work-growth signal that stays meaningful once a shape saturates all local cores (wall must then grow ~linearly with work on fixed hardware; ~1.0 = N x data costs N x CPU, the property that transfers to a 1000-executor cluster; >1.1 = a genuine algorithmic wall); since r18 task_exponent is computed between the two LARGEST points (mid = n/10 -> hi, see task_exponent_basis) on MEDIAN summed task CPU time (task_cpu_ms — per-task run time counts stall time, which OS timesharing and GC inflate 2x with weather; CPU cycles repeat across same-code artifacts) — the pre-r18 x1->hi basis divided by a 1-2 s x1 wall that swings 2x with shared-box weather and made same-code artifacts disagree (ppjoin te 0.99-1.11 across five identical-code runs); the legacy value stays as task_exponent_x1 and every point carries runs_task_ms/runs_cpu_ms arrays so the exponent is recomputable (or re-basable) from the artifact alone; streaming shapes also carry stream_exponent over micro-batch execution only, from the min runs' metrics (setup_sec is fixed driver-side cost, recorded separately); mid_regime (r19) tags whether the mid point left the fixed-cost regime (med(mid work) >= 0.3 * m * med(x1 work)) — an 'overhead' tag means mid->hi is the marginal exponent taken at fixed-cost exit and reads high even for linear shapes, so read task_exponent next to task_exponent_x1 there"}"""
     println(out)
     // A shape-filtered run covers a subset — never let it replace the
     // artifact of record.

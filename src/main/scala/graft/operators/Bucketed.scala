@@ -295,7 +295,6 @@ object Bucketed {
     * co-bucketed inputs the resulting SMJ has no exchange and no sort —
     * callers can assert that via the executed plan.
     */
-  def colocatedJoin(left: DataFrame, right: DataFrame, cond: Column,
-      joinType: String = "inner"): DataFrame =
-    left.hint("merge").join(right, cond, joinType)
+  def colocatedJoin(left: DataFrame, right: DataFrame, cond: Column): DataFrame =
+    left.hint("merge").join(right, cond)
 }

@@ -125,31 +125,49 @@ object Dedup {
       k: Int,
       bands: Int,
       shingleN: Int): (DataFrame, DataFrame, DataFrame) = {
-    require(k % bands == 0, "k must divide into bands")
-    val rows = k / bands
-    val base = df
-      .select(col(idCol).as("id"),
-        text.shingleHashes(col(contentCol), shingleN).as("hs"))
-      .select(col("id"),
-        text.minhashFromHashes(col("hs"), k).as("sig"),
-        array_distinct(col("hs")).as("sh"))
+    val band = bandKey(k, bands)
+    val base = minhashSigs(df, idCol, contentCol, k, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // band value = the rows-per-band slice of the signature, stringified
-    val banded = base.select(col("id"), explode(array((0 until bands).map(b =>
-      struct(lit(b).as("band_id"),
-        concat_ws("_", transform(slice(col("sig"), b * rows + 1, rows),
-          x => x.cast("string"))).as("band_key"))): _*)).as("band"))
+    val banded = base.select(col("id"), band)
     val raw = banded.as("l").join(banded.as("r"),
       col("l.band") === col("r.band") && col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
     (base, banded, raw)
   }
 
+  /** The MinHash signature table (id, carried columns, sig, sh): k
+    * md5-seeded min-hashes of the shingle hashes, and the distinct
+    * shingle-hash set for exact Jaccard. `carry` adds named per-row
+    * columns between id and sig ([[dedupAgainst]]'s content md5). */
+  private def minhashSigs(
+      df: DataFrame,
+      idCol: String,
+      contentCol: String,
+      k: Int,
+      shingleN: Int,
+      carry: (String, Column)*): DataFrame =
+    df.select(col(idCol).as("id") +: carry.map { case (n, c) => c.as(n) } :+
+        text.shingleHashes(col(contentCol), shingleN).as("hs"): _*)
+      .select(col("id") +: carry.map { case (n, _) => col(n) } :+
+        text.minhashFromHashes(col("hs"), k).as("sig") :+
+        array_distinct(col("hs")).as("sh"): _*)
+
+  /** One row per band over a `sig` column: band value = the
+    * rows-per-band slice of the signature, stringified. Two docs are
+    * LSH candidates iff some `band` struct is equal. */
+  private def bandKey(k: Int, bands: Int): Column = {
+    require(k % bands == 0, "k must divide into bands")
+    val rows = k / bands
+    explode(array((0 until bands).map(b =>
+      struct(lit(b).as("band_id"),
+        concat_ws("_", transform(slice(col("sig"), b * rows + 1, rows),
+          x => x.cast("string"))).as("band_key"))): _*)).as("band")
+  }
+
   /** Candidate-volume probe for [[minhashLsh]]'s banding — the same
-    * honesty contract as [[prefixFilterCandidateProfile]] /
-    * [[simhashBlockedCandidateProfile]]: ONE row of exact counts from
-    * the operator's own signature pass and join keys (shared
-    * [[lshCandidates]]), counting in place of verification.
+    * honesty contract as [[prefixFilterCandidateProfile]]: ONE row of
+    * exact counts from the operator's own signature pass and join keys
+    * (shared [[lshCandidates]]), counting in place of verification.
     *
     * Columns: n_docs; raw_candidates (band-join output rows BEFORE pair
     * dedup — what the shuffle and the distinct actually carry; each
@@ -214,19 +232,10 @@ object Dedup {
       bands: Int = 4,
       shingleN: Int = 1,
       threshold: Double = 0.5): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    val rows = k / bands
-    def sigs(df: DataFrame): DataFrame = df
-      .select(col(idCol).as("id"), md5(col(contentCol)).as("h"),
-        text.shingleHashes(col(contentCol), shingleN).as("hs"))
-      .select(col("id"), col("h"),
-        text.minhashFromHashes(col("hs"), k).as("sig"),
-        array_distinct(col("hs")).as("sh"))
-    def banded(df: DataFrame): DataFrame =
-      df.select(col("id"), explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band_id"),
-          concat_ws("_", transform(slice(col("sig"), b * rows + 1, rows),
-            x => x.cast("string"))).as("band_key"))): _*)).as("band"))
+    val band = bandKey(k, bands)
+    def sigs(df: DataFrame): DataFrame = minhashSigs(
+      df, idCol, contentCol, k, shingleN, "h" -> md5(col(contentCol)))
+    def banded(df: DataFrame): DataFrame = df.select(col("id"), band)
 
     // Both signature tables are consumed twice (banding + verify/probe);
     // materialize once. In production the corpus side is the persisted
@@ -302,7 +311,8 @@ object Dedup {
 
   /** SimHash near-duplicate pairs: band the 60-bit hash into 4 x 15-bit
     * chunks; pairs sharing any chunk are candidates (Hamming <= 3 pigeon-
-    * hole guarantee); verify with bit_count(xor) <= maxHamming.
+    * hole guarantee); verify with bit_count(xor) <= maxHamming. This is
+    * [[simhashPairs]] at 4 blocks, one block per key.
     *
     * The output is the FULL pair list, so cost is inherently quadratic
     * in near-dup group size — on a duplicate-heavy corpus, collapse
@@ -315,21 +325,70 @@ object Dedup {
       df: DataFrame,
       idCol: String,
       contentCol: String,
+      maxHamming: Int = 3): DataFrame =
+    simhashPairs(df, idCol, contentCol, maxHamming, blocks = 4, k = 1)
+
+  /** SimHash near-dup pairs via MULTI-BLOCK banding (the Manku/Jain/
+    * Das Sarma web-dedup construction) — the scale path that replaces
+    * [[simhashDup]]'s single-chunk candidates once the corpus outgrows
+    * the chunk width. Split the 60-bit signature into 6 blocks of 10
+    * bits; two signatures within Hamming distance `maxHamming` differ
+    * in at most `maxHamming` blocks, so they AGREE on some
+    * k = 6 - maxHamming of them (pigeonhole) — full recall by
+    * construction. Candidates come from an equi-join per k-subset of
+    * blocks on the CONCATENATED k-block value: C(6, k) tables of n rows
+    * each (a constant fan-out), with a key of 10·k bits, so expected
+    * random collisions are C(6,k) · n² / 2^(10k) — LINEAR-ish in n for
+    * 10·k ≳ log2(n), where [[simhashDup]]'s fixed 15-bit key goes
+    * quadratic past ~10^5 docs (measured at 500k docs: 3.5 GB sorter
+    * spill, 42 s GC, 608 s task time for a 1 s-task-time x1; the
+    * blocked form's candidates stay output-sized). Same verification
+    * and output schema: (id_a, id_b, hamming), hamming <= maxHamming,
+    * id_a < id_b, each pair once. For equal maxHamming the output
+    * EQUALS simhashDup's (both are recall-complete, both verify
+    * exactly) — q199's oracle pins that against an all-pairs DuckDB
+    * mirror. Six blocks is the measured choice: 8 blocks cut
+    * candidates but cost ~3x the wall at 5M docs, and only pay past
+    * ~5·10^7 docs (SCALE.md, "The banding knob, measured"). */
+  def simhashDupBlocked(
+      df: DataFrame,
+      idCol: String,
+      contentCol: String,
       maxHamming: Int = 3): DataFrame = {
+    require(maxHamming >= 0 && maxHamming < 6,
+      s"simhashDupBlocked needs 0 <= maxHamming < 6 (got $maxHamming)")
+    simhashPairs(df, idCol, contentCol, maxHamming, blocks = 6,
+      k = 6 - maxHamming)
+  }
+
+  /** The SimHash pair core of [[simhashDup]] and [[simhashDupBlocked]]:
+    * band the signature into `blocks` blocks, make one candidate key
+    * per k-subset of them, self-join on the key, verify
+    * bit_count(xor) <= maxHamming. EAGER: returns a localCheckpoint. */
+  private def simhashPairs(
+      df: DataFrame,
+      idCol: String,
+      contentCol: String,
+      maxHamming: Int,
+      blocks: Int,
+      k: Int): DataFrame = {
     // The signature table (id + one long — 16 bytes/doc) feeds BOTH
-    // sides of the chunk self-join; without materialization the whole
-    // tokenize + 60-sum aggregation runs twice (no ReusedExchange
+    // sides of the banding self-join; without materialization the
+    // whole tokenize + signature pass runs twice (no ReusedExchange
     // across the aliased subtrees, verified via Explain).
     val sh = simhash(df, idCol, contentCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val chunked = sh.withColumn("chunk",
-        explode(array((0 until 4).map(i => struct(
-          lit(i).as("chunk_id"),
-          shiftright(col("simhash"), i * 15).bitwiseAND(0x7FFF)
-            .as("chunk_val"))): _*)))
-      val pairs = chunked.as("l").join(chunked.as("r"),
-        col("l.chunk") === col("r.chunk") && col("l.id") < col("r.id"))
+      // The banding self-join is hinted shuffle_hash: at the 5M-doc deep
+      // point the keyed frame is C(b,k)·n rows (280M at b=8) and the
+      // default SMJ SORTS both sides — measured 17.7 GB memory / 13.6 GB
+      // disk spill and 205 s wall for a join whose output is only ~13M
+      // candidates. A hash join builds one ~40-byte-row partition of one
+      // side (bounded by AQE partition sizing) and streams the other:
+      // no sort, no spill. Same fix class as prefixFilterPairs' verify.
+      val keyed = blockedKeyed(sh, blocks, k).hint("shuffle_hash")
+      val pairs = keyed.as("l").join(keyed.as("r"),
+        col("l.ck") === col("r.ck") && col("l.id") < col("r.id"))
         .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
           col("l.simhash").as("h_a"), col("r.simhash").as("h_b")).distinct()
         .withColumn("hamming", expr("bit_count(h_a ^ h_b)").cast(LongType))
@@ -341,161 +400,25 @@ object Dedup {
     } finally sh.unpersist()
   }
 
-  /** SimHash near-dup pairs via MULTI-BLOCK banding (the Manku/Jain/
-    * Das Sarma web-dedup construction) — the scale path that replaces
-    * [[simhashDup]]'s single-chunk candidates once the corpus outgrows
-    * the chunk width. Split the 60-bit signature into `blocks` blocks;
-    * two signatures within Hamming distance `maxHamming` differ in at
-    * most `maxHamming` blocks, so they AGREE on some
-    * k = blocks - maxHamming of them (pigeonhole) — full recall by
-    * construction. Candidates come from an equi-join per k-subset of
-    * blocks on the CONCATENATED k-block value: C(blocks, k) tables of
-    * n rows each (a constant fan-out), with a key of
-    * ~60·k/blocks bits, so expected random collisions are
-    * C(b,k) · n² / 2^(60k/b) — LINEAR-ish in n for k·60/b ≳ log2(n),
-    * where [[simhashDup]]'s fixed 15-bit key goes quadratic past
-    * ~10^5 docs (measured at 500k docs: 3.5 GB sorter spill, 42 s GC,
-    * 608 s task time for a 1 s-task-time x1; the blocked form's
-    * candidates stay output-sized). Same verification and output
-    * schema: (id_a, id_b, hamming), hamming <= maxHamming, id_a <
-    * id_b, each pair once. For equal maxHamming the output EQUALS
-    * simhashDup's (both are recall-complete, both verify exactly) —
-    * q199's oracle pins that against an all-pairs DuckDB mirror. */
-  def simhashDupBlocked(
-      df: DataFrame,
-      idCol: String,
-      contentCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6): DataFrame = {
-    val sh = simhash(df, idCol, contentCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // The banding self-join is hinted shuffle_hash: at the 5M-doc deep
-      // point the keyed frame is C(b,k)·n rows (280M at b=8) and the
-      // default SMJ SORTS both sides — measured 17.7 GB memory / 13.6 GB
-      // disk spill and 205 s wall for a join whose output is only ~13M
-      // candidates. A hash join builds one ~40-byte-row partition of one
-      // side (bounded by AQE partition sizing) and streams the other:
-      // no sort, no spill. Same fix class as prefixFilterPairs' verify.
-      val keyed = blockedKeyed(sh, maxHamming, blocks).hint("shuffle_hash")
-      val pairs = keyed.as("l").join(keyed.as("r"),
-        col("l.ck") === col("r.ck") && col("l.id") < col("r.id"))
-        .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-          col("l.simhash").as("h_a"), col("r.simhash").as("h_b")).distinct()
-        .withColumn("hamming", expr("bit_count(h_a ^ h_b)").cast(LongType))
-        .filter(col("hamming") <= maxHamming)
-        .select(col("id_a"), col("id_b"), col("hamming"))
-      pairs.localCheckpoint()
-    } finally sh.unpersist()
-  }
-
   /** The multi-block banding key frame: one (id, simhash, ck) row per
-    * k-subset of blocks, ck = (combo_id, concatenated k-block value).
-    * Shared by [[simhashDupBlocked]] and the candidate-count probe so
-    * the probe measures exactly the operator's join keys. */
-  private def blockedKeyed(sh: DataFrame, maxHamming: Int,
-      blocks: Int): DataFrame = {
-    val bits = 60
-    require(maxHamming >= 0 && blocks > maxHamming && blocks <= bits,
-      s"need maxHamming < blocks <= $bits (got h=$maxHamming b=$blocks)")
-    val k = blocks - maxHamming
-    // block widths: 60/blocks each, the first (60 % blocks) one wider
-    val base = bits / blocks
-    val widths = (0 until blocks).map(i => base + (if (i < bits % blocks) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
+    * k-subset of `blocks` blocks, ck = (combo_id, concatenated k-block
+    * value). */
+  private def blockedKeyed(sh: DataFrame, blocks: Int, k: Int): DataFrame = {
+    val width = 60 / blocks // 4 and 6 blocks both divide 60 bits
     def blockVal(b: Int) =
-      shiftright(col("simhash"), offsets(b)).bitwiseAND((1L << widths(b)) - 1)
+      shiftright(col("simhash"), b * width).bitwiseAND((1L << width) - 1)
     // one key per k-subset: selected block values packed into one long
     // (total selected width <= 60 bits)
     val combos = (0 until blocks).combinations(k).toSeq
     val keys = combos.zipWithIndex.map { case (sel, ci) =>
-      val packed = sel.foldLeft((lit(0L), 0)) { case ((acc, shift), b) =>
-        (acc + (blockVal(b) * lit(1L << shift)), shift + widths(b))
-      }._1
+      val packed = sel.zipWithIndex.foldLeft(lit(0L)) { case (acc, (b, j)) =>
+        acc + (blockVal(b) * lit(1L << (j * width)))
+      }
       struct(lit(ci).as("combo_id"), packed.cast(LongType).as("combo_key"))
     }
     sh.withColumn("ck", explode(array(keys: _*)))
   }
 
-  /** Banding-efficiency probe for [[simhashDupBlocked]]'s (blocks,
-    * maxHamming) knob — the "widen the key as n grows" claim the 100 TB
-    * story rides on, measured instead of argued. Returns ONE row:
-    * (n_docs, n_tables=C(b,k), key_bits≈60k/b, raw_candidates =
-    * equi-join output across all combo tables BEFORE pair-dedup — the
-    * rows the shuffle and verifier actually carry, expected
-    * C(b,k)·n²/2^(60k/b) random collisions plus true near-dup
-    * structure, and the quantity that goes quadratic when the key is
-    * too narrow for the corpus; distinct_pairs = after id-pair dedup).
-    * Same signature pass and join keys as the operator (shared
-    * [[blockedKeyed]]); counting replaces verification. */
-  def simhashBlockedCandidateProfile(
-      df: DataFrame,
-      idCol: String,
-      contentCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6): DataFrame = {
-    val k = blocks - maxHamming
-    val keyBits = 60 * k / blocks
-    val nTables = (0 until blocks).combinations(k).size
-    val sh = simhash(df, idCol, contentCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = sh.count()
-      // same shuffle_hash rationale as the operator's own banding join
-      val keyed = blockedKeyed(sh, maxHamming, blocks).hint("shuffle_hash")
-      val joined = keyed.as("l").join(keyed.as("r"),
-        col("l.ck") === col("r.ck") && col("l.id") < col("r.id"))
-        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      val counts = joined.agg(
-        count(lit(1)).as("raw_candidates"),
-        count_distinct(struct(col("id_a"), col("id_b"))).as("distinct_pairs"))
-      counts.select(
-        lit(n).as("n_docs"), lit(blocks).as("blocks"),
-        lit(maxHamming).as("max_hamming"), lit(nTables).as("n_tables"),
-        lit(keyBits).as("key_bits"),
-        col("raw_candidates"), col("distinct_pairs")).localCheckpoint()
-    } finally sh.unpersist()
-  }
-
-  /** Direct n-gram Jaccard similarity over a bounded id set (exact,
-    * quadratic — the verification primitive; use minhashLsh for scale). */
-  /** Prefix-filtering set-similarity join (the PPJoin family, Xiao et
-    * al.): exact token-set Jaccard >= thresholdBp/10000 with NO false
-    * negatives — the scale path when LSH's probabilistic recall isn't
-    * acceptable. Every token set is sorted by one global order (document
-    * frequency ascending, rarest first); a pair can reach the threshold
-    * only if the first `sz - ceil(t*sz) + 1` tokens of each side share
-    * an element, so candidates come from an equi-join on PREFIX tokens
-    * only — rare tokens by construction, which keeps the per-token
-    * candidate buckets small. The candidate join also carries the
-    * LENGTH filter (J >= t forces t·max(sz) <= min(sz)) — pure
-    * pruning, no false negatives. Verification is exact integer
-    * Jaccard on the full sets. Shuffles: DF count, two per-id windows,
-    * the prefix equi-join, and the candidate-verify joins — all keyed,
-    * no cross join anywhere.
-    *
-    * `shingle` > 1 swaps the set elements from words to word-n-gram
-    * shingles hashed to longs (xxhash64 — codegen'd, and the verify
-    * arrays shrink from strings to 8-byte longs). This is the form a
-    * near-dup corpus needs: on a corpus whose WORD vocabulary is tiny
-    * relative to n (this repo's synthetic docs: 31 words), every
-    * word's document frequency is Θ(n), the prefix inverted lists are
-    * corpus-sized, and — worse — random word-level Jaccard sits near
-    * the threshold, so the TRUE output is Θ(n²): no exact algorithm
-    * can be subquadratic on that shape. Shingling restores the regime
-    * prefix filtering is built for (vocab grows with the corpus, df
-    * per shingle small, output = genuine near-dups). Results equal the
-    * string-shingle form modulo xxhash64 collisions (~|vocab|²/2⁶⁴ —
-    * q202's all-pairs string-based DuckDB oracle would hash-mismatch
-    * on any collision).
-    *
-    * EAGER: construction runs Spark jobs (a sizing aggregate over the
-    * persisted token-set table that also picks the verify-join
-    * strategy, then the full pipeline into a `localCheckpoint`).
-    * Callers get a materialized, lineage-free result — downstream
-    * filters do NOT prune work that already ran. Same contract as
-    * [[simhashDupBlocked]]; motivated by the persist lifecycle (the
-    * doc-count-sized cache must be released before returning). */
   /** Byte-estimate gate for prefixFilterPairs' verify-join strategy:
     * BOTH renamed doc-side frames broadcast in full, so the gate
     * bounds the estimated serialized size of the token-set table
@@ -614,6 +537,43 @@ object Dedup {
     } finally lists.unpersist()
   }
 
+  /** Prefix-filtering set-similarity join (the PPJoin family, Xiao et
+    * al.): exact token-set Jaccard >= thresholdBp/10000 with NO false
+    * negatives — the scale path when LSH's probabilistic recall isn't
+    * acceptable. Every token set is sorted by one global order (document
+    * frequency ascending, rarest first); a pair can reach the threshold
+    * only if the first `sz - ceil(t*sz) + 1` tokens of each side share
+    * an element, so candidates come from an equi-join on PREFIX tokens
+    * only — rare tokens by construction, which keeps the per-token
+    * candidate buckets small. The candidate join also carries the
+    * LENGTH filter (J >= t forces t·max(sz) <= min(sz)) — pure
+    * pruning, no false negatives. Verification is exact integer
+    * Jaccard on the full sets. Shuffles: DF count, two per-id windows,
+    * the prefix equi-join, and the candidate-verify joins — all keyed,
+    * no cross join anywhere.
+    *
+    * `shingle` > 1 swaps the set elements from words to word-n-gram
+    * shingles hashed to longs (xxhash64 — codegen'd, and the verify
+    * arrays shrink from strings to 8-byte longs). This is the form a
+    * near-dup corpus needs: on a corpus whose WORD vocabulary is tiny
+    * relative to n (this repo's synthetic docs: 31 words), every
+    * word's document frequency is Θ(n), the prefix inverted lists are
+    * corpus-sized, and — worse — random word-level Jaccard sits near
+    * the threshold, so the TRUE output is Θ(n²): no exact algorithm
+    * can be subquadratic on that shape. Shingling restores the regime
+    * prefix filtering is built for (vocab grows with the corpus, df
+    * per shingle small, output = genuine near-dups). Results equal the
+    * string-shingle form modulo xxhash64 collisions (~|vocab|²/2⁶⁴ —
+    * q202's all-pairs string-based DuckDB oracle would hash-mismatch
+    * on any collision).
+    *
+    * EAGER: construction runs Spark jobs (a sizing aggregate over the
+    * persisted token-set table that also picks the verify-join
+    * strategy, then the full pipeline into a `localCheckpoint`).
+    * Callers get a materialized, lineage-free result — downstream
+    * filters do NOT prune work that already ran. Same contract as
+    * [[simhashDupBlocked]]; motivated by the persist lifecycle (the
+    * doc-count-sized cache must be released before returning). */
   def prefixFilterPairs(
       df: DataFrame,
       idCol: String,
@@ -904,23 +864,21 @@ object Dedup {
     * `crossJoin`: all pairs, no candidate pruning). It exists to verify
     * the scale paths (`prefixFilterPairs`, `minhashLsh`) on SMALL
     * bounded sets, never to run on a corpus: at 1M docs it is 5×10^11
-    * pairs. Guarded by an eager count against `maxRows` (one cheap
-    * aggregate job) so a misrouted large input fails loudly instead of
-    * melting the cluster; raise the cap explicitly if a larger exact
-    * check is really intended. */
+    * pairs. Guarded by an eager count against a 10 000-row cap (one
+    * cheap aggregate job) so a misrouted large input fails loudly
+    * instead of melting the cluster. */
   def ngramJaccardPairs(
       df: DataFrame,
       idCol: String,
       contentCol: String,
       n: Int = 2,
-      threshold: Double = 0.2,
-      maxRows: Long = 10000L): DataFrame = {
+      threshold: Double = 0.2): DataFrame = {
     val nRows = df.count()
-    require(nRows <= maxRows,
+    require(nRows <= ngramMaxRows,
       s"ngramJaccardPairs is an all-pairs exact-verification primitive; " +
-        s"got $nRows rows (> $maxRows). Use prefixFilterPairs or " +
-        s"minhashLsh for corpus-scale near-dup detection, or raise " +
-        s"maxRows explicitly for a deliberate larger exact check.")
+        s"got $nRows rows (> $ngramMaxRows). Use prefixFilterPairs or " +
+        s"minhashLsh for corpus-scale near-dup detection, or check a " +
+        s"bounded slice of the corpus.")
     // Tokens staged to a column before the shingle lambda (shinglesOf
     // scaladoc): the inlined shingles(content) form re-split the text
     // once per shingle — O(tokens^2) splits per row (r20).
@@ -937,6 +895,12 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
+  /** Row cap of [[ngramJaccardPairs]]' all-pairs check (5×10^7 pairs). */
+  private val ngramMaxRows = 10000L
+
+  /** Round cap of the distributed label propagation. */
+  private val ccMaxIter = 30
+
   /** Connected components over an undirected pair list (id_a, id_b):
     * resolves near-duplicate PAIRS into duplicate CLUSTERS, labelling
     * every member with the minimum reachable id (the canonical doc).
@@ -948,7 +912,6 @@ object Dedup {
     * (no exponential plan growth at scale). */
   def connectedComponents(
       pairs: DataFrame,
-      maxIter: Int = 30,
       driverEdgeThreshold: Long = 1000000L): DataFrame = {
     // Duplicate-pair graphs are SPARSE relative to the corpus (LSH
     // candidates that survived verification). Up to ~1M edges a
@@ -994,15 +957,13 @@ object Dedup {
     // The distributed result is localCheckpoint-ed inside the loop, so
     // its plan no longer references the edge list — safe for the finally
     // to release it (and a thrown job no longer leaks the cache either).
-    connectedComponentsDistributed(materialized, maxIter)
+    connectedComponentsDistributed(materialized)
     } finally materialized.unpersist()
   }
 
   /** Distributed fallback: iterative min-label propagation with path
     * compression, used when the pair graph exceeds driver capacity. */
-  def connectedComponentsDistributed(
-      pairs: DataFrame,
-      maxIter: Int = 30): DataFrame = {
+  def connectedComponentsDistributed(pairs: DataFrame): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sc = pairs.sparkSession.sparkContext
 
@@ -1037,7 +998,7 @@ object Dedup {
     // lineage each round (iterative plans otherwise snowball), and the
     // change flag is computed in-row so convergence costs one cheap
     // count over the checkpointed frame.
-    while (!converged && i < maxIter) {
+    while (!converged && i < ccMaxIter) {
       val nbrMin = sym.join(labels, sym("dst") === labels("id"))
         .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
       val relaxed = labels.as("l")

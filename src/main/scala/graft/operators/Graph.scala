@@ -317,8 +317,7 @@ object Graph {
   def bfsReach(
       edgesIn: DataFrame,
       seedPred: Column,
-      hops: Int = 3,
-      maxBroadcastReached: Long = 10000000L): DataFrame = {
+      hops: Int = 3): DataFrame = {
     require(hops >= 1, "hops must be >= 1")
     val owned = new Owned
     val sym = edgesIn.select(col("u").as("sn"), col("v").as("dn"))
@@ -332,12 +331,13 @@ object Graph {
     // auto-broadcasts, and every hop was silently planning a full
     // sort-merge join of the symmetric edge list against a node-sized
     // frame. Each hop's forced count is already in hand, so gate an
-    // explicit broadcast on it; past the gate the shuffle-hash hint
-    // builds on the reached side (node-sized) and streams edges.
+    // explicit broadcast on it (10M nodes); past the gate the
+    // shuffle-hash hint builds on the reached side (node-sized) and
+    // streams edges.
     def expand(r: DataFrame, rCount: Long): (DataFrame, Long) = {
       val probe = r.select(col("n").as("sn"))
       val side =
-        if (rCount <= maxBroadcastReached) broadcast(probe)
+        if (rCount <= 10000000L) broadcast(probe)
         else probe.hint("shuffle_hash")
       val nxt = owned.checkpoint(r.unionByName(
         sym.join(side, Seq("sn"))

@@ -29,7 +29,7 @@ object Ranking {
     * corpus tokens, avgdl = T/N):
     *
     *   score_t = (2N-2df+1) * 22*T*tf * SCALE
-    *             div ((2df+1) * (10*T*tf + 3*T + 9*len*N))
+    *             div ((2df+1) * (10*T*tf + 3*T + 9*len*N)),  SCALE = 10000
     *
     * — pure int64 arithmetic, summed per document as integers: no
     * float aggregation anywhere, so the result is bit-identical on any
@@ -46,8 +46,7 @@ object Ranking {
       df: DataFrame,
       idCol: String,
       contentCol: String,
-      terms: Seq[String],
-      scale: Long = 10000L): DataFrame = {
+      terms: Seq[String]): DataFrame = {
     val toks = df.select(col(idCol).as("id"),
       text.tokens(col(contentCol)).as("t"))
     val lens = toks.select(col("id"), size(col("t")).cast(LongType).as("len"))
@@ -76,7 +75,7 @@ object Ranking {
     tf.join(broadcast(dft), "w")
       .crossJoin(broadcast(totals))
       .withColumn("term_score",
-        expr(s"""(2 * n_docs - 2 * df + 1) * (22 * n_tokens * tf) * $scale
+        expr(s"""(2 * n_docs - 2 * df + 1) * (22 * n_tokens * tf) * 10000
                 | div ((2 * df + 1)
                 |      * (10 * n_tokens * tf + 3 * n_tokens + 9 * len * n_docs))
                 |""".stripMargin).cast(LongType))

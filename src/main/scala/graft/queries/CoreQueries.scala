@@ -170,7 +170,7 @@ object CoreQueries {
 
     // P7 — per-type range anomaly flag.
     "q07_range_flag" -> ((s, dir) => {
-      Transforms.rangeFlag(eventRanges, ec, "range_anomaly")(t(s, dir, "events"))
+      Transforms.rangeFlag(eventRanges, ec)(t(s, dir, "events"))
         .select(col("event_id"), col("range_anomaly"))
     }),
 
@@ -238,7 +238,7 @@ object CoreQueries {
     // A3 — population z-score anomaly counts per type (ddof=0, n>1 and
     // sigma>0 guards).
     "q10_zscore_flags" -> ((s, dir) => {
-      Transforms.zscoreFlag(3.0, ec, "zscore_anomaly")(t(s, dir, "events"))
+      Transforms.zscoreFlag(3.0, ec)(t(s, dir, "events"))
         .groupBy(col("event_type"))
         .agg(count(when(col("zscore_anomaly"), 1)).as("n_anomalies"),
           count(lit(1)).as("n_rows"))

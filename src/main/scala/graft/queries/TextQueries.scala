@@ -155,7 +155,7 @@ object TextQueries {
     // hash-mismatches.
     "q199_simhash_blocked" -> ((s, dir) => {
       Dedup.simhashDupBlocked(t(s, dir, "documents"), "doc_id", "text",
-        maxHamming = 3, blocks = 6)
+        maxHamming = 3)
     }),
 
     // Corpus vocabulary with document frequency — the vocab-building /

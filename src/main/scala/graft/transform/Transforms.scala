@@ -261,8 +261,7 @@ object Transforms {
     * (pandas NaN > 3 == False). */
   def zscoreFlag(
       threshold: Double,
-      cols: ReadingCols = ReadingCols.sensor,
-      flagCol: String = "zscore_anomaly")(df: DataFrame): DataFrame = {
+      cols: ReadingCols = ReadingCols.sensor)(df: DataFrame): DataFrame = {
     // reading_type has a handful of distinct values: a window
     // partitioned by it funnels the table through that many reducers.
     // A tiny per-type aggregate broadcast-joined back computes the same
@@ -272,26 +271,28 @@ object Transforms {
       stddev_pop(col(cols.value)).as("__sigma"),
       count(col(cols.value)).as("__n"))
     df.join(broadcast(stats), Seq(cols.typ), "left")
-      .withColumn(flagCol,
+      .withColumn("zscore_anomaly",
         when(col("__n") > 1 && col("__sigma") > 0,
           abs((col(cols.value) - col("__mu")) / col("__sigma")) > threshold)
           .otherwise(lit(false)))
       .drop("__mu", "__sigma", "__n")
   }
 
-  /** P7 — range anomaly flag: value outside the configured [min,max] for
-    * its reading type; unconfigured types never flag
-    * (reference transformation.py:304-315). */
-  def rangeFlag(
-      ranges: Map[String, ValueRange],
-      cols: ReadingCols = ReadingCols.sensor,
-      flagCol: String = "range_anomaly")(df: DataFrame): DataFrame = {
-    val flagged = ranges.foldLeft(lit(false)) { case (acc, (typ, r)) =>
+  /** The range rule: value outside the configured [min,max] for its
+    * reading type. False for unconfigured types, null for a null value
+    * of a configured type. */
+  def outOfRange(ranges: Map[String, ValueRange], cols: ReadingCols): Column =
+    ranges.foldLeft(lit(false)) { case (acc, (typ, r)) =>
       when(col(cols.typ) === typ,
         col(cols.value) < r.min || col(cols.value) > r.max).otherwise(acc)
     }
-    df.withColumn(flagCol, coalesce(flagged, lit(false)))
-  }
+
+  /** P7 — range anomaly flag: [[outOfRange]], null read as false;
+    * unconfigured types never flag (reference transformation.py:304-315). */
+  def rangeFlag(
+      ranges: Map[String, ValueRange],
+      cols: ReadingCols = ReadingCols.sensor)(df: DataFrame): DataFrame =
+    df.withColumn("range_anomaly", coalesce(outOfRange(ranges, cols), lit(false)))
 
   /** A3+P7 merged flag (reference transformation.py:285: z-score OR range). */
   def anomalyFlag(

@@ -13,6 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.{PipelineConfig, ReadingCols, ValueRange}
 import graft.model._
+import graft.transform.Transforms
 
 /** Data-quality validation suite: every DuckDB SQL query from the
   * reference's ValidationComponent (src/components/validation.py)
@@ -287,11 +288,6 @@ object Validation {
     val br = cfg.batteryRange
     val hasFlag = df.columns.contains("anomalous_reading")
     val flag = col("anomalous_reading")
-    // The pair's own type picks its range; unranged types never violate.
-    val outOfRange = cfg.ranges.foldLeft(lit(false)) { case (other, (typ, r)) =>
-      when(col(c.typ) === typ, col(c.value) < r.min || col(c.value) > r.max)
-        .otherwise(other)
-    }
     val pairs = df.groupBy(col(c.id), col(c.typ))
       .agg(
         count(lit(1)),
@@ -299,7 +295,7 @@ object Validation {
         count(when(col(c.value).isNull, 1)),
         count(when(col(c.battery).isNull, 1)),
         count(when(col(c.battery) < br.min || col(c.battery) > br.max, 1)),
-        count(when(outOfRange, 1)),
+        count(when(Transforms.outOfRange(cfg.ranges, c), 1)),
         min(col(c.ts)),
         max(col(c.ts)),
         sum(col(c.value).cast("double")),

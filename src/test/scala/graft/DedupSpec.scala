@@ -9,6 +9,13 @@ class DedupSpec extends SparkSpec {
 
   private def docs(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
 
+  private lazy val sfDocs = graft.queries.CoreQueries.t(
+    spark, "/root/testdata/sf0.001", "documents")
+
+  /** (id_a, id_b, hamming) rows, sorted. */
+  private def key(rows: Array[org.apache.spark.sql.Row]) =
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(identity).toSeq
+
   test("exactByHash groups identical content, keeps min id") {
     val df = docs(
       (1L, "same text"), (2L, "same text"), (3L, "other text"))
@@ -55,13 +62,10 @@ class DedupSpec extends SparkSpec {
 
   test("simhashDupBlocked == simhashDup at equal maxHamming (both " +
     "recall-complete), and == brute-force hamming pairs on real docs") {
-    val df = graft.queries.CoreQueries.t(
-      spark, "/root/testdata/sf0.001", "documents")
-    def key(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(identity).toSeq
+    val df = sfDocs
     for (h <- Seq(0, 3)) {
       val blocked = key(Dedup.simhashDupBlocked(
-        df, "doc_id", "text", maxHamming = h, blocks = 6).collect())
+        df, "doc_id", "text", maxHamming = h).collect())
       val legacy = key(Dedup.simhashDup(
         df, "doc_id", "text", maxHamming = h).collect())
       assert(blocked === legacy, s"h=$h")
@@ -77,9 +81,49 @@ class DedupSpec extends SparkSpec {
     }
     // invalid configs fail loudly
     intercept[IllegalArgumentException] {
-      Dedup.simhashDupBlocked(df, "doc_id", "text",
-        maxHamming = 6, blocks = 6)
+      Dedup.simhashDupBlocked(df, "doc_id", "text", maxHamming = 6)
     }
+  }
+
+  test("simhashDup at maxHamming 16 == brute-force pairs sharing a " +
+    "15-bit chunk within hamming 16") {
+    val got = key(Dedup.simhashDup(
+      sfDocs, "doc_id", "text", maxHamming = 16).collect())
+    val sh = Dedup.simhash(sfDocs, "doc_id", "text")
+    val a = sh.select(col("id").as("id_a"), col("simhash").as("h_a"))
+    val b = sh.select(col("id").as("id_b"), col("simhash").as("h_b"))
+    def chunk(h: String, i: Int) = shiftright(col(h), i * 15).bitwiseAND(0x7FFF)
+    val sharesChunk = (0 until 4).map(i => chunk("h_a", i) === chunk("h_b", i))
+      .reduce(_ || _)
+    val brute = key(a.join(b, col("id_a") < col("id_b") && sharesChunk)
+      .withColumn("hamming", expr("bit_count(h_a ^ h_b)").cast("long"))
+      .filter(col("hamming") <= 16)
+      .select(col("id_a"), col("id_b"), col("hamming")).collect())
+    assert(brute.nonEmpty)
+    assert(got === brute)
+  }
+
+  test("dedupAgainst bands like minhashLsh: near_dup match_id is the " +
+    "smallest corpus partner minhashLsh finds, unique docs have none") {
+    val corpus = sfDocs.filter(col("doc_id") < 300)
+    val incoming = sfDocs.filter(col("doc_id") >= 300 && col("doc_id") < 500)
+    val (k, bands, shingleN, threshold) = (8, 4, 1, 0.9)
+    val status = Dedup.dedupAgainst(corpus, incoming, "doc_id", "text",
+      k = k, bands = bands, shingleN = shingleN, threshold = threshold)
+      .collect().map(r => r.getLong(0) ->
+        ((r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2)))).toMap
+    // corpus ids < incoming ids, so every corpus partner is an id_a
+    val partner = Dedup.minhashLsh(corpus.unionByName(incoming),
+      "doc_id", "text", k = k, bands = bands, shingleN = shingleN,
+      threshold = threshold)
+      .filter(col("id_a") < 300 && col("id_b") >= 300)
+      .groupBy(col("id_b")).agg(min(col("id_a")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val near = status.collect { case (id, ("near_dup", m)) => id -> m }
+    assert(near.nonEmpty)
+    near.foreach { case (id, m) => assert(partner.get(id) === Some(m), s"id=$id") }
+    status.collect { case (id, ("unique", _)) => id }
+      .foreach(id => assert(!partner.contains(id), s"id=$id"))
   }
 
   test("dedupAgainst classifies incoming docs vs a corpus") {
