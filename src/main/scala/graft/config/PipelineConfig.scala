@@ -17,23 +17,13 @@ final case class Calibration(multiplier: Double, offset: Double)
   * `mode` is `overwrite` (dynamic: only the partitions a batch touches
   * are replaced) or `append`; the sink rejects any other value.
   * The in-file row order is not a setting: the sink derives it
-  * (partition or bucket columns, then the reading key of
+  * (the partition columns, then the reading key of
   * `PipelineConfig.cols`, then every other column), so a file's bytes
-  * depend only on its rows.
-  * `bucketBy`/`bucketCount` (extension, default off) additionally
-  * bucket the curated output by the given key — the pipeline's own
-  * output then inherits the co-located-join property (every downstream
-  * join/aggregation keyed on the bucket columns reads matching buckets
-  * with no exchange, see graft.operators.Bucketed). Bucketed output is
-  * catalog-backed (Loader registers a table over the same path), and
-  * overwrite mode replaces touched partitions dynamically via
-  * insertInto. */
+  * depend only on its rows. */
 final case class WriteConfig(
     compression: String = "zstd",
     partitionBy: Seq[String] = Seq("date", "sensor_id"),
-    mode: String = "overwrite",
-    bucketBy: Seq[String] = Nil,
-    bucketCount: Int = 0)
+    mode: String = "overwrite")
 
 /** Transformation stage knobs. Reference: config/default.yaml:57-60. */
 final case class TransformConfig(
@@ -188,15 +178,11 @@ object PipelineConfig {
       }.toMap)
     }
     objOf("write").foreach { w =>
-      onlyKnownKeys(w, "write",
-        "compression", "partition_by", "mode", "bucket_by",
-        "bucket_count")
+      onlyKnownKeys(w, "write", "compression", "partition_by", "mode")
       var wc = cfg.write
       str(w, "compression").foreach(v => wc = wc.copy(compression = v))
       list(w, "partition_by").foreach(v => wc = wc.copy(partitionBy = v))
       str(w, "mode").foreach(v => wc = wc.copy(mode = v))
-      list(w, "bucket_by").foreach(v => wc = wc.copy(bucketBy = v))
-      str(w, "bucket_count").foreach(v => wc = wc.copy(bucketCount = v.toInt))
       cfg = cfg.copy(write = wc)
     }
     objOf("transformation").foreach { t =>

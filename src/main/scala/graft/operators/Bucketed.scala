@@ -11,11 +11,8 @@ import org.apache.spark.sql.functions.col
   * equi-join or aggregation keyed on the bucket columns reads matching
   * buckets directly — zero exchange on either side, and zero sort when
   * each bucket is a single file (Spark's v1 bucketed scan only trusts
-  * the written sort order in that case, so [[ensure]] repartitions by
-  * the bucket expression before writing: `repartition(n, cols)` and the
-  * bucket-id assignment use the same `Pmod(Murmur3Hash(cols), n)`
-  * routing, so every write task holds exactly one bucket and emits
-  * exactly one file).
+  * the written sort order in that case; [[save]] is the one writer that
+  * guarantees it).
   *
   * At 100 TB this turns the nightly "join the 40 TB fact against the
   * 20 TB fact" from two full shuffles PER QUERY into one shuffle PER
@@ -119,6 +116,26 @@ object Bucketed {
             .foreach(p => java.nio.file.Files.deleteIfExists(p)))
     } catch { case _: Exception => () }
 
+  /** The one bucketed write: `df` into catalog table `name`, bucketed
+    * and sorted by `bucketCols` (hive-partitioned by `partitionBy` when
+    * given), at `path` or, for an append, the table's own location.
+    * Repartitioning by the bucket expression first is the rule every
+    * layout here relies on: `repartition(n, cols)` and the bucket-id
+    * assignment use the same `Pmod(Murmur3Hash(cols), n)` routing, so
+    * each write task holds exactly one bucket and writes exactly one
+    * file per bucket (per partition directory). */
+  private[operators] def save(df: DataFrame, name: String,
+      bucketCols: Seq[String], nBuckets: Int, mode: String,
+      path: Option[String] = None, partitionBy: Seq[String] = Nil): Unit = {
+    val w = df.repartition(nBuckets, bucketCols.map(col): _*)
+      .write.format("parquet")
+      .partitionBy(partitionBy: _*)
+      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
+      .sortBy(bucketCols.head, bucketCols.tail: _*)
+      .mode(mode)
+    path.fold(w)(w.option("path", _)).saveAsTable(name)
+  }
+
   /** Materialize (once per session) a bucketed, per-bucket-sorted copy
     * of `src` and return it as a catalog-backed DataFrame. Memoized via
     * the session catalog, so the pre-paid shuffle+write happens on the
@@ -169,13 +186,7 @@ object Bucketed {
               .filter(_.getFileName.toString.startsWith(s"$name-g"))
               .toSeq.foreach(p => deleteDir(p.toString)))
         }
-        src.repartition(nBuckets, bucketCols.map(col): _*)
-          .write.format("parquet")
-          .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-          .sortBy(bucketCols.head, bucketCols.tail: _*)
-          .option("path", loc)
-          .mode("overwrite")
-          .saveAsTable(name)
+        save(src, name, bucketCols, nBuckets, "overwrite", Some(loc))
         tableLoc(name) = loc
       }
       s.table(name)
@@ -209,12 +220,7 @@ object Bucketed {
           "source dir; batches appended by a PREVIOUS session are " +
           "discarded — this table is a session-scoped derived cache, " +
           "not primary storage)")
-      batch.repartition(nBuckets, bucketCols.map(col): _*)
-        .write.format("parquet")
-        .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
-        .mode("append")
-        .saveAsTable(name)
+      save(batch, name, bucketCols, nBuckets, "append")
       s.table(name)
     }
 
@@ -262,13 +268,7 @@ object Bucketed {
       val snapshot = s.read.parquet(loc)
       s.sql(s"DROP TABLE `$name`")
       val newLoc = s"$storageRoot/$name-g${compactGen.incrementAndGet()}"
-      snapshot.repartition(nBuckets, bucketCols.map(col): _*)
-        .write.format("parquet")
-        .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
-        .option("path", newLoc)
-        .mode("overwrite")
-        .saveAsTable(name)
+      save(snapshot, name, bucketCols, nBuckets, "overwrite", Some(newLoc))
       tableLoc(name) = newLoc
       deleteDir(loc)
       s.table(name)

@@ -84,8 +84,10 @@ object Partitioned {
     * order is NOT trusted on read here (each bucket spans one file per
     * selected partition directory, and Spark only trusts single-file
     * buckets), so downstream SMJs re-sort — exchange elimination is
-    * the part that matters at scale. Same memoization/single-writer
-    * contract as [[ensure]].
+    * the part that matters at scale. Writes through [[Bucketed.save]],
+    * so each partition directory holds one file per bucket. Same
+    * memoization/single-writer contract as [[ensure]]; q197 (events by
+    * day) and q201 (the curated events by local date) land here.
     */
   def ensureBucketed(s: SparkSession, dir: String, table: String,
       partCol: String, bucketCols: Seq[String], nBuckets: Int)(
@@ -95,15 +97,8 @@ object Partitioned {
     val name = tableName(dir, table,
       s"${partCol}_${bucketCols.mkString("_")}_${nBuckets}b")
     if (!s.catalog.tableExists(name)) {
-      src.repartition(nBuckets, bucketCols.map(
-          org.apache.spark.sql.functions.col): _*)
-        .write.format("parquet")
-        .partitionBy(partCol)
-        .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
-        .option("path", s"$storageRoot/$name")
-        .mode("overwrite")
-        .saveAsTable(name)
+      Bucketed.save(src, name, bucketCols, nBuckets, "overwrite",
+        Some(s"$storageRoot/$name"), Seq(partCol))
     }
     s.table(name)
   }

@@ -629,62 +629,41 @@ object RelationalQueries {
           count(lit(1)).as("n_lineitems"))
     }),
 
-    // The curated PIPELINE output through the bucketed sink, end to
-    // end: transform events (tz shift + local-date derivation — the
-    // q06 semantics), land them via Loader.write with
-    // write.bucket_by=user_id (partitioned by date, bucketed by the
-    // key downstream work joins/groups on), read back THROUGH THE
-    // CATALOG TABLE (readBackBucketed — the bare path read sees the
-    // same rows but no bucket metadata), and aggregate on the bucket
-    // key. The oracle computes the same aggregate over the SOURCE
-    // table — proving the bucketed landing is answer-invisible — and
-    // LoaderSpec asserts the aggregation plan carries no exchange (the
-    // shuffle was pre-paid by the one load-time repartition). Fresh
-    // slate per run (drop table + dir) so file counts and the
-    // create-path marker are deterministic.
+    // The curated pipeline output in the lakehouse layout, end to end:
+    // transform events (tz shift + local-date derivation — the q06
+    // semantics), land them partitioned by date and bucketed by the key
+    // downstream work joins/groups on (Partitioned.ensureBucketed, the
+    // q197 layout), read back through the catalog table (a bare path
+    // read sees the same rows but no bucket metadata), and aggregate on
+    // the bucket key. The oracle computes the same aggregate over the
+    // SOURCE table — the bucketed landing is answer-invisible — and
+    // PartitionedSpec asserts the aggregation plan carries no exchange
+    // (the shuffle was pre-paid by the one load-time repartition).
     "q201_curated_bucketed" -> ((s, dir) => {
-      import graft.config.{PipelineConfig, ReadingCols}
-      import graft.load.Loader
+      import graft.config.ReadingCols
+      import graft.operators.{Bucketed, Partitioned}
       import graft.transform.Transforms
       val ec = ReadingCols.events
-      val outPath =
-        s"${System.getProperty("java.io.tmpdir")}/graft-curated-" +
-          s"${System.getProperty("user.name", "anon")}-" +
-          Integer.toHexString(scala.util.hashing.MurmurHash3
-            .stringHash(dir) & 0x7fffffff)
-      val name = Loader.curatedTableName(outPath)
-      if (s.catalog.tableExists(name)) s.sql(s"DROP TABLE `$name`")
-      val root = java.nio.file.Paths.get(outPath)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        scala.util.Using.resource(java.nio.file.Files.walk(root))(
-          _.iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p)))
-      }
       // bucket count derives from the source bytes (8 at sf0.1 — a
       // fixed 32 times the 31 date partitions put one run at ~1000
       // sub-MB files, and the writer/commit/readback overhead of those
       // WAS the query's wall; at scale the same formula grows the
       // count with the data). Scale policy: Bucketed.bucketCountFor.
-      val nb = graft.operators.Bucketed.bucketCountFor(
-        graft.operators.Bucketed.sourceBytes(s"$dir/events.parquet"))
-      val cfg = PipelineConfig.default.copy(
-        cols = ec,
-        write = PipelineConfig.default.write.copy(
-          partitionBy = Seq("date"),
-          bucketBy = Seq("user_id"), bucketCount = nb))
-      val curated = Transforms.deriveDate(ec)(
-        Transforms.shiftToLocal(330, ec)(t(s, dir, "events")))
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"), col("date"))
-      Loader.write(cfg, outPath)(curated)
-      Loader.readBackBucketed(s, outPath)
+      val nb = Bucketed.bucketCountFor(
+        Bucketed.sourceBytes(s"$dir/events.parquet"))
+      Partitioned.ensureBucketed(
+        s, dir, "events_curated", "date", Seq("user_id"), nb)(
+        Transforms.deriveDate(ec)(
+          Transforms.shiftToLocal(330, ec)(t(s, dir, "events")))
+          .select(col("event_id"), col("ts"), col("user_id"),
+            col("event_type"), col("value"),
+            // the hive partition value as its yyyy-MM-dd string:
+            // last_date stays a string, and max over it is chronological
+            col("date").cast("string").as("date")))
         .groupBy(col("user_id"))
         .agg(
           count(lit(1)).as("n_readings"),
           exact.sumExact(col("value")).as("sum_value"),
-          // the partition column round-trips as a yyyy-MM-dd string
-          // (hive partition value), so max is chronological
           max(col("date")).as("last_date"))
     }))
 

@@ -9,10 +9,11 @@ import org.apache.spark.sql.types._
 import graft.Session
 import graft.ingest.RawParquet
 
-/** Structured Streaming surface. The reference is batch-only (its
-  * "incremental" is file-name checkpointing, SURVEY §2.7); this module
-  * subsumes that contract with a FileStreamSource + windowed event-time
-  * aggregation — the shape a continuously-landing 100 TB feed needs:
+/** Structured Streaming surface over the events feed. The reference
+  * is batch-only (its "incremental" is file-name checkpointing, SURVEY
+  * §2.7, which the batch pipeline keeps); this module adds a
+  * FileStreamSource + windowed event-time aggregation — the shape a
+  * continuously-landing 100 TB feed needs:
   * source files discovered incrementally (Spark's own checkpoint),
   * watermarked state bounded per window, output append-only.
   */
@@ -313,9 +314,10 @@ object Streaming {
   /** TEST/ORACLE HARNESS ONLY — NOT a production pattern. Runs a
     * streaming query over a static directory to completion and hands
     * back its full output as a DataFrame, so the oracle can verify
-    * streaming semantics against a plain batch query. Production
-    * streaming goes through `sensorIngest` (caller-managed checkpoint,
-    * real sink) — copy THAT, not this.
+    * streaming semantics against a plain batch query. A production
+    * stream keeps a durable checkpoint at a caller-managed path and
+    * writes to a real sink; copy neither this disposable checkpoint
+    * nor this drain-and-return sink.
     *
     * Sink: foreachBatch writing parquet to a tmpfs scratch dir —
     * complete mode overwrites per trigger (final emission wins),
@@ -351,8 +353,8 @@ object Streaming {
     // state on the watermark-advance no-data batch — a full state scan
     // plus session re-sort that produces exactly the rows the data batch
     // already produced. Complete-mode output never depends on watermark
-    // advancement, so skip it for this run only: append paths elsewhere
-    // (sensorIngest consumers) do need no-data batches.
+    // advancement, so skip it for this run only: append-mode streams
+    // do need no-data batches (they emit closed windows on them).
     // STATE partitions sized by source volume, not core count. Every
     // stateful task pays a fixed per-store cost (provider registration
     // is a coarse JVM-wide lock; load + commit serialize behind it), so
@@ -365,8 +367,8 @@ object Streaming {
     // session setting so a genuinely large replay (the x1000 scale
     // harness: multi-GB) keeps full parallelism. The conf is set for
     // the duration of this run only and affects only this query's
-    // fresh checkpoint — production streams (sensorIngest,
-    // caller-managed checkpoints) are untouched.
+    // fresh checkpoint — streams with caller-managed checkpoints are
+    // untouched.
     // Scratch-state I/O without checksum siblings: Hadoop's default
     // LocalFileSystem writes a .crc beside every file and verifies on
     // read — for the state-store deltas and sink files of a drain whose
@@ -377,8 +379,8 @@ object Streaming {
     // state). RawLocalFileSystem skips the checksum layer; the cache
     // bypass makes the setting take effect for THIS query's hadoopConf
     // snapshot without disturbing the session's cached FileSystem.
-    // Durable production checkpoints (sensorIngest, caller-managed
-    // paths) take the session defaults untouched.
+    // Durable checkpoints at caller-managed paths take the session
+    // defaults untouched.
     val shufKey = "spark.sql.shuffle.partitions"
     val sessionShuf =
       spark.conf.getOption(shufKey).flatMap(_.toIntOption).getOrElse(200)
@@ -401,7 +403,7 @@ object Streaming {
     // (days of watermarked keys on an unbounded feed, state ≫ heap);
     // production deployments choose it per-checkpoint via
     // spark.sql.streaming.stateStore.providerClass on their own
-    // streams (sensorIngest takes the session's setting untouched).
+    // streams (nothing here overrides the session's setting).
     // If start/processAllAvailable/stop throws, withConf still puts the
     // session confs back (append-mode consumers elsewhere NEED no-data
     // batches — leaving it off silently suppresses their watermark-close
@@ -506,8 +508,8 @@ object Streaming {
   /** Scratch directory for DISPOSABLE stream state (harness checkpoints,
     * symlink source dirs): tmpfs when the host has one, so state-store
     * commit IO never touches the disk, falling back to the regular temp
-    * root. Durable checkpoints (sensorIngest) take a caller-provided
-    * path — never this. */
+    * root. A durable checkpoint takes a caller-provided path — never
+    * this. */
   def scratchDir(prefix: String): java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (Files.isDirectory(shm) && Files.isWritable(shm))
@@ -603,60 +605,5 @@ object Streaming {
       side(rhs, "r_"),
       expr(s"l_$keyCol = r_$keyCol AND r_$tsCol >= l_$tsCol" +
         s" AND r_$tsCol <= l_$tsCol + interval $maxDelay"))
-  }
-
-  /** Lands ONE micro-batch of the sensor-ingest stream idempotently:
-    * the batch runs through the full transform pipeline and writes
-    * with `batch_id` PREPENDED to the partition columns under dynamic
-    * partition overwrite. foreachBatch is at-least-once — a crash
-    * after this write but before the streaming commit REPLAYS the
-    * batch with the SAME batchId, and the replay then overwrites
-    * exactly the `batch_id=N` partitions the orphaned attempt wrote
-    * (plain append mode would double them). Different batches never
-    * clobber each other even when they share (date, sensor_id),
-    * because batch_id leads the partition path. This is the streaming
-    * counterpart of the batch pipeline's write-then-commit contract
-    * (see IngestionSpec "crash between write and commit"). */
-  def landBatch(
-      batch: DataFrame,
-      batchId: Long,
-      cfg: graft.config.PipelineConfig,
-      outPath: String): Unit = {
-    val transformed = batch.transform(
-      graft.transform.Transforms.pipeline(cfg))
-      .withColumn("batch_id", lit(batchId))
-    val writeCfg = cfg.copy(write = cfg.write.copy(
-      mode = "overwrite",
-      partitionBy = "batch_id" +: cfg.write.partitionBy))
-    graft.load.Loader.write(writeCfg, outPath)(transformed)
-  }
-
-  /** Streaming replacement for the reference's file-name checkpoint
-    * ingestion (SURVEY §2.7): a FileStreamSource over the raw sensor
-    * directory discovers new files incrementally (Spark's own
-    * compacted source log replaces the JSON checkpoint), pushes every
-    * micro-batch through the full transform pipeline, and lands it via
-    * `landBatch` — batchId-keyed dynamic overwrite, so the
-    * at-least-once foreachBatch replay contract composes to
-    * exactly-once output. `Trigger.AvailableNow` drains what exists
-    * and stops — the exact batch-incremental contract, with
-    * streaming-grade exactly-once file tracking. */
-  def sensorIngest(
-      spark: SparkSession,
-      rawDir: String,
-      outPath: String,
-      cfg: graft.config.PipelineConfig,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val raw = spark.readStream
-      .schema(graft.model.Schemas.raw)
-      .option("maxFilesPerTrigger", "16")
-      .parquet(rawDir)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        landBatch(batch, batchId, cfg, outPath)
-      }
-      .start()
   }
 }

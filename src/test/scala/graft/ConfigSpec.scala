@@ -152,6 +152,13 @@ class ConfigSpec extends AnyFunSuite {
         |""".stripMargin).toString
     val e = intercept[IllegalArgumentException](PipelineConfig.fromYaml(f))
     assert(e.getMessage.contains("write.zorder_by"))
+    // the retired bucketed-sink keys are unknown too
+    for ((key, value) <- Seq("bucket_by" -> "\n    - sensor_id",
+        "bucket_count" -> " 4")) {
+      val r = write(s"write:\n  mode: overwrite\n  $key:$value\n").toString
+      val re = intercept[IllegalArgumentException](PipelineConfig.fromYaml(r))
+      assert(re.getMessage.contains(s"unknown key 'write.$key'"))
+    }
     val t = write(
       """transformation:
         |  outlier_handeling: remove

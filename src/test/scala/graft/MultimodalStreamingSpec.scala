@@ -417,75 +417,6 @@ class MultimodalStreamingSpec extends SparkSpec {
     Streaming.deleteRecursively(srcDir)
   }
 
-  test("streaming: sensor ingest drains raw files through transform to partitioned parquet") {
-    val raw = java.nio.file.Files.createTempDirectory("graft-sraw").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-sout").toString + "/data"
-    val cp = java.nio.file.Files.createTempDirectory("graft-scp").toString
-    Seq(
-      ("s1", java.sql.Timestamp.valueOf("2023-06-01 10:00:00"), "temperature", 25.0, 90.0),
-      ("s1", java.sql.Timestamp.valueOf("2023-06-01 11:00:00"), "temperature", 26.0, 91.0),
-      ("s2", java.sql.Timestamp.valueOf("2023-06-01 10:30:00"), "humidity", 60.0, 80.0))
-      .toDF("sensor_id", "timestamp", "reading_type", "value", "battery_level")
-      .coalesce(1).write.mode("overwrite").parquet(raw)
-
-    val cfg = graft.config.PipelineConfig.default
-    val q = Streaming.sensorIngest(spark, raw, out, cfg, cp)
-    q.awaitTermination(60000)
-    val stored = spark.read.parquet(out)
-    assert(stored.count() === 3)
-    assert(stored.columns.contains("rolling_avg_value"))
-    // partition layout batch_id=/date=/sensor_id= — batch_id leads so a
-    // foreachBatch REPLAY overwrites its own partitions idempotently
-    val dirs = new java.io.File(out).listFiles().map(_.getName)
-    assert(dirs.exists(_.startsWith("batch_id=")))
-    val batch0 = new java.io.File(s"$out/${dirs.filter(_.startsWith("batch_id=")).min}")
-      .listFiles().map(_.getName)
-    assert(batch0.exists(_.startsWith("date=2023-06-01")))
-
-    // second run with no new files ingests nothing (source log checkpoint)
-    val q2 = Streaming.sensorIngest(spark, raw, out, cfg, cp)
-    q2.awaitTermination(60000)
-    assert(spark.read.parquet(out).count() === 3)
-
-    // third run after a NEW file lands: exactly the new rows append —
-    // checkpoint recovery neither reprocesses old files nor loses new.
-    Seq(
-      ("s3", java.sql.Timestamp.valueOf("2023-06-02 09:00:00"),
-        "temperature", 22.0, 85.0),
-      ("s3", java.sql.Timestamp.valueOf("2023-06-02 10:00:00"),
-        "temperature", 23.0, 84.0))
-      .toDF("sensor_id", "timestamp", "reading_type", "value", "battery_level")
-      .coalesce(1).write.mode("append").parquet(raw)
-    val q3 = Streaming.sensorIngest(spark, raw, out, cfg, cp)
-    q3.awaitTermination(60000)
-    val after = spark.read.parquet(out)
-    assert(after.count() === 5)
-    assert(after.filter($"sensor_id" === "s3").count() === 2)
-    assert(after.filter($"sensor_id" === "s1").count() === 2) // no re-ingest
-  }
-
-  test("streaming: foreachBatch replay with the same batchId is idempotent") {
-    // foreachBatch is at-least-once: a crash between landBatch's write
-    // and the streaming commit re-delivers the SAME batch with the SAME
-    // batchId. batch_id-keyed dynamic overwrite makes the replay
-    // replace the orphaned output instead of appending to it — while a
-    // DIFFERENT batch sharing the same (date, sensor_id) partitions
-    // appends untouched alongside.
-    val out = java.nio.file.Files.createTempDirectory("graft-sland").toString + "/data"
-    val cfg = graft.config.PipelineConfig.default
-    val batch = Seq(
-      ("s1", java.sql.Timestamp.valueOf("2023-06-01 10:00:00"), "temperature", 25.0, 90.0),
-      ("s2", java.sql.Timestamp.valueOf("2023-06-01 11:00:00"), "temperature", 26.0, 91.0))
-      .toDF("sensor_id", "timestamp", "reading_type", "value", "battery_level")
-    Streaming.landBatch(batch, 0L, cfg, out)
-    val once = spark.read.parquet(out).count()
-    Streaming.landBatch(batch, 0L, cfg, out) // the replay
-    assert(spark.read.parquet(out).count() === once)
-    // a genuinely new batch into the SAME dates/sensors adds rows
-    Streaming.landBatch(batch, 1L, cfg, out)
-    assert(spark.read.parquet(out).count() === 2 * once)
-  }
-
   test("streaming: flatMapGroupsWithState running totals equal batch totals") {
     val stream = Streaming.eventsStream(spark, "/root/testdata/sf0.001/events.parquet")
     val updates = Streaming.runToCompletion(

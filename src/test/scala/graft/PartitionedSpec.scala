@@ -83,6 +83,18 @@ class PartitionedSpec extends SparkSpec {
       expected.map(_.toString).sorted.toSeq)
   }
 
+  test("q201: the curated bucketed landing aggregates on the bucket key " +
+    "with zero exchange") {
+    val q = graft.queries.RelationalQueries.queries("q201_curated_bucketed")(
+      spark, dir)
+    assert(q.count() > 0)
+    val fin = q.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(!fin.contains("Exchange"),
+      s"bucket-keyed aggregation over the pipeline's own bucketed " +
+        s"output shuffled:\n$fin")
+  }
+
   test("degraded path — dim too big to broadcast: default conf falls back " +
     "to a full scan (pruning expression degrades to true), " +
     "reuseBroadcastOnly=false restores a subquery-based prune; both correct") {
