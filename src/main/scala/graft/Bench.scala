@@ -7,8 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *
   * Output contract (what a driver/CI parses):
   *   - stdout line 1: the FULL summary JSON (total, per-query medians,
-  *     throughputs, errors, regressions, per-query detail for the heavy
-  *     tail). Also persisted to bench_summary.json.
+  *     errors, regressions, per-query detail for the heavy tail). Also persisted to bench_summary.json.
   *   - stdout line 2 (last): a compact bounded-size summary (top-15
   *     slowest + counts) that survives size-bounded tail capture.
   *   - stderr: one progress JSON line per query as it completes, so a
@@ -49,10 +48,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * Quiet-box adjudication (r17): after a full run, every machine-
   * flagged regression re-runs in a FRESH forked JVM (same options and
   * classpath, only the flagged names as args — a targeted child run
-  * skips the pipelines, never writes bench_summary.json and never
-  * re-isolates) and the verdict lands in the artifact as
-  * isolated_sec/isolated_task_ms/isolated_task_cpu_ms/
-  * isolated_os_load/isolated_verdict per flagged query plus a
+  * never writes bench_summary.json and never re-isolates) and the
+  * verdict lands in the artifact as isolated_sec/isolated_task_ms/
+  * isolated_task_cpu_ms/isolated_os_load/isolated_verdict per flagged query plus a
   * top-level "isolated" map. The recurring ambient 1.1-1.3x suite
   * drift then adjudicates from the committed artifact alone. Since
   * r19 the child's own os_load gates the verdict ("quiet" vs
@@ -63,10 +61,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * queries (q201's fresh-JVM floor is ~2x its warm in-suite time at
   * IDENTICAL cpu). GRAFT_BENCH_ISOLATE=0 opts out.
   *
-  * Also measures the full events-table transform pipeline as records/s
-  * — batch (`pipeline_e2e`) and streaming (`pipeline_stream`, append
-  * foreachBatch with Trigger.AvailableNow, bounded state) — comparable
-  * to the reference's ~20k rec/s end-to-end figure (BASELINE.md).
+  * Bench times the queries only. The pipeline's end-to-end figure
+  * (`Pipeline.run`, ingest through load) is perfbench's `sensor_batch`
+  * workload (perfbench/METRICS.md).
   */
 object Bench {
 
@@ -425,7 +422,7 @@ object Bench {
     // headline medians so a flagged regression arrives with its own
     // spill/GC evidence.
     val details = scala.collection.mutable.LinkedHashMap[String, String]()
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val all = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       var lastErr: Option[String] = None
       var lastPlanMs = 0L
       def once(): (Double, String, Long, Long, Long) = {
@@ -571,110 +568,6 @@ object Bench {
       name -> sec
     }
 
-    // Targeted runs (args non-empty) execute ONLY the named entries:
-    // the two pipeline figures are skipped unless named, so an
-    // iteration run — or the isolated adjudication child below — does
-    // not pay ~30 s of pipeline forcing for queries it never asked
-    // about.
-    def wanted(name: String): Boolean = args.isEmpty || args.contains(name)
-
-    // End-to-end transform pipeline over events (cleaning, calibration,
-    // tz shift, daily+rolling windows, z-score+range anomalies).
-    val cfg = config.PipelineConfig.default.copy(
-      cols = config.ReadingCols.events,
-      ranges = queries.CoreQueries.eventRanges,
-      calibration = queries.CoreQueries.eventCalibration)
-    // Headline number vs the reference baseline — always best-of-2.
-    // Same noop-sink forcing as the queries: under count() the
-    // pipeline's projection stages (calibration, tz shift, anomaly
-    // flags) were eliminated and only the cardinality-affecting
-    // backbone (dedup window, null drops) was timed. Records = input
-    // rows (the reference's records/s is also input-relative).
-    var nRecords = 0L
-    def pipeOnce(): Double = {
-      val input = queries.CoreQueries.t(spark, sfDir, "events")
-      nRecords = input.count()
-      val t0 = System.nanoTime()
-      input.transform(transform.Transforms.pipeline(cfg))
-        .write.mode("overwrite").format("noop").save()
-      val sec = r4((System.nanoTime() - t0) / 1e9)
-      release("pipeline_e2e")
-      sec
-    }
-    // Best-of-3 for the two headline throughput numbers: they are
-    // single figures compared across rounds (not median-of-3 detailed
-    // like the queries), and a best-of-2 still landed a 2.2x ambient
-    // sample as the round's records/s (observed between two identical
-    // noop-forced runs).
-    def guarded(name: String, run: () => Double): Double =
-      try {
-        val runs = Seq(run(), run(), run())
-        // The two pipeline figures are best-of-3 (see above) but their
-        // samples were invisible — the one artifact gap a regression
-        // adjudication would still have to re-run for. Record them.
-        details += name ->
-          s""""runs":[${runs.mkString(",")}],"min":${runs.min}"""
-        runs.min
-      } catch {
-        case e: Throwable =>
-          val m = e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("").take(200)
-          errors += name -> m
-          progress(s"""{"query":"$name","sec":-1.0,"err":"${esc(m)}"}""")
-          -1.0
-      }
-    val pipeSec =
-      if (wanted("pipeline_e2e")) guarded("pipeline_e2e", pipeOnce _)
-      else -2.0 // sentinel: not requested in this targeted run
-    val recPerSec =
-      if (pipeSec > 0) math.rint(nRecords / pipeSec) else -1.0
-    if (pipeSec >= 0) progress(s"""{"query":"pipeline_e2e","sec":$pipeSec}""")
-
-    // Streaming variant of the same pipeline: FileStreamSource over the
-    // events table, each micro-batch through the full transform chain in
-    // append-mode foreachBatch, Trigger.AvailableNow. No aggregation
-    // state, no memory sink — the production-shaped incremental path.
-    var streamRecords = 0L
-    def streamOnce(): Double = {
-      val streamAcc = spark.sparkContext.longAccumulator("stream_records")
-      val ckpt = streaming.Streaming.scratchDir("graft-bench-stream")
-      val t1 = System.nanoTime()
-      // var + null for the same stack-reachability reason as once()'s
-      // df: the query handle pins its final micro-batch's executed plan
-      // (broadcasts included) through StreamExecution.lastExecution.
-      var sq = streaming.Streaming.eventsStream(spark, s"$sfDir/events.parquet")
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // Input-row accounting (cheap re-scan of the batch's files),
-          // then the full transform through the noop sink — same
-          // no-eliminated-work policy as the batch pipeline.
-          streamAcc.add(batch.count())
-          batch.transform(transform.Transforms.pipeline(cfg))
-            .write.mode("overwrite").format("noop").save()
-        }
-        .start()
-      sq.awaitTermination()
-      sq = null
-      val sec = r4((System.nanoTime() - t1) / 1e9)
-      streamRecords = streamAcc.value
-      streaming.Streaming.deleteRecursively(ckpt)
-      release("pipeline_stream")
-      sec
-    }
-    val streamSec =
-      if (wanted("pipeline_stream")) guarded("pipeline_stream", streamOnce _)
-      else -2.0
-    val streamRecPerSec =
-      if (streamSec > 0) math.rint(streamRecords / streamSec) else -1.0
-    if (streamSec >= 0)
-      progress(s"""{"query":"pipeline_stream","sec":$streamSec}""")
-
-    val all = results ++
-      (if (wanted("pipeline_e2e")) Seq("pipeline_e2e" -> pipeSec) else Nil) ++
-      (if (wanted("pipeline_stream")) Seq("pipeline_stream" -> streamSec)
-       else Nil)
     val qs = all.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val errJson = errors
@@ -688,20 +581,9 @@ object Bench {
     // on fast queries from flagging). Heavy-tail entries compare
     // median-vs-previous-median, so a flagged entry here reproduced
     // across 3 runs — it is a regression, not a one-sample spike.
-    // The two pipeline entries are README HEADLINE figures compared
-    // round-over-round as records/s, and they are best-of-3 (far more
-    // stable than a single query median) — a 2x bar let a -14%/-20%
-    // drift pass unadjudicated (r17). They flag at >1.25x AND >0.3 s
-    // absolute (pipeline_e2e is ~1 s at sf0.1, so a seconds-scale
-    // floor would make the flag unreachable), entering the same
-    // quiet-box isolation as queries — a false flag costs one ~30 s
-    // fork that adjudicates itself into the artifact.
     val regressions = all.flatMap { case (k, v) =>
-      val isPipeline = k.startsWith("pipeline_")
       prevTimes.get(k).collect {
-        case p if p > 0 &&
-          (if (isPipeline) v > 1.25 * p && v - p > 0.3
-           else v > 2 * p && v - p > 0.5) => k -> ((p, v))
+        case p if p > 0 && v > 2 * p && v - p > 0.5 => k -> ((p, v))
       }
     }
     val regJson = regressions
@@ -710,11 +592,11 @@ object Bench {
     // Quiet-box adjudication pass (r17): every machine-flagged
     // regression re-runs ISOLATED in a FRESH JVM after the suite — same
     // JVM options and classpath as this process, only the flagged query
-    // names as args (the targeted-run path above skips the pipelines,
-    // and a child with args never writes bench_summary.json or
-    // re-isolates). A fresh JVM removes everything the in-suite sample
-    // cannot shed: accumulated code-cache/metaspace, G1 region history,
-    // megamorphic call sites trained by 200 other queries. The result
+    // names as args (a child with args never writes
+    // bench_summary.json or re-isolates). A fresh JVM removes
+    // everything the in-suite sample cannot shed: accumulated
+    // code-cache/metaspace, G1 region history, megamorphic call sites
+    // trained by 200 other queries. The result
     // lands in the artifact as isolated_sec (+ the child's own
     // task/os_load counters), so the recurring ambient 1.1-1.3x suite
     // drift (r14/r16) adjudicates from the committed artifact alone
@@ -824,7 +706,7 @@ object Bench {
     val leakJson =
       s"""{"n_nonzero":$leakNonzero,"max_broadcast_blocks":$leakMaxBroadcast,"cache_nonempty":$leakCacheNonEmpty,"persistent_rdds":$leakRdds}"""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","basis":"$basis","queries":$qs,"sf":"$sfDir","cpus":$cpus,"gate":"${esc(gate)}","pipeline_records":$nRecords,"pipeline_records_per_sec":$recPerSec,"pipeline_stream_records_per_sec":$streamRecPerSec,"errors":$errJson,"prev_total":$prevTotal,"regressions":$regJson,"isolated":$isoJson,"leak_checks":$leakJson,"details":$detJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","basis":"$basis","queries":$qs,"sf":"$sfDir","cpus":$cpus,"gate":"${esc(gate)}","errors":$errJson,"prev_total":$prevTotal,"regressions":$regJson,"isolated":$isoJson,"leak_checks":$leakJson,"details":$detJson}"""
     // stdout line 1: the full summary (progress went to stderr, so this
     // is literally the first stdout line — parse it directly).
     println(fullLine)
@@ -838,14 +720,14 @@ object Bench {
         (fullLine + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () } // read-only cwd must not kill bench
     // stdout line 2 (LAST): a compact, bounded-size summary — total,
-    // throughputs, errors, the top-15 slowest — so a size-bounded TAIL
-    // capture still carries the headline numbers, never a mid-JSON cut.
+    // errors, the top-15 slowest — so a size-bounded TAIL capture
+    // still carries the headline numbers, never a mid-JSON cut.
     val slowAll = all.filter(_._2 >= 0.5).sortBy(-_._2)
     val slow = slowAll.take(15)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val fastN = all.count(_._2 < 0.5)
     val fastSum = r4(all.filter(v => v._2 < 0.5 && v._2 >= 0).map(_._2).sum)
-    println(s"""{"metric":"summary","total_sec":$total,"basis":"$basis","n_queries":${all.size},"sf":"$sfDir","gate":"${esc(gate)}","pipeline_records_per_sec":$recPerSec,"pipeline_stream_records_per_sec":$streamRecPerSec,"n_errors":${errors.size},"error_queries":${errors.keys.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")},"slow_queries_sec":$slow,"slow_omitted":${math.max(0, slowAll.size - 15)},"fast_queries":{"n":$fastN,"sum_sec":$fastSum},"n_regressions_vs_prev":${regressions.size},"regressions_vs_prev":$regJson,"isolated":$isoJson,"leak_checks":$leakJson,"full_summary_file":"bench_summary.json"}""")
+    println(s"""{"metric":"summary","total_sec":$total,"basis":"$basis","n_queries":${all.size},"sf":"$sfDir","gate":"${esc(gate)}","n_errors":${errors.size},"error_queries":${errors.keys.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")},"slow_queries_sec":$slow,"slow_omitted":${math.max(0, slowAll.size - 15)},"fast_queries":{"n":$fastN,"sum_sec":$fastSum},"n_regressions_vs_prev":${regressions.size},"regressions_vs_prev":$regJson,"isolated":$isoJson,"leak_checks":$leakJson,"full_summary_file":"bench_summary.json"}""")
     System.out.flush()
     spark.stop()
     // Exit-status contract (object doc): the artifact above already

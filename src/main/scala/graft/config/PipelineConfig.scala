@@ -17,9 +17,9 @@ final case class Calibration(multiplier: Double, offset: Double)
   * `mode` is `overwrite` (dynamic: only the partitions a batch touches
   * are replaced) or `append`; the sink rejects any other value.
   * The in-file row order is not a setting: the sink derives it
-  * (the partition columns, then the reading key of
-  * `PipelineConfig.cols`, then every other column), so a file's bytes
-  * depend only on its rows. */
+  * (the partition columns, then the reading key sensor_id,
+  * reading_type, timestamp, then every other column), so a file's
+  * bytes depend only on its rows. */
 final case class WriteConfig(
     compression: String = "zstd",
     partitionBy: Seq[String] = Seq("date", "sensor_id"),
@@ -55,23 +55,22 @@ final case class PathsConfig(
     dataProcessed: String = "data/processed",
     dqReportCsv: String = "reports/data_quality_report.csv")
 
-/** Column-name binding so every stage works over any table shaped like
-  * (id, timestamp, type, value[, battery]) — the reference hard-codes
-  * sensor_id/timestamp/reading_type/value/battery_level
-  * (src/models/data.py:12-18). */
+/** Column-name binding for the stages the query catalogue also runs
+  * over the synthetic `events` table (calibration, time shift, date,
+  * range and z-score flags, bucketed rolling average). The pipeline
+  * itself binds [[ReadingCols.sensor]], the reference's fixed record
+  * sensor_id/timestamp/reading_type/value (src/models/data.py:12-18). */
 final case class ReadingCols(
     id: String = "sensor_id",
     ts: String = "timestamp",
     typ: String = "reading_type",
-    value: String = "value",
-    battery: String = "battery_level")
+    value: String = "value")
 
 object ReadingCols {
   val sensor: ReadingCols = ReadingCols()
   /** Binding for the synthetic `events` table. */
   val events: ReadingCols =
-    ReadingCols(id = "user_id", ts = "ts", typ = "event_type",
-      value = "value", battery = "value")
+    ReadingCols(id = "user_id", ts = "ts", typ = "event_type", value = "value")
 }
 
 /** Full pipeline configuration.
@@ -86,8 +85,7 @@ final case class PipelineConfig(
     transformation: TransformConfig = TransformConfig(),
     validation: ValidationConfig = ValidationConfig(),
     ingestion: IngestionConfig = IngestionConfig(),
-    paths: PathsConfig = PathsConfig(),
-    cols: ReadingCols = ReadingCols.sensor) {
+    paths: PathsConfig = PathsConfig()) {
 
   /** "UTC+05:30" -> signed minutes east of UTC (330). Mirrors the
     * reference's offset parse (transformation.py:187-228). */

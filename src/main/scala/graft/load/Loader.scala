@@ -42,13 +42,13 @@ object Loader {
       .withColumn("total_issues", lit(result.issuesFound.size))
 
   /** The one in-file row order of the sink: the partition columns,
-    * then the reading key (`cfg.cols` id, type, timestamp), then every
-    * other column in schema order, each only where present. A total
-    * order, so a file's bytes depend on its rows alone, never on
+    * then the reading key (sensor_id, reading_type, timestamp), then
+    * every other column in schema order, each only where present. A
+    * total order, so a file's bytes depend on its rows alone, never on
     * shuffle arrival order; the key-first order also tightens
     * row-group min/max for scans that filter on sensor, type or time. */
   private def inFileOrder(cfg: PipelineConfig, df: DataFrame): Seq[String] =
-    (cfg.write.partitionBy ++ Seq(cfg.cols.id, cfg.cols.typ, cfg.cols.ts) ++
+    (cfg.write.partitionBy ++ Seq("sensor_id", "reading_type", "timestamp") ++
       df.columns).distinct.filter(df.columns.contains)
 
   /** S8 — partitioned write. `overwrite` maps to DYNAMIC partition

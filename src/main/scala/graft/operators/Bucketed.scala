@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.streaming.Streaming
+
 /** Bucketed storage: the co-located fact-to-fact join strategy.
   *
   * Broadcast covers small dimension tables; bucketing covers the joins
@@ -106,16 +108,6 @@ object Bucketed {
     }
   }
 
-  private def deleteDir(loc: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(loc)
-      if (java.nio.file.Files.exists(root))
-        scala.util.Using.resource(java.nio.file.Files.walk(root))(
-          _.iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p)))
-    } catch { case _: Exception => () }
-
   /** The one bucketed write: `df` into catalog table `name`, bucketed
     * and sorted by `bucketCols` (hive-partitioned by `partitionBy` when
     * given), at `path` or, for an append, the table's own location.
@@ -184,7 +176,7 @@ object Bucketed {
           scala.util.Using.resource(java.nio.file.Files.list(rootDir))(
             _.iterator().asScala
               .filter(_.getFileName.toString.startsWith(s"$name-g"))
-              .toSeq.foreach(p => deleteDir(p.toString)))
+              .toSeq.foreach(Streaming.deleteRecursively))
         }
         save(src, name, bucketCols, nBuckets, "overwrite", Some(loc))
         tableLoc(name) = loc
@@ -270,7 +262,7 @@ object Bucketed {
       val newLoc = s"$storageRoot/$name-g${compactGen.incrementAndGet()}"
       save(snapshot, name, bucketCols, nBuckets, "overwrite", Some(newLoc))
       tableLoc(name) = newLoc
-      deleteDir(loc)
+      Streaming.deleteRecursively(java.nio.file.Paths.get(loc))
       s.table(name)
     }
   }
@@ -284,7 +276,7 @@ object Bucketed {
       bucketCols: Seq[String], nBuckets: Int): Unit = synchronized {
     val name = tableName(dir, table, bucketCols, nBuckets)
     if (s.catalog.tableExists(name)) s.sql(s"DROP TABLE `$name`")
-    deleteDir(location(name))
+    Streaming.deleteRecursively(java.nio.file.Paths.get(location(name)))
     tableLoc.remove(name)
   }
 

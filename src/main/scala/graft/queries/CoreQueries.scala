@@ -9,7 +9,6 @@ import graft.config.{Calibration, ReadingCols, ValueRange}
 import graft.functions.exact
 import graft.ingest.RawParquet
 import graft.transform.Transforms
-import graft.validate.Validation
 
 /** Oracle-checked query surface for the SURVEY §2 operator inventory,
   * expressed over the driver's synthetic tables. The `events` table
@@ -24,14 +23,14 @@ object CoreQueries {
 
   /** Events-table analogs of the reference's per-type config
     * (config/default.yaml:29-47). */
-  val eventRanges: Map[String, ValueRange] = Map(
+  private val eventRanges: Map[String, ValueRange] = Map(
     "click" -> ValueRange(0.0, 450.0),
     "view" -> ValueRange(0.0, 300.0),
     "purchase" -> ValueRange(0.0, 350.0),
     "signup" -> ValueRange(0.0, 340.0),
     "error" -> ValueRange(0.0, 320.0))
 
-  val eventCalibration: Map[String, Calibration] = Map(
+  private val eventCalibration: Map[String, Calibration] = Map(
     "click" -> Calibration(1.02, -0.5),
     "view" -> Calibration(0.98, 1.2),
     "purchase" -> Calibration(1.05, 0.0),

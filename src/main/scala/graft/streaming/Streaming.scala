@@ -517,12 +517,14 @@ object Streaming {
     else Files.createTempDirectory(prefix)
   }
 
-  /** Best-effort recursive delete for scratch stream dirs. */
+  /** Best-effort recursive delete of `root` (nothing when it does not
+    * exist). The walk's stream is closed: it holds a directory handle
+    * per open level. */
   def deleteRecursively(root: java.nio.file.Path): Unit =
     try {
       import scala.jdk.CollectionConverters._
-      Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+      scala.util.Using.resource(Files.walk(root))(
+        _.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p)))
     } catch { case _: Exception => () }
 
   /** Per-user session counts via event-time windows with a gap — the

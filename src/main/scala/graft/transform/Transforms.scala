@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 
 import graft.config.{Calibration, PipelineConfig, ReadingCols, ValueRange}
+import graft.model.Schemas
 
 /** Cleaning + calibration + time normalization + derived features +
   * anomaly detection, each a pure `DataFrame => DataFrame` usable via
@@ -13,8 +14,15 @@ import graft.config.{Calibration, PipelineConfig, ReadingCols, ValueRange}
   * five sequential pandas passes (src/components/transformation.py) —
   * here they compose into ONE lazy Catalyst plan (no materialization
   * between stages).
+  *
+  * The stages only [[pipeline]] runs bind the reference's fixed record
+  * ([[ReadingCols.sensor]] plus battery_level); the ones the query
+  * catalogue also runs over the events table take a [[ReadingCols]].
   */
 object Transforms {
+
+  private val sensor = ReadingCols.sensor
+  private val battery = "battery_level"
 
   /** P1 — exact duplicate removal over all columns
     * (reference transformation.py:107-110). */
@@ -46,11 +54,9 @@ object Transforms {
     * default 4 GiB of plan-estimated input, so the oracle surface stays
     * on the exact path; pass Long.MaxValue to force exactness
     * regardless of size. */
-  def imputeBattery(
-      cols: ReadingCols = ReadingCols.sensor,
-      exactGlobalMaxBytes: Long = 4L << 30)(
+  def imputeBattery(exactGlobalMaxBytes: Long = 4L << 30)(
       df: DataFrame): DataFrame = {
-    val bySensor = Window.partitionBy(col(cols.id))
+    val bySensor = Window.partitionBy(col(sensor.id))
     val exact = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
       BigInt(exactGlobalMaxBytes)
     // Exact medians run through the native DoublePercentileAgg —
@@ -73,15 +79,15 @@ object Transforms {
     // global median as a broadcast 1-row aggregate — an empty-partition
     // window would funnel the whole table through one reducer at scale
     val globalMed = df.agg(
-      (if (exact) exactMedian(col(cols.battery))
-       else expr(s"percentile_approx(${cols.battery}, 0.5, 100000)"))
+      (if (exact) exactMedian(col(battery))
+       else expr(s"percentile_approx($battery, 0.5, 100000)"))
         .cast("double").as("__global_med"))
     df.crossJoin(broadcast(globalMed))
       .withColumn(
-        cols.battery,
+        battery,
         coalesce(
-          col(cols.battery),
-          exactMedian(col(cols.battery)).over(bySensor),
+          col(battery),
+          exactMedian(col(battery)).over(bySensor),
           col("__global_med")))
       .drop("__global_med")
   }
@@ -122,24 +128,28 @@ object Transforms {
     * The reference computes a groupby + left merge
     * (transformation.py:246-254); a partitioned window computes the same
     * value with a single shuffle and no join. */
-  def dailyAvg(cols: ReadingCols = ReadingCols.sensor)(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col(cols.id), col(cols.typ), col("date"))
-    df.withColumn("daily_avg_value", avg(col(cols.value)).over(w))
+  def dailyAvg(df: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col(sensor.id), col(sensor.typ), col("date"))
+    df.withColumn("daily_avg_value", avg(col(sensor.value)).over(w))
   }
 
   /** W1 — trailing row-count rolling average: per (sensor, type) ordered
-    * by timestamp, frame = previous `windowRows-1` rows + current
-    * (reference transformation.py:256-269: `rolling(168, min_periods=1)`).
-    * `tieBreak` columns make ordering deterministic when timestamps tie. */
-  def rollingAvg(
-      windowRows: Int,
-      cols: ReadingCols = ReadingCols.sensor,
-      tieBreak: Seq[Column] = Nil)(df: DataFrame): DataFrame = {
+    * by (timestamp, value, battery_level), frame = previous
+    * `windowRows-1` rows + current (reference transformation.py:256-269:
+    * `rolling(168, min_periods=1)`).
+    *
+    * Contract: over the sensor record the result depends only on the
+    * input's rows, never on their order. The reference keeps file
+    * order for rows tied on timestamp, but after a shuffle Spark has no
+    * file order, so ties are broken by value, then battery_level. Rows
+    * that still tie agree on every sensor column, so whichever comes
+    * first, the pipeline stores the same rows. */
+  def rollingAvg(windowRows: Int)(df: DataFrame): DataFrame = {
     val w = Window
-      .partitionBy(col(cols.id), col(cols.typ))
-      .orderBy(col(cols.ts) +: tieBreak: _*)
+      .partitionBy(col(sensor.id), col(sensor.typ))
+      .orderBy(col(sensor.ts), col(sensor.value), col(battery))
       .rowsBetween(-(windowRows - 1L), 0L)
-    df.withColumn("rolling_avg_value", avg(col(cols.value)).over(w))
+    df.withColumn("rolling_avg_value", avg(col(sensor.value)).over(w))
   }
 
   /** W1 at extreme-history scale — the same trailing `windowRows`-row
@@ -161,7 +171,8 @@ object Transforms {
     * Exact for ANY bucket population (sparse buckets carry across
     * multiple gaps via the carry map; early rows see exactly their
     * available predecessors, preserving min_periods=1 semantics), so
-    * the result is bit-identical to [[rollingAvg]]. The carry map and
+    * the result is bit-identical to the plain row-frame window ordered
+    * by timestamp, then `tieBreak`. The carry map and
     * counts are aggregate-sized (keys x buckets), so the planner
     * broadcasts them; the only large shuffle is the per-(key, bucket)
     * window itself.
@@ -297,10 +308,9 @@ object Transforms {
   /** A3+P7 merged flag (reference transformation.py:285: z-score OR range). */
   def anomalyFlag(
       threshold: Double,
-      ranges: Map[String, ValueRange],
-      cols: ReadingCols = ReadingCols.sensor)(df: DataFrame): DataFrame =
-    df.transform(zscoreFlag(threshold, cols))
-      .transform(rangeFlag(ranges, cols))
+      ranges: Map[String, ValueRange])(df: DataFrame): DataFrame =
+    df.transform(zscoreFlag(threshold, sensor))
+      .transform(rangeFlag(ranges, sensor))
       .withColumn("anomalous_reading", col("zscore_anomaly") || col("range_anomaly"))
       .drop("zscore_anomaly", "range_anomaly")
 
@@ -311,17 +321,15 @@ object Transforms {
 
   /** Full transformation stage — the reference's 5 eager pandas passes
     * (transformation.py:42-91) as one lazy plan. */
-  def pipeline(cfg: PipelineConfig)(df: DataFrame): DataFrame = {
-    val c = cfg.cols
+  def pipeline(cfg: PipelineConfig)(df: DataFrame): DataFrame =
     df.transform(dedupExact)
-      .transform(dropNullCritical(Seq(c.id, c.ts, c.typ, c.value)))
-      .transform(imputeBattery(c))
-      .transform(calibrate(cfg.calibration, c))
-      .transform(shiftToLocal(cfg.timezoneOffsetMinutes, c))
-      .transform(deriveDate(c))
-      .transform(dailyAvg(c))
-      .transform(rollingAvg(cfg.transformation.rollingWindowRows, c))
-      .transform(anomalyFlag(cfg.transformation.zScoreThreshold, cfg.ranges, c))
+      .transform(dropNullCritical(Schemas.criticalColumns))
+      .transform(imputeBattery())
+      .transform(calibrate(cfg.calibration, sensor))
+      .transform(shiftToLocal(cfg.timezoneOffsetMinutes, sensor))
+      .transform(deriveDate(sensor))
+      .transform(dailyAvg)
+      .transform(rollingAvg(cfg.transformation.rollingWindowRows))
+      .transform(anomalyFlag(cfg.transformation.zScoreThreshold, cfg.ranges))
       .transform(applyOutlierMode(cfg.transformation.outlierHandling))
-  }
 }

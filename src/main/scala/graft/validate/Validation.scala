@@ -20,9 +20,13 @@ import graft.transform.Transforms
   * re-expressed as a lazy DataFrame aggregate. Each builder returns a
   * small DataFrame; `collectMetrics` computes the same answers in two
   * actions (one per-pair aggregate, one gap pass) and assembles the
-  * driver-side QualityMetrics/ValidationResult.
+  * driver-side QualityMetrics/ValidationResult. Every stage reads the
+  * reference's fixed record: [[ReadingCols.sensor]] plus battery_level.
   */
 object Validation {
+
+  private val sensor = ReadingCols.sensor
+  private val battery = "battery_level"
 
   /** W2+J2+J3 — per-pair maximal MISSING-hour ranges against the
     * reference's expected grid (validation.py:247-285): logically,
@@ -44,7 +48,6 @@ object Validation {
     * the sub-hour grid offset carried for reconstruction. */
   private def missingRanges(
       frequencyHours: Int,
-      cols: ReadingCols,
       withBounds: DataFrame => DataFrame)(df: DataFrame): DataFrame = {
     val stepUs = frequencyHours * 3600000000L
     val step = expr(s"INTERVAL $frequencyHours HOUR")
@@ -60,23 +63,23 @@ object Validation {
             / stepUs).cast("long") * stepUs))
       .drop("min_ts", "max_ts")
     val observed = withGrid(df
-      .select(col(cols.id), col(cols.typ),
-        date_trunc("hour", col(cols.ts)).as("h"))
+      .select(col(sensor.id), col(sensor.typ),
+        date_trunc("hour", col(sensor.ts)).as("h"))
       .distinct())
     // Observed hours that land on a grid slot (off-grid hours exist only
     // when min_ts is not step-aligned with the observation's hour).
     val onGrid = observed.filter(
       col("h") <= col("top_h") &&
         (unix_micros(col("h")) - unix_micros(col("min_h"))) % stepUs === 0)
-    val wOrd = Window.partitionBy(col(cols.id), col(cols.typ)).orderBy(col("h"))
-    val wAll = Window.partitionBy(col(cols.id), col(cols.typ))
+    val wOrd = Window.partitionBy(col(sensor.id), col(sensor.typ)).orderBy(col("h"))
+    val wAll = Window.partitionBy(col(sensor.id), col(sensor.typ))
       .orderBy(col("h"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val ranges = onGrid
       .withColumn("next_h", lead(col("h"), 1).over(wOrd))
       .withColumn("rn", row_number().over(wOrd))
       .withColumn("max_obs", max(col("h")).over(wAll))
-      .select(col(cols.id), col(cols.typ), col("offset_us"),
+      .select(col(sensor.id), col(sensor.typ), col("offset_us"),
         explode(array_compact(array(
           // leading region: grid start up to the first observed hour
           when(col("rn") === 1 && col("h") > col("min_h"),
@@ -89,16 +92,16 @@ object Validation {
           when(col("next_h").isNull && col("max_obs") < col("top_h"),
             struct((col("max_obs") + step).as("start_h"),
               col("top_h").as("end_h")))))).as("r"))
-      .select(col(cols.id), col(cols.typ),
+      .select(col(sensor.id), col(sensor.typ),
         col("r.start_h").as("start_h"), col("r.end_h").as("end_h"),
         col("offset_us"))
     // Pairs with no observed hour on the grid (every hour off-grid or
     // every timestamp null): the whole grid is missing for them.
-    val emptyPairs = withGrid(observed.select(col(cols.id), col(cols.typ)).distinct()
-      .join(onGrid.select(col(cols.id), col(cols.typ)).distinct(),
-        Seq(cols.id, cols.typ), "left_anti"))
+    val emptyPairs = withGrid(observed.select(col(sensor.id), col(sensor.typ)).distinct()
+      .join(onGrid.select(col(sensor.id), col(sensor.typ)).distinct(),
+        Seq(sensor.id, sensor.typ), "left_anti"))
       .filter(col("top_h").isNotNull)
-      .select(col(cols.id), col(cols.typ),
+      .select(col(sensor.id), col(sensor.typ),
         col("min_h").as("start_h"), col("top_h").as("end_h"),
         col("offset_us"))
     ranges.union(emptyPairs)
@@ -106,19 +109,17 @@ object Validation {
 
   /** The bounds of [[gapReport]] and [[missingReadings]]: `df`'s own
     * min/max timestamp, one aggregate broadcast to every row. */
-  private def ownBounds(cols: ReadingCols, df: DataFrame): DataFrame => DataFrame = {
-    val bounds = df.agg(min(col(cols.ts)).as("min_ts"), max(col(cols.ts)).as("max_ts"))
+  private def ownBounds(df: DataFrame): DataFrame => DataFrame = {
+    val bounds = df.agg(min(col(sensor.ts)).as("min_ts"), max(col(sensor.ts)).as("max_ts"))
     _.crossJoin(broadcast(bounds))
   }
 
   /** J3 — missing readings, one row per missing grid instant (reference
     * validation.py:273-285). Materializes ONLY the missing hours
     * (explode over the gap ranges), never the full expected grid. */
-  def missingReadings(
-      frequencyHours: Int,
-      cols: ReadingCols)(df: DataFrame): DataFrame =
-    missingRanges(frequencyHours, cols, ownBounds(cols, df))(df)
-      .select(col(cols.id), col(cols.typ), col("offset_us"),
+  def missingReadings(frequencyHours: Int)(df: DataFrame): DataFrame =
+    missingRanges(frequencyHours, ownBounds(df))(df)
+      .select(col(sensor.id), col(sensor.typ), col("offset_us"),
         explode(expr(
           s"sequence(start_h, end_h, interval $frequencyHours hour)"))
           .as("expected_hour"))
@@ -131,11 +132,10 @@ object Validation {
     * per-missing-hour rows anywhere in the plan. */
   private def gapTotals(
       frequencyHours: Int,
-      cols: ReadingCols,
       withBounds: DataFrame => DataFrame)(df: DataFrame): DataFrame = {
     val stepUs = frequencyHours * 3600000000L
-    missingRanges(frequencyHours, cols, withBounds)(df)
-      .groupBy(col(cols.id), col(cols.typ))
+    missingRanges(frequencyHours, withBounds)(df)
+      .groupBy(col(sensor.id), col(sensor.typ))
       .agg(
         sum(((unix_micros(col("end_h")) - unix_micros(col("start_h")))
           / stepUs).cast("long") + 1L).cast("long").as("missing_hours"),
@@ -147,44 +147,42 @@ object Validation {
 
   /** A7 — gap aggregation: per (sensor, type) count + first/last missing
     * grid instant, descending (reference validation.py:286-316). */
-  def gapReport(
-      frequencyHours: Int,
-      cols: ReadingCols)(df: DataFrame): DataFrame =
-    gapTotals(frequencyHours, cols, ownBounds(cols, df))(df)
-      .orderBy(desc("missing_hours"), col(cols.id), col(cols.typ))
+  def gapReport(frequencyHours: Int)(df: DataFrame): DataFrame =
+    gapTotals(frequencyHours, ownBounds(df))(df)
+      .orderBy(desc("missing_hours"), col(sensor.id), col(sensor.typ))
 
   /** A8 — missing-value profile per reading type (reference
     * validation.py:343-366). */
-  def missingProfile(cols: ReadingCols)(df: DataFrame): DataFrame =
-    df.groupBy(col(cols.typ))
+  def missingProfile(df: DataFrame): DataFrame =
+    df.groupBy(col(sensor.typ))
       .agg(
         count(lit(1)).as("total_readings"),
-        sum(when(col(cols.value).isNull, 1).otherwise(0)).as("missing_count"),
-        round(lit(100.0) * sum(when(col(cols.value).isNull, 1).otherwise(0))
+        sum(when(col(sensor.value).isNull, 1).otherwise(0)).as("missing_count"),
+        round(lit(100.0) * sum(when(col(sensor.value).isNull, 1).otherwise(0))
           / count(lit(1)), 2).as("missing_percentage"))
-      .orderBy(desc("missing_percentage"), col(cols.typ))
+      .orderBy(desc("missing_percentage"), col(sensor.typ))
 
   /** A9 — anomaly profile per reading type (reference validation.py:369-393). */
-  def anomalyProfile(cols: ReadingCols)(df: DataFrame): DataFrame =
+  def anomalyProfile(df: DataFrame): DataFrame =
     df.filter(col("anomalous_reading").isNotNull)
-      .groupBy(col(cols.typ))
+      .groupBy(col(sensor.typ))
       .agg(
         count(lit(1)).as("total_readings"),
         sum(when(col("anomalous_reading"), 1).otherwise(0)).as("anomaly_count"),
         round(lit(100.0) * sum(when(col("anomalous_reading"), 1).otherwise(0))
           / count(lit(1)), 2).as("anomaly_percentage"))
-      .orderBy(desc("anomaly_percentage"), col(cols.typ))
+      .orderBy(desc("anomaly_percentage"), col(sensor.typ))
 
   /** A10 — per-sensor coverage (reference validation.py:396-419). */
-  def sensorCoverage(cols: ReadingCols)(df: DataFrame): DataFrame =
-    df.groupBy(col(cols.id))
+  def sensorCoverage(df: DataFrame): DataFrame =
+    df.groupBy(col(sensor.id))
       .agg(
-        countDistinct(col(cols.typ)).as("reading_types"),
+        countDistinct(col(sensor.typ)).as("reading_types"),
         count(lit(1)).as("total_readings"),
-        min(col(cols.ts)).as("first_reading"),
-        max(col(cols.ts)).as("last_reading"),
-        round(avg(col(cols.battery)), 1).as("avg_battery"))
-      .orderBy(desc("total_readings"), col(cols.id))
+        min(col(sensor.ts)).as("first_reading"),
+        max(col(sensor.ts)).as("last_reading"),
+        round(avg(col(battery)), 1).as("avg_battery"))
+      .orderBy(desc("total_readings"), col(sensor.id))
 
   /** A12 — quality score: 100 minus capped penalties
     * (reference validation.py:616-644, duplicated loading.py:305-336). */
@@ -284,24 +282,23 @@ object Validation {
     * skipped when no timestamp is non-null (no grid, no gaps). Score and
     * assessment (A12, A13) are driver-side. */
   def collectMetrics(cfg: PipelineConfig)(df: DataFrame): ValidationResult = {
-    val c = cfg.cols
     val br = cfg.batteryRange
     val hasFlag = df.columns.contains("anomalous_reading")
     val flag = col("anomalous_reading")
-    val pairs = df.groupBy(col(c.id), col(c.typ))
+    val pairs = df.groupBy(col(sensor.id), col(sensor.typ))
       .agg(
         count(lit(1)),
-        count(when(col(c.ts).isNull, 1)),
-        count(when(col(c.value).isNull, 1)),
-        count(when(col(c.battery).isNull, 1)),
-        count(when(col(c.battery) < br.min || col(c.battery) > br.max, 1)),
-        count(when(Transforms.outOfRange(cfg.ranges, c), 1)),
-        min(col(c.ts)),
-        max(col(c.ts)),
-        sum(col(c.value).cast("double")),
-        count(col(c.value)),
-        sum(col(c.battery).cast("double")),
-        count(col(c.battery)),
+        count(when(col(sensor.ts).isNull, 1)),
+        count(when(col(sensor.value).isNull, 1)),
+        count(when(col(battery).isNull, 1)),
+        count(when(col(battery) < br.min || col(battery) > br.max, 1)),
+        count(when(Transforms.outOfRange(cfg.ranges, sensor), 1)),
+        min(col(sensor.ts)),
+        max(col(sensor.ts)),
+        sum(col(sensor.value).cast("double")),
+        count(col(sensor.value)),
+        sum(col(battery).cast("double")),
+        count(col(battery)),
         if (hasFlag) count(flag) else lit(0L),
         if (hasFlag) count(when(flag, 1)) else lit(0L))
       .collect().toSeq
@@ -345,7 +342,7 @@ object Validation {
     val maxTs = latest(pairs.map(_.maxTs))
     // No non-null timestamp: no grid, so no gap pass.
     val gaps = (for (lo <- minTs; hi <- maxTs) yield
-      gapTotals(cfg.validation.expectedFrequencyHours, c,
+      gapTotals(cfg.validation.expectedFrequencyHours,
         _.withColumn("min_ts", lit(lo)).withColumn("max_ts", lit(hi)))(df)
         .collect().toSeq
         .sorted(Ordering.by[Row, Long](_.getLong(2)).reverse

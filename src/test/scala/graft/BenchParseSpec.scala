@@ -12,10 +12,10 @@ class BenchParseSpec extends AnyFunSuite {
 
   private val summary =
     """{"metric":"total","value":9.9,"unit":"sec","basis":"noop",""" +
-      """"queries":{"q1":1.5,"q2":0.07,"pipeline_e2e":4.0},""" +
+      """"queries":{"q1":1.5,"q2":0.07,"q3":4.0},""" +
       """"errors":{"q2":"SparkException: stage failed"},""" +
       """"details":{"q1":{"metrics":{"task_time_ms":123,"task_cpu_ms":77,"os_load":0.5}},""" +
-      """"pipeline_e2e":{"runs":[4.0],"min":4.0}}}"""
+      """"q3":{"runs":[4.0],"min":4.0}}}"""
 
   private val stdout =
     s"""some stray warmup noise\n$summary\n{"metric":"summary","total_sec":9.9}\n"""
@@ -37,8 +37,8 @@ class BenchParseSpec extends AnyFunSuite {
 
   test("pipeline entry without a metrics block still lands sec " +
       "(nulls for the counters)") {
-    val (oks, errs) = Bench.parseIsolated(stdout, Seq("pipeline_e2e"), 0)
-    assert(oks === Map("pipeline_e2e" -> ((4.0, "null", "null", "null"))))
+    val (oks, errs) = Bench.parseIsolated(stdout, Seq("q3"), 0)
+    assert(oks === Map("q3" -> ((4.0, "null", "null", "null"))))
     assert(errs.isEmpty)
   }
 

@@ -49,7 +49,7 @@ class TransformsSpec extends SparkSpec {
       ("s1", "2023-06-01 11:00:00", "temperature", 1.0, 20.0),
       ("s1", "2023-06-01 12:00:00", "temperature", 1.0, null),
       ("s2", "2023-06-01 10:00:00", "temperature", 1.0, null))
-    val out = Transforms.imputeBattery(c)(df)
+    val out = Transforms.imputeBattery()(df)
       .orderBy("sensor_id", "timestamp")
       .select("battery_level").as[Double].collect()
     // s1 null -> median(10,20)=15 (pandas-style interpolation)
@@ -66,7 +66,7 @@ class TransformsSpec extends SparkSpec {
     // Any real input's plan-estimated size exceeds 1 byte, so a 1-byte
     // threshold simulates "table bigger than the exact buffer may hold"
     // without materializing a big table.
-    val guarded = Transforms.imputeBattery(c, exactGlobalMaxBytes = 1L)(df)
+    val guarded = Transforms.imputeBattery(exactGlobalMaxBytes = 1L)(df)
     val plan = guarded.queryExecution.optimizedPlan.toString
     assert(plan.contains("percentile_approx"))
     val out = guarded.orderBy("sensor_id", "timestamp")
@@ -74,7 +74,7 @@ class TransformsSpec extends SparkSpec {
     assert(out.toSeq === Seq(10.0, 20.0, 30.0, 20.0))
     // Default threshold (4 GiB) keeps small inputs on the exact path —
     // the oracle-parity configuration needs no explicit opt-in.
-    val default = Transforms.imputeBattery(c)(df)
+    val default = Transforms.imputeBattery()(df)
     val dPlan = default.queryExecution.optimizedPlan.toString
     assert(!dPlan.contains("percentile_approx"))
     assert(dPlan.contains("percentile"))
@@ -110,9 +110,28 @@ class TransformsSpec extends SparkSpec {
       ("s1", "2023-06-01 10:00:00", "temperature", 20.0, 90.0),
       ("s1", "2023-06-01 11:00:00", "temperature", 25.0, 90.0),
       ("s1", "2023-06-01 12:00:00", "temperature", 30.0, 90.0))
-    val out = Transforms.rollingAvg(168, c)(df)
+    val out = Transforms.rollingAvg(168)(df)
       .orderBy("timestamp").select("rolling_avg_value").as[Double].collect()
     assert(out.toSeq === Seq(20.0, 22.5, 25.0))
+  }
+
+  test("W1 rolling average does not depend on the order of rows tied on timestamp") {
+    // Three readings share (sensor, type, 11:00); two of them also share
+    // their value. Fed in two orders, each in one partition so the order
+    // reaches the window's sort, every row must get the same average.
+    val rows = Seq(
+      ("s1", "2023-06-01 10:00:00", "temperature", 0.0, 90.0: java.lang.Double),
+      ("s1", "2023-06-01 11:00:00", "temperature", 20.0, 80.0: java.lang.Double),
+      ("s1", "2023-06-01 11:00:00", "temperature", 20.0, 70.0: java.lang.Double),
+      ("s1", "2023-06-01 11:00:00", "temperature", 40.0, 90.0: java.lang.Double))
+    def averages(in: Seq[(String, String, String, Double, java.lang.Double)]) =
+      Transforms.rollingAvg(2)(readings(in: _*).coalesce(1))
+        .select("timestamp", "value", "battery_level", "rolling_avg_value")
+        .collect().map(r => (r.getTimestamp(0), r.getDouble(1), r.getDouble(2)) ->
+          r.getDouble(3)).toMap
+    val forward = averages(rows)
+    assert(forward.size === rows.size)
+    assert(averages(rows.reverse) === forward)
   }
 
   test("W1 bucketed rolling average is bit-identical to the plain window") {
@@ -129,7 +148,7 @@ class TransformsSpec extends SparkSpec {
       ("s2", "2023-06-01 10:00:00", "humidity", 50.0, 88.0),
       ("s2", "2023-06-01 13:00:00", "humidity", 60.0, 88.0),
       ("s2", "2023-06-01 13:30:00", "humidity", 70.0, 88.0))
-    val plain = Transforms.rollingAvg(3, c)(df)
+    val plain = Transforms.rollingAvg(3)(df)
       .orderBy("sensor_id", "timestamp")
       .select("sensor_id", "timestamp", "rolling_avg_value").collect()
     val bucketed = Transforms.rollingAvgBucketed(3, 3600L, c)(df)
@@ -173,7 +192,7 @@ class TransformsSpec extends SparkSpec {
       ("s1", "2023-06-01 10:00:00", "temperature", 20.0, 90.0),
       ("s1", "2023-06-01 11:00:00", "temperature", 30.0, 90.0),
       ("s1", "2023-06-02 10:00:00", "temperature", 50.0, 90.0)))
-    val out = Transforms.dailyAvg(c)(df)
+    val out = Transforms.dailyAvg(df)
       .orderBy("timestamp").select("daily_avg_value").as[Double].collect()
     assert(out.toSeq === Seq(25.0, 25.0, 50.0))
   }

@@ -8,14 +8,13 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.config.{PipelineConfig, ReadingCols}
+import graft.config.PipelineConfig
 import graft.model.{QualityMetrics, SensorCoverage, SensorGap, TypeProfile, ValidationResult}
 import graft.validate.Validation
 
 class ValidationSpec extends SparkSpec {
   import spark.implicits._
 
-  private val c = ReadingCols.sensor
   private val cfg = PipelineConfig.default
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
@@ -63,15 +62,15 @@ class ValidationSpec extends SparkSpec {
     def avgOf(i: Int) = if (sc.isNullAt(i)) Double.NaN else sc.getDouble(i)
     def profile(p: DataFrame) = p.collect().toSeq.map(r =>
       TypeProfile(r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val missing = profile(Validation.missingProfile(c)(df))
+    val missing = profile(Validation.missingProfile(df))
     val anomalies =
       if (df.columns.contains("anomalous_reading"))
-        profile(Validation.anomalyProfile(c)(df))
+        profile(Validation.anomalyProfile(df))
       else Nil
-    val gaps = Validation.gapReport(cfg.validation.expectedFrequencyHours, c)(df)
+    val gaps = Validation.gapReport(cfg.validation.expectedFrequencyHours)(df)
       .collect().toSeq.map(r => SensorGap(r.getString(0), r.getString(1),
         r.getLong(2), r.getTimestamp(3), r.getTimestamp(4)))
-    val coverage = Validation.sensorCoverage(c)(df).collect().toSeq.map(r =>
+    val coverage = Validation.sensorCoverage(df).collect().toSeq.map(r =>
       SensorCoverage(r.getString(0), r.getLong(1), r.getLong(2),
         r.getTimestamp(3), r.getTimestamp(4),
         if (r.isNullAt(5)) None else Some(r.getDouble(5))))
@@ -114,7 +113,7 @@ class ValidationSpec extends SparkSpec {
       ("s1", "2023-06-01 10:00:00", "temperature", 1.0),
       ("s1", "2023-06-01 12:00:00", "temperature", 1.0),
       ("s1", "2023-06-01 14:00:00", "temperature", 1.0))
-    val gaps = Validation.gapReport(1, c)(df).collect()
+    val gaps = Validation.gapReport(1)(df).collect()
     assert(gaps.length === 1)
     assert(gaps.head.getLong(2) === 2) // 11:00 and 13:00
   }
@@ -124,7 +123,7 @@ class ValidationSpec extends SparkSpec {
       ("s1", "2023-06-01 10:00:00", "temperature", 1.0),
       ("s2", "2023-06-01 12:00:00", "temperature", 1.0))
     // span 10:00-12:00, grid 3 hours x 2 pairs; s1 missing 11,12; s2 missing 10,11
-    val gaps = Validation.gapReport(1, c)(df)
+    val gaps = Validation.gapReport(1)(df)
       .orderBy("sensor_id").collect()
     assert(gaps.map(r => (r.getString(0), r.getLong(2))).toSeq ===
       Seq(("s1", 2L), ("s2", 2L)))
@@ -134,7 +133,7 @@ class ValidationSpec extends SparkSpec {
     val df = readings(
       ("s1", "2023-06-01 10:00:00", "temperature", 1.0),
       ("s1", "2023-06-01 14:00:00", "temperature", 1.0))
-    val plan = Validation.gapReport(1, c)(df)
+    val plan = Validation.gapReport(1)(df)
       .queryExecution.optimizedPlan.toString.toLowerCase
     // the aggregate path works on gap RANGES only: the hour-grid
     // generator (sequence + explode of pairs x hours — trillions of
@@ -226,7 +225,7 @@ class ValidationSpec extends SparkSpec {
     assert(m.totalRecords === 2 && m.nullTimestamps === 2)
     assert(m.timeRange === ((null, null)))
     assert(m.gaps.isEmpty && m.totalMissingHours === 0)
-    assert(Validation.gapReport(1, c)(allNull).count() === 0)
+    assert(Validation.gapReport(1)(allNull).count() === 0)
     // A pair whose own timestamps are all null, beside pairs that have
     // some, still misses its whole grid (10:00-12:00).
     val mixed = frame(

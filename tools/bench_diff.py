@@ -146,11 +146,7 @@ def main():
                      "different experiments, not a regression")
     oq, nq = old.get("queries", {}), new.get("queries", {})
     iso = new.get("isolated", {})
-    print(f"total: {old.get('value')} -> {new.get('value')} s | "
-          f"pipeline rec/s: {old.get('pipeline_records_per_sec')} -> "
-          f"{new.get('pipeline_records_per_sec')} | stream rec/s: "
-          f"{old.get('pipeline_stream_records_per_sec')} -> "
-          f"{new.get('pipeline_stream_records_per_sec')}")
+    print(f"total: {old.get('value')} -> {new.get('value')} s")
     both = sorted(set(oq) & set(nq))
     gone, added = sorted(set(oq) - set(nq)), sorted(set(nq) - set(oq))
     if gone:
