@@ -33,12 +33,18 @@ object Pipeline {
     var cfgPath, raw, out, report: Option[String] = None
     var force = false
     var i = 0
+    // The value after the flag at i; a flag that ends the line has none.
+    def value(): Option[String] = {
+      if (i + 1 >= args.length) sys.error(s"missing value for ${args(i)}")
+      i += 2
+      Some(args(i - 1))
+    }
     while (i < args.length) {
       args(i) match {
-        case "--config" => cfgPath = Some(args(i + 1)); i += 2
-        case "--raw" => raw = Some(args(i + 1)); i += 2
-        case "--out" => out = Some(args(i + 1)); i += 2
-        case "--report" => report = Some(args(i + 1)); i += 2
+        case "--config" => cfgPath = value()
+        case "--raw" => raw = value()
+        case "--out" => out = value()
+        case "--report" => report = value()
         case "--force-full-reload" => force = true; i += 1
         case other => sys.error(s"unknown argument: $other")
       }

@@ -9,6 +9,7 @@ import graft.config.{Calibration, ReadingCols, ValueRange}
 import graft.functions.exact
 import graft.ingest.RawParquet
 import graft.transform.Transforms
+import graft.validate.Validation
 
 /** Oracle-checked query surface for the SURVEY §2 operator inventory,
   * expressed over the driver's synthetic tables. The `events` table
@@ -262,56 +263,22 @@ object CoreQueries {
         countDistinct(col("user_id")).as("distinct_users"))
     }),
 
-    // W2+J2+J3+A7 — hourly expected-grid gap detection: distinct pairs x
-    // sequence(hours), anti-join observed hours, aggregate per pair.
-    // Bounds hour-truncated (grid is hour-aligned; deterministic under
-    // sub-second noise).
+    // W2+J2+J3+A7 — hourly expected-grid gap detection: the pipeline's
+    // gap rule (Validation.gapTotals) over events projected to the
+    // sensor columns, on an hourly grid between the hour-truncated
+    // bounds (deterministic under sub-second noise).
     "q13_gap_report" -> ((s, dir) => {
-      // Logically: (distinct pairs x hourly grid) ANTI JOIN observed,
-      // grouped per pair (the oracle's formulation). Physically the
-      // grid is NEVER materialized — at 100 TB pairs x hours is
-      // trillions of rows. Instead: one lead() window over the
-      // distinct observed hours per pair; the missing count is
-      // total_hours - n_observed, and first/last missing come from the
-      // leading/trailing boundary regions plus interior gap edges. All
-      // arithmetic is integer (hour-aligned microseconds), so the
-      // result hash-matches the grid spec exactly.
-      val ev = t(s, dir, "events")
+      val sc = ReadingCols.sensor
+      val ev = t(s, dir, "events").select(col(ec.id).as(sc.id),
+        col(ec.ts).as(sc.ts), col(ec.typ).as(sc.typ))
       val bounds = ev.agg(
-        date_trunc("hour", min(col("ts"))).as("min_h"),
-        date_trunc("hour", max(col("ts"))).as("max_h"))
-      val observed = ev.select(col("user_id"), col("event_type"),
-        date_trunc("hour", col("ts")).as("h")).distinct()
-      val oneHour = expr("INTERVAL 1 HOUR")
-      val nextH = lead(col("h"), 1).over(
-        Window.partitionBy(col("user_id"), col("event_type")).orderBy(col("h")))
-      val gapped = observed
-        .withColumn("gap_first",
-          when(nextH > col("h") + oneHour, col("h") + oneHour))
-        .withColumn("gap_last",
-          when(nextH > col("h") + oneHour, nextH - oneHour))
-      gapped
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n_obs"),
-          min(col("h")).as("min_obs"), max(col("h")).as("max_obs"),
-          min(col("gap_first")).as("gap_first"),
-          max(col("gap_last")).as("gap_last"))
-        .crossJoin(broadcast(bounds))
-        .withColumn("missing_hours",
-          ((unix_micros(col("max_h")) - unix_micros(col("min_h"))) /
-            lit(3600000000L)).cast(LongType) + 1L - col("n_obs"))
-        .filter(col("missing_hours") > 0)
+        date_trunc("hour", min(col(sc.ts))).as("min_ts"),
+        date_trunc("hour", max(col(sc.ts))).as("max_ts"))
+      Validation.gapTotals(1, _.crossJoin(broadcast(bounds)))(ev)
         .select(
-          col("user_id"), col("event_type"), col("missing_hours"),
-          date_format(
-            when(col("min_obs") > col("min_h"), col("min_h"))
-              .otherwise(coalesce(col("gap_first"), col("max_obs") + oneHour)),
-            "yyyy-MM-dd HH:mm:ss").as("first_missing"),
-          date_format(
-            when(col("max_obs") < col("max_h"), col("max_h"))
-              .otherwise(coalesce(col("gap_last"), col("min_obs") - oneHour)),
-            "yyyy-MM-dd HH:mm:ss").as("last_missing"))
+          col(sc.id).as(ec.id), col(sc.typ).as(ec.typ), col("missing_hours"),
+          date_format(col("first_missing"), "yyyy-MM-dd HH:mm:ss").as("first_missing"),
+          date_format(col("last_missing"), "yyyy-MM-dd HH:mm:ss").as("last_missing"))
     }),
 
     // A8 — missing-value profile with basis-point percentages.

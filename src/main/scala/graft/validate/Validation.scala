@@ -11,17 +11,19 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.config.{PipelineConfig, ReadingCols, ValueRange}
+import graft.config.{PipelineConfig, ReadingCols}
 import graft.model._
 import graft.transform.Transforms
 
-/** Data-quality validation suite: every DuckDB SQL query from the
-  * reference's ValidationComponent (src/components/validation.py)
-  * re-expressed as a lazy DataFrame aggregate. Each builder returns a
-  * small DataFrame; `collectMetrics` computes the same answers in two
-  * actions (one per-pair aggregate, one gap pass) and assembles the
-  * driver-side QualityMetrics/ValidationResult. Every stage reads the
-  * reference's fixed record: [[ReadingCols.sensor]] plus battery_level.
+/** Data-quality validation suite: the DuckDB SQL queries of the
+  * reference's ValidationComponent (src/components/validation.py),
+  * answered by `collectMetrics` in two Spark actions (one per-pair
+  * aggregate, one gap pass) whose collected rows it assembles into
+  * QualityMetrics/ValidationResult. It is the one implementation of
+  * each rule; tools/validation_oracle.py transcribes the reference's
+  * SQL in DuckDB, and ValidationSpec checks `collectMetrics` against it.
+  * Every stage reads the reference's fixed record:
+  * [[ReadingCols.sensor]] plus battery_level.
   */
 object Validation {
 
@@ -107,30 +109,12 @@ object Validation {
     ranges.union(emptyPairs)
   }
 
-  /** The bounds of [[gapReport]] and [[missingReadings]]: `df`'s own
-    * min/max timestamp, one aggregate broadcast to every row. */
-  private def ownBounds(df: DataFrame): DataFrame => DataFrame = {
-    val bounds = df.agg(min(col(sensor.ts)).as("min_ts"), max(col(sensor.ts)).as("max_ts"))
-    _.crossJoin(broadcast(bounds))
-  }
-
-  /** J3 — missing readings, one row per missing grid instant (reference
-    * validation.py:273-285). Materializes ONLY the missing hours
-    * (explode over the gap ranges), never the full expected grid. */
-  def missingReadings(frequencyHours: Int)(df: DataFrame): DataFrame =
-    missingRanges(frequencyHours, ownBounds(df))(df)
-      .select(col(sensor.id), col(sensor.typ), col("offset_us"),
-        explode(expr(
-          s"sequence(start_h, end_h, interval $frequencyHours hour)"))
-          .as("expected_hour"))
-      .withColumn("expected_time",
-        timestamp_micros(unix_micros(col("expected_hour")) + col("offset_us")))
-      .drop("offset_us")
-
-  /** Per (sensor, type) count + first/last missing grid instant,
-    * aggregated from the gap ranges — per-pair arithmetic only, no
-    * per-missing-hour rows anywhere in the plan. */
-  private def gapTotals(
+  /** A7 — the gap rule: per (sensor, type) count + first/last missing
+    * grid instant (reference validation.py:286-316), aggregated from the
+    * gap ranges — per-pair arithmetic only, no per-missing-hour rows
+    * anywhere in the plan. Unordered; [[collectMetrics]] passes its
+    * bounds as literals, catalogue q13 as an hour-truncated aggregate. */
+  private[graft] def gapTotals(
       frequencyHours: Int,
       withBounds: DataFrame => DataFrame)(df: DataFrame): DataFrame = {
     val stepUs = frequencyHours * 3600000000L
@@ -144,45 +128,6 @@ object Validation {
         timestamp_micros(max(unix_micros(col("end_h"))) +
           first(col("offset_us"))).as("last_missing"))
   }
-
-  /** A7 — gap aggregation: per (sensor, type) count + first/last missing
-    * grid instant, descending (reference validation.py:286-316). */
-  def gapReport(frequencyHours: Int)(df: DataFrame): DataFrame =
-    gapTotals(frequencyHours, ownBounds(df))(df)
-      .orderBy(desc("missing_hours"), col(sensor.id), col(sensor.typ))
-
-  /** A8 — missing-value profile per reading type (reference
-    * validation.py:343-366). */
-  def missingProfile(df: DataFrame): DataFrame =
-    df.groupBy(col(sensor.typ))
-      .agg(
-        count(lit(1)).as("total_readings"),
-        sum(when(col(sensor.value).isNull, 1).otherwise(0)).as("missing_count"),
-        round(lit(100.0) * sum(when(col(sensor.value).isNull, 1).otherwise(0))
-          / count(lit(1)), 2).as("missing_percentage"))
-      .orderBy(desc("missing_percentage"), col(sensor.typ))
-
-  /** A9 — anomaly profile per reading type (reference validation.py:369-393). */
-  def anomalyProfile(df: DataFrame): DataFrame =
-    df.filter(col("anomalous_reading").isNotNull)
-      .groupBy(col(sensor.typ))
-      .agg(
-        count(lit(1)).as("total_readings"),
-        sum(when(col("anomalous_reading"), 1).otherwise(0)).as("anomaly_count"),
-        round(lit(100.0) * sum(when(col("anomalous_reading"), 1).otherwise(0))
-          / count(lit(1)), 2).as("anomaly_percentage"))
-      .orderBy(desc("anomaly_percentage"), col(sensor.typ))
-
-  /** A10 — per-sensor coverage (reference validation.py:396-419). */
-  def sensorCoverage(df: DataFrame): DataFrame =
-    df.groupBy(col(sensor.id))
-      .agg(
-        countDistinct(col(sensor.typ)).as("reading_types"),
-        count(lit(1)).as("total_readings"),
-        min(col(sensor.ts)).as("first_reading"),
-        max(col(sensor.ts)).as("last_reading"),
-        round(avg(col(battery)), 1).as("avg_battery"))
-      .orderBy(desc("total_readings"), col(sensor.id))
 
   /** A12 — quality score: 100 minus capped penalties
     * (reference validation.py:616-644, duplicated loading.py:305-336). */
@@ -277,7 +222,7 @@ object Validation {
     * rolls those rows up into the scalars (P8, A4-A6, A11), the
     * missing/anomaly profiles (A8, A9), the coverage (A10) and the grid
     * bounds; it adds the partial sums in (sensor, type) order and rounds
-    * like Spark's `round`, so the result equals the builders'.
+    * like Spark's `round` (HALF_UP on the double's decimal form).
     * Action 2 is the gap pass (A7) over those bounds as literals; it is
     * skipped when no timestamp is non-null (no grid, no gaps). Score and
     * assessment (A12, A13) are driver-side. */
@@ -386,7 +331,7 @@ object Validation {
 
   /** S10 — long-format data-quality report (reference validation.py:487-595):
     * one row per (category, metric, value). */
-  private def reportLines(result: ValidationResult): Seq[(String, String, String)] = {
+  private[graft] def reportLines(result: ValidationResult): Seq[(String, String, String)] = {
     val m = result.metrics.get
     val rows = Seq.newBuilder[(String, String, String)]
     rows += (("overall", "total_records", m.totalRecords.toString))
@@ -406,12 +351,6 @@ object Validation {
       rows += (("sensor_coverage", cv.sensorId, cv.totalReadings.toString)))
     result.issuesFound.foreach(i => rows += (("issues", "issue", i)))
     rows.result()
-  }
-
-  /** The S10 report as a DataFrame (category, metric, value). */
-  def reportRows(result: ValidationResult)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    reportLines(result).toDF("category", "metric", "value")
   }
 
   /** S10 sink — one stable CSV file at `path` (reference

@@ -67,4 +67,14 @@ class PipelineSpec extends SparkSpec {
     assert(r3.success)
     assert(r3.recordsIngested === 3)
   }
+
+  test("Pipeline.main rejects a flag that has no value, before any " +
+    "session starts") {
+    for (flag <- Seq("--config", "--raw", "--out", "--report")) {
+      val e = intercept[RuntimeException](
+        Pipeline.main(Array("--force-full-reload", flag)))
+      assert(e.getMessage === s"missing value for $flag")
+    }
+    assert(!spark.sparkContext.isStopped)
+  }
 }

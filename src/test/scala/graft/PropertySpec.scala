@@ -150,7 +150,8 @@ class PropertySpec extends SparkSpec {
         ("s1", java.sql.Timestamp.valueOf(f"2023-06-01 $h%02d:30:00"),
           "temperature", 1.0, 90.0))
       val df = rows.toDF("sensor_id", "timestamp", "reading_type", "value", "battery_level")
-      val missing = Validation.missingReadings(1)(df).count()
+      val missing = Validation.collectMetrics(PipelineConfig.default)(df)
+        .metrics.get.totalMissingHours
       assert(missing === span - hours.size)
     }
   }

@@ -70,8 +70,7 @@ class SessionSpec extends SparkSpec {
       "import json, sys; sys.path.insert(0, 'perfbench'); import engine; " +
         "print(json.dumps({k: engine.session_conf(k, 7, 'scratch') " +
         "for k in ('sensor', 'corpus')}))"
-    val out = scala.sys.process.Process(Seq("python3", "-c", script)).!!
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(out)
+    val root = PythonOracle.json("-c", script)
     def mirrored(kind: String): Map[String, String] =
       root.get(kind).properties.asScala
         .map(e => e.getKey -> e.getValue.asText).toMap - "spark.local.dir" ++

@@ -3,7 +3,11 @@ package graft
 import java.sql.Timestamp
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -38,66 +42,44 @@ class ValidationSpec extends SparkSpec {
     rows.toSeq.toDF("sensor_id", "timestamp", "reading_type", "value",
       "battery_level", "anomalous_reading")
 
-  /** The suite as separate queries — the kept builders plus one plain
-    * df.agg of the scalars — which collectMetrics must equal. */
-  private def reference(cfg: PipelineConfig)(df: DataFrame): ValidationResult = {
-    val br = cfg.batteryRange
-    val ranged = cfg.ranges.toSeq.sortBy(_._1)
-    val scalars = Seq(
-      count(lit(1)),
-      count(when(col("timestamp").isNull, 1)),
-      count(when(col("value").isNull, 1)),
-      count(when(col("battery_level").isNull, 1)),
-      count(when(col("battery_level") < br.min || col("battery_level") > br.max, 1)),
-      countDistinct(col("sensor_id")),
-      min(col("timestamp")),
-      max(col("timestamp")),
-      round(avg(col("value")), 2),
-      round(avg(col("battery_level")), 1)) ++
-      ranged.map { case (typ, r) =>
-        count(when(col("reading_type") === typ &&
-          (col("value") < r.min || col("value") > r.max), 1))
-      }
-    val sc = df.agg(scalars.head, scalars.tail: _*).head()
-    def avgOf(i: Int) = if (sc.isNullAt(i)) Double.NaN else sc.getDouble(i)
-    def profile(p: DataFrame) = p.collect().toSeq.map(r =>
-      TypeProfile(r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val missing = profile(Validation.missingProfile(df))
-    val anomalies =
-      if (df.columns.contains("anomalous_reading"))
-        profile(Validation.anomalyProfile(df))
-      else Nil
-    val gaps = Validation.gapReport(cfg.validation.expectedFrequencyHours)(df)
-      .collect().toSeq.map(r => SensorGap(r.getString(0), r.getString(1),
-        r.getLong(2), r.getTimestamp(3), r.getTimestamp(4)))
-    val coverage = Validation.sensorCoverage(df).collect().toSeq.map(r =>
-      SensorCoverage(r.getString(0), r.getLong(1), r.getLong(2),
-        r.getTimestamp(3), r.getTimestamp(4),
-        if (r.isNullAt(5)) None else Some(r.getDouble(5))))
-    val totalGapHours = gaps.map(_.missingHours).sum
-    val issues = Validation.assess(missing, anomalies, gaps, cfg)
+  /** The oracle's answer for one validation case as a ValidationResult:
+    * timestamps come as epoch microseconds, a missing average as null. */
+  private def fromOracle(r: JsonNode): ValidationResult = {
+    val m = r.get("metrics")
+    def list(n: JsonNode) = n.elements.asScala.toSeq
+    def stamp(n: JsonNode) =
+      if (n.isNull) null else DateTimeUtils.toJavaTimestamp(n.asLong)
+    def avg(n: JsonNode) = if (n.isNull) Double.NaN else n.asDouble
+    def profile(name: String) = list(m.get(name)).map(p =>
+      TypeProfile(p.get(0).asText, p.get(1).asLong, p.get(2).asLong, p.get(3).asDouble))
+    val range = m.get("time_range")
     ValidationResult(
-      passed = issues.isEmpty,
-      totalRecords = sc.getLong(0),
-      issuesFound = issues,
-      qualityScore = Validation.qualityScore(missing, anomalies, totalGapHours, cfg),
+      passed = r.get("passed").asBoolean,
+      totalRecords = r.get("total_records").asLong,
+      issuesFound = list(r.get("issues_found")).map(_.asText),
+      qualityScore = r.get("quality_score").asDouble,
       metrics = Some(QualityMetrics(
-        totalRecords = sc.getLong(0),
-        nullTimestamps = sc.getLong(1),
-        invalidValues = sc.getLong(2),
-        invalidBatteries = sc.getLong(3),
-        rangeViolations = ranged.zipWithIndex.map { case ((typ, _), i) =>
-          typ -> sc.getLong(10 + i) }.toMap,
-        batteryViolations = sc.getLong(4),
-        distinctSensors = sc.getLong(5),
-        timeRange = (sc.getTimestamp(6), sc.getTimestamp(7)),
-        missingProfile = missing,
-        anomalyProfile = anomalies,
-        coverage = coverage,
-        gaps = gaps,
-        totalMissingHours = totalGapHours,
-        avgValue = avgOf(8),
-        avgBattery = avgOf(9))))
+        totalRecords = m.get("total_records").asLong,
+        nullTimestamps = m.get("null_timestamps").asLong,
+        invalidValues = m.get("invalid_values").asLong,
+        invalidBatteries = m.get("invalid_batteries").asLong,
+        rangeViolations = m.get("range_violations").properties.asScala
+          .map(e => e.getKey -> e.getValue.asLong).toMap,
+        batteryViolations = m.get("battery_violations").asLong,
+        distinctSensors = m.get("distinct_sensors").asLong,
+        timeRange = (stamp(range.get(0)), stamp(range.get(1))),
+        missingProfile = profile("missing_profile"),
+        anomalyProfile = profile("anomaly_profile"),
+        coverage = list(m.get("coverage")).map(c =>
+          SensorCoverage(c.get(0).asText, c.get(1).asLong, c.get(2).asLong,
+            stamp(c.get(3)), stamp(c.get(4)),
+            if (c.get(5).isNull) None else Some(c.get(5).asDouble))),
+        gaps = list(m.get("gaps")).map(g =>
+          SensorGap(g.get(0).asText, g.get(1).asText, g.get(2).asLong,
+            stamp(g.get(3)), stamp(g.get(4)))),
+        totalMissingHours = m.get("total_missing_hours").asLong,
+        avgValue = avg(m.get("avg_value")),
+        avgBattery = avg(m.get("avg_battery")))))
   }
 
   /** Result equality with the two averages compared as the report
@@ -107,15 +89,15 @@ class ValidationSpec extends SparkSpec {
       r.metrics.map(m => (m.avgValue.toString, m.avgBattery.toString)))
 
   test("gap detection: hourly grid anti-join counts missing hours") {
-    // s1/temperature present at 10:00, 12:00 over a 10:00-14:00 span
-    // -> missing 11:00, 13:00, 14:00
+    // s1/temperature present at 10:00, 12:00, 14:00 over a 10:00-14:00
+    // span -> missing 11:00 and 13:00
     val df = readings(
       ("s1", "2023-06-01 10:00:00", "temperature", 1.0),
       ("s1", "2023-06-01 12:00:00", "temperature", 1.0),
       ("s1", "2023-06-01 14:00:00", "temperature", 1.0))
-    val gaps = Validation.gapReport(1)(df).collect()
+    val gaps = Validation.collectMetrics(cfg)(df).metrics.get.gaps
     assert(gaps.length === 1)
-    assert(gaps.head.getLong(2) === 2) // 11:00 and 13:00
+    assert(gaps.head.missingHours === 2) // 11:00 and 13:00
   }
 
   test("gap detection: per-pair grid (two sensors, disjoint hours)") {
@@ -123,17 +105,14 @@ class ValidationSpec extends SparkSpec {
       ("s1", "2023-06-01 10:00:00", "temperature", 1.0),
       ("s2", "2023-06-01 12:00:00", "temperature", 1.0))
     // span 10:00-12:00, grid 3 hours x 2 pairs; s1 missing 11,12; s2 missing 10,11
-    val gaps = Validation.gapReport(1)(df)
-      .orderBy("sensor_id").collect()
-    assert(gaps.map(r => (r.getString(0), r.getLong(2))).toSeq ===
+    val gaps = Validation.collectMetrics(cfg)(df).metrics.get.gaps
+      .sortBy(_.sensorId)
+    assert(gaps.map(g => (g.sensorId, g.missingHours)) ===
       Seq(("s1", 2L), ("s2", 2L)))
   }
 
-  test("gap detection: gapReport plan materializes no grid and no explode") {
-    val df = readings(
-      ("s1", "2023-06-01 10:00:00", "temperature", 1.0),
-      ("s1", "2023-06-01 14:00:00", "temperature", 1.0))
-    val plan = Validation.gapReport(1)(df)
+  test("gap detection: the gap rule's plan (q13) materializes no grid") {
+    val plan = SparkEntry.queries("q13_gap_report")(spark, q13Dir)
       .queryExecution.optimizedPlan.toString.toLowerCase
     // the aggregate path works on gap RANGES only: the hour-grid
     // generator (sequence + explode of pairs x hours — trillions of
@@ -225,7 +204,6 @@ class ValidationSpec extends SparkSpec {
     assert(m.totalRecords === 2 && m.nullTimestamps === 2)
     assert(m.timeRange === ((null, null)))
     assert(m.gaps.isEmpty && m.totalMissingHours === 0)
-    assert(Validation.gapReport(1)(allNull).count() === 0)
     // A pair whose own timestamps are all null, beside pairs that have
     // some, still misses its whole grid (10:00-12:00).
     val mixed = frame(
@@ -237,7 +215,8 @@ class ValidationSpec extends SparkSpec {
       Seq(("s2", "humidity", 3L), ("s1", "temperature", 1L)))
   }
 
-  test("collectMetrics equals the builders plus a plain scalar aggregate") {
+  /** The parity table: (name, config, frame). */
+  private lazy val parityCases: Seq[(String, PipelineConfig, DataFrame)] = {
     val twoHourly = cfg.copy(validation = cfg.validation.copy(expectedFrequencyHours = 2))
     val mixed = frame(
       row("s1", "2023-06-01 10:00:00", "temperature", Some(25.0)),
@@ -248,7 +227,7 @@ class ValidationSpec extends SparkSpec {
       row("s2", "2023-06-01 10:00:00", "humidity", Some(60.0), battery = Some(-1.0)),
       row("s2", "2023-06-01 13:00:00", "humidity", Some(61.25)),
       row("s3", "2023-06-01 11:00:00", "temperature", Some(30.0), battery = Some(55.5)))
-    val cases = Seq(
+    Seq(
       ("hourly", cfg, mixed),
       ("two-hourly", twoHourly, mixed),
       // min_ts at 10:30: s2's hours are all off the 2-hour grid, s3 is
@@ -290,20 +269,64 @@ class ValidationSpec extends SparkSpec {
         row("s1", "2023-06-01 11:00:00", "pressure", Some(-5.0)),
         row("s1", "2023-06-01 10:00:00", "temperature", Some(99.0)))),
       ("empty", cfg, frame()))
-    for (tz <- Seq("UTC", "Asia/Kolkata"); (name, conf, df) <- cases)
+  }
+
+  private val zones = Seq("UTC", "Asia/Kolkata")
+
+  /** q13's null-timestamp input: (1, click) has hours 10:15 and 13:20
+    * beside a null ts; (3, view) has only a null ts. */
+  private lazy val q13Dir: String = {
+    def ev(id: Long, t: String, user: Long, typ: String) =
+      (id, Option(t).map(ts), user, typ, 1.0, "{}")
+    new java.io.File(PythonOracle.parquet(spark, Seq(
+      ev(1, "2023-06-01 10:15:00", 1, "click"),
+      ev(2, "2023-06-01 13:20:00", 1, "click"),
+      ev(3, null, 1, "click"),
+      ev(4, null, 3, "view"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+      "events")).getParent
+  }
+
+  /** Every case of this spec through the DuckDB oracle, in one run. */
+  private lazy val oracle: Map[String, JsonNode] = PythonOracle.oracle(
+    parityCases.flatMap { case (name, conf, df) =>
+      val path = PythonOracle.parquet(spark, df)
+      zones.map(tz => PythonOracle.validation(s"$name under $tz", path, conf, tz))
+    } :+ PythonOracle.sql("q13", Map("events" -> s"$q13Dir/events.parquet"),
+      SparkEntry.oracleSql("q13_gap_report"), "UTC"))
+
+  test("collectMetrics equals the DuckDB oracle's transcription of the " +
+    "reference suite") {
+    for (tz <- zones; (name, conf, df) <- parityCases)
       Session.withConf(spark, "spark.sql.session.timeZone" -> tz) {
         withClue(s"$name under $tz: ") {
           assert(comparable(Validation.collectMetrics(conf)(df)) ===
-            comparable(reference(conf)(df)))
+            comparable(fromOracle(oracle(s"$name under $tz"))))
         }
       }
+  }
+
+  test("q13 runs the production gap rule: a null ts is no observation") {
+    val engine = Session.withConf(spark, "spark.sql.session.timeZone" -> "UTC") {
+      SparkEntry.queries("q13_gap_report")(spark, q13Dir).collect().toSeq
+    }.map(_.toSeq.map(String.valueOf))
+    val duck = oracle("q13").get("rows").elements.asScala.toSeq
+      .map(_.elements.asScala.toSeq.map(v => if (v.isNull) "null" else v.asText))
+    def sorted(rows: Seq[Seq[String]]) = rows.sortBy(_.mkString(","))
+    assert(sorted(engine) === sorted(duck))
+    assert(sorted(engine) === Seq(
+      Seq("1", "click", "2", "2023-06-01 11:00:00", "2023-06-01 12:00:00"),
+      Seq("3", "view", "4", "2023-06-01 10:00:00", "2023-06-01 13:00:00")))
   }
 
   test("report rows cover all categories") {
     val df = readings(("s1", "2023-06-01 10:00:00", "temperature", 25.0))
       .withColumn("anomalous_reading", lit(false))
     val res = Validation.collectMetrics(cfg)(df)
-    val cats = Validation.reportRows(res)(spark)
+    val path = java.nio.file.Files.createTempDirectory("graft-report")
+      .resolve("dq_report.csv")
+    Validation.writeReport(res, path.toString)(spark)
+    val cats = spark.read.option("header", "true").csv(path.toString)
       .select("category").distinct().as[String].collect().toSet
     assert(Set("overall", "missing_values", "anomalies",
       "sensor_coverage").subsetOf(cats))
@@ -327,10 +350,10 @@ class ValidationSpec extends SparkSpec {
     assert(lines.last === "") // every line ends in \n
     assert(lines.contains("sensor_coverage,\"s\"\"1,x\",1"))
     assert(lines.contains("overall,total_records,1"))
-    // the same rows as reportRows, read back by a CSV parser
+    // the same rows as reportLines, read back by a CSV parser
     val back = spark.read.option("header", "true").option("escape", "\"")
       .csv(path.toString)
     assert(back.collect().map(_.toSeq).toSet ===
-      Validation.reportRows(res)(spark).collect().map(_.toSeq).toSet)
+      Validation.reportLines(res).map { case (c, m, v) => Seq(c, m, v) }.toSet)
   }
 }
