@@ -3,10 +3,8 @@ package graft.validate
 import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
 
-import scala.math.BigDecimal.RoundingMode
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,7 +16,8 @@ import graft.transform.Transforms
 /** Data-quality validation suite: the DuckDB SQL queries of the
   * reference's ValidationComponent (src/components/validation.py),
   * answered by `collectMetrics` in two Spark actions (one per-pair
-  * aggregate, one gap pass) whose collected rows it assembles into
+  * aggregate; one gap pass, a single window over the distinct observed
+  * hours feeding a per-pair aggregate) whose collected rows it assembles into
   * QualityMetrics/ValidationResult. It is the one implementation of
   * each rule; tools/validation_oracle.py transcribes the reference's
   * SQL in DuckDB, and ValidationSpec checks `collectMetrics` against it.
@@ -30,103 +29,69 @@ object Validation {
   private val sensor = ReadingCols.sensor
   private val battery = "battery_level"
 
-  /** W2+J2+J3 — per-pair maximal MISSING-hour ranges against the
-    * reference's expected grid (validation.py:247-285): logically,
+  /** W2+J2+J3+A7 — the gap rule: per (sensor, type) count + first/last
+    * missing grid instant (reference validation.py:247-316). Logically,
     * DISTINCT (sensor, type) x generate_series(min_ts, max_ts, f hours)
-    * anti-joined with the observed hours. The grid instants are
-    * min_ts + k*f hours — they carry min_ts's sub-hour offset, and a
-    * grid row is missing when no observation shares its hour-truncated
-    * slot. `withBounds` attaches the grid bounds to a frame as the
-    * columns min_ts and max_ts; with no non-null timestamp there is no
-    * grid, so there are no ranges.
+    * LEFT JOINed to the observed hours: a grid row is missing when no
+    * reading of the pair shares its hour-truncated slot, and a null key
+    * never matches. The grid instants are min_ts + k*f hours — they carry
+    * min_ts's sub-hour offset. `withBounds` attaches the grid bounds to a
+    * frame as the columns min_ts and max_ts; with no non-null timestamp
+    * there is no grid, so there are no rows.
     *
     * Physically the grid is NEVER materialized — at 100 TB, pairs x
-    * hours is trillions of rows. Instead one lead() window over the
-    * distinct observed hours per pair yields each maximal missing range
-    * directly: interior gaps from consecutive observed hours more than
-    * one step apart, plus the leading/trailing regions against the
-    * global bounds. Output: one row per range —
-    * (id, typ, start_h, end_h, offset_us) in hour-truncated space, with
-    * the sub-hour grid offset carried for reconstruction. */
-  private def missingRanges(
-      frequencyHours: Int,
-      withBounds: DataFrame => DataFrame)(df: DataFrame): DataFrame = {
-    val stepUs = frequencyHours * 3600000000L
-    val step = expr(s"INTERVAL $frequencyHours HOUR")
-    // Grid anchor = hour-truncated min_ts; offset = min_ts's sub-hour
-    // part; top_h = anchor of the LAST grid instant <= max_ts.
-    def withGrid(f: DataFrame): DataFrame = withBounds(f)
-      .withColumn("min_h", date_trunc("hour", col("min_ts")))
-      .withColumn("offset_us",
-        unix_micros(col("min_ts")) - unix_micros(col("min_h")))
-      .withColumn("top_h", timestamp_micros(
-        unix_micros(col("min_h")) +
-          floor((unix_micros(col("max_ts")) - unix_micros(col("min_ts")))
-            / stepUs).cast("long") * stepUs))
-      .drop("min_ts", "max_ts")
-    val observed = withGrid(df
-      .select(col(sensor.id), col(sensor.typ),
-        date_trunc("hour", col(sensor.ts)).as("h"))
-      .distinct())
-    // Observed hours that land on a grid slot (off-grid hours exist only
-    // when min_ts is not step-aligned with the observation's hour).
-    val onGrid = observed.filter(
-      col("h") <= col("top_h") &&
-        (unix_micros(col("h")) - unix_micros(col("min_h"))) % stepUs === 0)
-    val wOrd = Window.partitionBy(col(sensor.id), col(sensor.typ)).orderBy(col("h"))
-    val wAll = Window.partitionBy(col(sensor.id), col(sensor.typ))
-      .orderBy(col("h"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val ranges = onGrid
-      .withColumn("next_h", lead(col("h"), 1).over(wOrd))
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("max_obs", max(col("h")).over(wAll))
-      .select(col(sensor.id), col(sensor.typ), col("offset_us"),
-        explode(array_compact(array(
-          // leading region: grid start up to the first observed hour
-          when(col("rn") === 1 && col("h") > col("min_h"),
-            struct(col("min_h").as("start_h"), (col("h") - step).as("end_h"))),
-          // interior gap after this observed hour
-          when(col("next_h") > col("h") + step,
-            struct((col("h") + step).as("start_h"),
-              (col("next_h") - step).as("end_h"))),
-          // trailing region: after the last observed hour to grid top
-          when(col("next_h").isNull && col("max_obs") < col("top_h"),
-            struct((col("max_obs") + step).as("start_h"),
-              col("top_h").as("end_h")))))).as("r"))
-      .select(col(sensor.id), col(sensor.typ),
-        col("r.start_h").as("start_h"), col("r.end_h").as("end_h"),
-        col("offset_us"))
-    // Pairs with no observed hour on the grid (every hour off-grid or
-    // every timestamp null): the whole grid is missing for them.
-    val emptyPairs = withGrid(observed.select(col(sensor.id), col(sensor.typ)).distinct()
-      .join(onGrid.select(col(sensor.id), col(sensor.typ)).distinct(),
-        Seq(sensor.id, sensor.typ), "left_anti"))
-      .filter(col("top_h").isNotNull)
-      .select(col(sensor.id), col(sensor.typ),
-        col("min_h").as("start_h"), col("top_h").as("end_h"),
-        col("offset_us"))
-    ranges.union(emptyPairs)
-  }
-
-  /** A7 — the gap rule: per (sensor, type) count + first/last missing
-    * grid instant (reference validation.py:286-316), aggregated from the
-    * gap ranges — per-pair arithmetic only, no per-missing-hour rows
-    * anywhere in the plan. Unordered; [[collectMetrics]] passes its
-    * bounds as literals, catalogue q13 as an hour-truncated aggregate. */
+    * hours is trillions of rows. One lead() window over the distinct
+    * observed (sensor, type, hour) rows feeds one per-pair aggregate. An
+    * hour counts only when it is on the grid and both keys are non-null;
+    * any other (off-grid, null ts, null key) is no observation and sorts
+    * last. A pair misses the grid size minus its counted hours. Its first
+    * missing instant is the grid start when its first counted hour is
+    * later (or it has none), else the hour after its first interior or
+    * trailing gap; the last is the mirror. Pairs missing nothing drop
+    * out. Unordered; [[collectMetrics]] passes its bounds as literals,
+    * catalogue q13 as an hour-truncated aggregate. */
   private[graft] def gapTotals(
       frequencyHours: Int,
       withBounds: DataFrame => DataFrame)(df: DataFrame): DataFrame = {
     val stepUs = frequencyHours * 3600000000L
-    missingRanges(frequencyHours, withBounds)(df)
-      .groupBy(col(sensor.id), col(sensor.typ))
+    // Epoch micros throughout: min_h is the hour-truncated min_ts (the
+    // grid anchor), offset_us min_ts's sub-hour part, top_h the anchor of
+    // the last grid instant <= max_ts, c the counted hour.
+    val (minH, topH, h, c, next) =
+      (col("min_h"), col("top_h"), col("h"), col("c"), col("next_c"))
+    val hours = withBounds(df
+      .select(col(sensor.id), col(sensor.typ),
+        date_trunc("hour", col(sensor.ts)).as("h"))
+      .distinct())
+      .withColumn("min_h", unix_micros(date_trunc("hour", col("min_ts"))))
+      .withColumn("offset_us", unix_micros(col("min_ts")) - minH)
+      .withColumn("top_h", minH + floor(
+        (unix_micros(col("max_ts")) - unix_micros(col("min_ts"))) / stepUs)
+        .cast("long") * stepUs)
+      .withColumn("h", unix_micros(h))
+      .withColumn("c", when(col(sensor.id).isNotNull &&
+        col(sensor.typ).isNotNull && h <= topH && (h - minH) % stepUs === 0, h))
+    val byHour = Window.partitionBy(col(sensor.id), col(sensor.typ))
+      .orderBy(c.asc_nulls_last)
+    val (lo, hi) = (col("lo"), col("hi"))
+    def instant(us: Column): Column = timestamp_micros(us + col("offset_us"))
+    hours
+      .withColumn("next_c", lead(c, 1).over(byHour))
+      .groupBy(col(sensor.id), col(sensor.typ), minH, topH, col("offset_us"))
       .agg(
-        sum(((unix_micros(col("end_h")) - unix_micros(col("start_h")))
-          / stepUs).cast("long") + 1L).cast("long").as("missing_hours"),
-        timestamp_micros(min(unix_micros(col("start_h"))) +
-          first(col("offset_us"))).as("first_missing"),
-        timestamp_micros(max(unix_micros(col("end_h"))) +
-          first(col("offset_us"))).as("last_missing"))
+        count(c).as("n"), min(c).as("lo"), max(c).as("hi"),
+        // the first hour of each gap after a counted hour
+        min(when(coalesce(next - stepUs, topH) > c, c + stepUs)).as("start"),
+        // the last hour of each interior gap
+        max(when(next - stepUs > c, next - stepUs)).as("end"))
+      .select(col(sensor.id), col(sensor.typ),
+        ((topH - minH) / stepUs).cast("long") + 1L - col("n") as "missing_hours",
+        instant(when(lo.isNull || lo > minH, minH).otherwise(col("start")))
+          .as("first_missing"),
+        instant(when(hi.isNull || hi < topH, topH)
+          .otherwise(greatest(col("end"), when(lo > minH, lo - stepUs))))
+          .as("last_missing"))
+      .filter(col("missing_hours") > 0)
   }
 
   /** A12 — quality score: 100 minus capped penalties
@@ -144,19 +109,22 @@ object Validation {
     math.max(0.0, 100.0 - missingPenalty - anomalyPenalty - gapPenalty)
   }
 
-  /** A13 — threshold assessment (reference validation.py:448-485). */
+  /** A13 — threshold assessment (reference validation.py:448-485). The
+    * reference formats these texts in Python, so a null key reads None. */
   def assess(
       missing: Seq[TypeProfile],
       anomalies: Seq[TypeProfile],
       gaps: Seq[SensorGap],
       cfg: PipelineConfig): Seq[String] = {
+    def key(k: String): String = if (k == null) "None" else k
     val issues = Seq.newBuilder[String]
     missing.filter(_.percentage > cfg.validation.maxMissingPercentage).foreach(p =>
-      issues += s"High missing values for ${p.readingType}: ${p.percentage}%")
+      issues += s"High missing values for ${key(p.readingType)}: ${p.percentage}%")
     anomalies.filter(_.percentage > cfg.validation.maxAnomalyPercentage).foreach(p =>
-      issues += s"High anomaly rate for ${p.readingType}: ${p.percentage}%")
+      issues += s"High anomaly rate for ${key(p.readingType)}: ${p.percentage}%")
     gaps.filter(_.missingHours > cfg.validation.maxGapHours).foreach(g =>
-      issues += s"Data gap for ${g.sensorId}/${g.readingType}: ${g.missingHours} missing hours")
+      issues += s"Data gap for ${key(g.sensorId)}/${key(g.readingType)}: " +
+        s"${g.missingHours} missing hours")
     issues.result()
   }
 
@@ -198,14 +166,22 @@ object Validation {
     Ordering.by[TypeProfile, Double](_.percentage)(Ordering.Double.TotalOrdering).reverse
       .orElseBy(_.readingType: Any)(keyOrder)
 
-  /** Spark's `round(x, scale)` on a double: HALF_UP on its decimal form. */
-  private def roundHalfUp(x: Double, scale: Int): Double =
-    if (x.isNaN || x.isInfinite) x
-    else BigDecimal(x).setScale(scale, RoundingMode.HALF_UP).toDouble
+  /** DuckDB's `ROUND(x, scale)` on a double, which the reference's SQL
+    * rounds with: x * 10^scale rounded half away from zero in double
+    * arithmetic, then divided by 10^scale; x itself when that overflows.
+    * A decimal tie that is not exact in binary can round down: 1.025
+    * times 100 is 102.49999999999999, so it rounds to 1.02. */
+  private def roundHalfAway(x: Double, scale: Int): Double = {
+    val m = math.pow(10, scale)
+    val a = math.abs(x * m)
+    val whole = math.floor(a)
+    val r = math.copySign(if (a - whole >= 0.5) whole + 1 else whole, x) / m
+    if (r.isNaN || r.isInfinite) x else r
+  }
 
-  /** `round(100.0 * affected / total, 2)` with Spark's double arithmetic. */
+  /** `ROUND(100.0 * affected / total, 2)` in double arithmetic. */
   private def percentage(affected: Long, total: Long): Double =
-    roundHalfUp(100.0 * affected / total, 2)
+    roundHalfAway(100.0 * affected / total, 2)
 
   /** Earliest/latest of the non-null timestamps, None when all are null. */
   private def earliest(ts: Seq[Timestamp]): Option[Timestamp] =
@@ -222,7 +198,8 @@ object Validation {
     * rolls those rows up into the scalars (P8, A4-A6, A11), the
     * missing/anomaly profiles (A8, A9), the coverage (A10) and the grid
     * bounds; it adds the partial sums in (sensor, type) order and rounds
-    * like Spark's `round` (HALF_UP on the double's decimal form).
+    * like the reference's DuckDB `ROUND` (half away from zero of
+    * x * 10^scale in double arithmetic).
     * Action 2 is the gap pass (A7) over those bounds as literals; it is
     * skipped when no timestamp is non-null (no grid, no gaps). Score and
     * assessment (A12, A13) are driver-side. */
@@ -277,7 +254,7 @@ object Validation {
           ps.map(_.rows).sum,
           earliest(ps.map(_.minTs)).orNull, latest(ps.map(_.maxTs)).orNull,
           if (batteries == 0) None
-          else Some(roundHalfUp(ps.map(_.batterySum).sum / batteries, 1))))
+          else Some(roundHalfAway(ps.map(_.batterySum).sum / batteries, 1))))
       }
       .sorted(Ordering.by[(Any, SensorCoverage), Long](_._2.totalReadings).reverse
         .orElseBy(_._1)(keyOrder))
@@ -292,8 +269,9 @@ object Validation {
         .collect().toSeq
         .sorted(Ordering.by[Row, Long](_.getLong(2)).reverse
           .orElseBy(_.get(0))(keyOrder).orElseBy(_.getString(1): Any)(keyOrder))
-        .map(r => SensorGap(r.get(0).toString, r.getString(1), r.getLong(2),
-          r.getTimestamp(3), r.getTimestamp(4)))).getOrElse(Nil)
+        .map(r => SensorGap(Option(r.get(0)).map(String.valueOf).orNull,
+          r.getString(1), r.getLong(2), r.getTimestamp(3), r.getTimestamp(4))))
+      .getOrElse(Nil)
 
     val totalGapHours = gaps.map(_.missingHours).sum
     val score = qualityScore(missing, anomalies, totalGapHours, cfg)
@@ -317,9 +295,9 @@ object Validation {
       gaps = gaps,
       totalMissingHours = totalGapHours,
       avgValue = if (values == 0) Double.NaN
-        else roundHalfUp(pairs.map(_.valueSum).sum / values, 2),
+        else roundHalfAway(pairs.map(_.valueSum).sum / values, 2),
       avgBattery = if (batteries == 0) Double.NaN
-        else roundHalfUp(pairs.map(_.batterySum).sum / batteries, 1))
+        else roundHalfAway(pairs.map(_.batterySum).sum / batteries, 1))
 
     ValidationResult(
       passed = issues.isEmpty,

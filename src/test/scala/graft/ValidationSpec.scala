@@ -7,8 +7,12 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -16,7 +20,7 @@ import graft.config.PipelineConfig
 import graft.model.{QualityMetrics, SensorCoverage, SensorGap, TypeProfile, ValidationResult}
 import graft.validate.Validation
 
-class ValidationSpec extends SparkSpec {
+class ValidationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val cfg = PipelineConfig.default
@@ -43,15 +47,18 @@ class ValidationSpec extends SparkSpec {
       "battery_level", "anomalous_reading")
 
   /** The oracle's answer for one validation case as a ValidationResult:
-    * timestamps come as epoch microseconds, a missing average as null. */
+    * timestamps come as epoch microseconds, a missing average as null.
+    * A null key stays null in profiles and gaps, as the engine keeps it;
+    * coverage prints it as text. */
   private def fromOracle(r: JsonNode): ValidationResult = {
     val m = r.get("metrics")
     def list(n: JsonNode) = n.elements.asScala.toSeq
+    def key(n: JsonNode) = if (n.isNull) null else n.asText
     def stamp(n: JsonNode) =
       if (n.isNull) null else DateTimeUtils.toJavaTimestamp(n.asLong)
     def avg(n: JsonNode) = if (n.isNull) Double.NaN else n.asDouble
     def profile(name: String) = list(m.get(name)).map(p =>
-      TypeProfile(p.get(0).asText, p.get(1).asLong, p.get(2).asLong, p.get(3).asDouble))
+      TypeProfile(key(p.get(0)), p.get(1).asLong, p.get(2).asLong, p.get(3).asDouble))
     val range = m.get("time_range")
     ValidationResult(
       passed = r.get("passed").asBoolean,
@@ -75,7 +82,7 @@ class ValidationSpec extends SparkSpec {
             stamp(c.get(3)), stamp(c.get(4)),
             if (c.get(5).isNull) None else Some(c.get(5).asDouble))),
         gaps = list(m.get("gaps")).map(g =>
-          SensorGap(g.get(0).asText, g.get(1).asText, g.get(2).asLong,
+          SensorGap(key(g.get(0)), key(g.get(1)), g.get(2).asLong,
             stamp(g.get(3)), stamp(g.get(4)))),
         totalMissingHours = m.get("total_missing_hours").asLong,
         avgValue = avg(m.get("avg_value")),
@@ -166,34 +173,73 @@ class ValidationSpec extends SparkSpec {
     assert(res.qualityScore === 100.0 - 2.0) // one gap hour -> penalty 2
   }
 
+  /** Every Dataset action `body` ran, as (output columns, its query
+    * execution). Listener events arrive asynchronously but in order: a
+    * marker action fences each side of `body`. */
+  private def actionsOf(body: => Unit): Seq[(String, QueryExecution)] = {
+    val actions = new LinkedBlockingQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        actions.put((qe.analyzed.output.map(_.name).mkString(","), qe))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        actions.put((s"failed $f", qe))
+    }
+    def fence(marker: String): Seq[(String, QueryExecution)] = {
+      spark.range(1).toDF(marker).collect()
+      Iterator.continually(actions.poll(60, TimeUnit.SECONDS))
+        .map(a => { assert(a != null, s"no event for $marker"); a })
+        .takeWhile(_._1 != marker).toSeq
+    }
+    spark.listenerManager.register(listener)
+    try {
+      fence("validation_actions_before")
+      body
+      fence("validation_actions_after")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The leaf scans of an executed plan's final form (after AQE, through
+    * its query stages) by node class: each is one read of a source, or a
+    * reused exchange. */
+  private def leafScans(plan: SparkPlan): Seq[String] =
+    collectLeaves(plan).map(_.getClass.getSimpleName)
+
   test("collectMetrics runs at most two Spark actions") {
     val df = readings(
       ("s1", "2023-06-01 10:00:00", "temperature", 25.0),
       ("s1", "2023-06-01 12:00:00", "temperature", 26.0),
       ("s2", "2023-06-01 10:00:00", "humidity", 60.0))
       .withColumn("anomalous_reading", lit(false))
-    // Listener events arrive asynchronously but in order: a marker
-    // action fences each side of the measured call.
-    val actions = new LinkedBlockingQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        actions.put(qe.analyzed.output.map(_.name).mkString(","))
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        actions.put(s"failed $f")
-    }
-    def fence(marker: String): Seq[String] = {
-      spark.range(1).toDF(marker).collect()
-      Iterator.continually(actions.poll(60, TimeUnit.SECONDS))
-        .map(a => { assert(a != null, s"no event for $marker"); a })
-        .takeWhile(_ != marker).toSeq
-    }
-    spark.listenerManager.register(listener)
+    val ran = actionsOf(Validation.collectMetrics(cfg)(df)).map(_._1)
+    assert(ran.size <= 2, ran)
+  }
+
+  test("plan pin: collectMetrics' gap action reads the persisted frame once") {
+    // s2 has no on-grid hour: a branch for such pairs would have rows,
+    // so AQE could not prune it from the final plan.
+    val df = frame(
+      row("s1", "2023-06-01 10:00:00", "temperature"),
+      row("s1", "2023-06-01 12:00:00", "temperature"),
+      row("s2", null, "humidity"))
+      .persist()
     try {
-      fence("validation_actions_before")
-      Validation.collectMetrics(cfg)(df)
-      val ran = fence("validation_actions_after")
-      assert(ran.size <= 2, ran)
-    } finally spark.listenerManager.unregister(listener)
+      val gapActions = actionsOf(Validation.collectMetrics(cfg)(df))
+        .filter(_._1.split(",").contains("missing_hours"))
+      assert(gapActions.size === 1, gapActions.map(_._1))
+      val plan = gapActions.head._2.executedPlan
+      assert(leafScans(plan) ===
+        Seq(classOf[InMemoryTableScanExec].getSimpleName), plan)
+    } finally df.unpersist()
+  }
+
+  test("plan pin: q13 scans events at most twice and runs no anti join") {
+    val q = SparkEntry.queries("q13_gap_report")(spark, q13Dir)
+    q.collect()
+    val plan = q.queryExecution.executedPlan
+    assert(leafScans(plan)
+      .count(_ == classOf[FileSourceScanExec].getSimpleName) <= 2, plan)
+    assert(collect(plan) {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j }.isEmpty, plan)
   }
 
   test("collectMetrics: no non-null timestamp means no grid and no gaps") {
@@ -268,21 +314,39 @@ class ValidationSpec extends SparkSpec {
         row("s1", "2023-06-01 10:00:00", "pressure", Some(1013.0)),
         row("s1", "2023-06-01 11:00:00", "pressure", Some(-5.0)),
         row("s1", "2023-06-01 10:00:00", "temperature", Some(99.0)))),
+      // (null, temperature) has an interior gap among its on-grid hours
+      // and (s2, null) one hour: a null key never matches the grid, so
+      // both miss all five hours, past max_gap_hours.
+      ("null keys", cfg, frame(
+        row("s1", "2023-06-01 10:00:00", "temperature"),
+        row("s1", "2023-06-01 14:00:00", "temperature"),
+        row(null, "2023-06-01 10:00:00", "temperature"),
+        row(null, "2023-06-01 12:00:00", "temperature"),
+        row(null, "2023-06-01 13:00:00", "temperature"),
+        row("s2", "2023-06-01 11:00:00", null))),
+      // 100.0 * 41 / 4000 is 1.025, a decimal tie below it in binary:
+      // DuckDB's ROUND gives 1.02.
+      ("rounding tie", cfg, frame((1 to 4000).map(i =>
+        row("s1", "2023-06-01 10:00:00", "temperature",
+          if (i <= 41) None else Some(20.0))): _*)),
       ("empty", cfg, frame()))
   }
 
   private val zones = Seq("UTC", "Asia/Kolkata")
 
-  /** q13's null-timestamp input: (1, click) has hours 10:15 and 13:20
-    * beside a null ts; (3, view) has only a null ts. */
+  /** q13's null-timestamp and null-key input: (1, click) has hours 10:15
+    * and 13:20 beside a null ts; (3, view) has only a null ts; (null,
+    * click) has 11:20 and 12:20. */
   private lazy val q13Dir: String = {
-    def ev(id: Long, t: String, user: Long, typ: String) =
+    def ev(id: Long, t: String, user: Option[Long], typ: String) =
       (id, Option(t).map(ts), user, typ, 1.0, "{}")
     new java.io.File(PythonOracle.parquet(spark, Seq(
-      ev(1, "2023-06-01 10:15:00", 1, "click"),
-      ev(2, "2023-06-01 13:20:00", 1, "click"),
-      ev(3, null, 1, "click"),
-      ev(4, null, 3, "view"))
+      ev(1, "2023-06-01 10:15:00", Some(1), "click"),
+      ev(2, "2023-06-01 13:20:00", Some(1), "click"),
+      ev(3, null, Some(1), "click"),
+      ev(4, null, Some(3), "view"),
+      ev(5, "2023-06-01 11:20:00", None, "click"),
+      ev(6, "2023-06-01 12:20:00", None, "click"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
       "events")).getParent
   }
@@ -307,6 +371,7 @@ class ValidationSpec extends SparkSpec {
   }
 
   test("q13 runs the production gap rule: a null ts is no observation") {
+    // A null key matches no grid row either: (null, click) misses all four.
     val engine = Session.withConf(spark, "spark.sql.session.timeZone" -> "UTC") {
       SparkEntry.queries("q13_gap_report")(spark, q13Dir).collect().toSeq
     }.map(_.toSeq.map(String.valueOf))
@@ -316,7 +381,8 @@ class ValidationSpec extends SparkSpec {
     assert(sorted(engine) === sorted(duck))
     assert(sorted(engine) === Seq(
       Seq("1", "click", "2", "2023-06-01 11:00:00", "2023-06-01 12:00:00"),
-      Seq("3", "view", "4", "2023-06-01 10:00:00", "2023-06-01 13:00:00")))
+      Seq("3", "view", "4", "2023-06-01 10:00:00", "2023-06-01 13:00:00"),
+      Seq("null", "click", "4", "2023-06-01 10:00:00", "2023-06-01 13:00:00")))
   }
 
   test("report rows cover all categories") {
