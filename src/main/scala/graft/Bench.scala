@@ -34,8 +34,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * regression for persist/broadcast/spill-heavy queries (r7: the driver
   * measured q158 at 40.7 s where the identical build measured ~11 s —
   * the spread IS the phenomenon). So any query whose previous committed
-  * time exceeds 1 s — or whose first sample this run does — is run
-  * THREE times and reported as {runs, median, min}; regressions compare
+  * time exceeds 1 s — or whose first sample this run does, or which a
+  * named-subset run names — is run THREE times and reported as
+  * {runs, median, min} ([[threeSamples]]); regressions compare
   * MEDIANS. Each run also snapshots per-task executor metrics (shuffle
   * read/write bytes, memory/disk spill, GC ms, peak execution memory)
   * via a SparkListener, so a slow sample is attributable to spill/GC
@@ -132,6 +133,24 @@ object Bench {
       case Some(l) if l <= cpus * 0.25 => "quiet"
       case Some(_) => "load-contaminated"
     }
+
+  /** Whether a query reports the median of three samples instead of
+    * its first. In a named-subset run (`runMain graft.Bench <names>`)
+    * every named query does: such a run exists to measure those
+    * queries, and one cold sample of a sub-second query is mostly JIT
+    * and first-touch cost. In the full suite a query does when its
+    * first sample or its committed previous time exceeds 1 s (one
+    * sample per heavy query records GC/IO spikes as plan cost — r3:
+    * q39 53.4 s in one suite run vs 3.0 s identical build), or when
+    * its first sample would flag as a regression (>2x prev and
+    * >0.5 s worse): single-shot jitter was the last source of
+    * unreproducible flags
+    * (r8: q120 0.52→1.08, q167 0.73→1.60). Pure and object-level so
+    * the rule is unit-tested. */
+  private[graft] def threeSamples(
+      subset: Boolean, first: Double, prev: Option[Double]): Boolean =
+    subset || first > 1.0 || prev.exists(_ > 1.0) ||
+      prev.exists(p => p > 0 && first > 2 * p && first - p > 0.5)
 
   /** The previous summary at `path` as this run's regression baseline,
     * or why it cannot be one: a summary from another SF, core count or
@@ -386,19 +405,6 @@ object Bench {
     val selected =
       if (args.nonEmpty) SparkEntry.queries.filter(q => args.contains(q._1))
       else SparkEntry.queries
-    // Any query whose committed previous time — or first sample this
-    // run — exceeds 1 s gets THREE samples and reports the median; the
-    // regression gate compares medians. One sample per heavy query is
-    // not a measurement: a single GC pause / IO-contention spike during
-    // a ~180-query run inflates that query 2-10x and the round's
-    // official number records noise instead of plan cost (r3: q39
-    // 53.4 s driver vs 3.0 s identical build; r7: q158 40.7 s driver vs
-    // ~11 s identical build). The threshold was 2 s through r11, which
-    // left the 1-2 s band — including that round's headline fixes —
-    // adjudicated on single samples and carrying no details; 1 s puts
-    // the whole slow tail on medians with per-run task/JIT/plan
-    // attribution, for ~2 extra runs x ~25 queries of bench time.
-    val heavyAboveSec = 1.0
     // A throwing query must surface as a FAILURE, not a fast timing: the
     // per-query line carries "err" and the summary lists it. The run
     // CONTINUES past a failure (one broken query must not cost the other
@@ -516,17 +522,7 @@ object Bench {
           errors += name -> m
           progress(s"""{"query":"$name","sec":$first,"err":"${esc(m)}"}""")
           first
-        case None
-            if first > heavyAboveSec ||
-              prevTimes.get(name).exists(_ > heavyAboveSec) ||
-              // A sample that WOULD machine-flag as a regression (>2x
-              // prev and >0.5 s worse) must also survive a median-of-3
-              // before it may flag: sub-2s queries are otherwise
-              // single-shot, and their jitter was the last source of
-              // unreproducible regression flags (r8: q120 0.52→1.08,
-              // q167 0.73→1.60, neither reproducible).
-              prevTimes.get(name).exists(p =>
-                p > 0 && first > 2 * p && first - p > 0.5) =>
+        case None if threeSamples(args.nonEmpty, first, prevTimes.get(name)) =>
           val (s2, m2, t2, j2, p2) = once()
           val err2 = lastErr
           val (s3, m3, t3, j3, p3) = once()
@@ -560,7 +556,7 @@ object Bench {
           // of ANY query self-adjudicates (slow sample with a large JIT
           // delta = compiler noise; flat task time with inflated wall =
           // driver/ambient) without a re-run. Queries that would flag a
-          // regression, or ran >1 s, still get the 3-run median above.
+          // regression, ran >1 s, or were named, get the 3-run median.
           details += name -> s""""runs":[$first],"runs_task_ms":[$firstT],"runs_jit_ms":[$firstJ],"runs_plan_ms":[$firstP],"median":$first,"min":$first,"metrics":$firstM"""
           progress(s"""{"query":"$name","sec":$first${prevTag(name)}}""")
           first

@@ -26,9 +26,12 @@ import graft.operators.{Curation, Dedup, Similarity}
   * (shard, doc, token counts, bin placement), `stats.json`
   * (per-stage survivor counts).
   *
-  * Every stage is a lazy DataFrame transform from the public operator
-  * API — this main only sequences them and counts survivors (one
-  * bounded action per stage; the counts ARE the deliverable stats).
+  * Every stage comes from the public operator API — this main only
+  * sequences them and counts survivors (one bounded action per stage;
+  * the counts ARE the deliverable stats). Stages 1, 2 and 4 are lazy
+  * DataFrame transforms; stage 3 is eager: `Similarity.semanticDedup`
+  * runs its k-means and checkpoints its cell assignment while it is
+  * built, before the survivor count.
   *
   * Usage: sbt "runMain graft.CurationPipeline <docsDir> <outDir> [embDir]"
   */

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, StructField, StructType}
 
 import graft.functions.embeddings
 
@@ -115,18 +118,18 @@ object Similarity {
     *    from strict left-fold dots, argmin with a centroid-id
     *    tie-break;
     *  - M-step: per-dimension mean as a DECIMAL sum with ONE IEEE
-    *    division, array rebuilt in sorted dimension order (collect_list
-    *    order never matters).
+    *    division, array rebuilt in dimension order.
     *
-    * Plan shape per iteration: centroids are a k-row broadcast (the
-    * corpus never shuffles for assignment); the M-step shuffles
-    * (cluster, dim) partial sums — k*dims rows after map-side combine,
-    * independent of corpus size. Returns the final assignment
-    * (id, centroid_id, d2), lazily composed — callers aggregate or
-    * persist as needed. For many iterations at scale, localCheckpoint
-    * each round to truncate lineage (see SCALE.md on iterative plans);
-    * at the 2-3 iterations typical for curation-grade clustering the
-    * composed plan is fine.
+    * Eager: the centroids live on the driver. The init collects the k
+    * lowest-id rows (one action) and each M-step collects its k*dims
+    * means (one aggregate action per iteration after the first), so
+    * building the result runs `iters` actions and every round's
+    * centroids are a k-row local relation. Means are computed by Spark
+    * and only collected, so the arithmetic is the same as a lazily
+    * composed plan's; a centroid that lost every member drops out. The
+    * returned assignment (id, centroid_id, d2) is one E-step over one
+    * scan of `df` against broadcast local centroids — no k-means
+    * lineage, however often the caller reads it.
     *
     * E-step allocation discipline: the self-dots <v,v> and <c,c> are
     * hoisted OUT of the pair projection (computed once per corpus row
@@ -144,41 +147,43 @@ object Similarity {
       vecCol: String,
       k: Int = 8,
       iters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val dec = DecimalType(20, 6)
+    require(iters >= 1, s"iters must be at least 1, got $iters")
+    val spark = df.sparkSession
     def dotD(a: Column, b: Column): Column = graft.plans.DoubleVecDot(a, b)
     val v = df.select(col(idCol).as("vid"),
         embeddings.toDouble(col(vecCol)).as("v"))
       .withColumn("vv", dotD(col("v"), col("v")))
-    var cent = v.orderBy(col("vid")).limit(k)
-      .select(col("vid").as("centroid_id"), col("v").as("cv"),
-        col("vv").as("cc"))
-    var assigned: DataFrame = null
-    var i = 0
-    while (i < iters) {
+    val centSchema = StructType(Seq(
+      StructField("centroid_id", v.schema("vid").dataType),
+      StructField("cv", ArrayType(DoubleType))))
+    def centroids(rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(rows.asJava, centSchema)
+        .withColumn("cc", dotD(col("cv"), col("cv")))
+    def eStep(cent: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("vid"))
         .orderBy(col("d2"), col("centroid_id"))
-      assigned = v.crossJoin(broadcast(cent))
+      v.crossJoin(broadcast(cent))
         .withColumn("d2",
           col("vv") - lit(2) * dotD(col("v"), col("cv")) + col("cc"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("vid"), col("centroid_id"), col("v"), col("d2"))
-      i += 1
-      if (i < iters) {
-        cent = assigned
-          .select(col("centroid_id"), posexplode(col("v")).as(Seq("dim", "x")))
-          .groupBy(col("centroid_id"), col("dim"))
-          .agg((sum(col("x").cast(dec)).cast("double") / count(col("x")))
-            .cast("double").as("m"))
-          .groupBy(col("centroid_id"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("dim"), col("m")))),
-            s => s.getField("m")).as("cv"))
-          .withColumn("cc", dotD(col("cv"), col("cv")))
-      }
     }
-    assigned.select(col("vid"), col("centroid_id"), col("d2"))
+    var cent = centroids(
+      v.orderBy(col("vid")).limit(k).select(col("vid"), col("v")).collect().toSeq)
+    for (_ <- 1 until iters) {
+      val means = eStep(cent)
+        .select(col("centroid_id"), posexplode(col("v")).as(Seq("dim", "x")))
+        .groupBy(col("centroid_id"), col("dim"))
+        .agg((sum(col("x").cast(DecimalType(20, 6))).cast("double") /
+          count(col("x"))).cast("double").as("m"))
+        .collect()
+      cent = centroids(means.groupBy(_.get(0)).values.toSeq.map { ms =>
+        val byDim = ms.sortBy(_.getInt(1))
+        Row(byDim.head.get(0), byDim.map(_.get(2)).toSeq)
+      })
+    }
+    eStep(cent).select(col("vid"), col("centroid_id"), col("d2"))
   }
 
   /** SemDeDup-style semantic dedup: k-means-cluster the embeddings
@@ -206,11 +211,12 @@ object Similarity {
     * recall cost of missing cross-salt pairs. Default = no guard:
     * exact cell semantics (the oracle-checked configuration).
     *
-    * Lazily composed, like [[lloydIterations]]: the assignment subtree
-    * is referenced by both pair-join sides and the merge-back, and
-    * runtime exchange reuse collapses the repeats. Callers looping or
-    * chaining over the result at scale should persist
-    * [[cellAssignments]] once and build the pair join themselves.
+    * Eager up to the pair stage: building the result runs the
+    * k-means actions and checkpoints of [[cellAssignments]] (at most
+    * iters + 2 actions). Both pair-join sides and the merge-back read
+    * that one checkpointed frame, so the returned plan scans no source
+    * file; its checkpoint stays cached until the returned frame is
+    * garbage-collected (Spark's context cleaner then drops it).
     *
     * Returns (vid, centroid_id, dropped). */
   def semanticDedup(
@@ -238,6 +244,13 @@ object Similarity {
     * skew guard applied when `maxCellSize` is set. Returns
     * (vid, centroid_id, sub_sign, sub_salt, v) — the pair join
     * equi-joins on (centroid_id, sub_sign, sub_salt).
+    *
+    * Eager: runs [[lloydIterations]]' actions, then localCheckpoints
+    * the final assignment joined with its float vectors once. Without
+    * the guard that checkpoint is the result. With it, the guard's
+    * size aggregates and the sub-bucket keys read that checkpoint, the
+    * guarded frame is checkpointed once, and the first checkpoint is
+    * released: one checkpointed RDD stays cached either way.
     *
     * Guard mechanics (per cell of size n > maxCellSize):
     *  1. sub_sign: the low `ceil(log2(n / maxCellSize))` bits (≤16) of
@@ -268,16 +281,18 @@ object Similarity {
     // 0 or negative would make the salt divisor ceil(n/cap) NULL/zero
     // downstream and silently empty the pair join — fail loudly instead.
     require(maxCellSize > 0, s"maxCellSize must be positive, got $maxCellSize")
+    val owned = new Owned
     val assign = lloydIterations(df, idCol, vecCol, k, iters)
       .select(col("vid"), col("centroid_id"))
     // Raw float vectors: the pair stage scores through the native
     // float-array cosine (FloatVecCosine), same as bruteForceTopK.
     val v = df.select(col(idCol).as("vid"), col(vecCol).as("v"))
-    val av0 = assign.join(v, "vid")
     if (maxCellSize == Int.MaxValue)
-      av0.select(col("vid"), col("centroid_id"),
-        lit(0L).as("sub_sign"), lit(0L).as("sub_salt"), col("v"))
+      owned.checkpoint(assign.join(v, "vid")
+        .select(col("vid"), col("centroid_id"),
+          lit(0L).as("sub_sign"), lit(0L).as("sub_salt"), col("v")))
     else {
+      val av0 = owned.checkpoint(assign.join(v, "vid"))
       val cellSizes = av0.groupBy(col("centroid_id"))
         .agg(count(lit(1)).as("cell_n")) // exactly k rows
       val withSign = av0.join(broadcast(cellSizes), "centroid_id")
@@ -295,12 +310,15 @@ object Similarity {
       val sbSizes = withSign
         .groupBy(col("centroid_id"), col("sub_sign"))
         .agg(count(lit(1)).as("sb_n"))
-      withSign.join(sbSizes, Seq("centroid_id", "sub_sign"))
-        .withColumn("sub_salt",
-          pmod(xxhash64(col("vid")), greatest(lit(1L),
-            ceil(col("sb_n").cast("double") / maxCellSize).cast("long"))))
-        .select(col("vid"), col("centroid_id"),
-          col("sub_sign"), col("sub_salt"), col("v"))
+      val guarded = owned.checkpoint(
+        withSign.join(sbSizes, Seq("centroid_id", "sub_sign"))
+          .withColumn("sub_salt",
+            pmod(xxhash64(col("vid")), greatest(lit(1L),
+              ceil(col("sb_n").cast("double") / maxCellSize).cast("long"))))
+          .select(col("vid"), col("centroid_id"),
+            col("sub_sign"), col("sub_salt"), col("v")))
+      owned.release(av0)
+      guarded
     }
   }
 }

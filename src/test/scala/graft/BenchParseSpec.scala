@@ -103,4 +103,17 @@ class BenchParseSpec extends AnyFunSuite {
     assert(Bench.baseline(junk, "/sf", "noop", 4) ===
       Left(s"$junk does not parse as a JSON object"))
   }
+
+  test("sampling: a named-subset run takes three samples of every query") {
+    // Subset: a 0.1 s cold first sample with no history is not a figure.
+    assert(Bench.threeSamples(subset = true, first = 0.1, prev = None))
+    assert(Bench.threeSamples(subset = true, first = 0.1, prev = Some(0.1)))
+    // Full suite: light queries keep one sample...
+    assert(!Bench.threeSamples(subset = false, first = 0.1, prev = None))
+    assert(!Bench.threeSamples(subset = false, first = 0.9, prev = Some(0.5)))
+    // ...heavy ones (this run or the last) and would-be regressions do not.
+    assert(Bench.threeSamples(subset = false, first = 1.2, prev = None))
+    assert(Bench.threeSamples(subset = false, first = 0.3, prev = Some(1.5)))
+    assert(Bench.threeSamples(subset = false, first = 0.9, prev = Some(0.3)))
+  }
 }

@@ -1,8 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.RawParquet
 import graft.operators.Similarity
 
 /** Semantic-dedup skew guard (Similarity.semanticDedup maxCellSize):
@@ -10,8 +14,10 @@ import graft.operators.Similarity
   * is the operator's documented failure mode — these tests pin down the
   * two guard tiers (sign sub-bucket, then id-hash salt) with
   * adversarially-shaped cells and assert the candidate-pair bound the
-  * scaladoc promises. */
-class SimilaritySpec extends SparkSpec {
+  * scaladoc promises. The k-means behind it is pinned against q131's
+  * and q183's DuckDB oracle SQL on adversarial inputs, and its eager
+  * contract (actions, plan leaves, cached checkpoints) by plan pins. */
+class SimilaritySpec extends SparkSpec with PlanPins {
 
   private def vecDF(rows: Seq[(Long, Array[Float])]): DataFrame = {
     import spark.implicits._
@@ -112,5 +118,118 @@ class SimilaritySpec extends SparkSpec {
     // keeps at most one per (salt, distinct vector).
     assert(survivors <= 6L * 3)
     assert(survivors >= 3L)
+  }
+
+  /** Small `embeddings` tables, each written to its own directory as
+    * `embeddings.parquet`, by case name. Ids 0-7 are q131/q183's k = 8
+    * initial centroids; a centroid past those that should not matter
+    * sits far away. */
+  private lazy val kmeansCases: Map[String, String] = {
+    def far(i: Long): (Long, Array[Float]) = i -> Array(100f * i, 100f, 1f, 0f)
+    val cases = Seq(
+      // Fewer rows than centroids: six singleton cells.
+      "six rows, k = 8" -> (0L until 6L).map(i =>
+        i -> Array(i.toFloat, (i * i % 5).toFloat, 1f, -1f)),
+      // Centroid 1 keeps itself and id 8 in round 1; the round-1 means
+      // then pull id 1 to centroid 0 and id 8 to centroid 2.
+      "centroid emptied after round 1" -> (Seq(
+        0L -> Array(0f, -1f, 0f, 0f), 1L -> Array(0f, 0f, 0f, 0f),
+        2L -> Array(0f, 6.2f, 0f, 0f)) ++ (3L until 8L).map(far) ++ Seq(
+        8L -> Array(0f, 3f, 0f, 0f),
+        9L -> Array(1f, -0.6f, 0f, 0f), 10L -> Array(-1f, -0.6f, 0f, 0f),
+        11L -> Array(1f, 3.4f, 0f, 0f), 12L -> Array(-1f, 3.4f, 0f, 0f))),
+      // Ids 8 and 9 are exactly as far from centroid 0 as from 1.
+      "exact d2 tie" -> (Seq(
+        0L -> Array(1f, 0f, 0f, 0f), 1L -> Array(-1f, 0f, 0f, 0f)) ++
+        (2L until 8L).map(far) ++ Seq(
+        8L -> Array(0f, 1f, 0f, 0f), 9L -> Array(0f, -1f, 0f, 0f))),
+      // Id 1 duplicates id 0 (an initial centroid with no member in
+      // round 1); 8 duplicates 0, 10 duplicates 9 and 11 duplicates 2.
+      "duplicate vectors" -> (Seq(
+        0L -> Array(0.5f, 0.5f, 0f, 0f), 1L -> Array(0.5f, 0.5f, 0f, 0f)) ++
+        (2L until 8L).map(far) ++ Seq(
+        8L -> Array(0.5f, 0.5f, 0f, 0f), 9L -> Array(0.25f, -0.5f, 1f, 0f),
+        10L -> Array(0.25f, -0.5f, 1f, 0f), 11L -> Array(200f, 100f, 1f, 0f))),
+      "empty table" -> Seq.empty[(Long, Array[Float])])
+    cases.map { case (name, rows) =>
+      name -> new java.io.File(
+        PythonOracle.parquet(spark, vecDF(rows), "embeddings")).getParent
+    }.toMap
+  }
+
+  private val kmeansQueries = Seq("q131_kmeans", "q183_semantic_dedup")
+
+  /** Every (case, query) through the DuckDB oracle, in one run. */
+  private lazy val kmeansOracle = PythonOracle.oracle(
+    for ((name, dir) <- kmeansCases.toSeq; q <- kmeansQueries)
+      yield PythonOracle.sql(s"$q on $name",
+        Map("embeddings" -> s"$dir/embeddings.parquet"),
+        SparkEntry.oracleSql(q), "UTC"))
+
+  /** A query's rows over one case's table, as sorted text. */
+  private def engineRows(q: String, name: String): Seq[Seq[String]] =
+    SparkEntry.queries(q)(spark, kmeansCases(name)).collect().toSeq
+      .map(_.toSeq.map(String.valueOf)).sortBy(_.mkString(","))
+
+  test("q131 and q183 equal their oracle SQL on adversarial k-means inputs") {
+    for ((name, _) <- kmeansCases; q <- kmeansQueries) withClue(s"$q on $name: ") {
+      val duck = kmeansOracle(s"$q on $name").get("rows").elements.asScala.toSeq
+        .map(_.elements.asScala.toSeq.map(v => if (v.isNull) "null" else v.asText))
+        .sortBy(_.mkString(","))
+      assert(engineRows(q, name) === duck)
+    }
+    // Each table shows what it is named for (q131 rows are
+    // centroid_id, n_members, sum_d2_e6).
+    def members(name: String): Map[String, String] =
+      engineRows("q131_kmeans", name).map(r => r(0) -> r(1)).toMap
+    assert(members("six rows, k = 8") === (0 until 6).map(i => s"$i" -> "1").toMap)
+    assert(!members("centroid emptied after round 1").contains("1"))
+    assert(members("exact d2 tie")("0") === "3") // 0, 8 and 9: the lower id wins
+    assert(!members("duplicate vectors").contains("1"))
+    assert(engineRows("q183_semantic_dedup", "duplicate vectors")
+      .map(_(2).toLong).sum === 4L) // ids 1, 8, 10 and 11
+    assert(engineRows("q131_kmeans", "empty table").isEmpty)
+  }
+
+  test("plan pin: q131 reads embeddings once and keeps no top-k in its plan") {
+    val q = SparkEntry.queries("q131_kmeans")(spark, kmeansCases("duplicate vectors"))
+    q.collect()
+    val plan = q.queryExecution.executedPlan
+    assert(leafScans(plan)
+      .count(_ == classOf[FileSourceScanExec].getSimpleName) === 1, plan)
+    assert(collect(plan) { case t: TakeOrderedAndProjectExec => t }.isEmpty, plan)
+  }
+
+  test("plan pin: semanticDedup runs at most iters + 2 actions and returns " +
+      "a frame that scans no parquet file") {
+    val emb = RawParquet.table(spark,
+      s"${kmeansCases("centroid emptied after round 1")}/embeddings.parquet")
+    for (cap <- Seq(Int.MaxValue, 4)) withClue(s"maxCellSize $cap: ") {
+      var out: DataFrame = null
+      val ran = actionsOf {
+        out = Similarity.semanticDedup(emb, "vec_id", "embedding",
+          k = 8, iters = 2, threshold = 0.3, maxCellSize = cap)
+      }
+      assert(ran.size <= 2 + 2, ran.map(_._1))
+      assert(out.count() === 13)
+      val plan = out.queryExecution.executedPlan
+      assert(!leafScans(plan).contains(
+        classOf[FileSourceScanExec].getSimpleName), plan)
+    }
+  }
+
+  test("semanticDedup leaves one checkpointed RDD cached") {
+    val emb = RawParquet.table(spark,
+      s"${kmeansCases("duplicate vectors")}/embeddings.parquet")
+    for (cap <- Seq(Int.MaxValue, 4)) withClue(s"maxCellSize $cap: ") {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val out = Similarity.semanticDedup(emb, "vec_id", "embedding",
+        k = 8, iters = 2, threshold = 0.3, maxCellSize = cap)
+      val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(added.size === 1, added)
+      // The released pre-guard checkpoint is not read again.
+      assert(out.count() === 12)
+      added.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -9,18 +8,16 @@ import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.config.PipelineConfig
 import graft.model.{QualityMetrics, SensorCoverage, SensorGap, TypeProfile, ValidationResult}
 import graft.validate.Validation
 
-class ValidationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class ValidationSpec extends SparkSpec with PlanPins {
   import spark.implicits._
 
   private val cfg = PipelineConfig.default
@@ -172,37 +169,6 @@ class ValidationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(m.totalMissingHours === 1)
     assert(res.qualityScore === 100.0 - 2.0) // one gap hour -> penalty 2
   }
-
-  /** Every Dataset action `body` ran, as (output columns, its query
-    * execution). Listener events arrive asynchronously but in order: a
-    * marker action fences each side of `body`. */
-  private def actionsOf(body: => Unit): Seq[(String, QueryExecution)] = {
-    val actions = new LinkedBlockingQueue[(String, QueryExecution)]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        actions.put((qe.analyzed.output.map(_.name).mkString(","), qe))
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        actions.put((s"failed $f", qe))
-    }
-    def fence(marker: String): Seq[(String, QueryExecution)] = {
-      spark.range(1).toDF(marker).collect()
-      Iterator.continually(actions.poll(60, TimeUnit.SECONDS))
-        .map(a => { assert(a != null, s"no event for $marker"); a })
-        .takeWhile(_._1 != marker).toSeq
-    }
-    spark.listenerManager.register(listener)
-    try {
-      fence("validation_actions_before")
-      body
-      fence("validation_actions_after")
-    } finally spark.listenerManager.unregister(listener)
-  }
-
-  /** The leaf scans of an executed plan's final form (after AQE, through
-    * its query stages) by node class: each is one read of a source, or a
-    * reused exchange. */
-  private def leafScans(plan: SparkPlan): Seq[String] =
-    collectLeaves(plan).map(_.getClass.getSimpleName)
 
   test("collectMetrics runs at most two Spark actions") {
     val df = readings(
