@@ -480,28 +480,24 @@ object ScaleBench {
       // exponent ~1.0 in corpus tokens. The target is the same %19
       // slice at BOTH scales, so target-side work grows with the
       // corpus too; production pins the trusted corpus while raw
-      // grows, so this measures the worse case. fastHash (xxhash64
-      // buckets) is the scale configuration — the md5 default
-      // allocates a 32-char string per token and measured ~24 s GC of
-      // a 40 s wall at 5M docs; the oracle-exact md5 form stays q210's.
+      // grows, so this measures the worse case.
       "dsir_weights" -> (dir =>
         graft.operators.Curation.importanceTopK(
           graft.operators.Curation.importanceWeights(docsD(dir),
             docsD(dir).filter(col("doc_id") % 19 === 0),
-            "doc_id", "text", nBuckets = 1024, seed = 7, fastHash = true),
+            "doc_id", "text", nBuckets = 1024, seed = 7),
           "doc_id", 50)),
       // DSIR on the paper's hashed-BIGRAM feature space (q213's
-      // operator, n = 2, fastHash scale configuration): ~2x the feature
-      // explode volume of the unigram shape (len-1 windows vs len
-      // tokens, each concat-hashed), same bucket-aggregate plan — the
-      // deep point measures whether the wider feature stream moves the
-      // exponent (the (id, bucket) pair shuffle grows with n).
+      // operator, n = 2): ~2x the feature explode volume of the
+      // unigram shape (len-1 windows vs len tokens, each
+      // concat-hashed), same bucket-aggregate plan — the deep point
+      // measures whether the wider feature stream moves the exponent
+      // (the (id, bucket) pair shuffle grows with n).
       "dsir_ngram" -> (dir =>
         graft.operators.Curation.importanceTopK(
           graft.operators.Curation.importanceWeights(docsD(dir),
             docsD(dir).filter(col("doc_id") % 19 === 0),
-            "doc_id", "text", nBuckets = 1024, seed = 7, fastHash = true,
-            n = 2),
+            "doc_id", "text", nBuckets = 1024, seed = 7, n = 2),
           "doc_id", 50)),
       // Mixture apply (q205's operator) at depth: a broadcast 20-row
       // plan (rates 5000-25000 bp — down- AND up-sampling), copy counts
@@ -571,7 +567,7 @@ object ScaleBench {
       // computed columns, guard filter referencing them.
       "remove_spans_dense" -> (dir =>
         graft.operators.Curation.removeDuplicatedSpans(docsD(dir),
-          "doc_id", "text", n = 5, minDf = 2, fastHash = true)
+          "doc_id", "text", n = 5, minDf = 2)
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_removed")).as("toks_removed"),
             sum(length(col("clean_text"))).as("clean_chars"))
@@ -589,7 +585,7 @@ object ScaleBench {
       // which detection does not have).
       "dup_spans_dense" -> (dir =>
         graft.operators.Curation.duplicatedSpans(docsD(dir),
-          "doc_id", "text", n = 5, minDf = 2, fastHash = true)))
+          "doc_id", "text", n = 5, minDf = 2)))
     val ppjoinShapes: Seq[(String, String => DataFrame)] = Seq(
       "ppjoin_prefix" -> (dir =>
         Dedup.prefixFilterPairs(docsD(dir), "doc_id", "text",
@@ -633,26 +629,24 @@ object ScaleBench {
       // input-byte-sized partitions measured 18.4 GB mem + 5.3 GB disk
       // spill before the rewrite; zero after, te 1.06 → 0.91 at
       // x1000), min≠max df test for minDf=2, shuffle_hash dup probe,
-      // run-merge window per DOCUMENT only. fastHash (xxhash64 LONG
-      // keys) is the scale configuration — the md5 default carries a
-      // 16-byte (h1, h2) struct key per window. Runs at
-      // the x100 cap for the ppjoin reason: the shape is measured
-      // linear and x1000 only adds ~15 suite-minutes of the same
-      // signal (the one-off x1000 point is recorded in SCALE.md).
+      // run-merge window per DOCUMENT only. Runs at the x100 cap for
+      // the ppjoin reason: the shape is measured linear and x1000 only
+      // adds ~15 suite-minutes of the same signal (the one-off x1000
+      // point is recorded in SCALE.md).
       "dup_spans" -> (dir =>
         graft.operators.Curation.duplicatedSpans(docsD(dir),
-          "doc_id", "text", n = 5, minDf = 2, fastHash = true)),
+          "doc_id", "text", n = 5, minDf = 2)),
       // Span REMOVAL (q212's operator): detection (above) plus the
       // per-doc span-list aggregate and the one id-keyed join where
       // document bodies reassemble — the only body-width shuffle in
       // the span family, and the reason this shape exists: its output
       // mass is corpus-sized text, so a superlinear exponent here
       // would mean the reassembly join (not the detection) stopped
-      // scaling. Same x100 cap and fastHash configuration as
-      // dup_spans. Forced through an aggregate over the COMPUTED
-      // columns (the asof-pair trick), with the guard filter on the
-      // EXPENSIVE aggregates: a bare count() preserves the left-outer
-      // join's cardinality, so Catalyst — correctly — eliminates the
+      // scaling. Same x100 cap as dup_spans. Forced through an
+      // aggregate over the COMPUTED columns (the asof-pair trick),
+      // with the guard filter on the EXPENSIVE aggregates: a bare
+      // count() preserves the left-outer join's cardinality, so
+      // Catalyst — correctly — eliminates the
       // unique-keyed spans side and the whole detection pipeline with
       // it (measured: 1.1 s "x100", i.e. a scan); and a guard on
       // n_docs alone lets column pruning drop the sums and reach the
@@ -661,7 +655,7 @@ object ScaleBench {
       // computation is the work being timed.
       "remove_spans" -> (dir =>
         graft.operators.Curation.removeDuplicatedSpans(docsD(dir),
-          "doc_id", "text", n = 5, minDf = 2, fastHash = true)
+          "doc_id", "text", n = 5, minDf = 2)
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_removed")).as("toks_removed"),
             sum(length(col("clean_text"))).as("clean_chars"))

@@ -163,24 +163,11 @@ object text {
     * and round-tripped every digest through hex + conv. The 32-bit
     * VALUE is unchanged — its collisions are mirrored verbatim in the
     * DuckDB oracles, so it must not widen (WordShingleMd5Spec pins the
-    * parity). */
+    * parity). This is the only shingle-hash helper here: the PPJoin and
+    * containment shingle sets call [[graft.plans.WordShingleHash64]]
+    * directly. */
   def shingleHashesOf(tok: Column, n: Int): Column =
     graft.plans.WordShingleMd5.hash32(tok, n)
-
-  /** xxhash64 shingle hashes — integer hashes, far cheaper than the md5
-    * path (which exists for cross-engine oracle parity). For operators
-    * whose hash is purely internal (boilerplate df, segment dedup,
-    * exact dedup grouping) the RESULTS are identical either way modulo
-    * collisions, so production runs at scale should prefer this.
-    * Since r17 this is the NATIVE [[graft.plans.WordShingleHash64]]
-    * expression — one compiled memcpy+hash loop per row instead of the
-    * interpreted transform+slice+concat_ws pipeline (higher-order
-    * lambdas run outside whole-stage codegen; measured ~15x the cost
-    * of a bare token explode at the 5M-doc deep points). Bit-identical
-    * to transform(shinglesOf(tok, n), s => xxhash64(s)) — a spec pins
-    * the parity. */
-  def fastShingleHashesOf(tok: Column, n: Int): Column =
-    graft.plans.WordShingleHash64(tok, n)
 
   /** MinHash signature from pre-hashed shingles: one fold computing all
     * k universal-hash permutation minima ((a_i*h+b_i) mod p) of the

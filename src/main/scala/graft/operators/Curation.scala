@@ -50,35 +50,34 @@ object Curation {
     * token array is bound to a column before the explode — a Generate
     * has no common-subexpression elimination, so an inlined tokens()
     * would re-split the document once per emitted shingle.
-    * `fastHash` switches the md5-derived hash (cross-engine oracle
-    * parity) for codegen'd xxhash64 — measured 1.6x cheaper end-to-end
-    * on a 100k-doc corpus (13.7 s -> 8.6 s boilerplate profile; the
-    * remainder is tokenize/shingle cost); downstream results are
-    * identical (the hash is internal) modulo collisions. */
-  def shingleHashTable(
-      df: DataFrame, idCol: String, contentCol: String, n: Int,
-      fastHash: Boolean = false): DataFrame = {
-    val hashes =
-      if (fastHash) text.fastShingleHashesOf(col("__t"), n)
-      else text.shingleHashesOf(col("__t"), n)
+    * `h` is the 32-bit md5 shingle hash (WordShingleMd5.hash32) the
+    * DuckDB oracle mirrors; its collision bound is stated on
+    * [[boilerplateProfile]]. */
+  private def shingleHashTable(
+      df: DataFrame, idCol: String, contentCol: String, n: Int): DataFrame =
     df.select(col(idCol).as("id"), text.tokens(col(contentCol)).as("__t"))
-      .select(col("id"), explode(array_distinct(hashes)).as("h"))
-  }
+      .select(col("id"),
+        explode(array_distinct(text.shingleHashesOf(col("__t"), n))).as("h"))
 
   /** Cross-document boilerplate profile: for each document, how many of
     * its distinct n-gram shingles occur in >= minDf documents — the
     * "remove spans repeated across the corpus" signal used when cleaning
     * crawl data. The document frequency rides a window over the shingle
     * hash, so the corpus is shingled ONCE and never self-joined; both
-    * shuffles carry (hash, id) pairs, never document bodies. */
+    * shuffles carry (hash, id) pairs, never document bodies.
+    *
+    * Collision bound: shingles are keyed on the 32-bit md5 hash of
+    * [[shingleHashTable]], so two distinct shingles sharing a hash pool
+    * their document frequencies — ≈ m²/2³³ such pairs among m distinct
+    * corpus shingles (about 116 at 10⁶), each able to lift a rare
+    * shingle past minDf. The oracle mirrors the same 32-bit value. */
   def boilerplateProfile(
       df: DataFrame,
       idCol: String,
       contentCol: String,
       n: Int = 5,
-      minDf: Int = 3,
-      fastHash: Boolean = false): DataFrame = {
-    val sh = shingleHashTable(df, idCol, contentCol, n, fastHash)
+      minDf: Int = 3): DataFrame = {
+    val sh = shingleHashTable(df, idCol, contentCol, n)
     sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
       .groupBy(col("id").as(idCol))
       .agg(
@@ -96,19 +95,23 @@ object Curation {
     * are shingled there (a small broadcast side — benchmarks are
     * ~thousands of docs even at 100 TB corpus scale); candidates
     * semi-join on the hash, so the corpus is shingled once and no pair
-    * list is ever materialized. */
+    * list is ever materialized.
+    *
+    * Collision bound: the match is on the 32-bit md5 shingle hash of
+    * [[shingleHashTable]], as in the oracle. Among m distinct shingles
+    * ≈ m²/2³³ pairs collide (about 116 at 10⁶); a candidate shingle
+    * that collides with a benchmark one counts as shared. */
   def contamination(
       df: DataFrame,
       idCol: String,
       contentCol: String,
       isBenchmark: Column,
       n: Int = 5,
-      minShared: Int = 3,
-      fastHash: Boolean = false): DataFrame = {
+      minShared: Int = 3): DataFrame = {
     val benchHashes =
-      shingleHashTable(df.filter(isBenchmark), idCol, contentCol, n, fastHash)
+      shingleHashTable(df.filter(isBenchmark), idCol, contentCol, n)
         .select(col("h")).distinct()
-    shingleHashTable(df.filter(!isBenchmark), idCol, contentCol, n, fastHash)
+    shingleHashTable(df.filter(!isBenchmark), idCol, contentCol, n)
       .join(broadcast(benchHashes), "h")
       .groupBy(col("id").as(idCol))
       .agg(count(lit(1)).as("n_shared"))
@@ -204,7 +207,7 @@ object Curation {
     * `maxDf` DISTINCT documents is dropped everywhere, and the
     * surviving segments are reassembled in order.
     *
-    * Scale shape: segments shuffle as (16-byte md5, id) pairs — never
+    * Scale shape: segments shuffle as (32-char md5 hex, id) pairs — never
     * document bodies — through one distinct-doc-count aggregation and
     * one equi-join back; reassembly is a single groupBy(id) whose
     * buffer is bounded by the document's own segment count. No
@@ -218,12 +221,9 @@ object Curation {
       idCol: String,
       textCol: String,
       segTokens: Int = 8,
-      maxDf: Int = 2,
-      fastHash: Boolean = false): DataFrame = {
+      maxDf: Int = 2): DataFrame = {
     require(segTokens > 0 && maxDf > 1,
       s"need segTokens > 0 and maxDf > 1, got $segTokens/$maxDf")
-    val segHash: Column => Column =
-      if (fastHash) xxhash64(_) else md5(_)
     val staged = df
       // NULL text reads as ZERO tokens (n_segments 0, clean_text "") —
       // distinct from the empty string, whose tokens() is [""] (one
@@ -249,7 +249,7 @@ object Curation {
         .otherwise(lit(Array.empty[String])))
         .as(Seq("seg_idx", "seg")))
       .select(col(idCol), col("seg_idx").cast(LongType).as("seg_idx"),
-        col("seg"), segHash(col("seg")).as("__h"))
+        col("seg"), md5(col("seg")).as("__h"))
     val dfreq = seg.groupBy(col("__h"))
       .agg(countDistinct(col(idCol)).as("__seg_df"))
     val kept = seg.join(dfreq, "__h").filter(col("__seg_df") < maxDf)
@@ -368,15 +368,10 @@ object Curation {
     * global). Output is span-sized, not position-sized. Docs shorter
     * than n tokens have no windows and report no spans.
     *
-    * Key width: the md5 default shuffles 32-char string keys — exact
-    * at any scale and mirrorable in the oracle, but ~4x the shuffle
-    * bytes of `fastHash = true`, which keys on a raw xxhash64 LONG
-    * (measured: 2.8 GB → 0.8 GB window-key shuffle at 50M windows,
-    * task_exponent 1.08 → ~1.0). A 64-bit collision merges two
-    * unrelated windows with probability ~#windows²/2^65 (≈10⁻⁵ at a
-    * million windows, a handful expected at 10^9) — the corpus-scale
-    * configuration, same trade the segment/boilerplate operators
-    * document.
+    * Key width: windows key on the full 128-bit md5 digest (a 16-byte
+    * (h1, h2) struct), so two distinct windows never merge at any
+    * corpus scale — unlike the 32-bit shingle hash of
+    * [[boilerplateProfile]] and [[contamination]].
     *
     * EAGER (runs one cheap job at call time): the window-df
     * aggregate's hash state is WINDOW-count-sized while AQE sizes its
@@ -414,7 +409,6 @@ object Curation {
       textCol: String,
       n: Int = 5,
       minDf: Int = 2,
-      fastHash: Boolean = false,
       distinctDocs: Boolean = true,
       provenanceK: Int = 0): DataFrame = {
     require(n > 0 && minDf > 1, s"need n > 0 and minDf > 1, got $n/$minDf")
@@ -426,23 +420,16 @@ object Curation {
       .agg(coalesce(sum((size(col("__t")) - (n - 1)).cast(LongType)),
         lit(0L)))
       .head.getLong(0)
-    // fastHash rides the native WordShingleHash64 expression (one
-    // compiled memcpy+hash loop per document — the interpreted
-    // transform+slice+concat_ws pipeline was the dominant CPU of this
-    // shape's deep points); staged filters size >= n, so the
-    // expression's short-doc branch never fires and window k = array
-    // index = token position. The md5 default (r19) is the native
-    // WordShingleMd5.hash128 — the FULL digest as a (h1, h2) long
-    // struct, bijective with the md5 hex string the pre-r19 form keyed
-    // on (identical groups, identical dup joins, zero collision-
-    // behavior change — md5 strings never collided either), with the
-    // shuffle key down from ~32 hex chars to 16 bytes and the
-    // interpreted per-window transform+slice+concat_ws+hex gone. The
-    // detected SPANS are what the DuckDB oracle mirrors, and those are
+    // The window hash is the native WordShingleMd5.hash128 (r19): one
+    // compiled memcpy + digest loop per document, the FULL digest as a
+    // (h1, h2) long struct, bijective with the md5 hex string the
+    // pre-r19 form keyed on (identical groups, identical dup joins),
+    // with the shuffle key down from ~32 hex chars to 16 bytes. staged
+    // filters size >= n, so the expression's short-doc branch never
+    // fires and window k = array index = token position. The detected
+    // SPANS are what the DuckDB oracle mirrors, and those are
     // hash-representation-independent.
-    val gramHashes =
-      if (fastHash) graft.plans.WordShingleHash64(col("__t"), n)
-      else graft.plans.WordShingleMd5.hash128(col("__t"), n)
+    val gramHashes = graft.plans.WordShingleMd5.hash128(col("__t"), n)
     val grams = OutputMass.repartitionByOutputMass(
       staged.select(col(idCol), posexplode(gramHashes).as(Seq("pos", "__h"))),
       nWindows, bytesPerRow = 48L, col("__h"))
@@ -569,11 +556,10 @@ object Curation {
       textCol: String,
       n: Int = 5,
       minDf: Int = 2,
-      fastHash: Boolean = false,
       distinctDocs: Boolean = true,
       provenanceK: Int = 0): DataFrame = {
     val byDoc = spanRunsByDoc(
-      df, idCol, textCol, n, minDf, fastHash, distinctDocs, provenanceK)
+      df, idCol, textCol, n, minDf, distinctDocs, provenanceK)
     val exploded = byDoc.select(
       col(idCol), posexplode(col("__runs")).as(Seq("__i", "__r")))
     val base = Seq(
@@ -630,7 +616,6 @@ object Curation {
       textCol: String,
       n: Int = 5,
       minDf: Int = 2,
-      fastHash: Boolean = false,
       distinctDocs: Boolean = true,
       provenanceK: Int = 0): DataFrame = {
     // The per-doc run arrays from spanRunsByDoc ARE the span lists the
@@ -654,7 +639,7 @@ object Curation {
     val detectSrc =
       if (distinctDocs) df.filter(col(idCol).isNotNull) else df
     val byDoc = spanRunsByDoc(
-      detectSrc, idCol, textCol, n, minDf, fastHash, distinctDocs, provenanceK)
+      detectSrc, idCol, textCol, n, minDf, distinctDocs, provenanceK)
     val spans =
       if (provenanceK > 0)
         byDoc.select(col(idCol), col("__runs").as("__spans"),
@@ -740,13 +725,7 @@ object Curation {
     * one more map-side-combined per-doc aggregate. Nothing
     * document-sized shuffles beyond the (id, bucket) pairs; no UDF, no
     * floating point. Output: (idCol, n_tokens, imp_micro); imp_micro is
-    * 0-centered (a doc that looks exactly like raw scores ~0).
-    *
-    * `fastHash = true` buckets features by xxhash64 instead of md5 —
-    * the bucket assignment only needs uniformity, and the md5 path
-    * allocates a 32-char string per token (measured: ~60% of the deep
-    * point's GC at 500M tokens). md5 stays the default because it is
-    * the cross-engine-mirrorable form the oracle replays. */
+    * 0-centered (a doc that looks exactly like raw scores ~0). */
   def importanceWeights(
       raw: DataFrame,
       target: DataFrame,
@@ -754,13 +733,12 @@ object Curation {
       textCol: String,
       nBuckets: Int = 1024,
       seed: Int = 7,
-      fastHash: Boolean = false,
       n: Int = 1): DataFrame = {
     require(nBuckets > 0 && nBuckets <= (1 << 20),
       s"nBuckets must be in [1, 2^20], got $nBuckets")
     require(n > 0, s"n must be positive, got $n")
     def buckets(df: DataFrame, keep: Seq[Column]): DataFrame =
-      featureBuckets(df, keep, textCol, nBuckets, seed, fastHash, n)
+      featureBuckets(df, keep, textCol, nBuckets, seed, n)
     val rawB = buckets(raw, Seq(col(idCol)))
     // The bucket-count tables are BOUNDED (<= nBuckets <= 2^20 rows) but
     // EXPENSIVE to produce (a full tokenize+hash pass over the corpus) —
@@ -816,38 +794,26 @@ object Curation {
     * [[importanceWeights]] (DSIR) and [[classifierScore]] (fastText-style
     * inference). `keep` columns ride through the explode unchanged.
     *
-    * The md5 default is the cross-engine-mirrorable form the DuckDB
-    * oracle replays; `fastHash` rides the native
-    * [[graft.plans.WordShingleHash64]] expression (one compiled
-    * shingle-hash loop per document, seeded xxhash64, LONGs through the
-    * Generate — bit-parity with the composable form is spec-pinned).
-    * Documents shorter than n tokens contribute ONE whole-text feature
-    * (shinglesOf's contract), so every non-null document scores. */
+    * The hash is the native WordShingleMd5.hash32 with the seed prefix
+    * (r19), the cross-engine-mirrorable form the DuckDB oracle replays:
+    * bit-identical to exploding the shingles and applying
+    * md5Hash32(w, seed) per row (WordShingleMd5Spec pins the
+    * prefix-mode parity), minus the per-feature hex round-trip and, for
+    * n >= 2, the interpreted shinglesOf transform. Documents shorter
+    * than n tokens contribute ONE whole-text feature (shinglesOf's
+    * contract), so every non-null document scores. */
   private def featureBuckets(
       df: DataFrame,
       keep: Seq[Column],
       textCol: String,
       nBuckets: Int,
       seed: Int,
-      fastHash: Boolean,
-      n: Int): DataFrame = {
-    val staged = df.select(keep :+ text.tokens(col(textCol)).as("__t"): _*)
-    if (fastHash) {
-      staged.select(keep :+ explode(
-        graft.plans.WordShingleHash64(col("__t"), n, s"$seed:")).as("__h"): _*)
-        .select(keep :+ pmod(col("__h"), lit(nBuckets.toLong)).as("__b"): _*)
-    } else {
-      // The md5 path (r19) is the native WordShingleMd5.hash32 with
-      // the seed prefix — bit-identical to exploding the shingles and
-      // applying md5Hash32(w, seed) per row (WordShingleMd5Spec pins
-      // the prefix-mode parity), minus the per-feature hex round-trip
-      // and, for n >= 2, the interpreted shinglesOf transform.
-      staged.select(keep :+ explode(
+      n: Int): DataFrame =
+    df.select(keep :+ text.tokens(col(textCol)).as("__t"): _*)
+      .select(keep :+ explode(
         graft.plans.WordShingleMd5.hash32(col("__t"), n, s"$seed:"))
         .as("__h"): _*)
-        .select(keep :+ (col("__h") % nBuckets).as("__b"): _*)
-    }
-  }
+      .select(keep :+ (col("__h") % nBuckets).as("__b"): _*)
 
   /** Hashed linear text-classifier INFERENCE (the fastText architecture
     * — Joulin et al. 2016, "Bag of Tricks for Efficient Text
@@ -868,14 +834,13 @@ object Curation {
     * monotone, so thresholding score_micro IS thresholding the
     * probability).
     *
-    * Scale shape: one narrow feature explode (LONGs only under
-    * `fastHash`), a BROADCAST join against the weight table (bounded
-    * by nBuckets ≤ 2^20 ⇒ ≤ ~16 MB — a trained model, tiny next to the
-    * corpus), and one map-side-combined per-doc aggregate with a
-    * DECIMAL(38,0) accumulator (a doc whose features all land in
-    * extreme-weight buckets cannot silently wrap 64 bits). Nothing
-    * document-sized shuffles beyond (id, bucket) pairs; no UDF, no
-    * floats. Buckets absent from `weights` contribute weight 0 (an
+    * Scale shape: one narrow feature explode, a BROADCAST join against
+    * the weight table (bounded by nBuckets ≤ 2^20 ⇒ ≤ ~16 MB — a trained
+    * model, tiny next to the corpus), and one map-side-combined per-doc
+    * aggregate with a DECIMAL(38,0) accumulator (a doc whose features
+    * all land in extreme-weight buckets cannot silently wrap 64 bits).
+    * Nothing document-sized shuffles beyond (id, bucket) pairs; no
+    * UDF, no floats. Buckets absent from `weights` contribute weight 0 (an
     * untrained bucket is no evidence).
     *
     * Output: (idCol, n_features, score_sum_micro, score_micro) —
@@ -888,7 +853,6 @@ object Curation {
       nBuckets: Int = 1024,
       seed: Int = 7,
       n: Int = 1,
-      fastHash: Boolean = false,
       biasMicro: Long = 0L): DataFrame = {
     require(nBuckets > 0 && nBuckets <= (1 << 20),
       s"nBuckets must be in [1, 2^20], got $nBuckets")
@@ -896,7 +860,7 @@ object Curation {
     val w = broadcast(
       weights.select(col("bucket").cast(LongType).as("__b"),
         col("weight_micro").cast(LongType).as("__w_micro")))
-    featureBuckets(df, Seq(col(idCol)), textCol, nBuckets, seed, fastHash, n)
+    featureBuckets(df, Seq(col(idCol)), textCol, nBuckets, seed, n)
       .join(w, Seq("__b"), "left")
       .groupBy(col(idCol))
       .agg(
@@ -950,8 +914,7 @@ object Curation {
       isPositive: Column,
       nBuckets: Int = 1024,
       seed: Int = 7,
-      n: Int = 1,
-      fastHash: Boolean = false): DataFrame = {
+      n: Int = 1): DataFrame = {
     require(nBuckets > 0 && nBuckets <= (1 << 20),
       s"nBuckets must be in [1, 2^20], got $nBuckets")
     require(n > 0, s"n must be positive, got $n")
@@ -965,7 +928,7 @@ object Curation {
     // broadcast subqueries that re-execute it — same materialization
     // rationale as importanceWeights' bucket tables (r20).
     val counts = featureBuckets(
-      labeled, Seq(col("__pos")), textCol, nBuckets, seed, fastHash, n)
+      labeled, Seq(col("__pos")), textCol, nBuckets, seed, n)
       .groupBy(col("__b"))
       .agg(
         sum(when(col("__pos"), 1L).otherwise(0L)).as("__c_p"),

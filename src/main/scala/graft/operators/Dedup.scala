@@ -444,7 +444,7 @@ object Dedup {
       text.tokens(col(contentCol)).as("tok"))
     val set =
       if (shingle == 1) col("tok")
-      else text.fastShingleHashesOf(col("tok"), shingle)
+      else graft.plans.WordShingleHash64(col("tok"), shingle)
     tok.select(col("id"), sort_array(array_distinct(set)).as("ts"))
       .withColumn("sz", size(col("ts")).cast(LongType))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -965,62 +965,53 @@ object Dedup {
     * compression, used when the pair graph exceeds driver capacity. */
   def connectedComponentsDistributed(pairs: DataFrame): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sc = pairs.sparkSession.sparkContext
-
     val sym = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .persist(lvl)
-
-    // localCheckpoint persists its backing RDD; without explicit
-    // release, every round's checkpoint stays cached for the life of
-    // the session. Track the ids each eager checkpoint adds and drop
-    // the previous round's blocks once the new round is materialized
-    // (its lineage is truncated, so nothing references them). The
-    // final round's blocks are the result and are kept.
-    var prevIds = scala.collection.Set.empty[Int]
-    def checkpointTracked(df: DataFrame): DataFrame = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint() // eager: materialized here
-      val added = sc.getPersistentRDDs.keySet -- before
-      prevIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevIds = added
-      out
-    }
-
-    var labels = checkpointTracked(
-      sym.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")))
-    var converged = false
-    var i = 0
-    // Per round: neighbor-min relaxation + path compression (label of
-    // label) -> O(log diameter) rounds. localCheckpoint truncates the
-    // lineage each round (iterative plans otherwise snowball), and the
-    // change flag is computed in-row so convergence costs one cheap
-    // count over the checkpointed frame.
-    while (!converged && i < ccMaxIter) {
-      val nbrMin = sym.join(labels, sym("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      val relaxed = labels.as("l")
-        .join(nbrMin, col("l.id") === col("src"), "left")
-        .select(col("l.id").as("id"), col("l.label").as("old_label"),
-          least(col("l.label"), coalesce(col("nbr_min"), col("l.label")))
-            .as("label"))
-      val ptr = relaxed.select(col("id").as("lid"), col("label").as("llabel"))
-      val updated = relaxed.as("r")
-        .join(ptr, col("r.label") === col("lid"), "left")
-        .select(col("r.id").as("id"),
-          least(col("r.label"), coalesce(col("llabel"), col("r.label")))
-            .as("label"),
-          (least(col("r.label"), coalesce(col("llabel"), col("r.label")))
-            < col("r.old_label")).as("changed"))
-      val checkpointed = checkpointTracked(updated)
-      converged = checkpointed.filter(col("changed")).isEmpty
-      labels = checkpointed.drop("changed")
-      i += 1
-    }
-    sym.unpersist()
-    labels
+    try {
+      // localCheckpoint persists its backing RDD; without explicit
+      // release, every round's checkpoint stays cached for the life of
+      // the session. Owned frees exactly the checkpoints this call made:
+      // each round releases the previous one once the new round is
+      // materialized (its lineage is truncated, so nothing references
+      // it). The final round's blocks are the result and are kept.
+      val owned = new Owned
+      var cur = owned.checkpoint(
+        sym.select(col("src").as("id")).distinct()
+          .withColumn("label", col("id")))
+      var labels = cur
+      var converged = false
+      var i = 0
+      // Per round: neighbor-min relaxation + path compression (label of
+      // label) -> O(log diameter) rounds. localCheckpoint truncates the
+      // lineage each round (iterative plans otherwise snowball), and the
+      // change flag is computed in-row so convergence costs one cheap
+      // count over the checkpointed frame.
+      while (!converged && i < ccMaxIter) {
+        val nbrMin = sym.join(labels, sym("dst") === labels("id"))
+          .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
+        val relaxed = labels.as("l")
+          .join(nbrMin, col("l.id") === col("src"), "left")
+          .select(col("l.id").as("id"), col("l.label").as("old_label"),
+            least(col("l.label"), coalesce(col("nbr_min"), col("l.label")))
+              .as("label"))
+        val ptr = relaxed.select(col("id").as("lid"), col("label").as("llabel"))
+        val updated = relaxed.as("r")
+          .join(ptr, col("r.label") === col("lid"), "left")
+          .select(col("r.id").as("id"),
+            least(col("r.label"), coalesce(col("llabel"), col("r.label")))
+              .as("label"),
+            (least(col("r.label"), coalesce(col("llabel"), col("r.label")))
+              < col("r.old_label")).as("changed"))
+        val next = owned.checkpoint(updated)
+        owned.release(cur)
+        cur = next
+        converged = next.filter(col("changed")).isEmpty
+        labels = next.drop("changed")
+        i += 1
+      }
+      labels
+    } finally sym.unpersist()
   }
 
   /** Embedding-cosine near-duplicate pairs, bucket-pruned by sign

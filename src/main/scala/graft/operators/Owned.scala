@@ -13,8 +13,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * So the RDD-handle branch fires only for RDDs this tracker
   * registered; anything else falls back to the cache-manager
   * unpersist, a no-op for frames the operator never persisted.
-  * Used by [[Graph]]'s iterative operators and [[Similarity]]'s
-  * semantic dedup. */
+  * Used by [[Graph]]'s iterative operators, [[Similarity]]'s
+  * semantic dedup and [[Dedup.connectedComponentsDistributed]]. */
 private[operators] final class Owned {
   private val rdds = java.util.Collections.newSetFromMap(
     new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())

@@ -9,10 +9,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native word-n-gram shingle hashing: array<string> tokens in,
-  * array<bigint> of xxhash64(prefix || shingle) out — bit-identical to
-  * the composable form
+  * array<bigint> of xxhash64(shingle) out — bit-identical to the
+  * composable form
   *
-  *   transform(shinglesOf(tok, n), s => xxhash64(concat(lit(prefix), s)))
+  *   transform(shinglesOf(tok, n), s => xxhash64(s))
   *
   * including the short-document branch (fewer than n tokens → ONE
   * whole-text shingle), concat_ws's null-element skipping, and Spark's
@@ -27,16 +27,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * dsir_ngram both sit exactly on that line, SCALE.md r17), dwarfing
   * the shuffles it feeds. This expression does the same work as one
   * compiled loop per row: token bytes extracted once, one reusable
-  * grow-only buffer (prefix pre-copied at its head), memcpy + hash per
-  * window, zero per-window allocation beyond the output array.
+  * grow-only buffer, memcpy + hash per window, zero per-window
+  * allocation beyond the output array.
   *
-  * Serves every fastHash shingle path at once: fastShingleHashesOf
-  * (boilerplate profile, contamination, PPJoin's shingled tokens),
-  * duplicatedSpans' gram stream, and DSIR's hashed n-gram buckets.
-  * The md5 paths are untouched — they exist for cross-engine oracle
-  * parity and stay expressible in DuckDB SQL.
+  * Serves the shingled token sets of the PPJoin and containment
+  * families (Dedup.tokenSetLists) only. Every Curation shingle path
+  * hashes with the md5 twin [[WordShingleMd5]], whose values the
+  * DuckDB oracles mirror.
   */
-case class WordShingleHash64(child: Expression, n: Int, prefix: String)
+case class WordShingleHash64(child: Expression, n: Int)
     extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -52,18 +51,15 @@ case class WordShingleHash64(child: Expression, n: Int, prefix: String)
         s"word_shingle_hash64 requires array<string>, got ${other.catalogString}")
   }
 
-  private lazy val prefixBytes = prefix.getBytes("UTF-8")
-
   override protected def nullSafeEval(input: Any): Any =
-    WordShingleHash64.hashAll(input.asInstanceOf[ArrayData], n, prefixBytes)
+    WordShingleHash64.hashAll(input.asInstanceOf[ArrayData], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       // The whole loop lives in the static helper — codegen just calls
       // it, so the expression composes into whole-stage codegen without
       // forcing the surrounding operators out of it.
-      val pref = ctx.addReferenceObj("prefix", prefixBytes, "byte[]")
-      s"${ev.value} = graft.plans.WordShingleHash64.hashAll($c, $n, $pref);"
+      s"${ev.value} = graft.plans.WordShingleHash64.hashAll($c, $n);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): WordShingleHash64 =
@@ -74,19 +70,16 @@ object WordShingleHash64 {
 
   private val Seed = 42L // functions.xxhash64's fixed seed
 
-  /** Column API: hashes of the n-gram shingles of `tok` (array<string>),
-    * each optionally prefixed — `prefix = "7:"` reproduces
-    * xxhash64(concat(lit("7:"), shingle)) for seeded bucket assignment. */
-  def apply(tok: Column, n: Int, prefix: String = ""): Column =
+  /** Column API: hashes of the n-gram shingles of `tok` (array<string>). */
+  def apply(tok: Column, n: Int): Column =
     GraftColumnBridge.column(WordShingleHash64(
-      GraftColumnBridge.expression(tok), n, prefix))
+      GraftColumnBridge.expression(tok), n))
 
   /** One compiled pass over a row's tokens: extract each token's bytes
-    * once, then per window memcpy into a reusable buffer (prefix fixed
-    * at its head) and hash — the byte sequence is exactly the UTF8
-    * encoding of prefix || tokens-joined-by-single-spaces with null
-    * tokens skipped (concat_ws semantics). */
-  def hashAll(tokens: ArrayData, n: Int, prefix: Array[Byte]): ArrayData = {
+    * once, then per window memcpy into a reusable buffer and hash — the
+    * byte sequence is exactly the UTF8 encoding of the tokens joined by
+    * single spaces with null tokens skipped (concat_ws semantics). */
+  def hashAll(tokens: ArrayData, n: Int): ArrayData = {
     val m = tokens.numElements()
     val tb = new Array[Array[Byte]](m)
     var i = 0
@@ -94,14 +87,12 @@ object WordShingleHash64 {
       if (!tokens.isNullAt(i)) tb(i) = tokens.getUTF8String(i).getBytes
       i += 1
     }
-    val p = prefix.length
-    var buf = new Array[Byte](math.max(64, p))
-    System.arraycopy(prefix, 0, buf, 0, p)
+    var buf = new Array[Byte](64)
 
-    // assemble tokens [from, from+count) into buf after the prefix,
-    // growing it if needed; returns the total byte length
+    // assemble tokens [from, from+count) into buf, growing it if
+    // needed; returns the total byte length
     def window(from: Int, count: Int): Int = {
-      var need = p
+      var need = 0
       var k = 0
       var nonNull = 0
       while (k < count) {
@@ -110,12 +101,9 @@ object WordShingleHash64 {
         k += 1
       }
       if (nonNull > 1) need += nonNull - 1 // single-space separators
-      if (need > buf.length) {
-        val grown = new Array[Byte](math.max(need, buf.length * 2))
-        System.arraycopy(prefix, 0, grown, 0, p)
-        buf = grown
-      }
-      var len = p
+      if (need > buf.length)
+        buf = new Array[Byte](math.max(need, buf.length * 2))
+      var len = 0
       var first = true
       k = 0
       while (k < count) {

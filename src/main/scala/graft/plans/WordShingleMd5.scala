@@ -11,9 +11,10 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 
 /** Native md5 word-n-gram shingle hashing — the md5 twin of
-  * [[WordShingleHash64]], for the shingle paths whose hash function is
-  * part of the ORACLE-VERIFIED result and therefore cannot move to
-  * xxhash64. One compiled memcpy + digest loop per row replaces the
+  * [[WordShingleHash64]] and the one shingle hash of every Curation
+  * operator (boilerplate, contamination, duplicated spans, DSIR and
+  * classifier buckets): its values are part of the ORACLE-VERIFIED
+  * results. One compiled memcpy + digest loop per row replaces the
   * interpreted transform + slice + concat_ws (+ md5-hex + conv)
   * pipeline. Window assembly is identical to WordShingleHash64
   * (single-space joins, concat_ws null-element skipping, short-doc
@@ -28,7 +29,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, St
   *    bytes as an unsigned int, which is exactly what conv parses from
   *    the first 8 hex chars). The 32-bit value — collisions included —
   *    is mirrored verbatim in the DuckDB oracles (source overlap,
-  *    shingle novelty, minhash permutations), so it must not widen.
+  *    shingle novelty, minhash permutations), so it must not widen:
+  *    among m distinct shingles ≈ m²/2³³ pairs collide (about 116 at
+  *    10⁶).
   *
   *  - `wide = true`: array<struct<h1:bigint,h2:bigint>> — the FULL
   *    128-bit digest packed into two longs. Bijective with the md5 hex
@@ -101,9 +104,9 @@ object WordShingleMd5 {
   }
 
   /** Same one-pass window assembly as [[WordShingleHash64.hashAll]]
-    * (token bytes extracted once, reusable grow-only buffer, prefix at
-    * its head, single-space concat_ws-with-null-skip joins), feeding
-    * an MD5 digest instead of XXH64. */
+    * (token bytes extracted once, reusable grow-only buffer,
+    * single-space concat_ws-with-null-skip joins) plus the prefix at
+    * the buffer's head, feeding an MD5 digest instead of XXH64. */
   def hashAll(tokens: ArrayData, n: Int, prefix: Array[Byte],
       wide: Boolean): ArrayData = {
     val md = md5Local.get()

@@ -154,33 +154,6 @@ class CurationSpec extends SparkSpec {
     assert(out(1) === ((2L, "", 1L, 0L, 1L)))
   }
 
-  test("fastHash variants produce identical results to the md5 path") {
-    val docs = Seq(
-      (1L, "a b c d e f g h shared shared shared shared shared"),
-      (2L, "x y z shared shared shared shared shared q r s"),
-      (3L, "a b c d e f g h unrelated tokens here now"),
-      (4L, "completely different content in this one document"))
-      .toDF("doc_id", "text")
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(
-      sorted(Curation.boilerplateProfile(docs, "doc_id", "text", n = 3,
-        minDf = 2, fastHash = true)) ===
-      sorted(Curation.boilerplateProfile(docs, "doc_id", "text", n = 3,
-        minDf = 2)))
-    assert(
-      sorted(Curation.removeDuplicatedSegments(docs, "doc_id", "text",
-        segTokens = 4, maxDf = 2, fastHash = true)) ===
-      sorted(Curation.removeDuplicatedSegments(docs, "doc_id", "text",
-        segTokens = 4, maxDf = 2)))
-    assert(
-      sorted(Curation.contamination(docs, "doc_id", "text",
-        isBenchmark = col("doc_id") === 1L, n = 3, minShared = 2,
-        fastHash = true)) ===
-      sorted(Curation.contamination(docs, "doc_id", "text",
-        isBenchmark = col("doc_id") === 1L, n = 3, minShared = 2)))
-  }
-
   test("applyMixture: upsampling, downsampling, and pass-through in one plan") {
     val docs = (0 until 40).map(i =>
       (i.toLong, if (i < 20) "up" else if (i < 30) "down" else "other",
@@ -236,12 +209,6 @@ class CurationSpec extends SparkSpec {
       // two disjoint 5-token shared regions -> two spans per doc
       (3L, 1L, 0L, 4L, 5L), (3L, 2L, 7L, 11L, 5L),
       (4L, 1L, 0L, 4L, 5L), (4L, 2L, 7L, 11L, 5L)))
-    // fastHash variant: identical spans
-    val fast = Curation.duplicatedSpans(
-      df, "doc_id", "text", n = 5, minDf = 2, fastHash = true)
-      .as[(Long, Long, Long, Long, Long)].collect().sortBy(r => (r._1, r._2))
-      .toSeq
-    assert(fast === out)
   }
 
   test("duplicatedSpans distinctDocs=false: within-document repeats flag " +
@@ -307,7 +274,7 @@ class CurationSpec extends SparkSpec {
     val target = raw.filter($"doc_id" <= 2)
     val nB = 64; val seed = 7
     val out = Curation.importanceWeights(
-      raw, target, "doc_id", "text", nB, seed, fastHash = false, n = 2)
+      raw, target, "doc_id", "text", nB, seed, n = 2)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
 
     def bucket(w: String): Long = {
@@ -385,22 +352,6 @@ class CurationSpec extends SparkSpec {
       Curation.importanceWeights(raw, target, "doc_id", "text", nB, seed),
       "doc_id", 2).as[(Long, Long, Long)].collect().toSeq
     assert(top === expected.sortBy(e => (-e._3, e._1)).take(2))
-
-    // fastHash (xxhash64 buckets): different bucket assignment, same
-    // contract — per-doc token counts identical, deterministic under
-    // repartitioning, target-heavy docs still outscore target-absent.
-    val fast = Curation.importanceWeights(
-      raw, target, "doc_id", "text", nB, seed, fastHash = true)
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(fast.map(r => (r._1, r._2)) === expected.map(e => (e._1, e._2)))
-    assert(fast.map(_._3).exists(_ != 0L))
-    val fastByid = fast.map(r => r._1 -> r._3).toMap
-    assert(fastByid(1L) > fastByid(3L) && fastByid(2L) > fastByid(3L))
-    val fast2 = Curation.importanceWeights(
-      raw.repartition(3), target, "doc_id", "text", nB, seed,
-      fastHash = true)
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(fast2 === fast)
   }
 
   test("importanceWeights plan shape: ratio table joins broadcast, " +

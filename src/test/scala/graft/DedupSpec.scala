@@ -191,6 +191,23 @@ class DedupSpec extends SparkSpec {
     assert(uf === dist)
   }
 
+  test("connectedComponentsDistributed frees only the checkpoints it made") {
+    // A caller's checkpointed frame made before the call: its blocks ARE
+    // its data, so the operator's per-round release must not touch them.
+    val callers = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
+      .localCheckpoint()
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L))
+      .toDF("id_a", "id_b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val labels = Dedup.connectedComponentsDistributed(pairs)
+    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(added.size <= 1, s"persistent RDDs added: $added")
+    assert(callers.count() === 3L)
+    assert(labels.count() === 7L)
+    added.foreach(id =>
+      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist()))
+  }
+
   test("graph above driverEdgeThreshold routes through the distributed path") {
     // 300 edges: one long chain (diameter stresses the propagation
     // rounds) + a separate clique-ish component. Threshold 10 forces

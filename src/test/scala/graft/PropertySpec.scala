@@ -254,19 +254,14 @@ class PropertySpec extends SparkSpec {
       val df = docs.zipWithIndex.map { case (d, i) => (i.toLong, d) }
         .toDF("doc_id", "text")
       val got = Curation.duplicatedSpans(df, "doc_id", "text", n, minDf,
-        fastHash = false, distinctDocs = dd)
+        distinctDocs = dd)
         .as[(Long, Long, Long, Long, Long)].collect().toSet
       val want = bruteSpans(docs, n, minDf, dd)
       assert(got === want, s"n=$n minDf=$minDf dd=$dd docs=$docs")
-      // fastHash agreement: a 10-word vocabulary cannot collide xxhash64
-      val fast = Curation.duplicatedSpans(df, "doc_id", "text", n, minDf,
-        fastHash = true, distinctDocs = dd)
-        .as[(Long, Long, Long, Long, Long)].collect().toSet
-      assert(fast === got, s"fastHash diverged: n=$n minDf=$minDf dd=$dd")
       // removal = exact complement of the covered positions
       val toks = docs.map(_.trim.split("\\s+").toSeq)
       val removed = Curation.removeDuplicatedSpans(df, "doc_id", "text",
-        n, minDf, fastHash = false, distinctDocs = dd)
+        n, minDf, distinctDocs = dd)
         .as[(Long, String, Long, Long, Long)].collect().sortBy(_._1).toSeq
       assert(removed.size === docs.size) // one row per doc, always
       removed.foreach { case (id, clean, nTok, nKept, nRem) =>

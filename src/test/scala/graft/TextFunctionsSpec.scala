@@ -200,7 +200,7 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("WordShingleHash64 is bit-identical to the composable " +
-      "transform(shinglesOf, xxhash64) form — all widths, prefixes, edges") {
+      "transform(shinglesOf, xxhash64) form — all widths, edges") {
     import graft.plans.WordShingleHash64
     // adversarial corpus: short docs (< n), exact-n docs, repeated
     // tokens, unicode, single token, and the empty string (tokens("")
@@ -213,19 +213,18 @@ class TextFunctionsSpec extends SparkSpec {
       "répété répété café ñandú 漢字 漢字",
       "s s s s s s s s s s").toDF("text")
       .select(text.tokens($"text").as("t"))
-    for (n <- Seq(1, 2, 3, 5); prefix <- Seq("", "7:", "long-seed:")) {
+    for (n <- Seq(1, 2, 3, 5)) {
       val reference = transform(
         when(size($"t") < n, array(concat_ws(" ", $"t")))
           .otherwise(transform(
             sequence(lit(0), size($"t") - n),
             i => concat_ws(" ", slice($"t", i + 1, lit(n))))),
-        s => xxhash64(concat(lit(prefix), s)))
+        s => xxhash64(s))
       val rows = docs.select(
-        WordShingleHash64($"t", n, prefix).as("native"),
+        WordShingleHash64($"t", n).as("native"),
         reference.as("composed")).collect()
       rows.foreach { r =>
-        assert(r.getSeq[Long](0) === r.getSeq[Long](1),
-          s"n=$n prefix='$prefix'")
+        assert(r.getSeq[Long](0) === r.getSeq[Long](1), s"n=$n")
       }
     }
     // null array -> null out (nullIntolerant)
