@@ -205,14 +205,6 @@ object ScaleBench {
         .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dest/embeddings.parquet")
     }
-    val dir1 = s"$work/x1"
-    val dirN = s"$work/x$copies"
-    val dirE1 = s"$work/ev_x1"
-    val dirEN = s"$work/ev_x$eventsCopies"
-    val dirM1 = s"$work/emb_x1"
-    val dirMN = s"$work/emb_x$embCopies"
-    val dirD1 = s"$work/doc_x1"
-    val dirDN = s"$work/doc_x$docsCopies"
     // SPARK_GRAFT_SCALE_REUSE=1 skips re-replicating a dest that was
     // completely written FROM THE SAME INPUTS — replication (especially
     // the 100M-row events decade) dominates wall time when iterating on
@@ -240,17 +232,6 @@ object ScaleBench {
         java.nio.file.Files.writeString(marker(dest), prov)
       }
     }
-    build(dir1, Seq("lineitem", "documents"), 1, " cipher=perm")(
-      replicate(1, dir1))
-    build(dirN, Seq("lineitem", "documents"), copies, " cipher=perm")(
-      replicate(copies, dirN))
-    build(dirE1, Seq("events"), 1)(replicateEvents(1, dirE1))
-    build(dirEN, Seq("events"), eventsCopies)(replicateEvents(eventsCopies, dirEN))
-    build(dirM1, Seq("embeddings"), 1)(replicateEmb(1, dirM1))
-    build(dirMN, Seq("embeddings"), embCopies)(replicateEmb(embCopies, dirMN))
-    build(dirD1, Seq("documents"), 1)(replicateDocsPerm(1, dirD1))
-    build(dirDN, Seq("documents"), docsCopies)(
-      replicateDocsPerm(docsCopies, dirDN))
     // ---- MID scale point (r18): the exponent's x1 denominator is a
     // 1-2 s wall that swings 2x with shared-box weather — ppjoin's te
     // read 0.99/1.01/1.04/1.11 across five artifacts of IDENTICAL code
@@ -266,27 +247,30 @@ object ScaleBench {
       val m = math.max(2, n / 10)
       if (m < n) Some(m) else None
     }
-    val midL = midFor(copies)
-    val midE = midFor(eventsCopies)
-    val midM = midFor(embCopies)
-    val midD = midFor(docsCopies)
-    val dirMidL = midL.map { m =>
-      val d = s"$work/x$m"
-      build(d, Seq("lineitem", "documents"), m, " cipher=perm")(
-        replicate(m, d)); d
+    // A replica family: the x1, mid and deep (`n` copies) replicas of
+    // one recipe, at `$work/<prefix><copies>`. A directory is written
+    // when first read, and once per run even when two families share
+    // it (the ppjoin family's x1 and, at the default cap, its deep and
+    // mid points are the docs family's), so a run filtered to some
+    // shapes writes only the families those shapes read.
+    val written = scala.collection.mutable.Set.empty[String]
+    final class Family(prefix: String, tables: Seq[String], val n: Int,
+        tag: String = "")(write: (Int, String) => Unit) {
+      private def at(c: Int): String = {
+        val d = s"$work/$prefix$c"
+        if (written.add(d)) build(d, tables, c, tag)(write(c, d))
+        d
+      }
+      lazy val lo: String = at(1)
+      lazy val hi: String = at(n)
+      val m: Int = midFor(n).getOrElse(0)
+      lazy val mid: Option[String] = midFor(n).map(at)
     }
-    val dirMidE = midE.map { m =>
-      val d = s"$work/ev_x$m"
-      build(d, Seq("events"), m)(replicateEvents(m, d)); d
-    }
-    val dirMidM = midM.map { m =>
-      val d = s"$work/emb_x$m"
-      build(d, Seq("embeddings"), m)(replicateEmb(m, d)); d
-    }
-    val dirMidD = midD.map { m =>
-      val d = s"$work/doc_x$m"
-      build(d, Seq("documents"), m)(replicateDocsPerm(m, d)); d
-    }
+    val lineitemF = new Family("x", Seq("lineitem", "documents"), copies,
+      " cipher=perm")(replicate)
+    val eventsF = new Family("ev_x", Seq("events"), eventsCopies)(replicateEvents)
+    val embF = new Family("emb_x", Seq("embeddings"), embCopies)(replicateEmb)
+    val docsF = new Family("doc_x", Seq("documents"), docsCopies)(replicateDocsPerm)
 
     // ---- the shapes: same operators the oracle-checked queries call,
     // with id bounds rewritten per-copy (doc_id % docOff, part % pkOff)
@@ -532,31 +516,14 @@ object ScaleBench {
     // arrays per candidate (~25 GB at x100; x1000 would be a 250 GB
     // verify for no extra signal about candidate growth).
     val ppjoinCopies = math.min(docsCopies, 100)
-    val dirDP =
-      if (ppjoinCopies == docsCopies) dirDN else s"$work/doc_x$ppjoinCopies"
-    if (ppjoinCopies != docsCopies)
-      build(dirDP, Seq("documents"), ppjoinCopies)(
-        replicateDocsPerm(ppjoinCopies, dirDP))
     // ppjoin's mid point (doc_x10 at the default cap) — THE shape whose
     // x1-denominator te instability motivated the mid basis.
-    val midP = midFor(ppjoinCopies)
-    val dirMidP = midP.map { m =>
-      val d = s"$work/doc_x$m"
-      build(d, Seq("documents"), m)(replicateDocsPerm(m, d)); d
-    }
+    val ppjoinF = new Family("doc_x", Seq("documents"), ppjoinCopies)(
+      replicateDocsPerm)
     // Span-dense corpus (see replicateDocsDense): same x100 cap as the
     // other span shapes.
-    val denseCopies = ppjoinCopies
-    val dirDd1 = s"$work/doc_dense_x1"
-    val dirDdN = s"$work/doc_dense_x$denseCopies"
-    build(dirDd1, Seq("documents"), 1)(replicateDocsDense(1, dirDd1))
-    build(dirDdN, Seq("documents"), denseCopies)(
-      replicateDocsDense(denseCopies, dirDdN))
-    val midDd = midFor(denseCopies)
-    val dirMidDd = midDd.map { m =>
-      val d = s"$work/doc_dense_x$m"
-      build(d, Seq("documents"), m)(replicateDocsDense(m, d)); d
-    }
+    val denseF = new Family("doc_dense_x", Seq("documents"), ppjoinCopies)(
+      replicateDocsDense)
     val denseShapes: Seq[(String, String => DataFrame)] = Seq(
       // remove_spans on the span-DENSE corpus: ~200 disjoint 5-token
       // spans per ~2000-token doc (~50% coverage). This is the deep
@@ -620,7 +587,7 @@ object ScaleBench {
       "dedup_against" -> (dir =>
         Dedup.dedupAgainst(
           corpus = docsD(dir),
-          incoming = docsD(dirD1),
+          incoming = docsD(docsF.lo),
           "doc_id", "text", k = 8, bands = 4, shingleN = 1,
           threshold = 0.9)),
       // Duplicated-span detection (q211's operator): position explode
@@ -740,19 +707,6 @@ object ScaleBench {
       (sec, m, rows)
     }
 
-    // warmup: reader + codegen init off the clock, and the streaming
-    // machinery too — the FIRST streaming query in a JVM pays ~10 s of
-    // one-time cost (state-store providers, micro-batch planner,
-    // streaming codegen/JIT) that would otherwise land in whichever
-    // streaming shape runs first and invert its exponent (observed:
-    // stream_hourly x1 12.6 s cold vs 2.0 s at x100 warm).
-    li(dir1).count(); docs(dir1).count()
-    SparkEntry.queries("q44_stream_hourly")(spark, dirE1).count()
-    Session.release(spark)
-    // Phase recording starts with the first measurement; each
-    // onceMeasure drains it once.
-    util.Trace.enabled = true
-
     // Targeted iteration: SPARK_GRAFT_SCALE_SHAPES=cdc_apply,stream_dedup
     // runs only the named shapes (full artifact runs leave it unset —
     // a filtered output must never replace the artifact of record, so
@@ -790,29 +744,44 @@ object ScaleBench {
     // shapes in the suite and they are also its cheapest, so widening
     // the sample count costs minutes and buys an adjudicable margin).
     final case class Job(name: String, fn: String => DataFrame,
-        lo: String, hi: String, n: Int,
-        mid: Option[String] = None, m: Int = 0,
-        samples: Int = samplesPerPoint)
+        fam: Family, samples: Int = samplesPerPoint)
     val jobs: Seq[Job] =
-      (shapes.map { case (nm, fn) =>
-        Job(nm, fn, dir1, dirN, copies, dirMidL, midL.getOrElse(0)) } ++
+      (shapes.map { case (nm, fn) => Job(nm, fn, lineitemF) } ++
         eventShapes.map { case (nm, fn) =>
-          Job(nm, fn, dirE1, dirEN, eventsCopies,
-            dirMidE, midE.getOrElse(0),
+          Job(nm, fn, eventsF,
             samples = if (nm.startsWith("stream_")) 5 else samplesPerPoint) } ++
-        docShapes.map { case (nm, fn) =>
-          Job(nm, fn, dirD1, dirDN, docsCopies,
-            dirMidD, midD.getOrElse(0)) } ++
-        ppjoinShapes.map { case (nm, fn) =>
-          Job(nm, fn, dirD1, dirDP, ppjoinCopies,
-            dirMidP, midP.getOrElse(0)) } ++
-        denseShapes.map { case (nm, fn) =>
-          Job(nm, fn, dirDd1, dirDdN, denseCopies,
-            dirMidDd, midDd.getOrElse(0)) } ++
-        embShapes.map { case (nm, fn) =>
-          Job(nm, fn, dirM1, dirMN, embCopies,
-            dirMidM, midM.getOrElse(0)) })
+        docShapes.map { case (nm, fn) => Job(nm, fn, docsF) } ++
+        ppjoinShapes.map { case (nm, fn) => Job(nm, fn, ppjoinF) } ++
+        denseShapes.map { case (nm, fn) => Job(nm, fn, denseF) } ++
+        embShapes.map { case (nm, fn) => Job(nm, fn, embF) })
         .filter(j => shapeFilter.forall(_.contains(j.name)))
+    // Every replica a selected job or probe reads is written before the
+    // first measurement: the selected families (in a fixed order), the
+    // x1 docs that dedup_against takes as its incoming batch, and the
+    // x1 and deep docs the two knob probes read.
+    Seq(lineitemF, eventsF, embF, docsF, ppjoinF, denseF)
+      .filter(f => jobs.exists(_.fam eq f))
+      .foreach { f => f.lo; f.mid; f.hi }
+    if (jobs.exists(_.name == "dedup_against")) docsF.lo
+    if (Seq("lsh_knob", "containment_knob")
+        .exists(k => shapeFilter.forall(_.contains(k)))) { docsF.lo; docsF.hi }
+
+    // warmup: reader + codegen init off the clock, and the streaming
+    // machinery too — the FIRST streaming query in a JVM pays ~10 s of
+    // one-time cost (state-store providers, micro-batch planner,
+    // streaming codegen/JIT) that would otherwise land in whichever
+    // streaming shape runs first and invert its exponent (observed:
+    // stream_hourly x1 12.6 s cold vs 2.0 s at x100 warm).
+    if (jobs.exists(_.fam eq lineitemF)) {
+      li(lineitemF.lo).count(); docs(lineitemF.lo).count()
+    }
+    if (jobs.exists(_.name.startsWith("stream_")))
+      SparkEntry.queries("q44_stream_hourly")(spark, eventsF.lo).count()
+    Session.release(spark)
+    // Phase recording starts with the first measurement; each
+    // onceMeasure drains it once.
+    util.Trace.enabled = true
+
     val runs1 = scala.collection.mutable.Map.empty[String, Vector[(Double, String)]]
     val runsM = scala.collection.mutable.Map.empty[String, Vector[(Double, String)]]
     val runsN = scala.collection.mutable.Map.empty[String, Vector[(Double, String)]]
@@ -851,14 +820,14 @@ object ScaleBench {
           // bench applies per query; it costs one cheap x1 execution
           // per sample and makes the artifact of record catch the
           // steady state instead of documenting it in prose.
-          onceMeasure(job.fn, job.lo)
-          val (s1, m1, r1) = onceMeasure(job.fn, job.lo)
+          onceMeasure(job.fn, job.fam.lo)
+          val (s1, m1, r1) = onceMeasure(job.fn, job.fam.lo)
           // mid between lo and hi: ascending data size keeps each
           // point's predecessor-pressure profile consistent across
           // rounds (the interleaving varies the BETWEEN-shape
           // neighborhood; within a shape the order stays fixed).
-          val midRes = job.mid.map(d => onceMeasure(job.fn, d))
-          val (sN, mN, rN) = onceMeasure(job.fn, job.hi)
+          val midRes = job.fam.mid.map(d => onceMeasure(job.fn, d))
+          val (sN, mN, rN) = onceMeasure(job.fn, job.fam.hi)
           runs1(job.name) = runs1.getOrElse(job.name, Vector.empty) :+ ((s1, m1))
           midRes.foreach { case (sM, mM, _) =>
             runsM(job.name) = runsM.getOrElse(job.name, Vector.empty) :+ ((sM, mM))
@@ -882,7 +851,7 @@ object ScaleBench {
     val lshKnobFrag =
       if (!shapeFilter.forall(_.contains("lsh_knob"))) ""
       else {
-        val pts = Seq(("x1", dirD1), (s"x$docsCopies", dirDN)).map {
+        val pts = Seq(("x1", docsF.lo), (s"x$docsCopies", docsF.hi)).map {
           case (lbl, dir) =>
             val t0 = System.nanoTime()
             val r = Dedup.lshCandidateProfile(
@@ -906,7 +875,7 @@ object ScaleBench {
       if (!shapeFilter.forall(_.contains("containment_knob"))) ""
       else {
         val pts = for {
-          (lbl, dir) <- Seq(("x1", dirD1), (s"x$docsCopies", dirDN))
+          (lbl, dir) <- Seq(("x1", docsF.lo), (s"x$docsCopies", docsF.hi))
           sh <- Seq(1, 3)
         } yield {
           val t0 = System.nanoTime()
@@ -921,7 +890,7 @@ object ScaleBench {
         val guard =
           try {
             Dedup.containmentPairs(
-              docsD(dirDN), "doc_id", "text", thresholdBp = 6000, shingle = 1)
+              docsD(docsF.hi), "doc_id", "text", thresholdBp = 6000, shingle = 1)
             """"tripped":false"""
           } catch {
             case e: IllegalArgumentException
@@ -936,7 +905,7 @@ object ScaleBench {
 
     val entries = jobs.map { job =>
       val name = job.name
-      val n = job.n
+      val n = job.fam.n
       (failed.get(name), runs1.get(name), runsN.get(name)) match {
         case (_, Some(r1s), Some(rNs)) if r1s.nonEmpty && rNs.nonEmpty =>
           val (t1, met1) = r1s.minBy(_._1)
@@ -994,13 +963,13 @@ object ScaleBench {
           } yield r4(math.log(tNm / t1m) / math.log(n.toDouble)))
           val rMs = runsM.get(name).filter(_.nonEmpty)
           val teMid = (for {
-            ms <- rMs; if job.m > 0 && job.m < n
+            ms <- rMs; if job.fam.m > 0 && job.fam.m < n
             useCpu = medOf(ms, cpuMs).isDefined &&
               medOf(rNs, cpuMs).isDefined
             f = if (useCpu) cpuMs else taskMs
             tM <- medOf(ms, f); tN <- medOf(rNs, f)
-          } yield (r4(math.log(tN / tM) / math.log(n.toDouble / job.m)),
-            s"x${job.m}->x$n/median_" +
+          } yield (r4(math.log(tN / tM) / math.log(n.toDouble / job.fam.m)),
+            s"x${job.fam.m}->x$n/median_" +
               (if (useCpu) "task_cpu_ms" else "task_ms")))
           // Error bar: the remaining variance channel after the mid
           // basis and the CPU series is the raw per-sample CPU sums
@@ -1021,12 +990,12 @@ object ScaleBench {
             if (ts.isEmpty) None else Some(math.log(ts.max / ts.min))
           }
           val teSpread = (for {
-            ms <- rMs; if job.m > 0 && job.m < n
+            ms <- rMs; if job.fam.m > 0 && job.fam.m < n
             useCpu = medOf(ms, cpuMs).isDefined &&
               medOf(rNs, cpuMs).isDefined
             f = if (useCpu) cpuMs else taskMs
             sM <- spreadOf(ms, f); sN <- spreadOf(rNs, f)
-          } yield r4((sM + sN) / (2 * math.log(n.toDouble / job.m))))
+          } yield r4((sM + sN) / (2 * math.log(n.toDouble / job.fam.m))))
           // Mid-regime indicator (r19, machine-readable): the mid->hi
           // exponent is the MARGINAL exponent, and when the mid point's
           // work is still mostly fixed cost (JVM/driver/stage overhead)
@@ -1040,12 +1009,12 @@ object ScaleBench {
           // honestly. tools/scale_te.py recomputes the same rule for
           // pre-r19 artifacts and prints it next to te.
           val midRegime = (for {
-            ms <- rMs; if job.m > 0
+            ms <- rMs; if job.fam.m > 0
             useCpu = medOf(ms, cpuMs).isDefined &&
               medOf(r1s, cpuMs).isDefined
             f = if (useCpu) cpuMs else taskMs
             tM <- medOf(ms, f); t1 <- medOf(r1s, f)
-          } yield if (tM < 0.3 * job.m * t1) "overhead" else "in-regime")
+          } yield if (tM < 0.3 * job.fam.m * t1) "overhead" else "in-regime")
           val regimeFrag = midRegime
             .map(r => s""","mid_regime":"$r"""").getOrElse("")
           val taskFrag =
@@ -1073,7 +1042,7 @@ object ScaleBench {
           val midFrag = rMs.map { ms =>
             val (tM, metM) = ms.minBy(_._1)
             val medM = r4(median(ms.map(_._1)))
-            s""","mid":{"copies":${job.m},"min":$tM,"median":$medM,"runs":[${ms.map(_._1).mkString(",")}],${workLists(ms)},"metrics":$metM}"""
+            s""","mid":{"copies":${job.fam.m},"min":$tM,"median":$medM,"runs":[${ms.map(_._1).mkString(",")}],${workLists(ms)},"metrics":$metM}"""
           }.getOrElse("")
           // Per-run GC alongside the per-run walls: single-draw GC at
           // the deep points swings 2.8 s / 4.5 s / 16.9 s across

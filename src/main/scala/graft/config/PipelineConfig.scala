@@ -1,12 +1,17 @@
 package graft.config
 
-import java.nio.file.{Files, Paths}
+import java.io.File
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.MissingNode
+import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 
 /** Inclusive validity range for a reading type.
   * Reference: config/default.yaml:29-38, src/config/models.py:59-62. */
 final case class ValueRange(min: Double, max: Double) {
   require(min <= max, s"range min $min > max $max")
-  def contains(v: Double): Boolean = v >= min && v <= max
 }
 
 /** Linear calibration `value * multiplier + offset`, keyed by reading type.
@@ -29,11 +34,10 @@ final case class WriteConfig(
 final case class TransformConfig(
     zScoreThreshold: Double = 3.0,
     rollingWindowDays: Int = 7,
-    readingsPerDay: Int = 24,
     outlierHandling: String = "flag") {
-  /** Trailing row-count frame: 7 days x 24 obs/day = 168 rows
+  /** Trailing row-count frame: 7 days x 24 hourly readings = 168 rows
     * (reference transformation.py:262-264 — row-count, not time-range). */
-  def rollingWindowRows: Int = rollingWindowDays * readingsPerDay
+  def rollingWindowRows: Int = rollingWindowDays * 24
 }
 
 /** Validation thresholds. Reference: config/default.yaml:62-66. */
@@ -118,189 +122,112 @@ object PipelineConfig {
   }
 
   /** Load a reference-layout YAML config (config/default.yaml shape,
-    * src/config/models.py:131-141 from_yaml). Parsed with the built-in
-    * indentation-subset parser below — no external YAML dependency.
-    * Any omitted section keeps its default; `ranges.battery_level`
-    * feeds `batteryRange` like the reference's battery branch. The
-    * reference's `schema` section and `paths.reports_dir` parse but are
-    * not read: ingest validates against the fixed
-    * `graft.model.Schemas.raw`, and the report goes to
-    * `paths.dq_report_csv`. A key in the `write` or `transformation`
-    * section that this parser does not read fails the load with an
-    * IllegalArgumentException naming it, so a misspelt or retired
-    * setting cannot parse and silently change nothing. */
+    * src/config/models.py:131-141 from_yaml). Jackson's YAML reader
+    * parses it, so scalars get YAML 1.1 types as under the reference's
+    * PyYAML: `yes`/`no` are booleans, `~` and `null` are null, and flow
+    * lists and maps, folded and quoted scalars read as PyYAML reads
+    * them. An empty file, an omitted section and a null value keep the
+    * defaults; `ranges.battery_level` feeds `batteryRange` like the
+    * reference's battery branch. The reference's `schema` section and
+    * `paths.reports_dir` parse but are not read: ingest validates
+    * against the fixed `graft.model.Schemas.raw`, and the report goes
+    * to `paths.dq_report_csv`. The load fails with an
+    * IllegalArgumentException naming `section.key` for a key in the
+    * `write` or `transformation` section that is not read (a misspelt
+    * or retired setting cannot parse and silently change nothing), and
+    * for a value of the wrong shape for its key (a map or list where a
+    * scalar is read, a scalar where a list or map is read). */
   def fromYaml(path: String): PipelineConfig = {
-    val root = MiniYaml.parse(Files.readString(Paths.get(path)))
-    var cfg = default
-
-    def objOf(k: String): Option[MiniYaml.Obj] = root.get(k).collect {
-      case o: MiniYaml.Obj => o
-    }
-    def str(o: MiniYaml.Obj, k: String): Option[String] = o.get(k).collect {
-      case MiniYaml.Scalar(Some(v)) => v
-    }
-    def num(o: MiniYaml.Obj, k: String): Option[Double] = str(o, k).map(_.toDouble)
-    def list(o: MiniYaml.Obj, k: String): Option[Seq[String]] = o.get(k).collect {
-      case MiniYaml.Arr(items) => items.collect {
-        case MiniYaml.Scalar(Some(v)) => v
-      }
-    }
-    def onlyKnownKeys(o: MiniYaml.Obj, section: String, known: String*): Unit =
-      o.entries.map(_._1).find(k => !known.contains(k)).foreach(k =>
-        throw new IllegalArgumentException(
-          s"unknown key '$section.$k' in $path"))
-
-    objOf("pipeline").foreach(p =>
-      str(p, "version").foreach(v => cfg = cfg.copy(pipelineVersion = v)))
-    objOf("project").foreach(p =>
-      str(p, "timezone").foreach(v => cfg = cfg.copy(timezone = v)))
-    objOf("paths").foreach { p =>
-      var ps = cfg.paths
-      str(p, "data_raw").foreach(v => ps = ps.copy(dataRaw = v))
-      str(p, "data_processed").foreach(v => ps = ps.copy(dataProcessed = v))
-      str(p, "dq_report_csv").foreach(v => ps = ps.copy(dqReportCsv = v))
-      cfg = cfg.copy(paths = ps)
-    }
-    objOf("ranges").foreach { r =>
-      val all = r.entries.collect { case (k, o: MiniYaml.Obj) =>
-        k -> ValueRange(num(o, "min").get, num(o, "max").get)
-      }
-      all.find(_._1 == "battery_level").foreach(b =>
-        cfg = cfg.copy(batteryRange = b._2))
-      cfg = cfg.copy(ranges = all.filterNot(_._1 == "battery_level").toMap)
-    }
-    objOf("calibration").foreach { c =>
-      cfg = cfg.copy(calibration = c.entries.collect {
-        case (k, o: MiniYaml.Obj) => k -> Calibration(
-          num(o, "multiplier").getOrElse(1.0), num(o, "offset").getOrElse(0.0))
-      }.toMap)
-    }
-    objOf("write").foreach { w =>
-      onlyKnownKeys(w, "write", "compression", "partition_by", "mode")
-      var wc = cfg.write
-      str(w, "compression").foreach(v => wc = wc.copy(compression = v))
-      list(w, "partition_by").foreach(v => wc = wc.copy(partitionBy = v))
-      str(w, "mode").foreach(v => wc = wc.copy(mode = v))
-      cfg = cfg.copy(write = wc)
-    }
-    objOf("transformation").foreach { t =>
-      onlyKnownKeys(t, "transformation",
-        "z_score_threshold", "rolling_window_days", "outlier_handling")
-      var tc = cfg.transformation
-      num(t, "z_score_threshold").foreach(v => tc = tc.copy(zScoreThreshold = v))
-      num(t, "rolling_window_days").foreach(v => tc = tc.copy(rollingWindowDays = v.toInt))
-      str(t, "outlier_handling").foreach(v => tc = tc.copy(outlierHandling = v))
-      cfg = cfg.copy(transformation = tc)
-    }
-    objOf("validation").foreach { v =>
-      var vc = cfg.validation
-      num(v, "max_missing_percentage").foreach(x => vc = vc.copy(maxMissingPercentage = x))
-      num(v, "max_anomaly_percentage").foreach(x => vc = vc.copy(maxAnomalyPercentage = x))
-      num(v, "expected_frequency_hours").foreach(x => vc = vc.copy(expectedFrequencyHours = x.toInt))
-      num(v, "max_gap_hours").foreach(x => vc = vc.copy(maxGapHours = x))
-      cfg = cfg.copy(validation = vc)
-    }
-    objOf("ingestion").foreach { i =>
-      var ic = cfg.ingestion
-      str(i, "incremental_mode").foreach(v => ic = ic.copy(incrementalMode = v.toBoolean))
-      str(i, "checkpoint_file").foreach(v => ic = ic.copy(checkpointFile = v))
-      cfg = cfg.copy(ingestion = ic)
-    }
-    cfg
-  }
-}
-
-/** Minimal YAML-subset parser covering the reference's config layout:
-  * nested maps by 2+-space indentation, scalar lists ("- item"),
-  * quoted/unquoted scalars, `null`, and `#` comments. Deliberately NOT
-  * a general YAML implementation — no anchors, no flow style, no
-  * multi-line scalars — just enough to read config/default.yaml-shaped
-  * files without adding a dependency. */
-private[config] object MiniYaml {
-
-  sealed trait Node
-  /** Insertion-ordered mapping. */
-  final case class Obj(entries: Vector[(String, Node)]) extends Node {
-    def get(k: String): Option[Node] = entries.find(_._1 == k).map(_._2)
-  }
-  final case class Arr(items: Vector[Node]) extends Node
-  /** Scalar; None encodes YAML null. */
-  final case class Scalar(value: Option[String]) extends Node
-
-  def parse(text: String): Obj = {
-    val lines = text.linesIterator
-      .map(stripComment)
-      .filter(_.trim.nonEmpty)
-      .map(l => (l.takeWhile(_ == ' ').length, l.trim))
-      .toVector
-    if (lines.isEmpty) Obj(Vector.empty)
-    else parseBlock(lines, 0, lines.head._1)._1 match {
-      case o: Obj => o
-      case other => Obj(Vector("root" -> other))
-    }
+    val root = new ObjectMapper(new YAMLFactory()).readTree(new File(path))
+    if (!root.isMissingNode && !root.isNull && !root.isObject)
+      throw new IllegalArgumentException(s"$path: the top level must be a map")
+    val top = new YamlMap(root, "", path)
+    val d = default
+    val ranges = top.map("ranges")
+    val rangeOf = ranges.maps.map { case (k, r) =>
+      k -> ValueRange(r.need("min"), r.need("max")) }.toMap
+    val calibration = top.map("calibration")
+    val write = top.map("write")
+    write.onlyKnownKeys("compression", "partition_by", "mode")
+    val tf = top.map("transformation")
+    tf.onlyKnownKeys("z_score_threshold", "rolling_window_days", "outlier_handling")
+    val v = top.map("validation")
+    val ing = top.map("ingestion")
+    val paths = top.map("paths")
+    PipelineConfig(
+      timezone = top.map("project").str("timezone").getOrElse(d.timezone),
+      pipelineVersion = top.map("pipeline").str("version").getOrElse(d.pipelineVersion),
+      ranges = if (ranges.present) rangeOf - "battery_level" else d.ranges,
+      calibration =
+        if (!calibration.present) d.calibration
+        else calibration.maps.map { case (k, c) => k -> Calibration(
+          c.num("multiplier").getOrElse(1.0), c.num("offset").getOrElse(0.0)) }.toMap,
+      batteryRange = rangeOf.getOrElse("battery_level", d.batteryRange),
+      write = WriteConfig(
+        compression = write.str("compression").getOrElse(d.write.compression),
+        partitionBy = write.list("partition_by").getOrElse(d.write.partitionBy),
+        mode = write.str("mode").getOrElse(d.write.mode)),
+      transformation = TransformConfig(
+        zScoreThreshold = tf.num("z_score_threshold")
+          .getOrElse(d.transformation.zScoreThreshold),
+        rollingWindowDays = tf.num("rolling_window_days").map(_.toInt)
+          .getOrElse(d.transformation.rollingWindowDays),
+        outlierHandling = tf.str("outlier_handling")
+          .getOrElse(d.transformation.outlierHandling)),
+      validation = ValidationConfig(
+        maxMissingPercentage = v.num("max_missing_percentage")
+          .getOrElse(d.validation.maxMissingPercentage),
+        maxAnomalyPercentage = v.num("max_anomaly_percentage")
+          .getOrElse(d.validation.maxAnomalyPercentage),
+        expectedFrequencyHours = v.num("expected_frequency_hours").map(_.toInt)
+          .getOrElse(d.validation.expectedFrequencyHours),
+        maxGapHours = v.num("max_gap_hours").getOrElse(d.validation.maxGapHours)),
+      ingestion = IngestionConfig(
+        incrementalMode = ing.bool("incremental_mode")
+          .getOrElse(d.ingestion.incrementalMode),
+        checkpointFile = ing.str("checkpoint_file")
+          .getOrElse(d.ingestion.checkpointFile)),
+      paths = PathsConfig(
+        dataRaw = paths.str("data_raw").getOrElse(d.paths.dataRaw),
+        dataProcessed = paths.str("data_processed").getOrElse(d.paths.dataProcessed),
+        dqReportCsv = paths.str("dq_report_csv").getOrElse(d.paths.dqReportCsv)))
   }
 
-  /** Cut an unquoted `#` comment (YAML: preceded by start-of-line or
-    * whitespace). */
-  private def stripComment(line: String): String = {
-    var inQuote: Char = 0
-    var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQuote != 0) { if (c == inQuote) inQuote = 0 }
-      else if (c == '"' || c == '\'') inQuote = c
-      else if (c == '#' && (i == 0 || line.charAt(i - 1).isWhitespace))
-        return line.take(i)
-      i += 1
+  /** One map of a YAML config file at dotted path `name`. An absent or
+    * null map reads as an empty one that is not `present`. A value of a
+    * shape its reader does not take fails, named. */
+  private final class YamlMap(node: JsonNode, name: String, file: String) {
+    val present: Boolean = node.isObject
+    private def at(k: String) = if (name.isEmpty) k else s"$name.$k"
+    private def wrong(k: String, want: String): Nothing =
+      throw new IllegalArgumentException(s"'${at(k)}' in $file must be $want")
+    /** `k`'s value: None when the key is absent or its value null. */
+    private def get(k: String): Option[JsonNode] =
+      Option(node.get(k)).filterNot(_.isNull)
+    private def keys: Seq[String] = node.fieldNames.asScala.toSeq
+
+    def map(k: String): YamlMap = get(k) match {
+      case Some(n) if !n.isObject => wrong(k, "a map")
+      case n => new YamlMap(n.getOrElse(MissingNode.getInstance), at(k), file)
     }
-    line
-  }
-
-  private def unquote(s: String): String =
-    if (s.length >= 2 &&
-      ((s.head == '"' && s.last == '"') || (s.head == '\'' && s.last == '\'')))
-      s.substring(1, s.length - 1)
-    else s
-
-  private def scalar(s: String): Scalar =
-    if (s == "null" || s == "~") Scalar(None) else Scalar(Some(unquote(s)))
-
-  /** Parse the run of lines at exactly `indent` starting at `start`;
-    * deeper lines belong to the entry opened just above. Returns the
-    * node and the index of the first unconsumed line. */
-  private def parseBlock(
-      lines: Vector[(Int, String)],
-      start: Int,
-      indent: Int): (Node, Int) = {
-    val n = lines.length
-    if (lines(start)._2.startsWith("-")) {
-      var i = start
-      val items = Vector.newBuilder[Node]
-      while (i < n && lines(i)._1 == indent && lines(i)._2.startsWith("-")) {
-        items += scalar(lines(i)._2.drop(1).trim)
-        i += 1
-      }
-      (Arr(items.result()), i)
-    } else {
-      var i = start
-      val es = Vector.newBuilder[(String, Node)]
-      while (i < n && lines(i)._1 == indent && !lines(i)._2.startsWith("-")) {
-        val line = lines(i)._2
-        val ci = line.indexOf(':')
-        require(ci > 0, s"malformed YAML line: '$line'")
-        val key = unquote(line.take(ci).trim)
-        val rest = line.drop(ci + 1).trim
-        if (rest.nonEmpty) { es += key -> scalar(rest); i += 1 }
-        else {
-          i += 1
-          if (i < n && lines(i)._1 > indent) {
-            val (child, ni) = parseBlock(lines, i, lines(i)._1)
-            es += key -> child
-            i = ni
-          } else es += key -> Scalar(None)
-        }
-      }
-      (Obj(es.result()), i)
+    /** Every entry whose value is a non-null map, in file order. */
+    def maps: Seq[(String, YamlMap)] =
+      keys.map(k => k -> map(k)).filter(_._2.present)
+    def str(k: String): Option[String] =
+      get(k).map(n => if (n.isValueNode) n.asText else wrong(k, "a scalar"))
+    def num(k: String): Option[Double] =
+      str(k).map(_.toDoubleOption.getOrElse(wrong(k, "a number")))
+    def bool(k: String): Option[Boolean] =
+      str(k).map(_.toBooleanOption.getOrElse(wrong(k, "a boolean")))
+    def list(k: String): Option[Seq[String]] = get(k).map { n =>
+      if (!n.isArray) wrong(k, "a list")
+      n.elements.asScala.map(e =>
+        if (e.isValueNode && !e.isNull) e.asText
+        else wrong(k, "a list of scalars")).toSeq
     }
+    def need(k: String): Double = num(k).getOrElse(wrong(k, "set"))
+    def onlyKnownKeys(known: String*): Unit =
+      keys.find(!known.contains(_)).foreach(k =>
+        throw new IllegalArgumentException(s"unknown key '${at(k)}' in $file"))
   }
 }

@@ -19,32 +19,16 @@ object Schemas {
     * (reference transformation.py:120-122). */
   val criticalColumns: Seq[String] =
     Seq("sensor_id", "timestamp", "reading_type", "value")
-
-  /** Post-transformation schema: raw + derived columns
-    * (reference transformation.py:243-285, FIXTURES.md §3). */
-  val transformed: StructType = StructType(raw.fields ++ Seq(
-    StructField("date", DateType),
-    StructField("daily_avg_value", DoubleType),
-    StructField("rolling_avg_value", DoubleType),
-    StructField("anomalous_reading", BooleanType)))
 }
 
-/** Per-component counters, mirroring the reference stats dicts
-  * (ingestion.py:35-42, transformation.py:33-40, etc.). */
+/** Ingest file counters, mirroring the reference stats dict
+  * (ingestion.py:35-42). The record count is not one of them: a batch
+  * is counted once written, through `ParquetIngestor.Result.commit`. */
 final case class IngestionStats(
     filesDiscovered: Long = 0,
     filesProcessed: Long = 0,
     filesSkipped: Long = 0,
-    filesFailed: Long = 0,
-    recordsIngested: Long = 0)
-
-final case class TransformationStats(
-    recordsProcessed: Long = 0,
-    duplicatesRemoved: Long = 0,
-    missingValuesHandled: Long = 0,
-    recordsCalibrated: Long = 0,
-    anomaliesDetected: Long = 0,
-    outliersRemoved: Long = 0)
+    filesFailed: Long = 0)
 
 /** One detected coverage gap (reference validation.py:286-316). */
 final case class SensorGap(

@@ -7,17 +7,15 @@ import org.apache.spark.sql.functions._
   * `binary` columns with typed metadata, processed per-partition with
   * typed Datasets.
   *
-  * Container-header parsing (PNG / JPEG / GIF / BMP magic bytes +
-  * dimensions, RIFF/WAVE chunk walk, PPM P6) is REAL — every parser
-  * below reads the actual byte layout. PIXEL operations are real for
-  * the uncompressed format (PPM): `resizePpm` is an exact integer box
-  * filter, `sampleFrames` walks a concatenated-P6 stream frame by
-  * frame — both oracle-verified against arithmetic mirrors (q206/
-  * q207). Compressed-codec decoding (JPEG entropy decode, audio PCM
-  * beyond the header) is out of scope in this container: payloads no
-  * parser recognizes report format = "unknown" with SENTINEL
-  * dimensions (-1), never fabricated values — nothing in this module
-  * invents measurement-shaped data.
+  * Container-header parsing (RIFF/WAVE chunk walk, PPM P6) is REAL —
+  * every parser below reads the actual byte layout. PIXEL operations
+  * are real for the uncompressed format (PPM): `resizePpm` is an exact
+  * integer box filter, `sampleFrames` walks a concatenated-P6 stream
+  * frame by frame — both oracle-verified against arithmetic mirrors
+  * (q206/q207). Compressed-codec decoding (JPEG entropy decode, audio
+  * PCM beyond the header) is out of scope: a payload no parser
+  * recognizes yields no row, never fabricated values — nothing in
+  * this module invents measurement-shaped data.
   */
 object Multimodal {
 
@@ -27,76 +25,6 @@ object Multimodal {
       kind: String, // image | audio | video
       payload: Array[Byte],
       declared_format: String)
-
-  /** Extracted features per asset. At 100 TB these rows are tiny
-    * relative to payloads — the feature extraction projects payloads
-    * away as early as possible so downstream stages never shuffle the
-    * binary column. */
-  final case class MediaFeatures(
-      media_id: Long,
-      kind: String,
-      byte_len: Long,
-      header_byte: Int,
-      checksum: Long, // deterministic payload checksum
-      format: String, // png | jpeg | gif | bmp | unknown (header-detected)
-      width: Int, // real for recognized headers; -1 sentinel otherwise
-      height: Int)
-
-  /** Parse a real image container header: magic bytes + dimensions.
-    * Returns (format, width, height). No codec needed — these fields
-    * live at fixed/locatable offsets in the container byte layout:
-    *  - PNG:  8-byte signature, then the IHDR chunk carries width and
-    *    height as big-endian u32 at offsets 16 and 20.
-    *  - JPEG: FF D8 start-of-image, then a marker-segment walk to the
-    *    first SOFn (C0-CF minus C4/C8/CC), whose payload is
-    *    [precision u8][height u16][width u16] big-endian.
-    *  - GIF:  "GIF87a"/"GIF89a", then width and height as
-    *    little-endian u16 at offsets 6 and 8.
-    *  - BMP:  "BM", then width and height as little-endian i32 at
-    *    offsets 18 and 22 (BITMAPINFOHEADER; height may be negative
-    *    for top-down rows — reported as its magnitude). */
-  def parseImageHeader(bytes: Array[Byte]): Option[(String, Int, Int)] = {
-    @inline def u8(i: Int): Int = bytes(i) & 0xff
-    @inline def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    @inline def be32(i: Int): Int =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    @inline def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    @inline def le32(i: Int): Int =
-      u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-
-    if (bytes.length >= 26 && u8(0) == 'B' && u8(1) == 'M' &&
-      le32(14) >= 40) // BITMAPINFOHEADER or later
-      Some(("bmp", le32(18), math.abs(le32(22))))
-    else if (bytes.length >= 24 &&
-      u8(0) == 0x89 && u8(1) == 'P' && u8(2) == 'N' && u8(3) == 'G' &&
-      u8(4) == 0x0d && u8(5) == 0x0a && u8(6) == 0x1a && u8(7) == 0x0a &&
-      bytes.slice(12, 16).sameElements("IHDR".getBytes))
-      Some(("png", be32(16), be32(20)))
-    else if (bytes.length >= 10 &&
-      bytes.slice(0, 6).sameElements("GIF87a".getBytes) ||
-      bytes.length >= 10 && bytes.slice(0, 6).sameElements("GIF89a".getBytes))
-      Some(("gif", le16(6), le16(8)))
-    else if (bytes.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8) {
-      // marker-segment walk to the first start-of-frame
-      var i = 2
-      while (i + 3 < bytes.length) {
-        if (u8(i) != 0xff) return None // desynced — not a well-formed JPEG
-        var m = u8(i + 1)
-        while (m == 0xff && i + 2 < bytes.length) { i += 1; m = u8(i + 1) } // fill bytes
-        if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc) {
-          return if (i + 8 < bytes.length)
-            Some(("jpeg", be16(i + 7), be16(i + 5)))
-          else None
-        } else if ((m >= 0xd0 && m <= 0xd9) || m == 0x01) {
-          i += 2 // standalone marker, no length field
-        } else {
-          if (i + 3 >= bytes.length) return None
-          i += 2 + be16(i + 2)
-        }
-      }
-      None
-    } else None
-  }
 
   /** Parsed WAV audio metadata — every field read from the real RIFF
     * byte layout, no codec involved. */
@@ -192,46 +120,6 @@ object Multimodal {
       col(payloadCol).cast("binary").as("payload"),
       lit("fake/raw").as("declared_format"))
       .as[MediaRow]
-  }
-
-  /** Per-asset features: REAL container-header parse for recognized
-    * formats (PNG/JPEG/GIF/BMP dimensions straight from the byte
-    * layout); unrecognized payloads report format = "unknown" with -1
-    * width/height — a sentinel, NOT a measurement, so an aggregate
-    * over a mixed corpus can filter on format (or the negative
-    * dimensions) instead of averaging invented values. Swap in a
-    * codec-backed branch to dimension formats beyond these four. */
-  private def decodeFeatures(r: MediaRow): MediaFeatures = {
-    val bytes = r.payload
-    var sum = 0L
-    var i = 0
-    while (i < bytes.length) { // per-partition tight loop, no boxing
-      sum = sum * 31 + (bytes(i) & 0xff)
-      i += 1
-    }
-    val (format, width, height) =
-      parseImageHeader(bytes).getOrElse(("unknown", -1, -1))
-    MediaFeatures(
-      media_id = r.media_id,
-      kind = r.kind,
-      byte_len = bytes.length.toLong,
-      header_byte = if (bytes.nonEmpty) bytes(0) & 0xff else -1,
-      checksum = sum,
-      format = format,
-      width = width,
-      height = height)
-  }
-
-  /** Feature extraction over partitions: the mapPartitions boundary is
-    * where a real decoder would amortize codec init per partition
-    * (exactly the pandas-UDF batch shape, in typed-Dataset form). */
-  def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      // real impl: val codec = Codec.open() once per partition
-      rows.map(decodeFeatures)
-    }
   }
 
   /** Parse a binary PPM (P6) header starting at `from`: the "P6" magic,

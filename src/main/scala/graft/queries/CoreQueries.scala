@@ -206,8 +206,7 @@ object CoreQueries {
     "q166_rolling_bucketed" -> ((s, dir) => {
       Transforms.rollingAvgBucketed(
         windowRows = 168, bucketSeconds = 21600L, cols = ec,
-        tieBreak = Seq(col("event_id")),
-        exactRolling = true)(t(s, dir, "events"))
+        tieBreak = Seq(col("event_id")))(t(s, dir, "events"))
         .select(col("event_id"), col("rolling_avg_value"))
     }),
 

@@ -171,20 +171,17 @@ object Transforms {
     * Exact for ANY bucket population (sparse buckets carry across
     * multiple gaps via the carry map; early rows see exactly their
     * available predecessors, preserving min_periods=1 semantics), so
-    * the result is bit-identical to the plain row-frame window ordered
-    * by timestamp, then `tieBreak`. The carry map and
+    * the result is bit-identical to `exact.avgExactOver` (the
+    * decimal-exact mean, for cross-engine determinism) over the plain
+    * row frame ordered by timestamp, then `tieBreak`. The carry map and
     * counts are aggregate-sized (keys x buckets), so the planner
     * broadcasts them; the only large shuffle is the per-(key, bucket)
-    * window itself.
-    *
-    * `exactRolling` swaps the frame average for the decimal-exact
-    * cum-diff form (cross-engine determinism). */
+    * window itself. */
   def rollingAvgBucketed(
       windowRows: Int,
       bucketSeconds: Long,
       cols: ReadingCols = ReadingCols.sensor,
-      tieBreak: Seq[Column] = Nil,
-      exactRolling: Boolean = false)(df: DataFrame): DataFrame = {
+      tieBreak: Seq[Column] = Nil)(df: DataFrame): DataFrame = {
     require(windowRows >= 1, "windowRows must be >= 1")
     require(bucketSeconds >= 1, "bucketSeconds must be >= 1")
     val keyCols = Seq(cols.id, cols.typ)
@@ -242,26 +239,16 @@ object Transforms {
     // min(windowRows-1, history) predecessors.
     val unioned = withB.withColumn("__ctx", lit(false))
       .unionByName(carried)
-    val rolled =
-      if (exactRolling)
-        // decimal-exact frames take the O(1)-per-row cum-diff form
-        // (exact.withRollingAvgExact) — with carried context rows
-        // multiplying the window input, the sliding frame's
-        // O(windowRows)-per-row re-adds were this operator's dominant
-        // CPU (q166 r20 baseline: 7.5 s task CPU for a 10k-row input).
-        graft.functions.exact.withRollingAvgExact(
-          unioned, col(cols.value),
-          keyCols.map(col) :+ col("__bkt"),
-          col(cols.ts) +: tieBreak,
-          windowRows, "rolling_avg_value")
-      else {
-        val wRoll = Window
-          .partitionBy(keyCols.map(col) :+ col("__bkt"): _*)
-          .orderBy(col(cols.ts) +: tieBreak: _*)
-          .rowsBetween(-(windowRows - 1L), 0L)
-        unioned.withColumn("rolling_avg_value", avg(col(cols.value)).over(wRoll))
-      }
-    rolled
+    // The exact mean takes the O(1)-per-row cum-diff form — with
+    // carried context rows multiplying the window input, the sliding
+    // frame's O(windowRows)-per-row re-adds were this operator's
+    // dominant CPU (q166 r20 baseline: 7.5 s task CPU for a 10k-row
+    // input).
+    graft.functions.exact.withRollingAvgExact(
+      unioned, col(cols.value),
+      keyCols.map(col) :+ col("__bkt"),
+      col(cols.ts) +: tieBreak,
+      windowRows, "rolling_avg_value")
       .filter(!col("__ctx"))
       .drop("__bkt", "__ctx")
   }

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config._
@@ -13,6 +16,7 @@ class ConfigSpec extends AnyFunSuite {
 
   private def write(content: String): Path = {
     val f = Files.createTempFile("graft-config", ".yaml")
+    f.toFile.deleteOnExit()
     Files.writeString(f, content)
     f
   }
@@ -135,7 +139,7 @@ class ConfigSpec extends AnyFunSuite {
     assert(cfg.transformation.zScoreThreshold === 2.5)
     assert(cfg.transformation.outlierHandling === "remove")
     assert(cfg.transformation.rollingWindowDays === 14)
-    assert(cfg.transformation.readingsPerDay === 24) // untouched
+    assert(cfg.transformation.rollingWindowRows === 14 * 24)
     assert(cfg.ranges === Map("temperature" -> ValueRange(5.0, 45.0)))
     assert(cfg.write === WriteConfig()) // whole section omitted
     assert(cfg.validation === ValidationConfig())
@@ -177,5 +181,78 @@ class ConfigSpec extends AnyFunSuite {
         |""".stripMargin).toString
     val e = intercept[IllegalArgumentException](PipelineConfig.fromYaml(f))
     assert(e.getMessage.contains("unknown key 'write.sort_within'"))
+  }
+
+  /** One YAML form: the file, the config field it sets, and what that
+    * field must hold given PyYAML's parse of the same file. */
+  private final case class Form(name: String, yaml: String,
+      field: PipelineConfig => Any, expect: JsonNode => Any)
+
+  private def text(j: JsonNode): String = j.asText
+  private def at(path: String*)(j: JsonNode): JsonNode =
+    path.foldLeft(j)(_.path(_))
+
+  private val forms = Seq(
+    Form("flow-style list", "write:\n  partition_by: [sensor_id]\n",
+      _.write.partitionBy,
+      j => at("write", "partition_by")(j).elements.asScala.map(text).toSeq),
+    Form("flow-style map", "ranges:\n  temperature: {min: -5, max: 50}\n",
+      _.ranges,
+      j => at("ranges")(j).properties.asScala.map(e => e.getKey ->
+        ValueRange(e.getValue.get("min").asDouble,
+          e.getValue.get("max").asDouble)).toMap),
+    Form("YAML 1.1 boolean yes", "ingestion:\n  incremental_mode: yes\n",
+      _.ingestion.incrementalMode,
+      j => at("ingestion", "incremental_mode")(j).asBoolean),
+    Form("YAML 1.1 boolean off", "ingestion:\n  incremental_mode: off\n",
+      _.ingestion.incrementalMode,
+      j => at("ingestion", "incremental_mode")(j).asBoolean),
+    Form("folded scalar", "pipeline:\n  version: >-\n    2.0.0\n",
+      _.pipelineVersion, j => text(at("pipeline", "version")(j))),
+    Form("single-quoted escape",
+      "paths:\n  dq_report_csv: 'it''s.csv'\n",
+      _.paths.dqReportCsv, j => text(at("paths", "dq_report_csv")(j))),
+    Form("double-quoted escape",
+      "paths:\n  dq_report_csv: \"r\\\"q.csv\"\n",
+      _.paths.dqReportCsv, j => text(at("paths", "dq_report_csv")(j))),
+    Form("# inside quotes",
+      "paths:\n  data_raw: \"raw#1\"  # a comment\n  data_processed: 'p #2'\n",
+      c => (c.paths.dataRaw, c.paths.dataProcessed),
+      j => (text(at("paths", "data_raw")(j)),
+        text(at("paths", "data_processed")(j)))),
+    // a null value is an omitted one: the default stays
+    Form("~ and null", "paths:\n  data_raw: ~\n  data_processed: null\n",
+      c => (c.paths.dataRaw, c.paths.dataProcessed),
+      j => {
+        val p = at("paths")(j)
+        assert(p.get("data_raw").isNull && p.get("data_processed").isNull)
+        (PathsConfig().dataRaw, PathsConfig().dataProcessed)
+      }),
+    Form("empty file", "", identity,
+      j => { assert(j.isNull); PipelineConfig.default }))
+
+  test("every YAML form reads as PyYAML reads it") {
+    val files = forms.map(f => write(f.yaml).toString)
+    val parsed = PythonOracle.json(Seq("-c",
+      "import json, sys, yaml\n" +
+        "print(json.dumps([yaml.safe_load(open(p)) for p in sys.argv[1:]]))")
+      ++ files: _*)
+    forms.zip(files).zipWithIndex.foreach { case ((form, file), i) =>
+      val cfg = PipelineConfig.fromYaml(file)
+      assert(form.field(cfg) === form.expect(parsed.get(i)), form.name)
+    }
+  }
+
+  test("a value of the wrong shape for its key fails the load, named") {
+    for ((yaml, key) <- Seq(
+        "write:\n  compression:\n    - zstd\n" -> "write.compression",
+        "write:\n  partition_by: date\n" -> "write.partition_by",
+        "ranges:\n  temperature: 5\n" -> "ranges.temperature",
+        "ingestion:\n  incremental_mode: {on: true}\n" -> "ingestion.incremental_mode",
+        "validation: 3\n" -> "validation")) {
+      val e = intercept[IllegalArgumentException](
+        PipelineConfig.fromYaml(write(yaml).toString))
+      assert(e.getMessage.contains(s"'$key'"), yaml)
+    }
   }
 }

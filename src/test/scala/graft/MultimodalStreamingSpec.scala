@@ -8,63 +8,6 @@ import graft.streaming.Streaming
 class MultimodalStreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("multimodal: binary payload plumbing and deterministic features") {
-    val df = Seq((1L, "hello world"), (2L, "")).toDF("id", "payload")
-    val media = Multimodal.asMediaTable(df, "id", "payload")
-    val feats = Multimodal.extractFeatures(media).collect()
-      .map(f => f.media_id -> f).toMap
-    assert(feats(1L).byte_len === 11)
-    assert(feats(1L).header_byte === 'h'.toInt)
-    assert(feats(2L).byte_len === 0)
-    assert(feats(2L).header_byte === -1)
-    // determinism across repartitionings
-    val feats2 = Multimodal.extractFeatures(
-      media.repartition(7)).collect().map(f => f.media_id -> f.checksum).toMap
-    assert(feats2(1L) === feats(1L).checksum)
-  }
-
-  test("multimodal: real header parse yields PNG/JPEG/GIF dimensions") {
-    def be32(v: Int) = Array[Byte](
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-    def be16(v: Int) = Array[Byte]((v >>> 8).toByte, v.toByte)
-    val png = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte) ++ be32(13) ++ "IHDR".getBytes ++
-      be32(640) ++ be32(480) ++ Array[Byte](8, 6, 0, 0, 0)
-    // SOI, APP0 (len 4), SOF0: len 17, precision 8, height 480, width 640
-    val jpeg = Array(0xff, 0xd8, 0xff, 0xe0, 0x00, 0x04, 0x00, 0x00,
-      0xff, 0xc0, 0x00, 0x11, 0x08).map(_.toByte) ++
-      be16(480) ++ be16(640) ++ Array[Byte](3)
-    val gif = "GIF89a".getBytes ++
-      Array[Byte](0x40, 0x01, 0xc8.toByte, 0x00) // 320 x 200 little-endian
-    def le32(v: Int) = Array[Byte](
-      v.toByte, (v >>> 8).toByte, (v >>> 16).toByte, (v >>> 24).toByte)
-    val bmp = "BM".getBytes ++ le32(1000) ++ le32(0) ++ le32(54) ++
-      le32(40) ++ le32(800) ++ le32(-600) // top-down: negative height
-    assert(Multimodal.parseImageHeader(png) === Some(("png", 640, 480)))
-    assert(Multimodal.parseImageHeader(jpeg) === Some(("jpeg", 640, 480)))
-    assert(Multimodal.parseImageHeader(gif) === Some(("gif", 320, 200)))
-    assert(Multimodal.parseImageHeader(bmp) === Some(("bmp", 800, 600)))
-    assert(Multimodal.parseImageHeader("not an image".getBytes) === None)
-    assert(Multimodal.parseImageHeader("BMx".getBytes) === None) // short BM
-
-    // end-to-end through the distributed feature extractor
-    val media = Seq(
-      Multimodal.MediaRow(1L, "image", png, "image/png"),
-      Multimodal.MediaRow(2L, "image", jpeg, "image/jpeg"),
-      Multimodal.MediaRow(3L, "image", "plain bytes".getBytes, "fake/raw"))
-      .toDS()
-    val feats = Multimodal.extractFeatures(media).collect()
-      .map(f => f.media_id -> f).toMap
-    assert(feats(1L).format === "png")
-    assert((feats(1L).width, feats(1L).height) === (640, 480))
-    assert(feats(2L).format === "jpeg")
-    assert((feats(2L).width, feats(2L).height) === (640, 480))
-    // unrecognized payloads carry SENTINEL dimensions, never fabricated
-    // measurement-shaped values
-    assert(feats(3L).format === "unknown")
-    assert((feats(3L).width, feats(3L).height) === (-1, -1))
-  }
-
   test("multimodal: real WAV header parse yields channels/rate/duration") {
     def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
     def le32(v: Int) = Array[Byte](

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * sliding-frame avgExactOver it replaces: bit-identical doubles on
   * randomized series with NULL values, frames shorter than the window,
   * all-null frames (both must yield NULL), and ties broken by the
-  * order columns. Also pins the bucketed two-pass operator's
-  * exactRolling path against the plain single-window form. */
+  * order columns. Also pins the bucketed two-pass operator against
+  * the plain single-window form. */
 class RollingExactSpec extends SparkSpec {
   import spark.implicits._
 
@@ -37,7 +37,7 @@ class RollingExactSpec extends SparkSpec {
     assert(actual.filter(col("k") === 99L && col("r").isNotNull).count() == 0)
   }
 
-  test("bucketed exactRolling path equals the plain exact window") {
+  test("bucketed path equals the plain exact window") {
     val rnd = new scala.util.Random(10)
     val rows = (1 to 30).flatMap { s =>
       (0 until rnd.nextInt(50) + 1).map { i =>
@@ -56,7 +56,7 @@ class RollingExactSpec extends SparkSpec {
       graft.functions.exact.avgExactOver(col("value"), w))
     val bucketed = graft.transform.Transforms.rollingAvgBucketed(
       windowRows = 10, bucketSeconds = 3600L,
-      tieBreak = Seq(col("eid")), exactRolling = true)(df)
+      tieBreak = Seq(col("eid")))(df)
     val diff = plain.as("p").join(bucketed.as("b"), Seq("sensor_id", "eid"))
       .filter(!(col("p.rolling_avg_value") <=> col("b.rolling_avg_value")))
       .count()

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.config.{Calibration, PipelineConfig, ReadingCols, ValueRange}
@@ -138,7 +139,8 @@ class TransformsSpec extends SparkSpec {
     // Dense + sparse histories: small windowRows (3) with a 1 h bucket
     // forces carries, including the multi-gap case where the trailing
     // window spans buckets with EMPTY buckets between them (s2's 10:00
-    // row must reach the 13:00 bucket across two empty hours).
+    // row must reach the 13:00 bucket across two empty hours). The
+    // plain window is the exact mean over the same 3-row frame.
     val df = readings(
       ("s1", "2023-06-01 10:00:00", "temperature", 20.0, 90.0),
       ("s1", "2023-06-01 10:20:00", "temperature", 22.0, 90.0),
@@ -148,7 +150,11 @@ class TransformsSpec extends SparkSpec {
       ("s2", "2023-06-01 10:00:00", "humidity", 50.0, 88.0),
       ("s2", "2023-06-01 13:00:00", "humidity", 60.0, 88.0),
       ("s2", "2023-06-01 13:30:00", "humidity", 70.0, 88.0))
-    val plain = Transforms.rollingAvg(3)(df)
+    val frame = Window.partitionBy("sensor_id", "reading_type")
+      .orderBy("timestamp").rowsBetween(-2L, 0L)
+    val plain = df
+      .withColumn("rolling_avg_value",
+        graft.functions.exact.avgExactOver(col("value"), frame))
       .orderBy("sensor_id", "timestamp")
       .select("sensor_id", "timestamp", "rolling_avg_value").collect()
     val bucketed = Transforms.rollingAvgBucketed(3, 3600L, c)(df)
@@ -164,17 +170,18 @@ class TransformsSpec extends SparkSpec {
 
   test("W1 bucketed rolling plan sorts per (key, bucket), tails pruned pre-shuffle") {
     // The scale property itself, pinned on the physical plan: the big
-    // window partitions on (key, __bkt) — never on the bare key, which
-    // would re-create the full-history sort — and the carried-tails
-    // row_number is WindowGroupLimit-pruned so at most windowRows-1
-    // rows per (key, bucket) reach the carry shuffle.
+    // windows (the exact kernel's running sums and their lags) partition
+    // on (key, __bkt) — never on the bare key, which would re-create
+    // the full-history sort — and the carried-tails row_number is
+    // WindowGroupLimit-pruned so at most windowRows-1 rows per
+    // (key, bucket) reach the carry shuffle.
     val df = readings(
       ("s1", "2023-06-01 10:00:00", "temperature", 20.0, 90.0),
       ("s1", "2023-06-01 11:00:00", "temperature", 22.0, 90.0))
     val plan = Transforms.rollingAvgBucketed(168, 21600L, c)(df)
       .queryExecution.executedPlan.toString
     val windowLines = plan.linesIterator
-      .filter(l => l.contains("windowspecdefinition") && l.contains("avg("))
+      .filter(l => l.contains("windowspecdefinition") && l.contains("__ra_"))
       .toSeq
     assert(windowLines.nonEmpty && windowLines.forall(_.contains("__bkt")),
       "rolling window must partition by the coarse bucket")
