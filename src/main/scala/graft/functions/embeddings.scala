@@ -27,11 +27,6 @@ object embeddings {
   def dot(a: Column, b: Column): Column =
     graft.plans.FloatVecDot(a, b)
 
-  /** Composable-built-ins dot product (reference implementation for
-    * the native expression; used in tests as the equivalence oracle). */
-  def dotComposed(a: Column, b: Column): Column =
-    arraySum(zip_with(toDouble(a), toDouble(b), (x, y) => x * y))
-
   /** L2 norm. */
   def norm(v: Column): Column = sqrt(dot(v, v))
 
@@ -40,14 +35,6 @@ object embeddings {
     * bit-identical to the composable dot/(norm*norm) form. */
   def cosine(a: Column, b: Column): Column =
     graft.plans.FloatVecCosine(a, b)
-
-  /** Composable-built-ins cosine (equivalence reference for tests). */
-  def cosineComposed(a: Column, b: Column): Column = {
-    val d = dotComposed(a, b)
-    val na = sqrt(dotComposed(a, a))
-    val nb = sqrt(dotComposed(b, b))
-    when(na > 0 && nb > 0, d / (na * nb))
-  }
 
   /** Sign-pattern bucket over the first `bits` dimensions — a cheap,
     * deterministic coarse quantizer for IVF-style partitioned ANN:
@@ -86,15 +73,4 @@ object embeddings {
   def intDot(qa: Column, qb: Column): Column =
     aggregate(zip_with(qa, qb, (x, y) => (x * y).cast("long")),
       lit(0L), (acc, x) => acc + x)
-
-  /** Cosine over int8 codes: exact integer dot and norms, ONE double
-    * division + sqrt at the end (correctly-rounded IEEE ops — engine
-    * deterministic). Null when either code vector is all zero. */
-  def quantizedCosine(qa: Column, qb: Column): Column = {
-    val d = intDot(qa, qb)
-    val na = intDot(qa, qa)
-    val nb = intDot(qb, qb)
-    when(na > 0 && nb > 0,
-      d.cast("double") / sqrt(na.cast("double") * nb.cast("double")))
-  }
 }

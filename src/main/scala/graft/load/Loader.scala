@@ -55,13 +55,20 @@ object Loader {
     * overwrite = PyArrow's delete_matching (replace only touched
     * partitions, reference loading.py:196-224); `append` maps to
     * SaveMode.Append; any other mode fails before anything is written.
-    * The hive partition value of `date` is its yyyy-MM-dd string. A
-    * repartition on the partition keys bounds the files-per-partition
-    * (the reference wrote 24 files for 72 rows; at 100 TB
-    * unrepartitioned writes explode into task-count x partition-count
-    * small files). Each task's rows are sorted by [[inFileOrder]]: that
-    * order already satisfies the writer's partition-column sort, so it
-    * replaces that sort instead of adding one, and no exchange. */
+    * The hive partition value of `date` is its yyyy-MM-dd string.
+    *
+    * Write width: the rows are hash-partitioned on the partition
+    * columns into exactly `spark.sql.shuffle.partitions` tasks, so each
+    * output directory gets one file (the reference wrote 24 files for
+    * 72 rows; at 100 TB an unrepartitioned write explodes into
+    * task-count x partition-count small files). The count is fixed
+    * because AQE would otherwise merge a small batch's exchange into a
+    * single partition, and one task would write every directory while
+    * the other cores idle; a fixed count is never merged, and a big
+    * batch was never merged below it anyway. Each task's rows are
+    * sorted by [[inFileOrder]]: that order already satisfies the
+    * writer's partition-column sort, so it replaces that sort instead
+    * of adding one, and no exchange. */
   def write(cfg: PipelineConfig, outPath: String)(df: DataFrame): Unit = {
     val mode = cfg.write.mode
     require(mode == "overwrite" || mode == "append",
@@ -70,7 +77,9 @@ object Loader {
     val dated =
       if (parts.contains("date")) df.withColumn("date", col("date").cast(StringType))
       else df
-    val repartitioned = dated.repartition(parts.map(col): _*)
+    val repartitioned = dated.repartition(
+      df.sparkSession.sessionState.conf.defaultNumShufflePartitions,
+      parts.map(col): _*)
     val writer = repartitioned
       .sortWithinPartitions(inFileOrder(cfg, repartitioned).map(col): _*)
       .write
@@ -81,25 +90,34 @@ object Loader {
     }
   }
 
-  /** S12 — storage stats via recursive listing (reference loading.py:238-273). */
+  /** S12 — storage stats over the output tree (reference
+    * loading.py:238-273): every `*.parquet` file whose name does not
+    * start with `_`, its bytes, and one partition per parent directory.
+    *
+    * The walk uses `listStatus`, never `listFiles`: `listFiles` builds a
+    * `LocatedFileStatus` per file, which asks for the file's permission,
+    * and without Hadoop's native library the local file system starts a
+    * shell process for each of those (about 3 ms per file). */
   def storageStats(spark: SparkSession, outPath: String): StorageStats = {
     val p = new Path(outPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return StorageStats(0, 0, 0)
-    val it = fs.listFiles(p, true)
     var files = 0L
     var bytes = 0L
-    val partitions = scala.collection.mutable.Set.empty[String]
-    while (it.hasNext) {
-      val s = it.next()
-      val name = s.getPath.getName
-      if (s.isFile && name.endsWith(".parquet") && !name.startsWith("_")) {
-        files += 1
-        bytes += s.getLen
-        partitions += s.getPath.getParent.toString
+    var partitions = 0L
+    val dirs = scala.collection.mutable.Stack(p)
+    while (dirs.nonEmpty) {
+      val (sub, leaves) = fs.listStatus(dirs.pop()).partition(_.isDirectory)
+      sub.foreach(d => dirs.push(d.getPath))
+      val parquet = leaves.filter { s =>
+        val name = s.getPath.getName
+        name.endsWith(".parquet") && !name.startsWith("_")
       }
+      files += parquet.length
+      bytes += parquet.map(_.getLen).sum
+      if (parquet.nonEmpty) partitions += 1
     }
-    StorageStats(files, bytes, partitions.size)
+    StorageStats(files, bytes, partitions)
   }
 
   /** S9 — `_validation_metadata.json` beside the data

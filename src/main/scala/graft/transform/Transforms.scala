@@ -3,7 +3,7 @@ package graft.transform
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DateType
+import org.apache.spark.sql.types.{DateType, DoubleType, FloatType}
 
 import graft.config.{Calibration, PipelineConfig, ReadingCols, ValueRange}
 import graft.model.Schemas
@@ -29,9 +29,19 @@ object Transforms {
   def dedupExact(df: DataFrame): DataFrame = df.dropDuplicates()
 
   /** P2 — drop rows with nulls in critical fields
-    * (reference transformation.py:120-122). */
+    * (reference transformation.py:120-122). Exactly `na.drop("any")`:
+    * a float or double column also drops its NaN. Written as a plain
+    * conjunction so Catalyst sees every `isnotnull` it asserts: a
+    * consumer joining on one of these columns then infers nothing new,
+    * and its subtree plans the same filter as the main path and reuses
+    * the main path's exchanges. */
   def dropNullCritical(critical: Seq[String])(df: DataFrame): DataFrame =
-    df.na.drop("any", critical)
+    critical.map { c =>
+      df.schema(c).dataType match {
+        case FloatType | DoubleType => col(c).isNotNull && !isnan(col(c))
+        case _ => col(c).isNotNull
+      }
+    }.reduceOption(_ && _).fold(df)(df.filter)
 
   /** P3 — battery median imputation: null battery_level filled with the
     * per-sensor exact median, falling back to the global median when a
@@ -76,20 +86,20 @@ object Transforms {
     // zero-boxing bound-column fast path still engages.
     val exactMedian = (c: Column) =>
       graft.plans.DoublePercentileAgg.doublePercentile(c.cast("double"), 0.5)
-    // global median as a broadcast 1-row aggregate — an empty-partition
-    // window would funnel the whole table through one reducer at scale
-    val globalMed = df.agg(
+    // Global median as a scalar subquery (a 1-row aggregate run once per
+    // query; an empty-partition window would funnel the whole table
+    // through one reducer at scale). Unlike a broadcast cross join, it
+    // goes away with battery_level when a plan prunes that column.
+    val globalMed = df.select(
       (if (exact) exactMedian(col(battery))
        else expr(s"percentile_approx($battery, 0.5, 100000)"))
-        .cast("double").as("__global_med"))
-    df.crossJoin(broadcast(globalMed))
-      .withColumn(
-        battery,
-        coalesce(
-          col(battery),
-          exactMedian(col(battery)).over(bySensor),
-          col("__global_med")))
-      .drop("__global_med")
+        .cast("double")).scalar()
+    df.withColumn(
+      battery,
+      coalesce(
+        col(battery),
+        exactMedian(col(battery)).over(bySensor),
+        globalMed))
   }
 
   /** P4 — per-type linear calibration `value * multiplier + offset`

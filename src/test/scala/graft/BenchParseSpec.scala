@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * time-to-failure as isolated_sec (it would read as a clean fast run
   * and wrongly acquit a real regression); missing queries and a
   * missing summary line degrade to explicit annotations. */
-class BenchParseSpec extends AnyFunSuite {
+class BenchParseSpec extends AnyFunSuite with TempPaths {
 
   private val summary =
     """{"metric":"total","value":9.9,"unit":"sec","basis":"noop",""" +
@@ -71,7 +71,7 @@ class BenchParseSpec extends AnyFunSuite {
   }
 
   private def summaryFile(body: String): java.nio.file.Path = {
-    val f = java.nio.file.Files.createTempFile("bench_summary", ".json")
+    val f = tempFile("bench_summary", ".json")
     java.nio.file.Files.writeString(f, body)
     f
   }

@@ -9,11 +9,11 @@ import org.apache.spark.sql.types._
 import graft.ingest.{Checkpoint, ParquetIngestor, SchemaCompat}
 import graft.model.Schemas
 
-class IngestionSpec extends SparkSpec {
+class IngestionSpec extends SparkSpec with TempPaths {
   import spark.implicits._
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-ing").toString
+    tempDir("graft-ing").toString
 
   private def writeRaw(dir: String, name: String, rows: Int = 5): Unit =
     (1 to rows).map(i =>

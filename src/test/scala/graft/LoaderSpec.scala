@@ -2,14 +2,18 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, IntegerType}
 
 import graft.config.PipelineConfig
 import graft.load.Loader
-import graft.model.ValidationResult
+import graft.model.{StorageStats, ValidationResult}
 
-class LoaderSpec extends SparkSpec {
+class LoaderSpec extends SparkSpec with TempPaths {
   import spark.implicits._
 
   private def transformed() = Seq(
@@ -42,7 +46,7 @@ class LoaderSpec extends SparkSpec {
   }
 
   test("S8 partitioned write produces hive layout with zstd; S12 stats see it") {
-    val out = Files.createTempDirectory("graft-load").toString + "/out"
+    val out = tempDir("graft-load").toString + "/out"
     val cfg = PipelineConfig.default
     val prepared = Loader.optimizeTypes(
       Loader.addMetadata(vr, "1.0.0", "T0")(transformed()))
@@ -62,7 +66,7 @@ class LoaderSpec extends SparkSpec {
   }
 
   test("S8 dynamic overwrite replaces only matching partitions") {
-    val out = Files.createTempDirectory("graft-load2").toString + "/out"
+    val out = tempDir("graft-load2").toString + "/out"
     val cfg = PipelineConfig.default
     Loader.write(cfg, out)(transformed())
     // second batch touches only 2023-06-01/s1 with a new value
@@ -78,7 +82,7 @@ class LoaderSpec extends SparkSpec {
   test("write.mode other than overwrite/append fails in both sinks, " +
     "before anything is written") {
     for (bad <- Seq("Overwrite", "appendd", "")) {
-      val out = Files.createTempDirectory("graft-badmode").toString + "/out"
+      val out = tempDir("graft-badmode").toString + "/out"
       val cfg = PipelineConfig.default.copy(
         write = PipelineConfig.default.write.copy(mode = bad))
       val e = intercept[IllegalArgumentException] {
@@ -108,7 +112,7 @@ class LoaderSpec extends SparkSpec {
 
   test("default sink sorts each file by (date, sensor_id, reading_type, " +
     "timestamp)") {
-    val out = Files.createTempDirectory("graft-infile-order").toString
+    val out = tempDir("graft-infile-order").toString
     val df = shuffledReadings(400).toDF(readingCols: _*).repartition(3)
     Loader.write(PipelineConfig.default, out)(df)
     // each physical file must be internally sorted (this is also what
@@ -129,10 +133,9 @@ class LoaderSpec extends SparkSpec {
     "byte-identical files") {
     val rows = shuffledReadings(400)
     def load(df: org.apache.spark.sql.DataFrame): Map[String, Array[Byte]] = {
-      val out = Files.createTempDirectory("graft-bytes").toString + "/out"
+      val out = tempDir("graft-bytes").toString + "/out"
       Loader.write(PipelineConfig.default, out)(Loader.optimizeTypes(
         Loader.addMetadata(vr, "1.0.0", "2023-06-03T00:00:00Z")(df)))
-      import scala.jdk.CollectionConverters._
       val root = java.nio.file.Paths.get(out)
       scala.util.Using.resource(Files.walk(root))(_.iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
@@ -152,8 +155,61 @@ class LoaderSpec extends SparkSpec {
     }
   }
 
+  test("the write runs one task per shuffle partition, however small the " +
+    "batch, and still leaves one file per directory") {
+    val out = tempDir("graft-load-width").resolve("out")
+    // (stage, partition) of every result task; the exchange's map
+    // tasks are not result tasks
+    val writeTasks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask")
+          writeTasks.add((e.stageId, e.taskInfo.partitionId))
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Session.withConf(spark, "spark.sql.shuffle.partitions" -> "3") {
+        Loader.write(PipelineConfig.default, out.toString)(
+          shuffledReadings(400).toDF(readingCols: _*))
+      }
+      ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val tasks = writeTasks.asScala.toSeq
+    assert(tasks.map(_._1).distinct.size === 1) // one write stage
+    assert(tasks.map(_._2).sorted === Seq(0, 1, 2))
+    val perDir = parquetFiles(out).groupBy(_.getParent).values.map(_.size)
+    assert(perDir.toSeq === Seq.fill(4)(1))
+  }
+
+  test("storageStats counts what a walk of the tree counts: *.parquet " +
+    "files not named _*, one partition per directory holding one") {
+    val out = tempDir("graft-load-stats").resolve("out")
+    Loader.write(PipelineConfig.default, out.toString)(
+      shuffledReadings(400).toDF(readingCols: _*))
+    Files.writeString(out.resolve("date=2023-06-01/sensor_id=s1/notes.txt"), "x")
+    Files.writeString(out.resolve("date=2023-06-01/_staged.parquet"), "x")
+    Files.writeString(out.resolve("_SUCCESS"), "")
+    Files.createDirectories(out.resolve("date=2023-06-09/sensor_id=s9"))
+    assert(scala.util.Using.resource(Files.walk(out))(_.iterator().asScala
+      .exists(_.getFileName.toString.endsWith(".parquet.crc"))))
+
+    val walked = parquetFiles(out)
+    assert(Loader.storageStats(spark, out.toString) === StorageStats(
+      walked.size, walked.map(Files.size).sum, walked.map(_.getParent).distinct.size))
+    assert(walked.size === 4)
+  }
+
+  /** Every `*.parquet` file under `root` whose name does not start with
+    * `_`. */
+  private def parquetFiles(root: java.nio.file.Path): Seq[java.nio.file.Path] =
+    scala.util.Using.resource(Files.walk(root))(_.iterator().asScala.filter { p =>
+      val name = p.getFileName.toString
+      Files.isRegularFile(p) && name.endsWith(".parquet") && !name.startsWith("_")
+    }.toSeq)
+
   test("S11 read-back prunes partitions") {
-    val out = Files.createTempDirectory("graft-load3").toString + "/out"
+    val out = tempDir("graft-load3").toString + "/out"
     Loader.write(PipelineConfig.default, out)(transformed())
     val pruned = Loader.readBack(spark, out, date = Some("2023-06-01"))
     assert(pruned.count() === 1)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 import graft.streaming.Streaming
 
-class MultimodalStreamingSpec extends SparkSpec {
+class MultimodalStreamingSpec extends SparkSpec with TempPaths {
   import spark.implicits._
 
   test("multimodal: real WAV header parse yields channels/rate/duration") {
@@ -220,8 +220,7 @@ class MultimodalStreamingSpec extends SparkSpec {
     // nothing leaves no files (parquet cannot carry a schema-only
     // dir), so the no-files branch must hand back a readable empty
     // frame rather than a scan error.
-    import java.nio.file.Files
-    val src = Files.createTempDirectory("graft-empty-src")
+    val src = tempDir("graft-empty-src")
     graft.queries.CoreQueries.t(spark, "/root/testdata/sf0.001", "events")
       .filter(lit(false))
       .coalesce(1).write.mode("overwrite")
@@ -232,7 +231,6 @@ class MultimodalStreamingSpec extends SparkSpec {
     assert(result.columns.toSeq ===
       Seq("hour_start", "event_type", "n_events", "sum_value"))
     assert(result.count() === 0)
-    Streaming.deleteRecursively(src)
   }
 
   test("streaming: hourly agg through a parquet file sink (append mode) matches batch") {
@@ -242,7 +240,7 @@ class MultimodalStreamingSpec extends SparkSpec {
     // to the driver. The memory-sink runToCompletion helper is the
     // ORACLE harness; this is the production pattern.
     import java.nio.file.Files
-    val src = Files.createTempDirectory("graft-fsrc")
+    val src = tempDir("graft-fsrc")
     Files.createSymbolicLink(src.resolve("part-0.parquet"),
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"))
     // Sentinel event far in the future: pushes the watermark past every
@@ -253,7 +251,7 @@ class MultimodalStreamingSpec extends SparkSpec {
     // TIMESTAMP(NANOS) data (the stream pins ts to LongType), the same
     // timestamp type otherwise.
     val sentinelUs = 1893456000L * 1000000L // 2030-01-01 in micros
-    val sentDir = Files.createTempDirectory("graft-fsent")
+    val sentDir = tempDir("graft-fsent")
     val events = graft.ingest.RawParquet.footer(spark,
       new org.apache.hadoop.fs.Path(src.toString)) // part-0: the events file
     Seq((999999L, sentinelUs, 0L, "__sentinel__", 0.0, "{}"))
@@ -268,8 +266,8 @@ class MultimodalStreamingSpec extends SparkSpec {
         .find(_.toString.endsWith(".parquet")).get
       Files.copy(part, src.resolve("part-1.parquet"))
     }
-    val out = Files.createTempDirectory("graft-fout").toString
-    val cp = Files.createTempDirectory("graft-fcp").toString
+    val out = tempDir("graft-fout").toString
+    val cp = tempDir("graft-fcp").toString
     val q = Streaming.hourlyAgg(
       Streaming.eventsStream(spark, src.toString)).writeStream
       .format("parquet").option("path", out)
@@ -289,8 +287,6 @@ class MultimodalStreamingSpec extends SparkSpec {
           .cast("double").as("sum_value"))
     assert(streamed.count() === batch.count())
     assert(streamed.exceptAll(batch).count() === 0)
-    Streaming.deleteRecursively(src)
-    Streaming.deleteRecursively(sentDir)
   }
 
   test("streaming: incremental corpus dedup classifies micro-batches against the growing index") {
@@ -308,13 +304,13 @@ class MultimodalStreamingSpec extends SparkSpec {
     val seed = docs.filter($"doc_id" < 20)
     val a = docs.filter($"doc_id" >= 20 && $"doc_id" < 35)
     val b = docs.filter($"doc_id" >= 35 && $"doc_id" < 50)
-    val corpusDir = Files.createTempDirectory("graft-inc-corpus").toString
-    val srcDir = Files.createTempDirectory("graft-inc-src")
-    val outDir = Files.createTempDirectory("graft-inc-out").toString
-    val cp = Files.createTempDirectory("graft-inc-cp").toString
+    val corpusDir = tempDir("graft-inc-corpus").toString
+    val srcDir = tempDir("graft-inc-src")
+    val outDir = tempDir("graft-inc-out").toString
+    val cp = tempDir("graft-inc-cp").toString
     seed.write.mode("overwrite").parquet(corpusDir)
     def addFile(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-inc-w")
+      val tmp = tempDir("graft-inc-w")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).iterator().asScala
         .find(_.toString.endsWith(".parquet")).get
@@ -357,7 +353,6 @@ class MultimodalStreamingSpec extends SparkSpec {
     assert(streamed.map(_._2).subsetOf(Set("exact_dup", "near_dup", "unique")))
     // the corpus dir grew: seed + both batches are in the index now
     assert(spark.read.parquet(corpusDir).count() === 50)
-    Streaming.deleteRecursively(srcDir)
   }
 
   test("streaming: flatMapGroupsWithState running totals equal batch totals") {

@@ -13,7 +13,7 @@ import graft.load.Loader
   * one-file raw directory: ingest → transform → validate → load, the
   * metadata and checkpoint commit, the incremental rerun and the
   * forced full reload. */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with TempPaths {
   import spark.implicits._
 
   /** Every regular file under `root` by relative path, with its bytes. */
@@ -27,8 +27,8 @@ class PipelineSpec extends SparkSpec {
 
   test("Pipeline.run: load, metadata, checkpoint, incremental rerun, " +
     "forced full reload") {
-    val raw = Files.createTempDirectory("graft-pipe-raw").toString
-    val out = Files.createTempDirectory("graft-pipe-out").toString + "/out"
+    val raw = tempDir("graft-pipe-raw").toString
+    val out = tempDir("graft-pipe-out").toString + "/out"
     Seq(
       ("s1", java.sql.Timestamp.valueOf("2023-06-01 10:00:00"), "temperature", 25.0, 90.0),
       ("s1", java.sql.Timestamp.valueOf("2023-06-01 12:00:00"), "temperature", 26.0, 91.0),

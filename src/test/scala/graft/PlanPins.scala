@@ -36,8 +36,10 @@ trait PlanPins extends AdaptiveSparkPlanHelper { this: SparkSpec =>
   }
 
   /** The leaf scans of an executed plan's final form (after AQE, through
-    * its query stages) by node class: each is one read of a source, or a
-    * reused exchange. */
+    * its query stages and its subqueries) by node class: each is one
+    * read of a source, or a reused exchange. */
   def leafScans(plan: SparkPlan): Seq[String] =
-    collectLeaves(plan).map(_.getClass.getSimpleName)
+    collectWithSubqueries(plan) {
+      case p if allChildren(p).isEmpty => p.getClass.getSimpleName
+    }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.io.IOException
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 import scala.sys.process.{Process, ProcessLogger}
@@ -41,11 +41,12 @@ object PythonOracle {
     mapper.readTree(out.toString)
   }
 
-  /** `df` written to a fresh parquet directory named `<name>.parquet`;
+  /** `df` written to a parquet directory `<dir>/<name>.parquet`;
     * returns its path. Timestamps are written as TIMESTAMP_MICROS
     * instants (Spark's default INT96 is not read as an instant). */
-  def parquet(spark: SparkSession, df: DataFrame, name: String = "frame"): String = {
-    val path = Files.createTempDirectory("graft-oracle").resolve(s"$name.parquet")
+  def parquet(spark: SparkSession, df: DataFrame, dir: Path,
+      name: String = "frame"): String = {
+    val path = dir.resolve(s"$name.parquet")
     Session.withConf(spark,
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
       df.coalesce(1).write.parquet(path.toString)
@@ -87,8 +88,10 @@ object PythonOracle {
     val manifest = Files.createTempFile("graft-oracle", ".json")
     val list = mapper.createArrayNode()
     cases.foreach(list.add(_))
-    mapper.writeValue(manifest.toFile, list)
-    json("tools/validation_oracle.py", manifest.toString)
-      .properties.asScala.map(e => e.getKey -> e.getValue).toMap
+    try {
+      mapper.writeValue(manifest.toFile, list)
+      json("tools/validation_oracle.py", manifest.toString)
+        .properties.asScala.map(e => e.getKey -> e.getValue).toMap
+    } finally Files.delete(manifest)
   }
 }

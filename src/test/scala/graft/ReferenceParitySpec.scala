@@ -15,7 +15,7 @@ import graft.validate.Validation
   * missing hours, 4/32 temperature and 9/40 humidity anomalies, the
   * 70-hour sensor_3 temperature gap. Skipped when the reference tree is
   * absent. */
-class ReferenceParitySpec extends SparkSpec {
+class ReferenceParitySpec extends SparkSpec with TempPaths {
 
   private val refRaw = Paths.get("/root/reference/data/raw")
 
@@ -29,7 +29,7 @@ class ReferenceParitySpec extends SparkSpec {
     "2023-06-07_wrong_types.parquet")
 
   private def copied(): String = {
-    val dir = Files.createTempDirectory("graft-ref-raw")
+    val dir = tempDir("graft-ref-raw")
     demoFiles.foreach { f =>
       Files.copy(refRaw.resolve(f), dir.resolve(f),
         StandardCopyOption.REPLACE_EXISTING)

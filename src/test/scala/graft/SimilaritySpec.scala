@@ -17,7 +17,7 @@ import graft.operators.Similarity
   * scaladoc promises. The k-means behind it is pinned against q131's
   * and q183's DuckDB oracle SQL on adversarial inputs, and its eager
   * contract (actions, plan leaves, cached checkpoints) by plan pins. */
-class SimilaritySpec extends SparkSpec with PlanPins {
+class SimilaritySpec extends SparkSpec with PlanPins with TempPaths {
 
   private def vecDF(rows: Seq[(Long, Array[Float])]): DataFrame = {
     import spark.implicits._
@@ -153,7 +153,8 @@ class SimilaritySpec extends SparkSpec with PlanPins {
       "empty table" -> Seq.empty[(Long, Array[Float])])
     cases.map { case (name, rows) =>
       name -> new java.io.File(
-        PythonOracle.parquet(spark, vecDF(rows), "embeddings")).getParent
+        PythonOracle.parquet(spark, vecDF(rows), tempDir("graft-oracle"),
+          "embeddings")).getParent
     }.toMap
   }
 

@@ -11,12 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * tested — and a spec that needs another setting scopes it with
   * [[Session.withConf]]. */
 object SparkSpec {
-  lazy val spark: SparkSession = Session.start(
-    Session.engine() ++ Map(
-      "spark.app.name" -> "graft-test",
-      "spark.sql.warehouse.dir" ->
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString),
-    logLevel = "ERROR")
+  lazy val spark: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse")
+    sys.addShutdownHook(graft.streaming.Streaming.deleteRecursively(warehouse))
+    Session.start(
+      Session.engine() ++ Map(
+        "spark.app.name" -> "graft-test",
+        "spark.sql.warehouse.dir" -> warehouse.toString),
+      logLevel = "ERROR")
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -18,7 +18,7 @@ import graft.streaming.Streaming
   * normalize each to identical TimestampType instants, through the one
   * raw-parquet reader, without touching the session's conf.
   */
-class TimestampRobustnessSpec extends SparkSpec {
+class TimestampRobustnessSpec extends SparkSpec with TempPaths {
   import spark.implicits._
 
   // Two events in distinct hours; instants chosen off-hour to catch
@@ -29,7 +29,7 @@ class TimestampRobustnessSpec extends SparkSpec {
     (2L, baseUs + 3600L * 1000000L, 11L, "view", 2.0, "{}"))
 
   private def writeFixture(asNanos: Boolean): String = {
-    val dir = Files.createTempDirectory("graft-tsfix").toString
+    val dir = tempDir("graft-tsfix").toString
     if (asNanos) {
       import NanosParquet._
       NanosParquet.write(s"$dir/part-0.parquet",
@@ -47,7 +47,7 @@ class TimestampRobustnessSpec extends SparkSpec {
   private def expectedInstants: Set[Long] = rows.map(_._2).toSet
 
   private def asEventsTable(fix: String): String = {
-    val dir = Files.createTempDirectory("graft-tsdir").toString
+    val dir = tempDir("graft-tsdir").toString
     // CoreQueries.t expects <dir>/events.parquet
     Files.createSymbolicLink(
       java.nio.file.Paths.get(dir, "events.parquet"),
@@ -75,7 +75,7 @@ class TimestampRobustnessSpec extends SparkSpec {
 
   test("a bare INT64 ts is no timestamp: it stays LongType and a time " +
     "function on it fails loudly") {
-    val fix = Files.createTempDirectory("graft-tsint").toString
+    val fix = tempDir("graft-tsint").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(fix)
     val df = queries.CoreQueries.t(spark, asEventsTable(fix), "events")

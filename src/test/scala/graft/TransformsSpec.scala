@@ -1,14 +1,19 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.config.{Calibration, PipelineConfig, ReadingCols, ValueRange}
+import graft.ingest.ParquetIngestor
+import graft.model.Schemas
 import graft.transform.Transforms
 
-class TransformsSpec extends SparkSpec {
+class TransformsSpec extends SparkSpec with PlanPins with TempPaths {
   import spark.implicits._
 
   private val c = ReadingCols.sensor
@@ -35,13 +40,18 @@ class TransformsSpec extends SparkSpec {
   test("P2 null drop keeps rows null only in battery") {
     val df = Seq(
       (Some("s1"), Some(ts("2023-06-01 10:00:00")), Some("temperature"), Some(25.5), None: Option[Double]),
+      (Some("s2"), Some(ts("2023-06-01 10:00:00")), Some("temperature"), Some(25.5), Some(Double.NaN)),
       (None, Some(ts("2023-06-01 10:00:00")), Some("temperature"), Some(25.5), Some(90.0)),
-      (Some("s1"), Some(ts("2023-06-01 10:00:00")), Some("temperature"), None, Some(90.0)))
+      (Some("s1"), Some(ts("2023-06-01 10:00:00")), Some("temperature"), None, Some(90.0)),
+      (Some("s1"), Some(ts("2023-06-01 10:00:00")), Some("temperature"), Some(Double.NaN), Some(90.0)))
       .toDF("sensor_id", "timestamp", "reading_type", "value", "battery_level")
-    val out = Transforms.dropNullCritical(
-      Seq("sensor_id", "timestamp", "reading_type", "value"))(df)
-    assert(out.count() === 1)
-    assert(out.head.isNullAt(4)) // battery null survives
+    val critical = Seq("sensor_id", "timestamp", "reading_type", "value")
+    val out = Transforms.dropNullCritical(critical)(df)
+    // exactly na.drop("any"), which drops a NaN in a float column too
+    assert(out.collect().toSet === df.na.drop("any", critical).collect().toSet)
+    assert(out.orderBy("sensor_id").collect().map(_.getString(0)).toSeq ===
+      Seq("s1", "s2"))
+    assert(out.orderBy("sensor_id").head.isNullAt(4)) // battery null survives
   }
 
   test("P3 battery imputation: per-sensor median, global fallback") {
@@ -249,5 +259,34 @@ class TransformsSpec extends SparkSpec {
     assert(Set("date", "daily_avg_value", "rolling_avg_value",
       "anomalous_reading").subsetOf(cols))
     assert(out.count() === 3)
+  }
+
+  test("plan pin: the transform pipeline scans the raw files once; the " +
+    "z-score stats and the global battery median reuse the dedup exchange") {
+    // 3 sensors x 2 types, hourly over two day files, with a duplicate
+    // row, a null battery (imputed) and a null value (dropped), so no
+    // stage comes out empty and AQE prunes no branch.
+    val raw = tempDir("graft-tf-raw")
+    for (day <- Seq("01", "02")) {
+      val rows = for (s <- 1 to 3; typ <- Seq("temperature", "humidity");
+          h <- 0 until 24) yield (s"s$s", ts(f"2023-06-$day $h%02d:00:00"), typ,
+        Option(20.0 + (s * h) % 7), Option(90.0 - h).filter(_ => h != 5 || s != 2))
+      val withEdges = rows :+ rows.head :+
+        rows.last.copy(_4 = None: Option[Double])
+      withEdges.toDF("sensor_id", "timestamp", "reading_type", "value",
+        "battery_level").coalesce(1).write.parquet(raw.resolve(day).toString)
+      val part = Files.list(raw.resolve(day)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, raw.resolve(s"2023-06-$day.parquet"))
+    }
+    val in = ParquetIngestor.ingest(spark, raw.toString, Schemas.raw,
+      incremental = false).data.get
+    val out = Transforms.pipeline(PipelineConfig.default)(in)
+    val Seq((_, qe)) = actionsOf(
+      out.write.format("noop").mode("overwrite").save())
+    val leaves = leafScans(qe.executedPlan)
+    // the final plan, its scalar subquery included
+    assert(leaves.sorted ===
+      Seq("FileSourceScanExec", "ReusedExchangeExec", "ReusedExchangeExec"))
   }
 }

@@ -17,7 +17,7 @@ import graft.config.PipelineConfig
 import graft.model.{QualityMetrics, SensorCoverage, SensorGap, TypeProfile, ValidationResult}
 import graft.validate.Validation
 
-class ValidationSpec extends SparkSpec with PlanPins {
+class ValidationSpec extends SparkSpec with PlanPins with TempPaths {
   import spark.implicits._
 
   private val cfg = PipelineConfig.default
@@ -314,13 +314,13 @@ class ValidationSpec extends SparkSpec with PlanPins {
       ev(5, "2023-06-01 11:20:00", None, "click"),
       ev(6, "2023-06-01 12:20:00", None, "click"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
-      "events")).getParent
+      tempDir("graft-oracle"), "events")).getParent
   }
 
   /** Every case of this spec through the DuckDB oracle, in one run. */
   private lazy val oracle: Map[String, JsonNode] = PythonOracle.oracle(
     parityCases.flatMap { case (name, conf, df) =>
-      val path = PythonOracle.parquet(spark, df)
+      val path = PythonOracle.parquet(spark, df, tempDir("graft-oracle"))
       zones.map(tz => PythonOracle.validation(s"$name under $tz", path, conf, tz))
     } :+ PythonOracle.sql("q13", Map("events" -> s"$q13Dir/events.parquet"),
       SparkEntry.oracleSql("q13_gap_report"), "UTC"))
@@ -355,8 +355,7 @@ class ValidationSpec extends SparkSpec with PlanPins {
     val df = readings(("s1", "2023-06-01 10:00:00", "temperature", 25.0))
       .withColumn("anomalous_reading", lit(false))
     val res = Validation.collectMetrics(cfg)(df)
-    val path = java.nio.file.Files.createTempDirectory("graft-report")
-      .resolve("dq_report.csv")
+    val path = tempDir("graft-report").resolve("dq_report.csv")
     Validation.writeReport(res, path.toString)(spark)
     val cats = spark.read.option("header", "true").csv(path.toString)
       .select("category").distinct().as[String].collect().toSet
@@ -370,8 +369,7 @@ class ValidationSpec extends SparkSpec with PlanPins {
     val df = readings((odd, "2023-06-01 10:00:00", "temperature", 25.0))
       .withColumn("anomalous_reading", lit(false))
     val res = Validation.collectMetrics(cfg)(df)
-    val path = java.nio.file.Files.createTempDirectory("graft-report")
-      .resolve("dq_report.csv")
+    val path = tempDir("graft-report").resolve("dq_report.csv")
     java.nio.file.Files.createDirectories(path.resolve("old"))
     java.nio.file.Files.write(path.resolve("old/part-0.csv"), "stale".getBytes)
     Validation.writeReport(res, path.toString)(spark)
